@@ -4,7 +4,7 @@ import graft.embed.{EmbedOps, Embedder, HashEmbedder, OllamaEmbedder, RemoteEmbe
 import graft.index.{IndexManifest, VectorIndex}
 import graft.ingest.{Chunker, Sources}
 import graft.query.Knn
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** User-facing facade — the engine's equivalents of the reference's
@@ -42,28 +42,32 @@ object Graft {
     manifest
   }
 
+  /** `hits` is a local relation: the k rows already on the driver,
+    * columns `id, source, chunk_index, text, dist` in rank order. */
   case class AskResult(hits: DataFrame, context: String)
 
   /** The chunk id ("{basename}:{i}", quirk Q1) COLLIDES across
     * directories; (source, chunk_index) is the true unique key, so
-    * retrieval scores and rejoins on a synthesized unique uid. */
+    * retrieval ranks and fetches on a synthesized unique uid. */
   private def withUid(vectors: DataFrame): DataFrame =
     vectors.withColumn("_uid",
       concat_ws("\u0000", col("source"), col("chunk_index")))
 
-  private def retrieve(vectors: DataFrame, question: String, k: Int,
-      embedder: Embedder): DataFrame =
-    Knn.topKWithFetch(
-      withUid(vectors), EmbedOps.embedLiteral(question, embedder), k,
-      idCol = "_uid", fetchCols = Seq("id", "source", "chunk_index", "text"))
-      .drop("_uid")
-
-  private def assembleOrEmpty(hits: DataFrame): String = {
-    val cached = hits.cache()
-    try {
-      if (cached.isEmpty) "No relevant data found in the database."
-      else Knn.assembleContext(cached).head().getString(0)
-    } finally cached.unpersist()
+  /** Collects the ranked `(_uid, dist)` pairs, fetches their payload
+    * with one filter over the index (no job when nothing ranked), and
+    * builds hits and context on the driver in rank order. */
+  private def answer(uids: DataFrame, ranked: DataFrame): AskResult = {
+    val rank = ranked.collect().map(r => r.getString(0) -> r.getDouble(1)).toSeq
+    val rows = if (rank.isEmpty) Map.empty[String, Row] else uids
+      .filter(col("_uid").isin(rank.map(_._1): _*))
+      .select("_uid", "id", "source", "chunk_index", "text").collect()
+      .map(r => r.getString(0) -> r).toMap
+    val hits = rank.map { case (uid, dist) =>
+      val r = rows(uid)
+      Knn.Hit(r.getString(1), r.getString(2), r.getInt(3), r.getString(4), dist)
+    }
+    AskResult(uids.sparkSession.createDataFrame(hits),
+      if (hits.isEmpty) "No relevant data found in the database." else Knn.assembleContext(hits))
   }
 
   /** The manifest must match the query-side embedder — a question
@@ -81,17 +85,20 @@ object Graft {
   /** Interactive-session handle — the REPL equivalent (the
     * reference keeps one ChromaDB collection + manifest open across
     * questions, `ask.py:298-326`). The vector index is cached once
-    * (`persist`) so every question after the first skips the scan;
-    * `close()` releases it. */
+    * (`persist`); `close()` releases it. [[ask]] runs two Spark jobs:
+    * rank over `(_uid, embedding)` collecting the top k `(_uid, dist)`,
+    * then fetch those k rows; the context is assembled on the driver
+    * and `hits` is a materialized local relation
+    * ([[graft.query.Knn.topKWithFetch]] is the lazy, scale-out form). */
   final class AskSession private[Graft] (
-      spark: SparkSession,
       val manifest: IndexManifest,
       vectors: DataFrame,
       embedder: Embedder) extends AutoCloseable {
 
     def ask(question: String, k: Int = 5): AskResult = {
-      val hits = retrieve(vectors, question, k, embedder)
-      AskResult(hits, assembleOrEmpty(hits))
+      val uids = withUid(vectors)
+      answer(uids, Knn.topK(uids.select(col("_uid"), col("embedding")),
+        EmbedOps.embedLiteral(question, embedder), k, idCol = "_uid").select(col("_uid"), col("dist")))
     }
 
     /** Hybrid ask: keyword BM25 + vector cosine, fused by
@@ -99,19 +106,19 @@ object Graft {
       * A hit scores 1/(60+r) per system it appears in (top-`depth`
       * lists; absence contributes 0 — standard RRF). Catches what
       * pure vector search misses: exact identifiers, error codes,
-      * rare tokens the embedder smears. */
+      * rare tokens the embedder smears. The fused top-k ranks as
+      * `dist = -fused` and shares [[ask]]'s fetch and assembly. */
     def askHybrid(question: String, k: Int = 5, depth: Int = graft.ops.Retrieval.FuseDepth): AskResult = {
-      val hits = retrieveHybrid(vectors, question, k, depth, embedder)
-      AskResult(hits, assembleOrEmpty(hits))
+      val uids = withUid(vectors)
+      answer(uids, rankHybrid(uids, question, k, depth, embedder))
     }
 
     override def close(): Unit = vectors.unpersist()
   }
 
-  private def retrieveHybrid(vectors: DataFrame, question: String, k: Int,
+  private def rankHybrid(uids: DataFrame, question: String, k: Int,
       depth: Int, embedder: Embedder): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val uids = withUid(vectors)
     val terms = HashEmbedder.tokenize(question).distinct.toSeq
     val kwTop = graft.ops.Retrieval
       .bm25Score(uids.select(col("_uid"), col("text")), "_uid", "text", terms)
@@ -131,18 +138,12 @@ object Graft {
           graft.functions.WindowKeys.boundedRankKey(col("_uid")))
           .orderBy(col("dist"), col("_uid"))))
       .select(col("_uid"), col("r_vec"))
-    val fused = kwTop.join(vecTop, Seq("_uid"), "full_outer")
+    kwTop.join(vecTop, Seq("_uid"), "full_outer")
       .withColumn("fused",
         coalesce(lit(1.0) / (lit(60.0) + col("r_kw")), lit(0.0)) +
           coalesce(lit(1.0) / (lit(60.0) + col("r_vec")), lit(0.0)))
       .orderBy(col("fused").desc, col("_uid")).limit(k)
-    uids.select(col("_uid"), col("id"), col("source"), col("chunk_index"), col("text"))
-      .join(broadcast(fused.select(col("_uid"), col("fused"))), Seq("_uid"))
-      // assembleContext orders ascending on `dist`; negated fused
-      // score gives best-first with the same contract
-      .withColumn("dist", -col("fused"))
-      .drop("_uid", "fused")
-      .orderBy(col("dist"), col("id"))
+      .select(col("_uid"), (-col("fused")).as("dist"))
   }
 
   /** Backend endpoints for manifest-driven dispatch (reference env
@@ -297,15 +298,16 @@ object Graft {
       embedder: Embedder): AskSession = {
     validate(manifest, embedder)
     val vectors = VectorIndex.readVectors(spark, indexPath).persist()
-    new AskSession(spark, manifest, vectors, embedder)
+    new AskSession(manifest, vectors, embedder)
   }
 
   /** Retrieval query: embed the question (driver-side scalar, like
     * the reference's single-string `get_embedding`, ask.py:109-116),
-    * exact cosine top-k over the index with text fetched only for
-    * the k survivors, context assembly, empty-result guard
-    * (ask.py:219-220). LLM generation is out of engine scope by
-    * design (SURVEY Q5) — callers take `context` to their model. */
+    * exact cosine top-k, context assembly, empty-result guard
+    * (ask.py:219-220) — [[AskSession.ask]]'s two-job plan over the
+    * parquet index; `hits` is a materialized local relation. LLM
+    * generation is out of engine scope by design (SURVEY Q5) — callers
+    * take `context` to their model. */
   def ask(
       spark: SparkSession,
       indexPath: String,
@@ -314,8 +316,6 @@ object Graft {
       embedder: Embedder = HashEmbedder.default): AskResult = {
     val manifest = VectorIndex.readManifest(spark, indexPath)
     validate(manifest, embedder)
-    val vectors = VectorIndex.readVectors(spark, indexPath)
-    val hits = retrieve(vectors, question, k, embedder)
-    AskResult(hits, assembleOrEmpty(hits))
+    new AskSession(manifest, VectorIndex.readVectors(spark, indexPath), embedder).ask(question, k)
   }
 }

@@ -39,13 +39,6 @@ object VectorFunctions {
   def cosineSim(a: Column, b: Column): Column =
     try_divide(dot(a, b), l2norm(a) * l2norm(b))
 
-  /** Cosine similarity when per-row norms are precomputed — avoids
-    * recomputing norms inside pairwise joins (O(pairs·dim) vs
-    * O(rows·dim)); the expression shape `dot/(na*nb)` is mirrored
-    * verbatim in oracle SQL so IEEE op order matches. */
-  def cosineSimPrenorm(a: Column, b: Column, na: Column, nb: Column): Column =
-    try_divide(dot(a, b), na * nb)
-
   /** Cosine distance = 1 − similarity (reference's retrieval key) —
     * fused single-pass native expression; NULL for zero-norm inputs
     * exactly like the composed `1 - try_divide(...)` form it
@@ -56,9 +49,6 @@ object VectorFunctions {
   /** Composed reference form of [[cosineDist]] (executable spec). */
   def cosineDistHof(a: Column, b: Column): Column =
     lit(1.0) - cosineSim(a, b)
-
-  def cosineDistPrenorm(a: Column, b: Column, na: Column, nb: Column): Column =
-    lit(1.0) - cosineSimPrenorm(a, b, na, nb)
 
   /** Oracle-safe rounding: 6 decimals, then `+ 0.0` to collapse
     * IEEE `-0.0` to `+0.0` (DuckDB's round can emit -0.0 where

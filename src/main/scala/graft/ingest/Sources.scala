@@ -26,19 +26,24 @@ object Sources {
     ".venv", "target", "build", "dist", ".svn", ".hg", ".idea", ".vscode")
 
   private val pruneRegex: String =
-    PrunedDirs.map(java.util.regex.Pattern.quote).mkString("/(", "|", ")/")
+    PrunedDirs.map(java.util.regex.Pattern.quote).mkString("(", "|", ")/")
 
   val MaxFileBytes: Long = 100L * 1024 * 1024 // index.py:222
   val SniffBytes: Int = 8192                  // index.py:231
 
   /** Recursive scan with directory pruning (S1) and size gate (S2).
-    * Output schema: path, modificationTime, length, content. */
-  def scan(spark: SparkSession, dir: String): DataFrame =
+    * Prunes only below `dir`, like [[listUnpruned]], so a corpus under
+    * `build/` still indexes. Output: path, modificationTime, length, content. */
+  def scan(spark: SparkSession, dir: String): DataFrame = {
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val rootPath = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(root).toUri.getPath.stripSuffix("/") + "/"
     spark.read.format("binaryFile")
       .option("recursiveFileLookup", "true")
       .load(dir)
-      .filter(!col("path").rlike(pruneRegex))
+      .filter(!col("path").rlike(java.util.regex.Pattern.quote(rootPath) + "(.*/)?" + pruneRegex))
       .filter(col("length") > 0 && col("length") <= MaxFileBytes)
+  }
 
   /** Text-vs-binary sniff on the first 8 KB: reject if a NUL byte is
     * present (`index.py:236-237`). The reference's 4-encoding decode

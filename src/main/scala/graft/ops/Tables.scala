@@ -16,8 +16,10 @@ object Tables {
     * so the rule no-ops exactly where a full-input shuffle would be
     * wrong (guide §2.5: repartitioning after the read is the remedy
     * for unsplittable-input skew, not a standing production step). */
-  private def resplitMaxBytes: Long =
-    sys.env.get("SPARK_GRAFT_RESPLIT_MAX_BYTES").map(_.toLong).getOrElse(256L << 20)
+  private[graft] def resplitMaxBytes(env: Map[String, String] = sys.env): Long =
+    env.get("SPARK_GRAFT_RESPLIT_MAX_BYTES").fold(256L << 20)(v => v.trim.toLongOption.filter(_ >= 0)
+      .getOrElse(throw new IllegalArgumentException(
+        s"SPARK_GRAFT_RESPLIT_MAX_BYTES must be a non-negative byte count, got '$v'")))
 
   /** Minimum rows per re-split slice — below parallelism × this, the
     * table is a lookup relation (nation/region/the query vector) and
@@ -91,7 +93,7 @@ object Tables {
     parquetMeta(spark, path) match {
       case Some((bytes, rows, rowGroups))
         if rowGroups > 0 && rowGroups < par &&
-          bytes <= resplitMaxBytes && rows >= par * MinRowsPerSlice =>
+          bytes <= resplitMaxBytes() && rows >= par * MinRowsPerSlice =>
         df.repartition(par)
       case _ => df
     }

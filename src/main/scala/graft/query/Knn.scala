@@ -2,8 +2,9 @@ package graft.query
 
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import java.nio.charset.StandardCharsets.UTF_8
 
 /** Exact cosine top-k retrieval — the Spark-native form of the
   * reference's one real query operator (log-vector `ask.py:200-203`:
@@ -62,37 +63,37 @@ object Knn {
       .orderBy(col("dist"), col(idCol))
   }
 
-  /** Top-k nearest per group (e.g. per label / per source file):
-    * window row_number + filter. One hash-partition shuffle on the
-    * group key; with the index pre-partitioned by that key (see
-    * VectorIndex.write) the exchange is elided. */
-  def topKPerGroup(
-      index: DataFrame,
-      queryVec: Column,
-      groupCol: String,
-      k: Int,
-      idCol: String = "id",
-      vecCol: String = "embedding"): DataFrame = {
-    val w = Window.partitionBy(col(groupCol)).orderBy(col("dist"), col(idCol))
-    scored(index, queryVec, vecCol)
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
-  }
+  /** One context block per hit (reference `ask.py:207-217`), shared
+    * by the Spark and the driver-side [[assembleContext]]. */
+  val PieceFormat = "File: %s (chunk %d)\n%s\n\n"
 
   /** Context assembly (reference `ask.py:207-217`): per-hit block
-    * `"File: {source} (chunk {i})\n{text}\n\n"`, concatenated in
-    * ascending-distance order. Returns a single-row DataFrame
-    * `(context STRING)`; empty-hit handling (`ask.py:219-220`) is
-    * the caller's driver-side branch. */
+    * [[PieceFormat]], concatenated in ascending-distance order.
+    * Returns a single-row DataFrame `(context STRING)`; empty-hit
+    * handling (`ask.py:219-220`) is the caller's driver-side branch. */
   def assembleContext(hits: DataFrame): DataFrame =
     hits
       .withColumn("piece",
-        format_string("File: %s (chunk %d)\n%s\n\n",
-          col("source"), col("chunk_index"), col("text")))
+        format_string(PieceFormat, col("source"), col("chunk_index"), col("text")))
       .agg(
         array_join(
           transform(
             array_sort(collect_list(struct(col("dist"), col("id"), col("piece")))),
             h => h.getField("piece")),
           "").as("context"))
+
+  /** A collected hit, its fields named like the hit columns. */
+  final case class Hit(id: String, source: String, chunk_index: Int, text: String, dist: Double)
+
+  /** Driver-side [[assembleContext]]: the same bytes, no Spark job.
+    * The `(dist, id, piece)` sort uses Spark's ordering (`-0.0` equals
+    * `0.0`, strings compare as UTF-8 bytes), so ties break as in `array_sort`. */
+  def assembleContext(hits: Seq[Hit]): String = {
+    val dist: Ordering[Double] = (a, b) => if (a == b) 0 else java.lang.Double.compare(a, b)
+    val utf8: Ordering[String] =
+      (a, b) => java.util.Arrays.compareUnsigned(a.getBytes(UTF_8), b.getBytes(UTF_8))
+    hits.map(h => (h.dist, h.id,
+        PieceFormat.formatLocal(java.util.Locale.US, h.source, h.chunk_index, h.text)))
+      .sorted(Ordering.Tuple3(dist, utf8, utf8)).map(_._3).mkString
+  }
 }

@@ -2,7 +2,8 @@ package graft
 
 import graft.embed.{Embedder, HashEmbedder, RetryEmbedder, ZeroFallbackEmbedder}
 import graft.index.VectorIndex
-import graft.query.MarkdownSink
+import graft.query.{Knn, MarkdownSink}
+import org.apache.spark.graft.JobCounter
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.charset.StandardCharsets
@@ -95,6 +96,92 @@ class GraftFacadeSpec extends AnyFunSuite {
     assert(dupSources.keySet == Set("app/server.log.1", "db/server.log.1"))
     assert(dupSources("app/server.log.1") == "dup basename a\n")
     assert(dupSources("db/server.log.1") == "dup basename b\n")
+  }
+
+  private val HitColumns = Seq("id", "source", "chunk_index", "text", "dist")
+
+  /** The context Spark's aggregate assembles from the same hits. */
+  private def sparkContext(hits: org.apache.spark.sql.DataFrame): String =
+    Knn.assembleContext(hits).head().getString(0)
+
+  test("ask plan: a warm session ask runs at most 2 Spark jobs, askHybrid at most 6") {
+    val corpus = writeCorpus()
+    val idx = Files.createTempDirectory("graft-jobs").toString
+    Graft.index(spark, corpus.toString, idx, Graft.IndexConfig(chunkSize = 50))
+    val session = Graft.open(spark, idx)
+    val (r, askJobs, hybridJobs) = try {
+      session.ask("warm the cache", k = 3)
+      val (r, askJobs) = JobCounter(spark.sparkContext)(session.ask("connection pool exhausted", k = 3))
+      val (_, hybridJobs) =
+        JobCounter(spark.sparkContext)(session.askHybrid("connection pool exhausted", k = 3))
+      (r, askJobs, hybridJobs)
+    } finally session.close()
+    assert(askJobs >= 1 && askJobs <= 2, s"ask ran $askJobs jobs")
+    assert(hybridJobs >= 1 && hybridJobs <= 6, s"askHybrid ran $hybridJobs jobs")
+    // hits are a local relation: still collectable once the session's cache is gone
+    assert(r.hits.columns.toSeq == HitColumns)
+    assert(r.hits.schema.map(_.dataType.sql) == Seq("STRING", "STRING", "INT", "STRING", "DOUBLE"))
+    val hits = r.hits.collect()
+    assert(hits.length == 3)
+    assert(hits.map(_.getDouble(4)).toSeq == hits.map(_.getDouble(4)).toSeq.sorted)
+    assert(r.context == sparkContext(r.hits))
+  }
+
+  test("driver-assembled context is byte-identical to Knn.assembleContext (Q1 ids, dist ties)") {
+    // identical text in two files: equal vectors, so equal dist. Hits
+    // rank by (dist, source NUL chunk_index): a/zeta.log first. The
+    // context orders by (dist, id, piece): alpha.log first.
+    val corpus = writeCorpus()
+    def put(rel: String, s: String): Unit = {
+      Files.createDirectories(corpus.resolve(rel).getParent)
+      Files.write(corpus.resolve(rel), s.getBytes(StandardCharsets.UTF_8))
+    }
+    put("a/zeta.log", "twin line seen twice\n")
+    put("b/alpha.log", "twin line seen twice\n")
+    put("app/server.log.1", "dup basename a\n")
+    put("db/server.log.1", "dup basename b\n")
+    val idx = Files.createTempDirectory("graft-parity").toString
+    Graft.index(spark, corpus.toString, idx, Graft.IndexConfig(chunkSize = 50))
+    val session = Graft.open(spark, idx)
+    try {
+      for (q <- Seq("twin line seen twice", "dup basename", "connection pool exhausted")) {
+        for (r <- Seq(session.ask(q, k = 4), session.askHybrid(q, k = 4), Graft.ask(spark, idx, q, k = 4)))
+          assert(r.context == sparkContext(r.hits), s"question: $q")
+      }
+      val twins = session.ask("twin line seen twice", k = 2)
+      val hits = twins.hits.collect()
+      assert(hits.map(_.getDouble(4)).distinct.length == 1, "expected a dist tie")
+      assert(hits.map(_.getString(1)).toSeq == Seq("a/zeta.log", "b/alpha.log"))
+      assert(twins.context.startsWith("File: b/alpha.log (chunk 0)\n"))
+    } finally session.close()
+
+    // ties on dist and id fall through to the piece; ids compare as
+    // UTF-8 bytes like Spark's, not UTF-16 units like String.compareTo
+    val tied = Seq(
+      Knn.Hit("\uD83D\uDE00", "s/emoji", 0, "t", 0.5),
+      Knn.Hit("\uFF01", "s/bang", 1, "t", 0.5),
+      Knn.Hit("same:0", "z/same", 0, "later", 0.25),
+      Knn.Hit("same:0", "y/same", 0, "earlier", 0.25),
+      Knn.Hit("neg", "n", 0, "zero", -0.0),
+      Knn.Hit("a", "p", 0, "zero", 0.0))
+    import spark.implicits._
+    val df = tied.map(h => (h.id, h.source, h.chunk_index, h.text, h.dist)).toDF(HitColumns: _*)
+    assert(Knn.assembleContext(tied) == sparkContext(df))
+    assert(Knn.assembleContext(tied.reverse) == sparkContext(df))
+  }
+
+  test("a question with no tokens embeds to zero and finds no relevant data") {
+    val corpus = writeCorpus()
+    val idx = Files.createTempDirectory("graft-empty").toString
+    Graft.index(spark, corpus.toString, idx, Graft.IndexConfig(chunkSize = 50))
+    val session = Graft.open(spark, idx)
+    try {
+      for (r <- Seq(session.ask("   "), session.askHybrid("   "), Graft.ask(spark, idx, "   "))) {
+        assert(r.context == "No relevant data found in the database.")
+        assert(r.hits.columns.toSeq == HitColumns)
+        assert(r.hits.collect().isEmpty)
+      }
+    } finally session.close()
   }
 
   test("ask with mismatched embedder model fails fast instead of returning garbage") {

@@ -42,6 +42,22 @@ class SourcesSpec extends AnyFunSuite {
     assert(latin == "café latin1")
   }
 
+  test("pruning looks below the root only: a corpus under build/ or target/ indexes") {
+    val parent = Files.createTempDirectory("graft-prune")
+    for (root <- Seq(parent.resolve("build/logs"), parent.resolve("target"))) {
+      for ((rel, text) <- Seq("app.log" -> "kept line", "build/out.log" -> "pruned",
+          "sub/dist/x.log" -> "pruned", "sub/y.log" -> "kept too")) {
+        Files.createDirectories(root.resolve(rel).getParent)
+        Files.write(root.resolve(rel), text.getBytes(StandardCharsets.UTF_8))
+      }
+      val idx = Files.createTempDirectory("graft-prune-idx").toString
+      Graft.index(spark, root.toString, idx)
+      val sources = graft.index.VectorIndex.readVectors(spark, idx)
+        .select("source").distinct().collect().map(_.getString(0)).toSet
+      assert(sources == Set("app.log", "sub/y.log"), s"root $root")
+    }
+  }
+
   test("decode cascade: invalid UTF-8 falls back to latin1 (total)") {
     assert(Sources.decodeBytes("plain ascii".getBytes) == "plain ascii")
     assert(Sources.decodeBytes("café".getBytes(StandardCharsets.UTF_8)) == "café")
