@@ -392,6 +392,9 @@ object Bench {
     // leaves the driver with "parsed": null and no per-query data.
     // (build.sbt's StdoutOutput/showSuccess settings keep this line
     // bare and last; full-precision times still go to the sidecar.)
+    // The line has no length bound (about 6 KB at 252 queries), so a
+    // consumer must read the FULL stdout: a bounded tail cuts its
+    // head off and the line no longer parses.
     val line = s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","queries":${qsJson(2)},"sf":"$sfDir"}"""
     // stop Spark BEFORE printing: shutdown-hook log lines must not
     // land after (and so push out) the machine-readable line

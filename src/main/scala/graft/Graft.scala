@@ -14,22 +14,27 @@ import org.apache.spark.sql.functions._
   */
 object Graft {
 
+  /** `numPartitions`: embed tasks and index files, default the
+    * session's shuffle partitions ([[VectorIndex.layout]]). */
   case class IndexConfig(
       chunkSize: Int = Chunker.DefaultChunkSize,
       embedder: Embedder = HashEmbedder.default,
       numPartitions: Option[Int] = None)
 
-  /** Batch index build: scan → sniff/decode → chunk → embed →
-    * overwrite parquet index + manifest (the reference's
-    * `process_repository` + `save_to_chromadb` + `save_metadata`
-    * pipeline as one lazy map-only Spark plan). */
+  /** Batch index build: scan → sniff/decode → chunk → layout
+    * shuffle → embed → overwrite parquet index, then the manifest on
+    * the driver (the reference's `process_repository` +
+    * `save_to_chromadb` + `save_metadata` pipeline). Two Spark jobs:
+    * the scan stage up to the shuffle, and embed + write after it,
+    * balanced by chunk ([[VectorIndex.layout]]). */
   def index(
       spark: SparkSession,
       corpusDir: String,
       indexPath: String,
       cfg: IndexConfig = IndexConfig()): IndexManifest = {
     val files = Sources.readTextFiles(spark, corpusDir)
-    val chunks = Chunker.chunkDF(files, "source", "content", cfg.chunkSize)
+    val chunks = VectorIndex.layout(
+      Chunker.chunkDF(files, "source", "content", cfg.chunkSize), cfg.numPartitions)
     val embedded = EmbedOps.withEmbedding(chunks, "text", "embedding", cfg.embedder)
     val manifest = IndexManifest(
       indexed_at = java.time.Instant.now().toString,
@@ -38,7 +43,7 @@ object Graft {
       embedding_model = cfg.embedder.model,
       chunk_size = cfg.chunkSize,
       index_path = indexPath)
-    VectorIndex.write(embedded, indexPath, manifest, cfg.numPartitions)
+    VectorIndex.write(embedded, indexPath, manifest)
     manifest
   }
 

@@ -1,7 +1,13 @@
 package graft.index
 
+import com.fasterxml.jackson.databind.DeserializationFeature
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+
+import java.nio.charset.StandardCharsets
 
 /** Index manifest — the engine's `index_metadata.json` (log-vector
   * `index.py:461-478`, read back `ask.py:84-107`). */
@@ -20,45 +26,80 @@ case class IndexManifest(
   * and recreates the collection on every run, `index.py:426-429` —
   * SURVEY quirk Q3), manifest written alongside.
   *
-  * Scale design: the index is repartitioned by hash of `source`
-  * before write so (a) all chunks of one file co-locate (per-source
-  * window/group queries need no shuffle after a bucketed read) and
-  * (b) file sizes stay uniform at 1000-executor scale. Readers get
+  * Layout: [[layout]] hashes chunks on `(source, chunk_index)` — the
+  * index's unique key — into a fixed number of partitions, and the
+  * index build applies it BEFORE the embed UDF. The chunk, not the
+  * file, is the balancing unit: log files are lognormal in size, so
+  * keying on `source` (or the scan's size-packed file splits) hands
+  * one task most of the bytes and the costly embed waits on it,
+  * while ≤2 KB chunks hash evenly and every core embeds a fair
+  * share. Consequences: (a) a file's chunks spread across output
+  * files — nothing bucket-reads the index, and retrieval keys on
+  * `(source, chunk_index)`, never on file co-location; (b) output
+  * files stay uniform in size at 1000-executor scale. Readers get
   * plain Parquet with full pushdown/pruning — a kNN scan prunes to
   * `(id, embedding)` and never reads `text` (Catalyst column
   * pruning; SURVEY §4.2).
+  *
+  * The manifest is one JSON line at `manifest/part-00000.json`,
+  * written and read on the driver through the Hadoop `FileSystem`
+  * API (no Spark job); manifests written as a Spark JSON dataset
+  * (`part-00000-<uuid>-c000.json` beside `_SUCCESS` and `.crc`
+  * files) read the same way.
   */
 object VectorIndex {
   val VectorsDir = "vectors"
   val ManifestDir = "manifest"
 
-  def write(
-      chunks: DataFrame,
-      path: String,
-      manifest: IndexManifest,
-      numPartitions: Option[Int] = None): Unit = {
-    val spark = chunks.sparkSession
-    val parts = numPartitions.getOrElse(spark.sessionState.conf.numShufflePartitions)
-    chunks
-      .repartition(parts, col("source"))
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$path/$VectorsDir")
-    import spark.implicits._
-    Seq(manifest).toDF()
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite)
-      .json(s"$path/$ManifestDir")
+  private val Json = JsonMapper.builder()
+    .addModule(DefaultScalaModule)
+    .enable(DeserializationFeature.FAIL_ON_MISSING_CREATOR_PROPERTIES)
+    .enable(DeserializationFeature.FAIL_ON_NULL_CREATOR_PROPERTIES)
+    .disable(DeserializationFeature.FAIL_ON_UNKNOWN_PROPERTIES)
+    .build()
+
+  /** Chunks hashed on `(source, chunk_index)` into `numPartitions`
+    * partitions (default: the session's shuffle partitions) — one
+    * output file each when written. */
+  def layout(chunks: DataFrame, numPartitions: Option[Int] = None): DataFrame = {
+    val parts = numPartitions.getOrElse(chunks.sparkSession.sessionState.conf.numShufflePartitions)
+    chunks.repartition(parts, col("source"), col("chunk_index"))
+  }
+
+  /** Overwrites the index with `chunks` as partitioned (one parquet
+    * file per non-empty partition; see [[layout]]), then the
+    * manifest. */
+  def write(chunks: DataFrame, path: String, manifest: IndexManifest): Unit = {
+    chunks.write.mode(SaveMode.Overwrite).parquet(s"$path/$VectorsDir")
+    writeManifest(chunks.sparkSession, path, manifest)
   }
 
   def readVectors(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(s"$path/$VectorsDir")
 
+  private def manifestDir(spark: SparkSession, path: String) = {
+    val dir = new Path(s"$path/$ManifestDir")
+    (dir.getFileSystem(spark.sessionState.newHadoopConf()), dir)
+  }
+
+  private def writeManifest(spark: SparkSession, path: String, manifest: IndexManifest): Unit = {
+    val (fs, dir) = manifestDir(spark, path)
+    fs.delete(dir, true)
+    val out = fs.create(new Path(dir, "part-00000.json"), false)
+    try out.write((Json.writeValueAsString(manifest) + "\n").getBytes(StandardCharsets.UTF_8))
+    finally out.close()
+  }
+
+  /** The first `part-*.json` under `manifest/`; fails when there is
+    * none or it holds no manifest. */
   def readManifest(spark: SparkSession, path: String): IndexManifest = {
-    import spark.implicits._
-    spark.read.json(s"$path/$ManifestDir")
-      .select(col("indexed_at"), col("repository"), col("embedding_type"),
-        col("embedding_model"), col("chunk_size").cast("int"), col("index_path"))
-      .as[IndexManifest]
-      .head()
+    val (fs, dir) = manifestDir(spark, path)
+    val part = fs.listStatus(dir).map(_.getPath)
+      .filter(p => p.getName.startsWith("part-") && p.getName.endsWith(".json"))
+      .sortBy(_.getName).headOption
+      .getOrElse(throw new java.io.FileNotFoundException(s"no manifest part file in $dir"))
+    val in = fs.open(part)
+    try Json.readValue(in: java.io.InputStream, classOf[IndexManifest])
+    finally in.close()
   }
 }

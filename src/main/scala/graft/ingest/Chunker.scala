@@ -17,8 +17,10 @@ import scala.collection.mutable.ArrayBuffer
   * Parallelism model: chunking is sequential *within* a file and the
   * file/document is the parallel unit, exactly like the reference's
   * per-file loop (`index.py:333-384`) — so a UDF returning the chunk
-  * array + `posexplode` is the idiomatic Spark shape; the pipeline
-  * stays map-only (no shuffle) end to end.
+  * array + `posexplode` is the idiomatic Spark shape. The index
+  * build then shuffles the CHUNKS (not files) before embedding, so a
+  * large file's chunks do not all land on one core
+  * ([[graft.index.VectorIndex.layout]]).
   */
 object Chunker {
   val DefaultChunkSize = 2000

@@ -9,21 +9,22 @@ import org.apache.spark.sql.functions._
   * centroid ranking). */
 object OpsShared {
 
-  /** Session-memo key for a fixture directory: path + a cheap file
-    * fingerprint of the backing table, so overwriting a dir inside
-    * one JVM invalidates any memo keyed on it instead of silently
-    * serving stale results. Non-local filesystems fall back to
-    * path-only keying (immutable-ingest assumption). */
+  /** Memo key for a local path: the path plus every file's
+    * `name:length:mtime` in name order. The full string is the key —
+    * never a hash of it, which two fingerprints can share. */
+  private[graft] def fingerprintKey(path: String, files: Seq[java.io.File]): String =
+    files.sortBy(_.getName).map(f => s"${f.getName}:${f.length}:${f.lastModified}")
+      .mkString(s"$path#", "|", "")
+
+  /** Session-memo key for a fixture directory: path + the
+    * [[fingerprintKey]] of the backing table, so overwriting a dir
+    * inside one JVM invalidates any memo keyed on it instead of
+    * silently serving stale results. Non-local filesystems fall back
+    * to path-only keying (immutable-ingest assumption). */
   def dirKey(dir: String, table: String = "embeddings"): String = {
     val root = new java.io.File(s"$dir/$table.parquet")
-    val fp =
-      if (!root.exists()) "remote"
-      else {
-        val files = Option(root.listFiles()).map(_.sortBy(_.getName)).getOrElse(Array(root))
-        files.map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-          .mkString("|").hashCode.toString
-      }
-    s"$dir#$fp"
+    if (!root.exists()) s"$dir#remote"
+    else fingerprintKey(dir, Option(root.listFiles()).map(_.toSeq).getOrElse(Seq(root)))
   }
 
   /** The 1-row query-vector lookup every ANN query starts with:
@@ -60,8 +61,9 @@ object OpsShared {
     * overlap-independent-jobs: actions are only sequential because
     * the driver calls them sequentially). Use ONLY when the two
     * thunks share no mutable state and neither reads the other's
-    * output; failures propagate (unwrapped from the pool's
-    * ExecutionException) exactly as if the thunks ran inline.
+    * output. The first thunk to fail stops the other (its Spark
+    * jobs cancelled by job tag, tasks interrupted) and its exception
+    * propagates unwrapped from the pool's ExecutionException.
     *
     * Thread-local inheritance requirement: the pool is created fresh
     * PER CALL so its two threads are spawned at submit time from the
@@ -71,24 +73,39 @@ object OpsShared {
     * would silently detach the thunks' Spark jobs from the caller's
     * session properties; keep per-call pools. */
   def concurrently[A, B](fa: => A, fb: => B): (A, B) = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    import java.util.concurrent._
+    val sc = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).map(_.sparkContext)
+    val tags = Seq.fill(2)(s"graft-concurrently-${java.util.UUID.randomUUID()}")
+    // each thunk tags its jobs (a tag, unlike a job group, keeps the
+    // caller's group on them) and lets a cancel interrupt its tasks
+    def tagged(tag: String, body: => Any): Callable[Any] = () => {
+      sc.foreach { c => c.addJobTag(tag); c.setInterruptOnCancel(true) }
+      body
+    }
+    def cancelJobs(): Unit = for (c <- sc; t <- tags)
+      try org.apache.spark.sql.graft.JobTags.cancelAndWait(c, t, "a concurrent sibling thunk failed")
+      catch { case e: TimeoutException => System.err.println(s"[concurrently] cancelling $t: $e") }
+    val pool = Executors.newFixedThreadPool(2)
     try {
-      val ja = pool.submit(new java.util.concurrent.Callable[A] { def call(): A = fa })
-      val jb = pool.submit(new java.util.concurrent.Callable[B] { def call(): B = fb })
-      def get[T](f: java.util.concurrent.Future[T]): T =
-        try f.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            // one thunk failed: cancel the sibling and WAIT for it to
-            // exit before rethrowing, so its Spark job (and any
-            // eagerly-materialized localCheckpoint blocks it would
-            // orphan) does not keep running with no owner
-            ja.cancel(true); jb.cancel(true)
-            pool.shutdownNow()
-            pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
-            throw Option(e.getCause).getOrElse(e)
-        }
-      (get(ja), get(jb))
+      val done = new ExecutorCompletionService[Any](pool)
+      val ja = done.submit(tagged(tags(0), fa))
+      val jb = done.submit(tagged(tags(1), fb))
+      try { done.take().get(); done.take().get() }
+      catch {
+        case e: ExecutionException =>
+          // the first thunk to fail stops its sibling: fail its Spark
+          // jobs, interrupt its thread, wait for it to exit, and fail
+          // any job it started in between — so no job (or the
+          // localCheckpoint blocks it would orphan) keeps running
+          cancelJobs()
+          pool.shutdownNow()
+          if (!pool.awaitTermination(60, TimeUnit.SECONDS))
+            System.err.println(
+              "[concurrently] a thunk was still running 60 s after its sibling failed; rethrowing that failure")
+          cancelJobs()
+          throw Option(e.getCause).getOrElse(e)
+      }
+      (ja.get().asInstanceOf[A], jb.get().asInstanceOf[B])
     } finally pool.shutdown()
   }
 

@@ -27,8 +27,8 @@ object Tables {
   private val MinRowsPerSlice = 32L
 
   /** (bytes, rows, rowGroups) of a local parquet file or directory,
-    * memoized by path + file fingerprint (the [[OpsShared.dirKey]]
-    * convention, so an overwritten fixture re-derives). */
+    * memoized by [[OpsShared.fingerprintKey]] (so an overwritten
+    * fixture re-derives). */
   private val metaCache =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, Int)]()
 
@@ -40,9 +40,7 @@ object Tables {
       else Option(root.listFiles()).getOrElse(Array.empty[java.io.File])
         .filter(f => f.isFile && f.getName.endsWith(".parquet"))
     if (files.isEmpty) return None
-    val key = path + "#" + files.sortBy(_.getName)
-      .map(f => s"${f.getName}:${f.length}:${f.lastModified}").mkString("|").hashCode
-    try Some(metaCache.computeIfAbsent(key, _ => {
+    try Some(metaCache.computeIfAbsent(OpsShared.fingerprintKey(path, files.toSeq), _ => {
       val conf = spark.sessionState.newHadoopConf()
       var rows = 0L; var rgs = 0
       files.foreach { f =>

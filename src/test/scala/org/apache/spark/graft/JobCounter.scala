@@ -22,11 +22,15 @@ object JobCounter {
     sc.setJobGroup(group, "counted")
     try {
       val out = body
-      sc.listenerBus.waitUntilEmpty()
+      drain(sc)
       (out, jobs.get)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
   }
+
+  /** Waits until every event posted so far has reached the listeners
+    * (and so `statusTracker`). */
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }
