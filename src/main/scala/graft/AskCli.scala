@@ -62,7 +62,7 @@ object AskCli {
     }
     val indexPath = args(0)
     val outFile = if (args.length == 2) args(1) else "qa_log.md"
-    val spark = SparkCli.session("graft-ask")
+    val spark = SparkCli.session()
     try run(spark, indexPath, outFile,
       new BufferedReader(new java.io.InputStreamReader(System.in)), System.out)
     finally spark.stop()

@@ -148,37 +148,9 @@ object Bench {
     * (session, first-result) pair. */
   private[graft] def coldJvmRun(
       name: String, sfDir: String, cpus: String,
-      timeoutSec: Long = 900): Option[(Double, Double)] = {
-    var outFile: java.nio.file.Path = null
-    try {
-      outFile = java.nio.file.Files.createTempFile("graft-bench-cold", ".out")
-      import scala.jdk.CollectionConverters._
-      val pb = new ProcessBuilder(freshJvmCmd(name, sfDir, cpus).asJava)
-      pb.environment().put("GRAFT_BENCH_COLD", "1")
-      pb.redirectOutput(outFile.toFile)
-      pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-      val p = pb.start()
-      val done = p.waitFor(timeoutSec, java.util.concurrent.TimeUnit.SECONDS)
-      if (!done) {
-        p.destroyForcibly(); p.waitFor()
-        System.err.println(s"[bench-cold] $name: subprocess timed out after ${timeoutSec}s")
-        None
-      } else if (p.exitValue() != 0) {
-        System.err.println(s"[bench-cold] $name: subprocess exit ${p.exitValue()}")
-        None
-      } else {
-        parseColdLine(
-          new String(java.nio.file.Files.readAllBytes(outFile),
-            java.nio.charset.StandardCharsets.UTF_8), name)
-      }
-    } catch {
-      case e: Exception =>
-        System.err.println(s"[bench-cold] $name: spawn failed: $e")
-        None
-    } finally {
-      if (outFile != null) java.nio.file.Files.deleteIfExists(outFile)
-    }
-  }
+      timeoutSec: Long = 900): Option[(Double, Double)] =
+    childStdout("bench-cold", name, sfDir, cpus, Map("GRAFT_BENCH_COLD" -> "1"), timeoutSec)
+      .flatMap(parseColdLine(_, name))
 
   /** Parse [[BenchOne]]'s one-line stdout contract. */
   private[graft] def parseFreshLine(out: String, name: String): Option[Double] = {
@@ -188,93 +160,92 @@ object Bench {
   }
 
   /** Run one query's bench_one protocol in a fresh subprocess JVM.
-    * Child stdout goes to a temp file (the parse source), stderr to
-    * this process's stderr (diagnostics). Returns None on spawn
-    * failure, nonzero exit, timeout, or an unparseable line — the
-    * caller then keeps the in-run number and marks the failure. */
+    * Returns None on spawn failure, nonzero exit, timeout, or an
+    * unparseable line — the caller then keeps the in-run number and
+    * marks the failure. */
   private[graft] def freshJvmRetime(
       name: String, sfDir: String, cpus: String,
-      timeoutSec: Long = 900): Option[Double] = {
+      timeoutSec: Long = 900): Option[Double] =
+    childStdout("bench-fresh", name, sfDir, cpus, Map.empty, timeoutSec)
+      .flatMap(parseFreshLine(_, name))
+
+  /** Run [[BenchOne]] for one query in a subprocess JVM ([[freshJvmCmd]]
+    * plus `env`) and return its stdout. Child stdout goes to a temp
+    * file (the parse source), stderr to this process's stderr
+    * (diagnostics). None on spawn failure, nonzero exit or timeout,
+    * each logged under `[tag]`. */
+  private def childStdout(tag: String, name: String, sfDir: String, cpus: String,
+      env: Map[String, String], timeoutSec: Long): Option[String] = {
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
     var outFile: java.nio.file.Path = null
+    var p: Process = null
     try {
-      outFile = java.nio.file.Files.createTempFile("graft-bench-fresh", ".out")
-      import scala.jdk.CollectionConverters._
+      outFile = Files.createTempFile(s"graft-$tag", ".out")
       val pb = new ProcessBuilder(freshJvmCmd(name, sfDir, cpus).asJava)
+      env.foreach { case (k, v) => pb.environment().put(k, v) }
       pb.redirectOutput(outFile.toFile)
       pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-      val p = pb.start()
-      val done = p.waitFor(timeoutSec, java.util.concurrent.TimeUnit.SECONDS)
-      if (!done) {
-        p.destroyForcibly(); p.waitFor()
-        System.err.println(s"[bench-fresh] $name: subprocess timed out after ${timeoutSec}s")
+      p = pb.start()
+      if (!p.waitFor(timeoutSec, java.util.concurrent.TimeUnit.SECONDS)) {
+        System.err.println(s"[$tag] $name: subprocess timed out after ${timeoutSec}s")
         None
       } else if (p.exitValue() != 0) {
-        System.err.println(s"[bench-fresh] $name: subprocess exit ${p.exitValue()}")
+        System.err.println(s"[$tag] $name: subprocess exit ${p.exitValue()}")
         None
-      } else parseFreshLine(java.nio.file.Files.readString(outFile), name)
+      } else Some(new String(Files.readAllBytes(outFile), java.nio.charset.StandardCharsets.UTF_8))
     } catch {
-      case e: Throwable =>
-        System.err.println(s"[bench-fresh] $name: spawn failed: ${e.getMessage}")
+      case e: Exception =>
+        System.err.println(s"[$tag] $name: spawn failed: $e")
         None
     } finally {
-      // every adjudication creates one temp stdout file — reap it on
-      // ALL exits (parse, timeout, nonzero-exit, spawn failure alike)
+      // no child outlives its adjudication, and every one creates one
+      // temp stdout file — reap both on ALL exits
+      if (p != null && p.isAlive) { p.destroyForcibly(); p.waitFor() }
       if (outFile != null) {
-        try java.nio.file.Files.deleteIfExists(outFile)
-        catch { case _: Throwable => () }
+        try Files.deleteIfExists(outFile)
+        catch { case _: Exception => () }
       }
     }
   }
 
-  /** Whole-stage-codegen class cache size (static conf, so it must be
-    * set on the FIRST session of the JVM). The Spark default is 100
-    * entries — a 252-query registry generates thousands of codegen
-    * units per pass, so at the default every timed pass recompiles
-    * essentially every fragment from scratch (janino, 10-50 ms each):
-    * pure cross-query cache thrash, not per-query cost. A cache sized
-    * to the workload reports each query's own steady state — the same
-    * number a single-query JVM (BenchOne) already reports — and is
-    * equally right on a production driver running a repeated mix.
-    * Env-overridable; the default is workload-sized, not local-tuned. */
-  private[graft] def codegenCacheEntries: String =
-    sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192")
+  // full materialization of the ACTUAL plan: `count()` lets the
+  // optimizer eliminate unique-key outer joins whose columns the
+  // count never references — measured 12× under-timing on
+  // ann_recall_report and 3× on lsh_band_sweep (their expensive
+  // sides hang off a totality left join). toRdd executes the plan
+  // as the query defines it, producing real rows.
+  def runFull(df: org.apache.spark.sql.DataFrame): Unit = {
+    df.queryExecution.toRdd.count(); ()
+  }
+
+  private def fmt(v: Double, dec: Int): String =
+    String.format(java.util.Locale.ROOT, s"%.${dec}f", Double.box(v))
+
+  private def queriesJson(results: Map[String, Double], dec: Int): String = results
+    .map { case (k, v) => "\"" + k + "\":" + fmt(v, dec) }
+    .mkString("{", ",", "}")
+
+  /** The stdout contract line: total and per-query seconds of one run.
+    * The contract line carries the FULL per-query map inline: the
+    * driver derives per-query scaling (32-core vs 8-core runs) from
+    * it, and rounds 13-15 proved that pointing at a sidecar file
+    * instead leaves the driver with "parsed": null and no per-query
+    * data. (build.sbt's StdoutOutput/showSuccess settings keep this
+    * line bare and last; full-precision times still go to the
+    * sidecar.) The line has no length bound (about 6 KB at 252
+    * queries), so a consumer must read the FULL stdout: a bounded
+    * tail cuts its head off and the line no longer parses.
+    * Locale.ROOT: the decimal is always a dot. */
+  private[graft] def contractLine(results: Map[String, Double], sfDir: String): String = {
+    val total = if (results.nonEmpty) results.values.sum else 0.0
+    s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","queries":${queriesJson(results, 2)},"sf":"$sfDir"}"""
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries", codegenCacheEntries)
-      // no defaultParallelism floor on scan splits: parquet can only
-      // split at row-group boundaries, so the floor manufactures
-      // (cores − rowGroups) EMPTY scan tasks per stage — pure task
-      // overhead at any scale; real parallelism comes from bytes/
-      // row-groups (and the re-split rule where a pass needs it)
-      .config("spark.sql.files.minPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_NUM", "1"))
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalesce floor: keep the 1 MB default. A 64 KB floor was
-      // A/B-tested (tools/bench_one.scala, sf0.1): it buys ~25% on the
-      // compute-dense pair-verify stages (dedup_jaccard_prefix) but
-      // costs the LM-chain queries 40-100% (bigram/jm/kn_logprob,
-      // doremi, dsir, excess_select — many cheap small shuffles where
-      // 32 tasks of scheduling overhead dominate 2 tasks of work),
-      // a clear net loss. At production shuffle sizes neither floor
-      // binds, so the default is also the honest at-scale setting.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // full materialization of the ACTUAL plan: `count()` lets the
-    // optimizer eliminate unique-key outer joins whose columns the
-    // count never references — measured 12× under-timing on
-    // ann_recall_report and 3× on lsh_band_sweep (their expensive
-    // sides hang off a totality left join). toRdd executes the plan
-    // as the query defines it, producing real rows.
-    def runFull(df: org.apache.spark.sql.DataFrame): Unit = {
-      df.queryExecution.toRdd.count(); ()
-    }
+    val spark = GraftSession.create(s"local[$cpus]", cpus.toInt)
     // untimed warmup pass: JIT + codegen + classloading are one-time
     // JVM costs, not per-query throughput; report steady state
     SparkEntry.queries.foreach { case (_, fn) =>
@@ -359,12 +330,6 @@ object Bench {
       }
       name -> best
     }
-    val total = if (results.nonEmpty) results.values.sum else 0.0
-    def fmt(v: Double, dec: Int): String =
-      String.format(java.util.Locale.ROOT, s"%.${dec}f", Double.box(v))
-    def qsJson(dec: Int): String = results
-      .map { case (k, v) => "\"" + k + "\":" + fmt(v, dec) }
-      .mkString("{", ",", "}")
     // fresh-JVM adjudication record: which breaches escalated, what
     // the in-run and fresh numbers were, and whether the fresh min
     // replaced the reported time ("fresh-jvm") or the subprocess
@@ -378,24 +343,16 @@ object Bench {
       .mkString("{", ",", "}")
     // full-precision per-query times to a file (the harness captures
     // only a bounded stdout tail, which truncated the r3 artifact)
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":${qsJson(4)},"adjudicated":$adjJson,"sf":"$sfDir"}"""
+    val total = if (results.nonEmpty) results.values.sum else 0.0
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":${queriesJson(results, 4)},"adjudicated":$adjJson,"sf":"$sfDir"}"""
     val fullPath = java.nio.file.Paths.get("bench_queries.json").toAbsolutePath
     try java.nio.file.Files.write(fullPath, full.getBytes("UTF-8"))
     catch {
       case e: Throwable =>
         System.err.println(s"[bench] could not write $fullPath: ${e.getMessage}")
     }
-    // the LAST stdout line is the machine-readable artifact. The
-    // contract line carries the FULL per-query map inline: the driver
-    // derives per-query scaling (32-core vs 8-core runs) from it, and
-    // rounds 13-15 proved that pointing at a sidecar file instead
-    // leaves the driver with "parsed": null and no per-query data.
-    // (build.sbt's StdoutOutput/showSuccess settings keep this line
-    // bare and last; full-precision times still go to the sidecar.)
-    // The line has no length bound (about 6 KB at 252 queries), so a
-    // consumer must read the FULL stdout: a bounded tail cuts its
-    // head off and the line no longer parses.
-    val line = s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","queries":${qsJson(2)},"sf":"$sfDir"}"""
+    // the LAST stdout line is the machine-readable artifact
+    val line = contractLine(results, sfDir)
     // stop Spark BEFORE printing: shutdown-hook log lines must not
     // land after (and so push out) the machine-readable line
     spark.stop()
@@ -414,22 +371,9 @@ object BenchOne {
   def main(args: Array[String]): Unit = {
     val Array(name, sfDir, cpus) = args.take(3)
     val t00 = System.nanoTime()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries", Bench.codegenCacheEntries)
-      .config("spark.sql.files.minPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_NUM", "1"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-bench-fresh-wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def runFull(df: org.apache.spark.sql.DataFrame): Unit = {
-      df.queryExecution.toRdd.count(); ()
-    }
+    val spark = GraftSession.create(s"local[$cpus]", cpus.toInt,
+      Some(java.nio.file.Files.createTempDirectory("graft-bench-fresh-wh").toString))
+    import Bench.runFull
     val fn = SparkEntry.queries(name)
     val pre = Bench.setupFor(name)
     if (sys.env.get("GRAFT_BENCH_COLD").contains("1")) {

@@ -166,7 +166,7 @@ object IndexCli {
       System.err.println(err)
       sys.exit(1)
     case Right(a) =>
-      val spark = SparkCli.session("graft-index")
+      val spark = SparkCli.session()
       val code = try run(spark, a, System.out) finally spark.stop()
       if (code != 0) sys.exit(code)
   }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round instrumentation (not part of the library
   * surface): for each named query, write `explain("formatted")` to
   * a plans dir and print a one-line timing split — plan build
@@ -11,8 +9,8 @@ import org.apache.spark.sql.SparkSession
   *
   *   runMain graft.PlanDump <outDir> [sfDir] [q1,q2,...]
   *
-  * With no query list, runs the whole registry. Same session config
-  * as [[Bench]] so the numbers are comparable.
+  * With no query list, runs the whole registry. Same session
+  * ([[GraftSession]]) as [[Bench]] so the numbers are comparable.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -24,21 +22,9 @@ object PlanDump {
       else sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val suffix = sys.env.getOrElse("GRAFT_PLAN_SUFFIX", "before")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries", Bench.codegenCacheEntries)
-      .config("spark.sql.files.minPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_NUM", "1"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create(s"local[$cpus]", cpus.toInt)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    def runFull(df: org.apache.spark.sql.DataFrame): Unit = {
-      df.queryExecution.toRdd.count(); ()
-    }
+    import Bench.runFull
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
     names.foreach { name =>

@@ -2,17 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared interactive-CLI session builder (AskCli / IndexCli): one
-  * place for the master-resolution rule and the default configs. */
+/** Shared interactive-CLI session (AskCli / IndexCli): one place for
+  * the master-resolution rule and the partition count. */
 object SparkCli {
-  def session(appName: String): SparkSession = {
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  def session(): SparkSession =
+    GraftSession.create(sys.env.getOrElse("SPARK_MASTER", "local[*]"), 32)
 }

@@ -36,28 +36,19 @@ object SparkEntry {
     Knn.topK(index, qVec, k = 5, idCol = "id")
   }
 
+  /** The registry's modules, each contributing its queries and oracles. */
+  private val modules: Seq[QueryModule] = Seq(
+    Relational, Events, VectorQueries, TextOps, Dedup, Multimodal, AsOf,
+    KMeansVec, Curation, Retrieval, Quantize, Pca, GraphAnn, Pq, Opq, Rerank,
+    QualityModel, Maintenance, AnnEval, Bpe, Outliers, Dsir, Cms, Coreset,
+    PageRank, Rq, UnigramLm, Bq, WordPiece, Bloom, RandomProjection,
+    TokenizerEval)
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.queries ++ Events.queries ++ VectorQueries.queries ++
-      TextOps.queries ++ Dedup.queries ++ Multimodal.queries ++ AsOf.queries ++
-      KMeansVec.queries ++ Curation.queries ++ Retrieval.queries ++ Quantize.queries ++
-      Pca.queries ++ GraphAnn.queries ++ Pq.queries ++ Opq.queries ++ Rerank.queries ++
-      QualityModel.queries ++ Maintenance.queries ++ AnnEval.queries ++ Bpe.queries ++
-      Outliers.queries ++ Dsir.queries ++ Cms.queries ++ Coreset.queries ++
-      PageRank.queries ++ Rq.queries ++ UnigramLm.queries ++ Bq.queries ++
-      WordPiece.queries ++ Bloom.queries ++ RandomProjection.queries ++
-      TokenizerEval.queries
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    modules.map(_.queries).reduce(_ ++ _)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys → driver rows-only check. */
-  def oracleSql: Map[String, String] =
-    Relational.oracles ++ Events.oracles ++ VectorQueries.oracles ++
-      TextOps.oracles ++ Dedup.oracles ++ Multimodal.oracles ++ AsOf.oracles ++
-      KMeansVec.oracles ++ Curation.oracles ++ Retrieval.oracles ++ Quantize.oracles ++
-      Pca.oracles ++ GraphAnn.oracles ++ Pq.oracles ++ Opq.oracles ++ Rerank.oracles ++
-      QualityModel.oracles ++ Maintenance.oracles ++ AnnEval.oracles ++ Bpe.oracles ++
-      Outliers.oracles ++ Dsir.oracles ++ Cms.oracles ++ Coreset.oracles ++
-      PageRank.oracles ++ Rq.oracles ++ UnigramLm.oracles ++ Bq.oracles ++
-      WordPiece.oracles ++ Bloom.oracles ++ RandomProjection.oracles ++
-      TokenizerEval.oracles
+  val oracleSql: Map[String, String] = modules.map(_.oracles).reduce(_ ++ _)
 }

@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * must pay (run it on a sampled query set, not per query, in
   * production).
   */
-object AnnEval {
+object AnnEval extends QueryModule {
 
   private val K = 5
 

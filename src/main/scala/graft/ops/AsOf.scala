@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * Skewed keys follow the same mitigation as any window: pre-range
   * partition or salt by time bucket.
   */
-object AsOf {
+object AsOf extends QueryModule {
 
   /** Left columns + `<prefix><payloadCol>` columns carrying the
     * as-of right values (null when no prior right row). If several

@@ -42,7 +42,7 @@ import org.apache.spark.sql.functions._
   * oracle-gated (the CMS precedent: sketches on the shared hash stay
   * hash-match instead of rows-only).
   */
-object Bloom {
+object Bloom extends QueryModule {
   import Tables.t
 
   /** Filter size in bits (2 KB). Sized so the fixture benchmark's

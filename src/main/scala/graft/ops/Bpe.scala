@@ -35,7 +35,7 @@ import org.apache.spark.sql.functions._
   * (cnt DESC, lhs, rhs) total order, so `bpe_merges` and
   * `bpe_encode` hash-match bit-for-bit.
   */
-object Bpe {
+object Bpe extends QueryModule {
   import Tables.t
 
   /** Merge rounds for the REGISTERED queries — one argmax merge per

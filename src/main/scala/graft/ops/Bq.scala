@@ -40,7 +40,7 @@ import org.apache.spark.sql.functions._
   * `Long.bitCount(^)` here. Shortlist and final cuts order by
   * (key, vec_id), a total order.
   */
-object Bq {
+object Bq extends QueryModule {
   import Tables.t
 
   /** Hamming shortlist size — the recall knob (BQ's nProbe): much

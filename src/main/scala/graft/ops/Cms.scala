@@ -34,7 +34,7 @@ import org.apache.spark.sql.functions._
   *
   * All arithmetic is exact integers — no decimal bridge needed.
   */
-object Cms {
+object Cms extends QueryModule {
   import Tables.t
 
   /** Independent hash rows. Pr[overestimate > ε·N] ≤ (1/2)^Depth. */

@@ -30,7 +30,7 @@ import org.apache.spark.sql.types._
   * NULL never reaches `least`. The oracle unrolls the K rounds as
   * materialized CTEs: mₖ = least(mₖ₋₁, dist to cₖ), cₖ₊₁ = argmax.
   */
-object Coreset {
+object Coreset extends QueryModule {
   import Tables.t
 
   /** Selected-set size. Bounded and small: the greedy loop is

@@ -28,7 +28,7 @@ import Tables.t
   *    not a global ORDER BY — the global variant would serialize 100 TB
   *    through one reducer.
   */
-object Curation {
+object Curation extends QueryModule {
 
   private def ws: Column = split(col("text"), " ")
 

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   *     pairs must share a band (pigeonhole), so banding is exact
   *     candidate generation, then bit_count verifies.
   */
-object Dedup {
+object Dedup extends QueryModule {
   import Tables.t
 
   /** Exact duplicate groups keyed on full text; min(doc_id) is the
@@ -1741,8 +1741,7 @@ object Dedup {
   private[graft] def ensureMaximalIndex(s: SparkSession, dir: String): String = {
     val key = OpsShared.dirKey(dir, "documents")
     maximalIdxCache.computeIfAbsent(key, _ => {
-      val table = "graft_mx_idx_" +
-        java.lang.Long.toHexString(java.lang.Integer.toUnsignedLong(key.hashCode))
+      val table = "graft_mx_idx_" + OpsShared.tableSuffix(key)
       writeMaximalIndexOf(t(s, dir, "documents", resplit = true), table)
       table
     })

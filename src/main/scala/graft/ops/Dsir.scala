@@ -36,7 +36,7 @@ import org.apache.spark.sql.functions._
   * (§8.5 bridge), so the fold is partition-order-free and the whole
   * pipeline — hash, smoothing, ln, Gumbel — replays exactly in DuckDB.
   */
-object Dsir {
+object Dsir extends QueryModule {
   import Tables.t
 
   /** Hashed feature-space size. Fixed model capacity (the paper uses

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * value DuckDB's `CAST(ts AS TIMESTAMP)` yields on either layout,
   * so every oracle casts consistently (FIXTURES.md note).
   */
-object Events {
+object Events extends QueryModule {
 
   def eventsTable(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

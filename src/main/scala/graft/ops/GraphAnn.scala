@@ -35,7 +35,7 @@ import org.apache.spark.sql.functions._
   * query — the same gate `ann_lsh_topk` takes. Final distances are
   * computed by the shared r6(cosineDist) column kernel, so values are
   * bit-identical to every other kNN query. */
-object GraphAnn {
+object GraphAnn extends QueryModule {
 
   /** Max neighbors kept per node (graph degree). */
   val M = 12

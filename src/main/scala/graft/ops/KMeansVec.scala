@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * aggregation back — the canonical Lloyd's-on-Spark loop (k·dim
   * floats through the driver per iteration, never the data).
   */
-object KMeansVec {
+object KMeansVec extends QueryModule {
   import Tables.t
 
   val K = 10

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * then dies on open/footer overhead and the driver on listing. The
   * fix is periodic rewrite into right-sized files — file count
   * derived from the dataset's REAL on-disk bytes, never guessed. */
-object Maintenance {
+object Maintenance extends QueryModule {
 
   val DefaultTargetBytes: Long = 128L * 1024 * 1024
 
@@ -502,13 +502,7 @@ object Maintenance {
       s: SparkSession, dir: String): (String, String, String) = {
     val key = OpsShared.dirKey(dir, "documents")
     invIdxCache.computeIfAbsent(key, _ => {
-      // 60-bit md5 fingerprint (the repo's CrossHash primitive), not
-      // String.hashCode: two fixture dirs colliding at 32 bits in one
-      // session would share table names — the second build would
-      // overwrite the first's tables while its cache entry still
-      // points at them, serving a wrong inventory
-      val sfx = java.lang.Long.toHexString(
-        graft.functions.CrossHash.md5Hash60(key))
+      val sfx = OpsShared.tableSuffix(key)
       val sub = "graft_inv_sub_" + sfx
       val mx = "graft_inv_mx_" + sfx
       val bd = "graft_inv_band_" + sfx

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * (e.g. the fixtures' text bytes, or audio/video whose codecs this
   * container lacks).
   */
-object Multimodal {
+object Multimodal extends QueryModule {
   import Tables.t
 
   case class MediaRecord(doc_id: Long, payload: Array[Byte])

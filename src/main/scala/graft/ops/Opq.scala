@@ -38,7 +38,7 @@ import org.apache.spark.sql.functions._
   * the oracle's v3 CTE; u, uᵀu, uᵀx and the reflection are plain
   * IEEE arithmetic in the same sequential order both engines use, so
   * the rotated nx feeds the shared PQ CTEs bit-for-bit. */
-object Opq {
+object Opq extends QueryModule {
 
   /** Householder direction for the dir's fitted pc1: (u, uᵀu), or
     * None when pc1 is already e0 (reflection undefined/unneeded). */

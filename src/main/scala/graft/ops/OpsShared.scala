@@ -27,6 +27,14 @@ object OpsShared {
     else fingerprintKey(dir, Option(root.listFiles()).map(_.toSeq).getOrElse(Seq(root)))
   }
 
+  /** Table-name suffix for a session-built index keyed by `key`: the
+    * hex of its 60-bit md5 ([[graft.functions.CrossHash.md5Hash60]]),
+    * not of `String.hashCode`. Two keys colliding at 32 bits would
+    * share a table name, so the second build would overwrite the
+    * first's table while the first's memo entry still points at it. */
+  private[graft] def tableSuffix(key: String): String =
+    java.lang.Long.toHexString(graft.functions.CrossHash.md5Hash60(key))
+
   /** The 1-row query-vector lookup every ANN query starts with:
     * `Some(vector)` when the [[VectorQueries.QueryVecId]] row exists
     * and is not all-zero, `None` otherwise — the family-wide

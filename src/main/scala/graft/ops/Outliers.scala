@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * dot (the k-means §8.5 bridge rule), so DuckDB replays every
   * distance bit-for-bit.
   */
-object Outliers {
+object Outliers extends QueryModule {
   import Tables.t
 
   val TopN = 20

@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   * decimal-summed (§8.5), so every round is partition-order-free and
   * the whole walk replays as unrolled DuckDB CTEs.
   */
-object PageRank {
+object PageRank extends QueryModule {
   import Tables.t
 
   val Damp = 0.85

@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * (the same sequential-fold convention the cosine kernel uses); the
   * iterate is r6-rounded between steps so both engines walk identical
   * doubles end to end. */
-object Pca {
+object Pca extends QueryModule {
   import Tables.t
 
   /** Fixture embedding dimensionality (embeddings.parquet, TESTDATA). */

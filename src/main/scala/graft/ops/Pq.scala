@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
   * the §8.5 r6+DECIMAL bridge. DuckDB replays codebooks, codes,
   * tables, and distances bit-for-bit.
   */
-object Pq {
+object Pq extends QueryModule {
   import Tables.t
 
   /** Number of subvectors (fixture dim 64 → 8 dims each). */

@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   * written with IDENTICAL association order in Scala and SQL, so the
   * fitted weights are bit-identical across engines.
   */
-object QualityModel {
+object QualityModel extends QueryModule {
   import Tables.t
 
   val Ridge = 0.1

@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   * All expressions are builtin higher-order functions — no UDF, the
   * whole plan stays in whole-stage codegen.
   */
-object Quantize {
+object Quantize extends QueryModule {
   import Tables.t
 
   /** Quantized view: per-vector scale + int8 codes (as INT array —

@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * the projection (and its distortion profile) replays bit-exactly
   * in DuckDB.
   */
-object RandomProjection {
+object RandomProjection extends QueryModule {
   import Tables.t
 
   /** Target dimension. 16 keeps √k = 4 exact in binary, so the

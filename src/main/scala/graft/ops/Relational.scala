@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * skew; every aggregate uses the decimal bridge (OracleMath) so
   * results are partition-order independent.
   */
-object Relational {
+object Relational extends QueryModule {
   import Tables.t
 
   /** TPC-H Q1-style pricing summary: filter → 4-way sum + avg +

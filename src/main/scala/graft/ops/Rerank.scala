@@ -31,7 +31,7 @@ import org.apache.spark.sql.types._
   * oracle CTEs), so argmax decisions are bit-identical across
   * engines; every tie breaks on vec_id.
   */
-object Rerank {
+object Rerank extends QueryModule {
   import Tables.t
 
   val MmrShortlist = 20

@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   *     the result is partition-order-independent AND
   *     DuckDB-recomputable (§8.5 bridge rule).
   */
-object Retrieval {
+object Retrieval extends QueryModule {
   import Tables.t
 
   /** The flagship ask — same terms as SparkEntry.entry's question. */

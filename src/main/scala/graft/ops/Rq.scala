@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * doubles (parameter-bounded → closure/broadcast safe under the
   * centroid rule); the corpus never shuffles.
   */
-object Rq {
+object Rq extends QueryModule {
 
   /** Centroids per level (4-bit codes; two levels = one byte). */
   val CodeK = 16

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * so everything stays inside whole-stage codegen; UDFs appear only
   * where a sequential fold is inherent (chunker, rolling hash).
   */
-object TextOps {
+object TextOps extends QueryModule {
   import Tables.t
 
   val Stopwords: Seq[String] =

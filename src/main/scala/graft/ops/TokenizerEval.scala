@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * partial aggregation. The oracle nests the three proven encode
   * SQLs as MATERIALIZED derived tables, so each evaluates once.
   */
-object TokenizerEval {
+object TokenizerEval extends QueryModule {
 
   private def corpusRow(df: DataFrame, name: String, wordsCol: String): DataFrame =
     df.agg(

@@ -35,7 +35,7 @@ import org.apache.spark.sql.functions._
   * one join back to the stream — no per-word driver work, no
   * unbounded state anywhere.
   */
-object UnigramLm {
+object UnigramLm extends QueryModule {
   import Tables.t
 
   val MaxPieceLen = 4

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * matches VectorFunctions' `aggregate(zip_with(...))` op-for-op,
   * so pre-round values are bit-identical.
   */
-object VectorQueries {
+object VectorQueries extends QueryModule {
   import Tables.t
 
   val QueryVecId = 0L

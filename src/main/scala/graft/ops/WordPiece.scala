@@ -39,7 +39,7 @@ import org.apache.spark.sql.functions._
   * distinct words, one join back to the stream — no per-word driver
   * work, no unbounded state.
   */
-object WordPiece {
+object WordPiece extends QueryModule {
   import Tables.t
   import UnigramLm.{MaxPieceLen, MaxWordLen, VocabOut, VocabTop}
 

@@ -15,10 +15,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * {{{ SPARK_GRAFT_BENCH=1 sbt "testOnly graft.BenchBudgetSpec" }}}
   *
-  * Same protocol as Bench.scala: sf0.1, local[32], untimed warmup
-  * pass (JIT/codegen/classloading are one-time JVM costs), then
-  * min-of-2 timed passes per query. A breach means the PLAN changed —
-  * re-measure once to rule out a co-tenant, then bisect the operator.
+  * Same protocol and session ([[GraftSession]]) as Bench.scala:
+  * sf0.1, local[32], untimed warmup pass (JIT/codegen/classloading
+  * are one-time JVM costs), then min-of-2 timed passes per query. A
+  * breach means the PLAN changed — re-measure once to rule out a
+  * co-tenant, then bisect the operator.
   */
 class BenchBudgetSpec extends AnyFunSuite {
 
@@ -35,26 +36,13 @@ class BenchBudgetSpec extends AnyFunSuite {
       .map(m => m.group(1) -> m.group(2).toDouble).toMap - "budgets"
   }
 
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-bench-budget")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  private lazy val spark: SparkSession = GraftSession.create("local[32]", 32)
 
   private lazy val measured: Map[String, Double] = {
     // full-materialization protocol shared with Bench.scala: count()
     // lets the optimizer eliminate unique-key outer joins and
     // under-time the report queries
-    def runFull(df: org.apache.spark.sql.DataFrame): Unit = {
-      df.queryExecution.toRdd.count(); ()
-    }
+    import Bench.runFull
     SparkEntry.queries.foreach { case (_, fn) =>
       try runFull(fn(spark, sfDir)) catch { case _: Throwable => () }
     }

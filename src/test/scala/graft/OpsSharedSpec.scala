@@ -23,6 +23,11 @@ class OpsSharedSpec extends AnyFunSuite {
     assert(keyWith("Aa") != keyWith("BB"))
   }
 
+  test("tableSuffix: keys whose hashCodes collide (\"Aa\"/\"BB\") name different tables") {
+    assert("Aa".hashCode == "BB".hashCode)
+    assert(OpsShared.tableSuffix("Aa") != OpsShared.tableSuffix("BB"))
+  }
+
   test("concurrently: a failing thunk cancels its sibling's running Spark job before rethrowing") {
     val sc = spark.sparkContext
     val group = s"concurrently-${java.util.UUID.randomUUID()}"

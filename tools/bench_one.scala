@@ -2,7 +2,7 @@
 // Times named queries with the Bench protocol (warmup + 2 passes, min).
 val names = sys.props.getOrElse("bench.names", "dedup_jaccard_prefix").split(",").toSeq
 val sfDir = sys.props.getOrElse("bench.sf", "/root/testdata/sf0.1")
-def runFull(df: org.apache.spark.sql.DataFrame): Unit = { df.queryExecution.toRdd.count(); () }
+import graft.Bench.runFull
 val qs = graft.SparkEntry.queries
 for (n <- names) {
   val fn = qs(n)

@@ -68,7 +68,7 @@ for name, sql in sorted(oracle.items()):
     else:
         print(f"PASS {name} ({len(ours)} rows)")
 rowsonly = [n for n in __import__('os').listdir(out_dir)
-            if n not in oracle and not n.endswith('.json')]
+            if n not in oracle and __import__('os').path.isdir(f"{out_dir}/{n}")]
 for n in sorted(rowsonly):
     cnt = con.sql(f"SELECT count(*) FROM '{out_dir}/{n}/*.parquet'").fetchone()[0]
     print(f"ROWS {n}: {cnt} rows")
