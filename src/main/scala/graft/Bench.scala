@@ -97,26 +97,20 @@ object Bench {
   // number is recorded in the artifact with its in-run twin, making
   // the committed bench fully self-adjudicating.
 
-  /** JDK-17 module opens a bare `java` launch needs for Spark —
-    * build.sbt's list (spark-submit injects these itself). */
-  private val jdk17AddOpens: Seq[String] = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-
   /** Subprocess command line for one fresh-JVM re-time: this JVM's
-    * own java binary, classpath, and heap cap (run/fork gives the
-    * forked bench the REAL application classpath), running
-    * [[BenchOne]]. */
+    * own java binary, `--add-opens` flags (Spark on JDK 17 needs
+    * them outside spark-submit; build.sbt's `javaOptions` is the one
+    * list), classpath, and heap cap (run/fork gives the forked bench
+    * the REAL application classpath), running [[BenchOne]]. The JVM
+    * reports each flag as `--add-opens=<module/pkg>=<target>`. */
   private[graft] def freshJvmCmd(name: String, sfDir: String, cpus: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
     val javaBin = java.nio.file.Paths.get(
       System.getProperty("java.home"), "bin", "java").toString
-    Seq(javaBin) ++ jdk17AddOpens ++ Seq(
+    val addOpens = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.toSeq.filter(_.startsWith("--add-opens="))
+      .flatMap(a => Seq("--add-opens", a.stripPrefix("--add-opens=")))
+    Seq(javaBin) ++ addOpens ++ Seq(
       s"-Xmx${Runtime.getRuntime.maxMemory}",
       "-cp", System.getProperty("java.class.path"),
       "graft.BenchOne", name, sfDir, cpus)
@@ -360,10 +354,10 @@ object Bench {
   }
 }
 
-/** One query under the bench protocol in a CLEAN JVM — the judge's
-  * quiet re-time recipe (tools/bench_one.scala), promoted to a main
-  * so [[Bench]] can self-adjudicate residual budget breaches by
-  * subprocess. Same session config as the bench; the warehouse is a
+/** One query under the bench protocol in a CLEAN JVM — the quiet
+  * single-query re-time (`runMain graft.BenchOne <query> <sfDir>
+  * <cpus>`), which [[Bench]] also spawns to self-adjudicate residual
+  * budget breaches. Same session config as the bench; the warehouse is a
   * private temp dir so index-building setups never race the parent
   * session's catalog locations. Stdout contract is ONE line:
   * `[bench-fresh] <name> min=<sec>`. */

@@ -35,7 +35,7 @@ object GraftSession {
       // row-groups (and the re-split rule where a pass needs it)
       .config("spark.sql.files.minPartitionNum", 1L)
       // AQE coalesce floor: keep the 1 MB default. A 64 KB floor was
-      // A/B-tested (tools/bench_one.scala, sf0.1): it buys ~25% on the
+      // A/B-tested per query (graft.BenchOne, sf0.1): it buys ~25% on the
       // compute-dense pair-verify stages (dedup_jaccard_prefix) but
       // costs the LM-chain queries 40-100% (bigram/jm/kn_logprob,
       // doremi, dsir, excess_select — many cheap small shuffles where

@@ -164,8 +164,8 @@ object Sources {
     * reference's metadata key, `index.py:375`). Normalizes the
     * `file:` scheme's slash count first so `binaryFile`'s `path`
     * (`file:/…`) and `input_file_name()` (`file:///…`) relativize
-    * identically — batch ingest and the streaming indexer MUST
-    * produce the same source key for the same file. */
+    * identically: both forms MUST produce the same source key for
+    * the same file. */
   def relativeSource(pathCol: org.apache.spark.sql.Column, dir: String): org.apache.spark.sql.Column = {
     val root = dir.stripSuffix("/") + "/"
     regexp_replace(

@@ -32,9 +32,8 @@ import org.apache.spark.sql.functions._
   *     place; no join, no shuffle, no corpus-side aggregation (the
   *     exact variant pays a broadcast hash join + a doc_id
   *     aggregation);
-  *   - this is the same build/probe split a streaming deployment
-  *     needs: the bitset is frozen model state, scoring is stateless
-  *     (the [[graft.streaming.StreamingIndex]] dsir/curation shape).
+  *   - the bitset is frozen model state and scoring is stateless,
+  *     so one build serves any number of corpus passes.
   *
   * The hash family is the cross-engine md5 ([[CrossHash]]), so the
   * whole filter — build positions, probe, per-doc flag counts —
@@ -63,9 +62,7 @@ object Bloom extends QueryModule {
 
   /** Build the benchmark bitset: distinct grams of the benchmark
     * slice → K positions each → distinct positions (≤ MBits rows)
-    * collected into 2 KB of driver state. Public: the streaming twin
-    * ([[graft.streaming.StreamingIndex.bloomScoreStream]]) freezes
-    * this as its model state. */
+    * collected into 2 KB of driver state. */
   def benchBitset(s: SparkSession, dir: String): java.util.BitSet = {
     val d = t(s, dir, "documents").filter(col("doc_id") % 50 === 0)
     val pos = Dedup.shingles(d)
@@ -81,11 +78,8 @@ object Bloom extends QueryModule {
   }
 
   /** Map-only scoring of ANY (doc_id, text) relation against a
-    * frozen bitset: (doc_id, n_flagged). ONE definition shared by
-    * the batch query and the streaming twin, so batch and stream
-    * semantics cannot drift (the gopherScore convention). The 2 KB
-    * bitset rides the UDF closure — no join, no shuffle, streams
-    * without state. */
+    * frozen bitset: (doc_id, n_flagged). The 2 KB bitset rides the
+    * UDF closure — no join, no shuffle, no state. */
   def scoreDocs(docs: DataFrame, bits: java.util.BitSet): DataFrame = {
     val flagged = udf { (sh: Seq[String]) =>
       var n = 0L

@@ -358,9 +358,6 @@ object Curation extends QueryModule {
       .filter(col("nrm") > 0)
   }
 
-  private def docEmbeddings(s: SparkSession, dir: String): DataFrame =
-    embedDocs(t(s, dir, "documents"))
-
   /** Embedding-similarity decontamination over EXPLICIT corpus and
     * benchmark relations — the operator proper, decoupled from any
     * fixture split (the [[Multimodal.alignPairs]] convention): both
@@ -404,59 +401,6 @@ object Curation extends QueryModule {
     semanticDecontaminateAgainst(
       d.filter(col("doc_id") % 50 =!= 0),
       d.filter(col("doc_id") % 50 === 0))
-  }
-
-  /** Frozen benchmark side of [[semanticDecontaminate]] for the
-    * STREAMING twin: (bench_id, embedding, norm) collected once at
-    * stream start. Bounded by the decontaminate size rule — the
-    * benchmark is tiny relative to the corpus (the same fact that
-    * lets the batch join broadcast), so the collect is
-    * parameter-bounded, not corpus-bounded. */
-  private[graft] def benchEmbedFrozen(
-      s: SparkSession, dir: String): Array[(Long, Array[Float], Double)] =
-    docEmbeddings(s, dir).filter(col("doc_id") % 50 === 0)
-      .select(col("doc_id"), col("ve"), col("nrm"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray, r.getDouble(2)))
-
-  /** Map-only closure twin of the [[semanticDecontaminate]] scoring
-    * chain — the `langidPredictUdf` shape for decontamination: the
-    * frozen benchmark rides the closure, each doc embeds + scores
-    * against every benchmark vector in one pass (sequential double
-    * folds ≡ the native FloatDotProduct order, r6d ≡ the column r6),
-    * argmax by (sim desc, bench_id asc) over the sims clearing
-    * [[SemDecontamEps]]; None for clean or zero-norm docs. Bit-equal
-    * to the batch broadcast join by construction — StreamingSpec pins
-    * the per-doc equality. */
-  private[graft] def semanticDecontamPredictUdf(
-      bench: Array[(Long, Array[Float], Double)]) = udf { (text: String) =>
-    val v = graft.embed.HashEmbedder.default.embedOne(text)
-    var nv2 = 0.0
-    var i = 0
-    while (i < v.length) { nv2 += v(i).toDouble * v(i).toDouble; i += 1 }
-    val nv = math.sqrt(nv2)
-    if (nv == 0.0) None
-    else {
-      var bestId = Long.MaxValue
-      var bestSim = Double.NegativeInfinity
-      var found = false
-      var b = 0
-      while (b < bench.length) {
-        val (id, be, nb) = bench(b)
-        var d = 0.0
-        var j = 0
-        while (j < v.length) { d += v(j).toDouble * be(j).toDouble; j += 1 }
-        val sim = graft.functions.OracleMath.r6d(d / (nv * nb))
-        if (sim >= SemDecontamEps &&
-            (sim > bestSim || (sim == bestSim && id < bestId))) {
-          bestSim = sim
-          bestId = id
-          found = true
-        }
-        b += 1
-      }
-      if (found) Some((bestId, bestSim)) else None
-    }
   }
 
   /** The hash-ngram embed chain as DuckDB CTEs over `documents` —
@@ -576,11 +520,8 @@ object Curation extends QueryModule {
   def gopherQuality(s: SparkSession, dir: String): DataFrame =
     gopherScore(t(s, dir, "documents", resplit = true)).orderBy(col("doc_id"))
 
-  /** The gopher scoring on ANY (doc_id, text) relation — ONE
-    * definition shared by the batch query and the streaming twin
-    * ([[graft.streaming.StreamingIndex.curationStream]]), so batch
-    * and stream semantics cannot drift. Map-only (array HOFs, no
-    * shuffle), which is exactly why it streams without state. */
+  /** The gopher scoring on ANY (doc_id, text) relation. Map-only
+    * (array HOFs, no shuffle). */
   def gopherScore(d: DataFrame): DataFrame = {
     val sig = gopherSignals(d)
     sig.select(
@@ -3038,20 +2979,6 @@ object Curation extends QueryModule {
   def sourceCapSample(s: SparkSession, dir: String): DataFrame =
     sourceCapSampleOf(t(s, dir, "documents"))
 
-  /** Arrival-order per-doc cap decisions — the batch mirror of the
-    * streaming gate ([[graft.streaming.StreamingIndex.sourceCapStream]]):
-    * doc_id is the explicit arrival axis (the incremental-scrub
-    * convention), each source's first `cap` arrivals keep. Same
-    * single source-keyed window as the hash-order report. */
-  def sourceCapArrivalOf(d: DataFrame,
-      cap: Int = CapDocsPerSource): DataFrame = {
-    val w = Window.partitionBy(col("source")).orderBy(col("doc_id"))
-    d.select(col("doc_id"), col("source"))
-      .withColumn("keep",
-        (row_number().over(w) <= cap).cast("int"))
-      .orderBy(col("doc_id"))
-  }
-
   /** Oracle mirror (prefix `scs_`): identical hash order and cap. */
   val sourceCapSampleSql: String =
     s"""WITH scs_r AS (
@@ -3221,10 +3148,9 @@ object Curation extends QueryModule {
     markupArtifactsReportOf(t(s, dir, "documents"))
 
   /** Per-doc artifact flags — the row-local half of
-    * [[markupArtifactsReportOf]], shared verbatim with the streaming
-    * gate ([[graft.streaming.StreamingIndex.markupGateStream]]) so
-    * batch and stream decisions cannot drift; grouping these rows by
-    * source reproduces the report's counters exactly (spec-pinned). */
+    * [[markupArtifactsReportOf]]: grouping these rows by source
+    * reproduces the report's counters exactly (the report is that
+    * grouping). */
   def markupFlagsOf(d: DataFrame): DataFrame = {
     def cnt(pat: String): Column =
       size(regexp_extract_all(col("text"), lit(pat), lit(0))).cast("long")
@@ -3260,9 +3186,7 @@ object Curation extends QueryModule {
   // ---- encoding-damage (mojibake) report ----
 
   /** Per-doc encoding-damage counters — the row-local half of
-    * [[mojibakeReportOf]], shared verbatim with the streaming gate
-    * ([[graft.streaming.StreamingIndex.mojibakeGateStream]]) so batch
-    * and stream decisions cannot drift. Four independent signals of
+    * [[mojibakeReportOf]]. Four independent signals of
     * UTF-8 text that went through a wrong-codec round-trip:
     *
     *  - `n_latin1`: the classic double-encoding digraph — a UTF-8
@@ -3362,9 +3286,8 @@ object Curation extends QueryModule {
     "regenerate response")
 
   /** Per-doc marker-hit counters — the row-local half of
-    * [[syntheticTextReportOf]], shared verbatim with the streaming
-    * gate ([[graft.streaming.StreamingIndex.syntheticGateStream]]).
-    * Hit counting is the exact length-difference identity
+    * [[syntheticTextReportOf]]. Hit counting is the exact
+    * length-difference identity
     * (len(t) − len(replace(t, m, ''))) / len(m) — literal substring
     * matching, no regex, identical non-overlapping scan semantics in
     * Spark and DuckDB; the division is exact (the difference is a

@@ -56,7 +56,7 @@ object Dedup extends QueryModule {
     * measured 13× slower than this UDF on the sf0.1 bench. */
   /** The canonical ShingleK-word shingle string starting at word i —
     * the ONE definition every string-hashed shingle path shares
-    * (shingleUdf, md5ShingleUdf, bandKeysOf), so changing ShingleK
+    * (shingleUdf, md5ShingleUdf), so changing ShingleK
     * can never silently desync a hashed path from the string-shingle
     * keys the DuckDB oracle recomputes. */
   private[ops] def shingleAt(w: Array[String], i: Int): String = {
@@ -285,8 +285,8 @@ object Dedup extends QueryModule {
   def minhashB(j: Int): Long = md5Hash60("b" + j) % MinhashP
 
   /** The 64+64 coefficients memoized per JVM — they are constants,
-    * and both the per-row minhash UDF and the streaming bandKeysOf
-    * used to redo 128 md5 digests per document without this. */
+    * and the per-row minhash UDF would redo 128 md5 digests per
+    * document without this. */
   private lazy val minhashAs: Array[Long] = Array.tabulate(NumHashes)(minhashA)
   private lazy val minhashBs: Array[Long] = Array.tabulate(NumHashes)(minhashB)
 
@@ -452,46 +452,6 @@ object Dedup extends QueryModule {
     * executor so a 100 TB shard can't grow it unboundedly —
     * overflow degrades to direct hashing, never wrong results. */
   private val hashCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  /** MinHash band-bucket keys of ONE text, as [[Bands]] packed
-    * longs — the scalar form of the minhashLsh banding, shared by
-    * the streaming ingest filter (graft.streaming.StreamingDedup):
-    * distinct shingle hashes → 64-value signature → each band's
-    * [[RowsPerBand]] values mixed into one 64-bit key. Two texts
-    * share a key for band b iff their signatures agree on all of
-    * band b's rows — identical collision semantics to the batch
-    * bucket join. */
-  private[graft] def bandKeysOf(text: String): Array[Long] = {
-    val w = splitWords(text)
-    if (w.length < ShingleK) return Array.empty[Long]
-    val seen = new java.util.HashSet[java.lang.Long]()
-    val sigs = Array.fill(NumHashes)(Long.MaxValue)
-    val as = minhashAs
-    val bs = minhashBs
-    var i = 0
-    while (i + ShingleK <= w.length) {
-      val h0 = cachedHash60(shingleAt(w, i))
-      if (seen.add(h0)) {
-        val h = h0 % MinhashP
-        var j = 0
-        while (j < NumHashes) {
-          val v = (as(j) * h + bs(j)) % MinhashP
-          if (v < sigs(j)) sigs(j) = v
-          j += 1
-        }
-      }
-      i += 1
-    }
-    Array.tabulate(Bands) { b =>
-      var k = graft.embed.HashEmbedder.mix(0x5DEECE66DL + b)
-      var r = 0
-      while (r < RowsPerBand) {
-        k = graft.embed.HashEmbedder.mix(k ^ sigs(b * RowsPerBand + r))
-        r += 1
-      }
-      k
-    }
-  }
 
   private[graft] def cachedHash60(tok: String): Long = {
     val c = hashCache.get(tok)
@@ -1653,8 +1613,8 @@ object Dedup extends QueryModule {
     stampIndexFormat(docs.sparkSession, table)
   }
 
-  /** Corpus-half (doc_id % 10 ≠ 0) maximal index — the incremental/
-    * streaming arrival convention shared with [[writeSubstrIndex]]. */
+  /** Corpus-half (doc_id % 10 ≠ 0) maximal index — the incremental
+    * arrival convention shared with [[writeSubstrIndex]]. */
   def writeMaximalIndex(s: SparkSession, dir: String, table: String): Unit =
     writeMaximalIndexOf(t(s, dir, "documents", resplit = true).filter(col("doc_id") % 10 =!= 0), table)
 
@@ -1988,12 +1948,10 @@ object Dedup extends QueryModule {
       t(s, dir, "documents").filter(col("doc_id") % 10 === 0), table)
 
   /** Per-doc island assembly from a sorted duplicated-position list
-    * — the STREAMING rebuild kernel: consecutive positions merge to
+    * — the row-local rebuild kernel: consecutive positions merge to
     * runs, a run [p₀, pₖ] covers words [p₀, pₖ + atom − 1], and only
-    * spans ≥ [[MaximalMinSpanWords]] scrub. Exactly
-    * [[islandsFromBad]] + the HAVING cut collapsed to one doc (the
-    * watermarked stream groups positions per doc, so islands need no
-    * second shuffle); StreamingSpec pins stream ≡ batch equality. */
+    * spans ≥ `minSpan` scrub. Exactly [[islandsFromBad]] + the
+    * HAVING cut collapsed to one doc. */
   private[graft] def cleanFromPositions(
       text: String, badPos: Seq[Int], atom: Int, minSpan: Int): String = {
     if (badPos.isEmpty) return scrubIntervals(text, Nil, Nil)
@@ -2008,8 +1966,7 @@ object Dedup extends QueryModule {
       }
     }
     badPos.tail.foreach { p =>
-      // tolerate a duplicated position (defense in depth — the
-      // stream already distinct-folds its index side)
+      // tolerate a duplicated position (defense in depth)
       if (p != prev && p != prev + 1) { close(prev); runStart = p }
       if (p != prev) prev = p
     }
@@ -2019,10 +1976,6 @@ object Dedup extends QueryModule {
 
   private[graft] def maximalCleanOf(text: String, badPos: Seq[Int]): String =
     cleanFromPositions(text, badPos, MaximalAtomWords, MaximalMinSpanWords)
-
-  private[graft] val maximalCleanUdf = udf { (text: String, badPos: Seq[Int]) =>
-    maximalCleanOf(text, badPos)
-  }
 
   // ---- Intra-doc repetition scrub ----
 
@@ -2089,10 +2042,9 @@ object Dedup extends QueryModule {
     * Scale shape: ONE map-only pass — no shuffle, no join, no index;
     * the cheapest scrub in the suite and embarrassingly parallel at
     * 100 TB. Per-doc state is bounded by doc length. */
-  /** The repetition scrub applied to ANY document relation — batch
-    * and stream share this ONE projection (it is row-local, so it
-    * runs unchanged on a streaming DataFrame: no state store, no
-    * watermark, no shuffle). `scan` is the per-grain kernel UDF. */
+  /** The repetition scrub applied to ANY document relation — ONE
+    * row-local projection (no shuffle). `scan` is the per-grain
+    * kernel UDF. */
   private def repetitionScoredWith(
       docs: DataFrame,
       scan: org.apache.spark.sql.expressions.UserDefinedFunction): DataFrame =

@@ -151,56 +151,6 @@ object Dsir extends QueryModule {
        |LIMIT $SampleK""".stripMargin
   }
 
-  private def r6d(x: Double): Double = OracleMath.r6d(x)
-
-  /** The fitted model COLLECTED: bucket → (raw count, target count)
-    * plus the two totals. ≤ [[Buckets]] rows by construction — the
-    * fixed-capacity table whose boundedness justifies shipping it in
-    * a closure (the centroid rule), which is what lets scoring run
-    * map-only on an unbounded stream. */
-  private[graft] def fittedModel(
-      s: SparkSession, dir: String): (Map[Long, (Long, Long)], Long, Long) = {
-    val rows = docBuckets(s, dir).groupBy(col("b")).agg(
-      sum(col("c")).as("cr"),
-      sum(when(col("lang") === "en", col("c")).otherwise(lit(0L))).as("ct"))
-      .collect()
-    val m = rows.map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    (m, m.values.map(_._1).sum, m.values.map(_._2).sum)
-  }
-
-  /** Map-only scorer against a FROZEN model — the train-on-history /
-    * score-the-stream split ([[graft.streaming.StreamingIndex
-    * .dsirScoreStream]]). Arithmetic mirrors [[dsirWeights]] term by
-    * term: same split/bigram semantics, same md5 bucketing, r6-
-    * rounded per-bucket terms summed as DECIMAL(38,6) (BigDecimal
-    * HALF_UP = Spark's double→decimal cast), so scoring the training
-    * corpus itself reproduces the batch rows bit-for-bit (asserted
-    * in StreamingSpec). Buckets unseen at fit time fall back to the
-    * smoothing floor (cr = ct = 0). */
-  private[graft] def scoreUdf(model: Map[Long, (Long, Long)], tr: Long, tt: Long) =
-    udf { (text: String) =>
-      val w = if (text == null) Array.empty[String] else text.split(" ", -1)
-      val feats: Array[String] =
-        if (w.length >= 2)
-          w ++ w.iterator.sliding(2).withPartial(false).map(p => p(0) + " " + p(1))
-        else w
-      val counts = scala.collection.mutable.LongMap.empty[Long]
-      feats.foreach { f =>
-        val b = CrossHash.md5Hash60(f) % Buckets
-        counts(b) = counts.getOrElse(b, 0L) + 1L
-      }
-      var acc = java.math.BigDecimal.ZERO
-      counts.toSeq.sortBy(_._1).foreach { case (b, c) =>
-        val (cr, ct) = model.getOrElse(b, (0L, 0L))
-        val term = r6d(c * math.log(
-          ((ct + 1).toDouble * (tr + Buckets).toDouble) /
-            ((cr + 1).toDouble * (tt + Buckets).toDouble)))
-        acc = acc.add(java.math.BigDecimal.valueOf(term)
-          .setScale(6, java.math.RoundingMode.HALF_UP))
-      }
-      (feats.length.toLong, r6d(acc.doubleValue))
-    }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "dsir_weights" -> (dsirWeights _),
     "dsir_sample" -> (dsirSample _))

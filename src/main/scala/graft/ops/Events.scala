@@ -66,8 +66,7 @@ object Events extends QueryModule {
       |ORDER BY event_type""".stripMargin
 
   /** Hourly tumbling aggregation: count + exact-bridged value sum
-    * per (hour, event_type). At stream scale this is the batch twin
-    * of the Structured Streaming windowed agg in graft.streaming. */
+    * per (hour, event_type). */
   def eventsHourly(s: SparkSession, dir: String): DataFrame = {
     val e = eventsTable(s, dir)
     e.groupBy(
@@ -496,25 +495,20 @@ object Events extends QueryModule {
     * (n·Σc² − (Σc)²) / (n·(n−1)) — no float accumulation anywhere
     * before the final division, so the z-scores are bit-identical
     * across engines and partitionings. Stats are 5 rows → broadcast
-    * join back onto the hourly counts; at stream scale the same
-    * computation runs windowed (graft.streaming). */
+    * join back onto the hourly counts. */
   /** Per-type hourly counts — the shared input of batch scoring and
     * the stats "training" pass. */
   private def hourlyCounts(e: DataFrame): DataFrame =
     e.groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
       .agg(count(lit(1)).as("c"))
 
-  /** Trained per-type stats (exact integer sums) for z-scoring —
-    * also consumed by the streaming scorer
-    * (graft.streaming.StreamingIndex.anomalyScoreStream). */
+  /** Trained per-type stats (exact integer sums) for z-scoring. */
   def hourlyStats(s: SparkSession, dir: String): DataFrame =
     hourlyCounts(eventsTable(s, dir)).groupBy(col("event_type"))
       .agg(count(lit(1)).as("nh"), sum(col("c")).as("sc"),
         sum(col("c") * col("c")).as("scc"))
 
-  /** z of a count column against (nh, sc, scc) stats columns — ONE
-    * definition shared by the batch query and the streaming scorer,
-    * so their semantics cannot drift. */
+  /** z of a count column against (nh, sc, scc) stats columns. */
   def zScore(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
     val num = col("nh") * col("scc") - col("sc") * col("sc")
     val denom = col("nh") * (col("nh") - 1)

@@ -412,11 +412,9 @@ object GraphAnn extends QueryModule {
     * never read or rewritten. The reference's store has the same
     * property (ChromaDB `collection.add` inserts into its HNSW index
     * incrementally, `index.py:432-449`); this is its bulk-parallel
-    * form. Continuous ingest = this per micro-batch (see
-    * [[graft.streaming.StreamingIndex.annAppendStream]]), with
-    * [[compactGraphIndex]] as the periodic merge once small segments
-    * accumulate. Caller contract: batch vec_ids are new (an upsert
-    * dedups before appending). */
+    * form. Repeated appends accumulate small segments;
+    * [[compactGraphIndex]] is the periodic merge. Caller contract:
+    * batch vec_ids are new (an upsert dedups before appending). */
   /** Start of the tag-keyed segment-id space: batch tag t owns shard
     * ids [base + t·span, base + (t+1)·span). Far above any derived
     * bulk shard count, so the two spaces never collide. */
@@ -430,18 +428,18 @@ object GraphAnn extends QueryModule {
     * the max so the spaces stay disjoint); a replayed batch would
     * duplicate its rows.
     *
-    * `segmentTag = Some(t)` (e.g. the foreachBatch micro-batch id):
+    * `segmentTag = Some(t)` (e.g. the ingest batch's sequence number):
     * IDEMPOTENT append — the batch's shard ids are a pure function of
     * the tag ([[SegTagBase]] + t·[[SegTagSpan]] + i), written with
     * dynamic partition OVERWRITE, so a replay rewrites exactly its
     * own `shard=N/` dirs instead of appending duplicates. This is the
     * standard Spark idempotent-sink pattern (deterministic partition
-    * keys + dynamic overwrite), and with it the at-least-once
-    * [[graft.streaming.StreamingIndex.annAppendStream]] delivery
-    * becomes effectively exactly-once for this index. The tag space
-    * holds ~214k batches before the int shard range runs out —
-    * [[maintainGraphIndex]] compacts (collapsing all segments back to
-    * the dense range) orders of magnitude sooner on any real stream. */
+    * keys + dynamic overwrite), and with it an at-least-once batch
+    * delivery becomes effectively exactly-once for this index. The
+    * tag space holds ~214k batches before the int shard range runs
+    * out — [[maintainGraphIndex]] compacts (collapsing all segments
+    * back to the dense range) orders of magnitude sooner on any real
+    * ingest. */
   def appendGraphIndex(
       s: SparkSession, indexPath: String, batch: DataFrame,
       segmentTag: Option[Long] = None): Unit = {
@@ -519,12 +517,11 @@ object GraphAnn extends QueryModule {
     * segment shards (cheap listing) and, past `maxSegments`, run
     * [[compactGraphIndex]] into `outPath` as a fresh generation.
     * Returns true when a compaction ran — the caller (the periodic
-    * maintenance job; see [[graft.streaming.StreamingIndex.annAppendStream]])
-    * then swaps its live pointer to `outPath` and retires the old
-    * generation once in-flight queries drain. The swap is BY POINTER,
-    * never in place: overwriting an input mid-read is illegal, and at
-    * 100 TB the old generation must stay queryable until the new one
-    * is complete. */
+    * maintenance job) then swaps its live pointer to `outPath` and
+    * retires the old generation once in-flight queries drain. The
+    * swap is BY POINTER, never in place: overwriting an input
+    * mid-read is illegal, and at 100 TB the old generation must stay
+    * queryable until the new one is complete. */
   def maintainGraphIndex(
       s: SparkSession, indexPath: String, outPath: String,
       maxSegments: Int = DefaultMaxSegments): Boolean = {

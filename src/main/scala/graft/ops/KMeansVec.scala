@@ -1463,11 +1463,8 @@ object KMeansVec extends QueryModule {
       .map(_.getSeq[Float](1).map(_.toDouble).toArray)
 
   /** Per-row quantization error of ANY (vec_id, embedding) relation
-    * under FROZEN centroids — ONE definition shared by the batch
-    * report and the streaming twin
-    * ([[graft.streaming.StreamingIndex.driftScoreStream]]), the
-    * scoreWith convention: batch and stream arithmetic cannot
-    * drift. Map-only; the K·dim model rides the closure. */
+    * under FROZEN centroids. Map-only; the K·dim model rides the
+    * closure. */
   def driftErrors(e: DataFrame, cents: Array[Array[Double]]): DataFrame =
     e.select(col("vec_id"), r6(minDistUdf(cents)(col("embedding"))).as("err"))
 

@@ -8,11 +8,11 @@ import org.apache.spark.sql.functions._
   * `index.py:426-429`; a corpus at scale is maintained in place):
   * small-file compaction and stats-clustered rewrites.
   *
-  * Streaming appends (graft.streaming.StreamingIndex) and
-  * per-partition writes accrete many small files; scan throughput
-  * then dies on open/footer overhead and the driver on listing. The
-  * fix is periodic rewrite into right-sized files — file count
-  * derived from the dataset's REAL on-disk bytes, never guessed. */
+  * Incremental appends and per-partition writes accrete many small
+  * files; scan throughput then dies on open/footer overhead and the
+  * driver on listing. The fix is periodic rewrite into right-sized
+  * files — file count derived from the dataset's REAL on-disk
+  * bytes, never guessed. */
 object Maintenance extends QueryModule {
 
   val DefaultTargetBytes: Long = 128L * 1024 * 1024
@@ -473,7 +473,7 @@ object Maintenance extends QueryModule {
   //
   // A deployment carrying standing dedup indexes (substring window,
   // maximal atom-window, MinHash band — the nightly artifacts the
-  // streaming scrubs probe) needs ONE operations surface that answers
+  // incremental scrubs probe) needs ONE operations surface that answers
   // "what indexes exist, at what format generation, and do their
   // stored key spaces still agree with the corpus derivation?". The
   // inventory reads each family's CATALOG truth (stamped
@@ -492,9 +492,9 @@ object Maintenance extends QueryModule {
   private[graft] def clearInvIdxCache(): Unit = invIdxCache.clear()
 
   /** Build-once-audit-many: the corpus-half (doc_id % 10 ≠ 0,
-    * the arrival convention every incremental/streaming scrub
-    * shares) substring, maximal, and band indexes materialize lazily
-    * once per session + fixture fingerprint. In production these are
+    * the arrival convention every incremental scrub shares)
+    * substring, maximal, and band indexes materialize lazily once per
+    * session + fixture fingerprint. In production these are
     * the standing tables the nightly append/compact/vacuum cycle
     * maintains; the bench times the three builds as
     * `index_inventory`'s cold cost (the fitter convention). */

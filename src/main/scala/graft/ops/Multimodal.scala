@@ -664,9 +664,7 @@ object Multimodal extends QueryModule {
     * silent drop.
     *
     * Scale shape: scoring is row-local (both towers embed in the
-    * row) — map-only, no shuffle, no state; the same kernel serves
-    * the batch query and [[graft.streaming.StreamingIndex
-    * .mediaAlignStream]] unchanged, so batch ≡ stream cannot drift. */
+    * row) — map-only, no shuffle, no state. */
   def alignPairs(pairs: DataFrame): DataFrame = {
     import graft.functions.VectorFunctions.{dot, l2norm, r6}
     pairs

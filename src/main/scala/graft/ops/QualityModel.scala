@@ -39,9 +39,7 @@ object QualityModel extends QueryModule {
     featuresOf(t(s, dir, "documents"))
 
   /** The feature projection on ANY (doc_id, text) relation — ONE
-    * definition shared by the batch fit/score and the streaming
-    * scorer ([[graft.streaming.StreamingIndex.qualityScoreStream]]),
-    * the gopherScore batch/stream convention. */
+    * definition shared by the fit and the scoring pass. */
   private[graft] def featuresOf(d: DataFrame): DataFrame = {
     val w = split(col("text"), " ")
     val nw = size(w)
@@ -108,9 +106,7 @@ object QualityModel extends QueryModule {
     * along as literals; at scale this is scan → project → bounded
     * top-k, no shuffle beyond TakeOrdered's). */
   /** Map-only scoring of ANY (doc_id, text) relation under frozen
-    * weights — the projection both [[qualityScored]] and the
-    * streaming twin apply (shared definition, so batch and stream
-    * arithmetic cannot drift). */
+    * weights — the projection [[qualityScored]] applies. */
   private[graft] def scoreWith(
       d: DataFrame, w1: Double, w2: Double, w3: Double): DataFrame =
     featuresOf(d)

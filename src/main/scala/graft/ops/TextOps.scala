@@ -452,14 +452,14 @@ object TextOps extends QueryModule {
   /** Fitted language model: sorted lang codes, r6 log-priors, and
     * the densified per-bucket log-likelihood rows `ll(b)(i)` for
     * lang i — ≤ (512 × langs) doubles, parameter-bounded by
-    * construction (the centroid rule), so it broadcasts to a
-    * streaming closure as freely as to a batch join. */
+    * construction (the centroid rule), so it rides a UDF closure as
+    * freely as a broadcast join. */
   private[graft] case class LangidModel(
       langs: Seq[String], priors: Array[Double], ll: Array[Array[Double]])
 
   /** Fit the NB model on the even-doc_id half — two parameter-bounded
-    * collects ((langs × 512) + langs rows, the Dsir.fittedModel
-    * rule); None when the corpus has no training docs. */
+    * collects ((langs × 512) + langs rows); None when the corpus has
+    * no training docs. */
   private[graft] def fitLangidModel(s: SparkSession, dir: String): Option[LangidModel] = {
     val d = t(s, dir, "documents")
     val langRows = d.filter(col("doc_id") % 2 === 0)
@@ -516,17 +516,15 @@ object TextOps extends QueryModule {
     perDoc.select(col("doc_id"), best.getField("lang").as("lang_pred"))
   }
 
-  /** Map-only closure twin of [[scoreLangid]] — the STREAMING shape:
-    * the whole per-doc chain (gram counts → micro-unit exact term
-    * sums → r6 scores → max-struct argmax) runs inside one UDF with
-    * the frozen model in the closure, so scoring a stream needs no
-    * state store, no watermark, and no shuffle (the driftScoreStream
-    * rule). Bit-equal to the join form by construction: terms
+  /** Map-only closure twin of [[scoreLangid]]: the whole per-doc
+    * chain (gram counts → micro-unit exact term sums → r6 scores →
+    * max-struct argmax) runs inside one UDF with the frozen model in
+    * the closure, so scoring needs no shuffle. Bit-equal to the join
+    * form by construction: terms
     * accumulate as exact micro-unit longs (≡ the DECIMAL sum),
     * micros/1e6 is the same correctly-rounded double as the DECIMAL
     * cast, and ties break (s, lang)-max with ASCII lang codes where
-    * UTF8 and UTF-16 orders agree — pinned by the batch ≡ stream
-    * equality spec. */
+    * UTF8 and UTF-16 orders agree — pinned per doc by TextOpsSpec. */
   private[graft] def langidPredictUdf(m: LangidModel) = udf { (text: String) =>
     val cps = if (text == null) Array.empty[Int] else codePoints(text)
     if (cps.length < 3) ""
@@ -593,9 +591,9 @@ object TextOps extends QueryModule {
         // scoring is the map-only closure predictor — ONE pass, zero
         // shuffles before the output sort; bit-equal to the
         // broadcast-join [[scoreLangid]] form by construction
-        // (TextOpsSpec pins the equality on the fixture corpus, the
-        // streaming spec per doc), and the '' sentinel for sub-gram
-        // docs falls out of the same closure
+        // (TextOpsSpec pins the equality per doc on the fixture
+        // corpus), and the '' sentinel for sub-gram docs falls out of
+        // the same closure
         dPar.select(col("doc_id"), col("lang").as("lang_true"),
             langidPredictUdf(m)(col("text")).as("lang_pred"))
           .withColumn("agree", (col("lang_true") === col("lang_pred")).cast("int"))

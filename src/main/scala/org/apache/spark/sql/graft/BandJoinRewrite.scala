@@ -13,8 +13,8 @@ import org.apache.spark.sql.types.{DayTimeIntervalType, LongType}
   * Spark plans a non-equi inner join as BroadcastNestedLoopJoin:
   * O(|left|·|right|) comparisons and a broadcast requirement —
   * hopeless at corpus scale. But a band predicate admits the classic
-  * bucketing rewrite (the same one ops/Events.rangeJoinBanded and
-  * streaming.StreamingIndex.attributionStream apply by hand): cells
+  * bucketing rewrite (the same one ops/Events.rangeJoinBanded
+  * applies by hand): cells
   * of the band width tile the timeline, a probe row in
   * [anchor − b, anchor] can only live in the anchor's cell or the
   * one before, so the anchor side explodes into those two cell keys

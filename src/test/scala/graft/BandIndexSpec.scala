@@ -52,26 +52,6 @@ class BandIndexSpec extends AnyFunSuite {
     assert(segmented == oneShot)
   }
 
-  test("streamed band appends ≡ direct appends (the continuous-ingest path)") {
-    val d = spark.read.parquet(s"$sf/documents.parquet")
-      .filter(col("doc_id") % 10 =!= 0)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-bandstream")
-    // seed with the odd half, stream in the even half
-    d.filter(col("doc_id") % 2 === 1)
-      .write.mode("overwrite").parquet(s"$tmp/seed/documents.parquet")
-    Dedup.writeBandIndex(spark, s"$tmp/seed", "band_idx_stream")
-    d.filter(col("doc_id") % 2 === 0)
-      .select("doc_id", "text")
-      .write.mode("overwrite").parquet(s"$tmp/incoming")
-    graft.streaming.StreamingDedup
-      .bandAppendStream(spark, s"$tmp/incoming", "band_idx_stream", s"$tmp/ckpt")
-      .start().awaitTermination()
-    Dedup.writeBandIndex(spark, sf, "band_idx_direct")
-    val streamed = Dedup.dedupIncrementalIndexed(spark, sf, "band_idx_stream").collect().toSeq
-    val direct = Dedup.dedupIncrementalIndexed(spark, sf, "band_idx_direct").collect().toSeq
-    assert(streamed == direct)
-  }
-
   test("maintenance: no-op below the file threshold; compaction yields identical probes with global caps") {
     Dedup.writeBandIndex(spark, sf, "band_idx_m")
     // fresh single-generation index: far below any file threshold

@@ -210,7 +210,7 @@ class IncrementalIndexSpec extends AnyFunSuite {
     val rows1 = spark.read.parquet(inc).count()
     val q = queryVec
     val res1 = GraphAnn.graphSearchIndexed(spark, inc, q).collect().toSeq
-    // replay the same micro-batch — the at-least-once crash case the
+    // replay the same batch — the at-least-once crash case the
     // deterministic shard ids + dynamic overwrite exist for
     GraphAnn.appendGraphIndex(spark, inc, laterBatch, segmentTag = Some(7L))
     assert(spark.read.parquet(inc).count() == rows1, "replay must not add rows")
@@ -304,73 +304,6 @@ class IncrementalIndexSpec extends AnyFunSuite {
     val a = Pq.ivfPqSearchIndexed(spark, inc, dir, q).collect().toSeq
     val b = Pq.ivfPqSearchIndexed(spark, bulk, dir, q).collect().toSeq
     assert(a == b && a.size == 5, "post-append search must equal bulk search")
-  }
-
-  test("streaming: micro-batched vector files maintain both ANN indexes") {
-    val tmp = Files.createTempDirectory("graft-inc-stream")
-    val ginc = tmp.resolve("g").toString
-    val pinc = tmp.resolve("p").toString
-    val iinc = tmp.resolve("i").toString
-    val ipinc = tmp.resolve("ip").toString
-    GraphAnn.writeGraphIndex(spark, halfDir, ginc)
-    Pq.writePqIndex(spark, halfDir, pinc)
-    KMeansVec.writeIvfIndex(spark, halfDir, iinc, iters = 1)
-    Pq.writeIvfPqIndex(spark, halfDir, ipinc)
-    // two vector-batch files arriving on the stream (file-stream
-    // sources list plain files, so stage each batch then drop its
-    // part file into the watched dir)
-    val in = tmp.resolve("in").toString
-    new java.io.File(in).mkdirs()
-    def drop(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val stage = tmp.resolve(s"stage-$name").toString
-      df.coalesce(1).write.mode("overwrite").parquet(stage)
-      val part = new java.io.File(stage).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath, java.nio.file.Paths.get(in, s"$name.parquet"))
-    }
-    drop(laterBatch.filter(col("vec_id") <= 250), "b1")
-    drop(laterBatch.filter(col("vec_id") > 250), "b2")
-    // idempotent mode end-to-end: batchId-keyed graph segments +
-    // dedupeExisting quantized appends must be invisible on a clean
-    // run — every ≡-direct-append assertion below still holds
-    val sq = graft.streaming.StreamingIndex.annAppendStream(
-      spark, in, ginc, pinc, tmp.resolve("ckpt").toString,
-      ivfIndexDir = Some(iinc), ivfPqIndexDir = Some(ipinc),
-      idempotent = true).start()
-    sq.awaitTermination(120000)
-    val q = queryVec
-    val exact = VectorQueries.knnTopkK(spark, dir, 5).collect().map(_.getLong(0)).toSeq
-    val g = GraphAnn.graphSearchIndexed(spark, ginc, q).collect().map(_.getLong(0)).toSeq
-    assert(g == exact, "graph index after streamed appends must answer exactly")
-    // pq: streamed appends ≡ direct batch append (same frozen
-    // codebooks via the halfDir-keyed memo), row-for-row
-    val direct = tmp.resolve("pdirect").toString
-    Pq.writePqIndex(spark, halfDir, direct)
-    Pq.appendPqIndex(spark, direct, laterBatch)
-    val streamed = Pq.pqSearchIndexed(spark, pinc, dir, q).collect().toSeq
-    val batched = Pq.pqSearchIndexed(spark, direct, dir, q).collect().toSeq
-    assert(streamed == batched, "streamed PQ appends must equal direct batch append")
-    assert(spark.read.parquet(s"$pinc/codes").count() ==
-      spark.read.parquet(s"$direct/codes").count())
-    // ivf: streamed appends ≡ direct batch append against the same
-    // frozen centroids, cell-for-cell
-    val idirect = tmp.resolve("idirect").toString
-    KMeansVec.writeIvfIndex(spark, halfDir, idirect, iters = 1)
-    KMeansVec.appendIvfIndex(spark, idirect, laterBatch)
-    def cells(p: String) = spark.read.parquet(s"$p/vectors")
-      .select("vec_id", "cluster").orderBy("vec_id").collect()
-      .map(r => (r.getLong(0), r.getInt(1))).toSeq
-    assert(cells(iinc) == cells(idirect),
-      "streamed IVF appends must equal direct batch append")
-    // ivf-pq: streamed appends ≡ direct batch append, cell+codes rows
-    val ipdirect = tmp.resolve("ipdirect").toString
-    Pq.writeIvfPqIndex(spark, halfDir, ipdirect)
-    Pq.appendIvfPqIndex(spark, ipdirect, laterBatch)
-    def coderows(p: String) = spark.read.parquet(s"$p/codes")
-      .orderBy("vec_id").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Byte](2), r.getInt(3))).toSeq
-    assert(coderows(ipinc) == coderows(ipdirect),
-      "streamed IVF-PQ appends must equal direct batch append")
   }
 
   test("vacuum: superseded generations delete, live generation survives bit-stable, misuse fails loudly") {

@@ -62,10 +62,6 @@ class SubstrIndexSpec extends AnyFunSuite {
     mustRefuse(Dedup.appendSubstrIndex(
       spark.read.parquet(s"$sf/documents.parquet"), "substr_idx_stale"))
     mustRefuse(Dedup.compactSubstrIndex(spark, "substr_idx_stale", "substr_idx_stale_g2"))
-    mustRefuse(graft.streaming.StreamingIndex.substrScrubStream(
-      spark.readStream.schema("ts TIMESTAMP, doc_id LONG, text STRING")
-        .parquet(java.nio.file.Files.createTempDirectory("graft-stale").toString),
-      spark, "substr_idx_stale"))
     // an EXPLICITLY different version (a future v3 build probed by
     // this v2 engine) refuses identically
     spark.sql("ALTER TABLE substr_idx_stale SET TBLPROPERTIES " +

@@ -104,6 +104,18 @@ class VectorFunctionsSpec extends AnyFunSuite {
     assert(plan.contains("*(1) Project") && plan.contains("float_dot"), s"plan: $plan")
   }
 
+  test("sql registration: float_dot callable from SQL") {
+    org.apache.spark.sql.graft.GraftFunctionRegistry.register(spark)
+    val got = spark.sql(
+      "SELECT float_dot(CAST(array(1.0, 2.0) AS ARRAY<FLOAT>), " +
+        "CAST(array(3.0, 4.0) AS ARRAY<FLOAT>)) AS d").head.getDouble(0)
+    assert(got == 11.0)
+    val cos = spark.sql(
+      "SELECT float_cosine_distance(CAST(array(1.0, 0.0) AS ARRAY<FLOAT>), " +
+        "CAST(array(0.0, 1.0) AS ARRAY<FLOAT>)) AS d").head.getDouble(0)
+    assert(cos == 1.0, "orthogonal vectors: cosine distance 1")
+  }
+
   test("assembleContext formats and orders hits") {
     val hits = Seq(
       (0.2, "f1:1", "f1", 1, "worse chunk"),
