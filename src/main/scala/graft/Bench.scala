@@ -1,87 +1,63 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
-  // session-memoized fits (PCA, PQ codebooks) are cleared before each
-  // timed pass of the FITTING query so its number stays the honest
-  // distributed-fit cost; consumers time the designed warm path.
-  // Shared with BenchBudgetSpec so the budget gate times the SAME
-  // cold/warm protocol the recorded numbers came from.
-  val coldSetup: Map[String, (SparkSession, String) => Unit] = Map(
-    "embed_pca_power" -> ((_, _) => graft.ops.Pca.clearFitCache()),
-    "pq_error" -> ((_, _) => graft.ops.Pq.clearCbCache()),
-    // opq's own rotated-space training is its cold cost; the pc1 it
-    // rotates by is CONSUMED warm (embed_pca_power's fit, ensured here
-    // against map-order / fitter-failure dependence)
-    "opq_error" -> ((s, d) => {
-      graft.ops.Opq.clearCbCache()
-      graft.ops.Pca.fittedPc1(s, d); ()
-    }),
-    // bpe_merges is the BPE fitter; its number is the honest cost of
-    // the full distributed training loop
-    "bpe_merges" -> ((_, _) => graft.ops.Bpe.clearMergeCache()),
-    // rq_error is the RQ fitter: both Lloyd levels are its cold cost
-    "rq_error" -> ((_, _) => graft.ops.Rq.clearCbCache()),
-    // unigram_vocab is the unigram-LM fitter (piece stats + top-V)
-    "unigram_vocab" -> ((_, _) => graft.ops.UnigramLm.clearVocabCache()),
-    // wordpiece_vocab is the WordPiece fitter (positional piece stats)
-    "wordpiece_vocab" -> ((_, _) => graft.ops.WordPiece.clearVocabCache()),
-    // substr_dedup_maximal is the maximal-index fitter: its cold cost
-    // is the full-corpus first-occurrence build (ensureMaximalIndex);
-    // the sweep/report consumers probe the built table warm
-    "substr_dedup_maximal" -> ((_, _) => graft.ops.Dedup.clearMaximalIdxCache()),
-    // pca_top2's own cold cost is the second Gram pass + deflation;
-    // the pc1 it deflates by is CONSUMED warm (embed_pca_power's fit)
-    "pca_top2" -> ((s, d) => {
-      graft.ops.Pca.clearFit2Cache()
-      graft.ops.Pca.fittedPc1(s, d); ()
-    }),
-    // pca_topm's cold cost is its m deflation chains over the SHARED
-    // Gram (warmed via the pc1 fit, the pca_top2 convention)
-    "pca_topm" -> ((s, d) => {
-      graft.ops.Pca.clearFitMCache()
-      graft.ops.Pca.fittedPc1(s, d); ()
-    }),
-    // index_inventory is the ops-index fitter: its cold cost is the
-    // three standing corpus-half index builds (substr/maximal/band)
-    // the audit then reads
-    "index_inventory" -> ((_, _) => graft.ops.Maintenance.clearInvIdxCache()),
-    // opq_m_error's cold cost is training in the rank-m rotated
-    // space; the basis it rotates by is CONSUMED warm
-    "opq_m_error" -> ((s, d) => {
-      graft.ops.Opq.clearCbMCache()
-      graft.ops.Pca.fitTopM(s, d, graft.ops.Opq.OpqM); ()
-    }))
-  // consumers of a shared fit are timed WARM by contract, regardless
-  // of map iteration order or an earlier fitter-query failure
-  val warmSetup: Map[String, (SparkSession, String) => Unit] = Map(
-    "ann_pq_topk" -> ((s, d) => { graft.ops.Pq.trainedCodebooks(s, d); () }),
-    "ann_ivfpq_topk" -> ((s, d) => { graft.ops.Pq.trainedCodebooks(s, d); () }),
-    "bpe_encode" -> ((s, d) => { graft.ops.Bpe.trainedMerges(s, d); () }),
-    "ann_rq_topk" -> ((s, d) => { graft.ops.Rq.trainedRq(s, d); () }),
-    "unigram_encode" -> ((s, d) => { graft.ops.UnigramLm.fittedVocab(s, d); () }),
-    "unigram_em" -> ((s, d) => { graft.ops.UnigramLm.fittedVocab(s, d); () }),
-    "wordpiece_encode" -> ((s, d) => { graft.ops.WordPiece.fittedVocab(s, d); () }),
-    // whitening consumes the shared rank-m fit (the pca_topm cold cost)
-    "embed_whiten" -> ((s, d) => { graft.ops.Pca.fitTopM(s, d, graft.ops.Pca.PcaM); () }),
-    // the maximal sweep/report consume the persisted maximal index
-    // (substr_dedup_maximal's cold build)
-    "substr_threshold_sweep" -> ((s, d) => { graft.ops.Dedup.ensureMaximalIndex(s, d); () }),
-    "substr_maximal_report" -> ((s, d) => { graft.ops.Dedup.ensureMaximalIndex(s, d); () }),
-    // the fertility tables consume all three frozen tokenizers
-    "tokenizer_fertility" -> ((s, d) => {
-      graft.ops.Bpe.trainedMerges(s, d)
-      graft.ops.UnigramLm.fittedVocab(s, d)
-      graft.ops.WordPiece.fittedVocab(s, d); ()
-    }),
-    "tokenizer_fertility_lang" -> ((s, d) => {
-      graft.ops.Bpe.trainedMerges(s, d)
-      graft.ops.UnigramLm.fittedVocab(s, d)
-      graft.ops.WordPiece.fittedVocab(s, d); ()
-    }))
+  import graft.ops.{Bpe, Dedup, Fits, Maintenance, Opq, Pca, Pq, Rq, UnigramLm, WordPiece}
 
-  /** The pre-pass hook for one query under the bench protocol. */
-  def setupFor(name: String): (SparkSession, String) => Unit =
-    coldSetup.getOrElse(name, warmSetup.getOrElse(name, (_, _) => ()))
+  /** The cold/warm protocol: per query, the fits it OWNS (cleared
+    * before each timed pass, so its number stays the honest
+    * distributed-fit cost) and the fits it CONSUMES (computed before
+    * each pass, so it times the designed warm path regardless of map
+    * order or an earlier fitter failure). Shared with [[BenchOne]],
+    * [[PlanDump]] and BenchBudgetSpec so every harness times the SAME
+    * protocol the recorded numbers came from. Referencing the fit
+    * values here also initializes their objects. */
+  val protocol: Map[String, (Seq[Fits.Fit[_]], Seq[Fits.Fit[_]])] = Map(
+    // the shared Gram is cold with the pc1 fit: "cold" keeps
+    // including the corpus pass
+    "embed_pca_power" -> ((Seq(Pca.Pc1, Pca.Gram), Nil)),
+    // pca_top2's cold cost is the deflation + power steps; pca_topm's
+    // is its m deflation chains over the shared Gram
+    "pca_top2" -> ((Seq(Pca.Pc2), Seq(Pca.Pc1))),
+    "pca_topm" -> ((Seq(Pca.TopM), Seq(Pca.Pc1))),
+    "embed_whiten" -> ((Nil, Seq(Pca.TopM))),
+    // OPQ's cold cost is training in the rotated space; the basis it
+    // rotates by is consumed warm
+    "opq_error" -> ((Seq(Opq.Codebooks), Seq(Pca.Pc1))),
+    "opq_m_error" -> ((Seq(Opq.CodebooksM), Seq(Pca.TopM))),
+    "pq_error" -> ((Seq(Pq.Codebooks), Nil)),
+    "ann_pq_topk" -> ((Nil, Seq(Pq.Codebooks))),
+    "ann_ivfpq_topk" -> ((Nil, Seq(Pq.Codebooks))),
+    // rq_error pays both Lloyd levels
+    "rq_error" -> ((Seq(Rq.Codebooks), Nil)),
+    "ann_rq_topk" -> ((Nil, Seq(Rq.Codebooks))),
+    // each tokenizer's fitter pays its full distributed training
+    "bpe_merges" -> ((Seq(Bpe.Merges), Nil)),
+    "bpe_encode" -> ((Nil, Seq(Bpe.Merges))),
+    "unigram_vocab" -> ((Seq(UnigramLm.Vocab), Nil)),
+    "unigram_encode" -> ((Nil, Seq(UnigramLm.Vocab))),
+    "unigram_em" -> ((Nil, Seq(UnigramLm.Vocab))),
+    "wordpiece_vocab" -> ((Seq(WordPiece.Vocab), Nil)),
+    "wordpiece_encode" -> ((Nil, Seq(WordPiece.Vocab))),
+    "tokenizer_fertility" -> ((Nil, Seq(Bpe.Merges, UnigramLm.Vocab, WordPiece.Vocab))),
+    "tokenizer_fertility_lang" -> ((Nil, Seq(Bpe.Merges, UnigramLm.Vocab, WordPiece.Vocab))),
+    // substr_dedup_maximal pays the full-corpus first-occurrence
+    // build; the sweep and report probe the built table
+    "substr_dedup_maximal" -> ((Seq(Dedup.MaximalIndex), Nil)),
+    "substr_threshold_sweep" -> ((Nil, Seq(Dedup.MaximalIndex))),
+    "substr_maximal_report" -> ((Nil, Seq(Dedup.MaximalIndex))),
+    // index_inventory pays the three corpus-half index builds its
+    // audit reads
+    "index_inventory" -> ((Seq(Maintenance.OpsIndexes), Nil)))
+
+  /** The pre-pass hook for one query: clear what it owns, then warm
+    * what it consumes. */
+  def setupFor(name: String): (SparkSession, String) => Unit = {
+    val (owns, consumes) = protocol.getOrElse(name, (Nil, Nil))
+    (s, dir) => {
+      owns.foreach(_.clear())
+      consumes.foreach(_(s, dir))
+    }
+  }
 
   // ---- fresh-JVM breach adjudication ----
   //

@@ -40,7 +40,7 @@ object Bpe extends QueryModule {
 
   /** Merge rounds for the REGISTERED queries — one argmax merge per
     * round, the Sennrich loop. Training itself is parameterized
-    * ([[trainedMergesN]]): a real tokenizer run raises this to 30k+,
+    * ([[trainWords]]): a real tokenizer run raises this to 30k+,
     * which the lineage checkpointing below is sized for. */
   val Rounds = 4
 
@@ -54,14 +54,6 @@ object Bpe extends QueryModule {
     * [[Dedup.componentsDistributed]] hygiene pattern), so exactly one
     * vocab-sized block set is ever retained. */
   val CheckpointEvery = 8
-
-  /** Session memo for the trained merge list (the Pca.fit / Pq
-    * codebook convention, same file-fingerprint invalidation):
-    * bpe_merges is the fitter (timed cold in Bench), bpe_encode the
-    * warm consumer. */
-  private val mergeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String, Long)]]()
-  private[graft] def clearMergeCache(): Unit = mergeCache.clear()
 
   /** Left-to-right non-overlapping single-pair merge — the scan the
     * oracle's recursive CTE steps through symbol by symbol. */
@@ -92,17 +84,11 @@ object Bpe extends QueryModule {
       .select(explode(regexp_extract_all(col("text"), lit("[a-z]+"), lit(0))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("wcnt"))
 
-  /** Run the registered [[Rounds]] training rounds (memoized). */
-  def trainedMerges(s: SparkSession, dir: String): Seq[(String, String, Long)] =
-    trainedMergesN(s, dir, Rounds)
-
-  /** `rounds`-merge training, memoized per (corpus, rounds); stops
-    * early if the corpus runs out of adjacent pairs (each round's
-    * argmax then has no input). */
-  private[graft] def trainedMergesN(
-      s: SparkSession, dir: String, rounds: Int): Seq[(String, String, Long)] =
-    mergeCache.computeIfAbsent(s"${OpsShared.dirKey(dir, "documents")}#$rounds",
-      _ => trainWords(s, dir, rounds)._1)
+  /** The merge list of the registered [[Rounds]] training rounds (the
+    * [[Pq.Codebooks]] convention): bpe_merges is the fitter (timed cold
+    * in Bench), bpe_encode the warm consumer. Stops early if the corpus
+    * runs out of adjacent pairs (each round's argmax then has no input). */
+  val Merges = Fits("bpe.merges", "documents")((s, dir) => trainWords(s, dir, Rounds)._1)
 
   /** The training loop itself. ONE corpus pass collapses the token
     * stream to (word, count) and is EAGERLY materialized
@@ -156,7 +142,7 @@ object Bpe extends QueryModule {
     * time) — what a tokenizer ships as `merges.txt`. */
   def bpeMerges(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    trainedMerges(s, dir).zipWithIndex
+    Merges(s, dir).zipWithIndex
       .map { case ((a, b, c), i) => (i + 1, a, b, c) }
       .toDF("merge_rank", "lhs", "rhs", "cnt")
       .orderBy(col("merge_rank"))
@@ -166,7 +152,7 @@ object Bpe extends QueryModule {
     * piece count, and pieces-per-token compression — the measurement
     * a tokenizer-training run is judged on. */
   def bpeEncode(s: SparkSession, dir: String): DataFrame = {
-    val merges = trainedMerges(s, dir).map(m => (m._1, m._2))
+    val merges = Merges(s, dir).map(m => (m._1, m._2))
     val encUdf = udf { (word: String) => tokenizeWord(word, merges).length }
     val tokc = t(s, dir, "documents")
       .select(col("doc_id"),
@@ -266,7 +252,7 @@ object Bpe extends QueryModule {
     * own word regime (`[a-z]+` runs), each distinct (lang, word)
     * encoded once. */
   private[ops] def fertilityLangCounts(s: SparkSession, dir: String): DataFrame = {
-    val merges = trainedMerges(s, dir).map(m => (m._1, m._2))
+    val merges = Merges(s, dir).map(m => (m._1, m._2))
     val encUdf = udf { (word: String) => tokenizeWord(word, merges).length }
     val tokc = t(s, dir, "documents")
       .select(col("lang"),

@@ -3048,9 +3048,6 @@ object Curation extends QueryModule {
     * split-pruned — plus a `_manifest` JSON of per-(split, lang)
     * doc/token counts (the dataset-card summary shipped beside the
     * data). One job derives both from the same survivor relation. */
-  def releaseWrite(s: SparkSession, dir: String, outDir: String): Unit =
-    releaseWriteOf(t(s, dir, "documents"), outDir)
-
   def releaseWriteOf(d: DataFrame, outDir: String): Unit = {
     val rows = releaseRowsOf(d)
     rows.write.mode("overwrite").partitionBy("split").parquet(outDir + "/corpus")

@@ -1098,7 +1098,7 @@ object Dedup extends QueryModule {
     * source.
     *
     * Scale shape: the first-occurrence election is PERSISTED — the
-    * bucketed [[ensureMaximalIndex]] table, built once and probed by
+    * bucketed [[MaximalIndex]] table, built once and probed by
     * all three maximal queries — so each query is one map-only
     * posting pass + one probe-side shuffle into the index's buckets
     * (the corpus side never re-shuffles), plus the DOC-keyed islands
@@ -1178,7 +1178,7 @@ object Dedup extends QueryModule {
 
   def substrDedupMaximal(s: SparkSession, dir: String): DataFrame = {
     val d = t(s, dir, "documents")
-    val iv = maximalIslandsIndexed(d, maximalIndexFirsts(s, ensureMaximalIndex(s, dir)))
+    val iv = maximalIslandsIndexed(d, maximalIndexFirsts(s, MaximalIndex(s, dir)))
       .filter(col("e") - col("s") + 1 >= MaximalMinSpanWords)
     rebuildFromIslands(d, iv)
   }
@@ -1248,7 +1248,7 @@ object Dedup extends QueryModule {
     * grid × corpus. Grid-total on an empty corpus. */
   def substrThresholdSweep(s: SparkSession, dir: String): DataFrame = {
     val spans = maximalIslandsIndexed(t(s, dir, "documents"),
-        maximalIndexFirsts(s, ensureMaximalIndex(s, dir)))
+        maximalIndexFirsts(s, MaximalIndex(s, dir)))
       .select((col("e") - col("s") + 1).as("span"))
     val aggs = SubstrSweepThresholds.flatMap(th => Seq(
       coalesce(sum(when(col("span") >= th, 1L).otherwise(0L)), lit(0L)).as(s"n$th"),
@@ -1655,38 +1655,6 @@ object Dedup extends QueryModule {
     stampIndexFormat(s, outTable)
   }
 
-  /** File-growth merge policy — the [[maintainSubstrIndex]] twin on
-    * the maximal table. */
-  def maintainMaximalIndex(
-      s: SparkSession, table: String, outTable: String,
-      maxFilesPerBucket: Int = DefaultMaxFilesPerBucket): Boolean = {
-    val meta = s.sessionState.catalog.getTableMetadata(
-      s.sessionState.sqlParser.parseTableIdentifier(table))
-    val loc = new org.apache.hadoop.fs.Path(meta.location)
-    val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-    var nFiles = 0L
-    val it = fs.listFiles(loc, /* recursive = */ true)
-    while (it.hasNext) {
-      if (it.next().getPath.getName.endsWith(".parquet")) nFiles += 1
-    }
-    if (nFiles == 0) {
-      require(Maintenance.isCommittedEmptyDir(s, loc.toString),
-        s"maximal index $table at $loc lists no parquet data files and no " +
-          "_SUCCESS marker — layout changed? refusing to silently skip compaction")
-      return false
-    }
-    if (nFiles > maxFilesPerBucket.toLong * BandIndexBuckets) {
-      compactMaximalIndex(s, table, outTable)
-      true
-    } else false
-  }
-
-  /** Session memo of FULL-corpus maximal indexes built by
-    * [[ensureMaximalIndex]], keyed by fixture fingerprint. */
-  private val maximalIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[graft] def clearMaximalIdxCache(): Unit = maximalIdxCache.clear()
-
   /** Build-once-probe-many for the registered maximal queries: the
     * FULL-corpus first-occurrence index materializes lazily (once
     * per session + fixture fingerprint — an overwritten fixture dir
@@ -1697,22 +1665,21 @@ object Dedup extends QueryModule {
     * nightly scrub maintains (append + compact + vacuum, above); the
     * bench protocol times the build as `substr_dedup_maximal`'s cold
     * cost and the other two as consumers (the PCA fitter/consumer
-    * convention). Returns the table name. */
-  private[graft] def ensureMaximalIndex(s: SparkSession, dir: String): String = {
-    val key = OpsShared.dirKey(dir, "documents")
-    maximalIdxCache.computeIfAbsent(key, _ => {
-      val table = "graft_mx_idx_" + OpsShared.tableSuffix(key)
+    * convention). The value is the table name, suffixed by the fit's
+    * key so an overwritten fixture builds a new table. */
+  private[graft] val MaximalIndex: Fits.Fit[String] =
+    Fits("dedup.maximal_index", "documents") { (s, dir) =>
+      val table = "graft_mx_idx_" + OpsShared.tableSuffix(MaximalIndex.key(dir))
       writeMaximalIndexOf(t(s, dir, "documents", resplit = true), table)
       table
-    })
-  }
+    }
 
   /** The indexed islands relation over the FULL corpus — what the
     * three registered maximal queries share; exposed for the spec
     * that pins probe ≡ inline election. */
   private[graft] def maximalIslandsProbed(s: SparkSession, dir: String): DataFrame =
     maximalIslandsIndexed(t(s, dir, "documents"),
-      maximalIndexFirsts(s, ensureMaximalIndex(s, dir)))
+      maximalIndexFirsts(s, MaximalIndex(s, dir)))
 
   /** Shared probe body of the incremental maximal scrub: batch
     * windows semi-join a corpus hash-set relation (membership

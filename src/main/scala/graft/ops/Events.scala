@@ -216,7 +216,9 @@ object Events extends QueryModule {
     * the range predicate becomes a residual filter on a shuffled
     * HASH join — linear in rows, AQE-skew-safe, and the generic
     * recipe for any banded interval join (the band width just sets
-    * the bucket size). */
+    * the bucket size). The bucketing is written out here on purpose:
+    * no optimizer rule rewrites band joins, so this is the one
+    * mechanism. */
   def rangeJoinBanded(s: SparkSession, dir: String,
       bandUs: Long = 3600000000L): DataFrame = {
     val e = eventsTable(s, dir)

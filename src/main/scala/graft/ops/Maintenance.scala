@@ -484,25 +484,18 @@ object Maintenance extends QueryModule {
   // forgot the version bump all surface as a hash mismatch here, not
   // as a quiet probe miss months later.
 
-  /** Session memo of the three corpus-half index tables built by
-    * [[ensureOpsIndexes]], keyed by fixture fingerprint (the
-    * [[Dedup.ensureMaximalIndex]] convention). */
-  private val invIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String, String)]()
-  private[graft] def clearInvIdxCache(): Unit = invIdxCache.clear()
-
   /** Build-once-audit-many: the corpus-half (doc_id % 10 ≠ 0,
     * the arrival convention every incremental scrub shares)
     * substring, maximal, and band indexes materialize lazily once per
     * session + fixture fingerprint. In production these are
     * the standing tables the nightly append/compact/vacuum cycle
     * maintains; the bench times the three builds as
-    * `index_inventory`'s cold cost (the fitter convention). */
-  private[graft] def ensureOpsIndexes(
-      s: SparkSession, dir: String): (String, String, String) = {
-    val key = OpsShared.dirKey(dir, "documents")
-    invIdxCache.computeIfAbsent(key, _ => {
-      val sfx = OpsShared.tableSuffix(key)
+    * `index_inventory`'s cold cost (the fitter convention). The value
+    * is the three table names, suffixed by the fit's key (the
+    * [[Dedup.MaximalIndex]] convention). */
+  private[graft] val OpsIndexes: Fits.Fit[(String, String, String)] =
+    Fits("maintenance.ops_indexes", "documents") { (s, dir) =>
+      val sfx = OpsShared.tableSuffix(OpsIndexes.key(dir))
       val sub = "graft_inv_sub_" + sfx
       val mx = "graft_inv_mx_" + sfx
       val bd = "graft_inv_band_" + sfx
@@ -526,8 +519,7 @@ object Maintenance extends QueryModule {
         }
       } finally pool.shutdown()
       (sub, mx, bd)
-    })
-  }
+    }
 
   private def tableMeta(s: SparkSession, table: String) =
     s.sessionState.catalog.getTableMetadata(
@@ -678,9 +670,9 @@ object Maintenance extends QueryModule {
   }
 
   /** The registered fixture form: inventory over the session's
-    * standing corpus-half indexes ([[ensureOpsIndexes]]). */
+    * standing corpus-half indexes ([[OpsIndexes]]). */
   def indexInventory(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val (sub, mx, bd) = ensureOpsIndexes(s, dir)
+    val (sub, mx, bd) = OpsIndexes(s, dir)
     indexInventoryOf(s, sub, mx, bd)
   }
 

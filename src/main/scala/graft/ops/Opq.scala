@@ -43,8 +43,7 @@ object Opq extends QueryModule {
   /** Householder direction for the dir's fitted pc1: (u, uᵀu), or
     * None when pc1 is already e0 (reflection undefined/unneeded). */
   private def householder(s: SparkSession, dir: String): Option[(Array[Double], Double)] = {
-    val pc1 = Pca.fittedPc1(s, dir)
-    val u = pc1.clone()
+    val u = Pca.Pc1(s, dir)._1.clone()
     u(0) -= 1.0
     var utu = 0.0
     var i = 0
@@ -53,44 +52,38 @@ object Opq extends QueryModule {
   }
 
   /** Rotated normalized-corpus view: the [[Pq.nxView]] rows passed
-    * through the reflection. Map-only; u rides the closure. */
-  private def rotView(
-      s: SparkSession, dir: String, u: Array[Double], utu: Double): DataFrame = {
-    val rot = udf { (nx: Seq[Double]) =>
-      val x = nx.toArray
-      var dot = 0.0
-      var k = 0
-      val m = math.min(x.length, u.length)
-      while (k < m) { dot += x(k) * u(k); k += 1 }
-      val f = 2.0 * dot / utu
-      val out = new Array[Double](x.length)
-      k = 0
-      while (k < x.length) { out(k) = x(k) - (if (k < m) f * u(k) else 0.0); k += 1 }
-      out
+    * through the reflection, None when pc1 = e0 (the rotation is the
+    * identity). Map-only; u rides the closure. */
+  private def rotView(s: SparkSession, dir: String): Option[DataFrame] =
+    householder(s, dir).map { case (u, utu) =>
+      val rot = udf { (nx: Seq[Double]) =>
+        val x = nx.toArray
+        var dot = 0.0
+        var k = 0
+        val m = math.min(x.length, u.length)
+        while (k < m) { dot += x(k) * u(k); k += 1 }
+        val f = 2.0 * dot / utu
+        val out = new Array[Double](x.length)
+        k = 0
+        while (k < x.length) { out(k) = x(k) - (if (k < m) f * u(k) else 0.0); k += 1 }
+        out
+      }
+      Pq.nxView(s, dir).withColumn("nx", rot(col("nx")))
     }
-    Pq.nxView(s, dir).withColumn("nx", rot(col("nx")))
-  }
 
-  /** Session memo for the rotated-space codebooks (the
-    * [[Pq.trainedCodebooks]] convention — training is index-build
-    * cost, paid cold in Bench). */
-  private val cbCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Array[Double]]]]()
-
-  private[graft] def clearCbCache(): Unit = cbCache.clear()
+  /** The rotated-space codebooks (the [[Pq.Codebooks]] convention —
+    * training is index-build cost, paid cold in Bench). */
+  private[graft] val Codebooks =
+    Fits("opq.codebooks")((s, dir) => rotView(s, dir).map(nx => Pq.trainCodebooksNx(nx)))
 
   /** Per-label reconstruction error of PQ in the ROTATED space — the
     * apples-to-apples twin of [[Pq.pqError]] (same corpus rows, same
     * subspace count, same trained-codebook protocol), so
     * `opq_error ≤ pq_error` is exactly the OPQ win. */
   def opqError(s: SparkSession, dir: String): DataFrame =
-    householder(s, dir) match {
-      case None => Pq.pqError(s, dir) // pc1 = e0: rotation is identity
-      case Some((u, utu)) =>
-        val nx = rotView(s, dir, u, utu)
-        val cb = cbCache.computeIfAbsent(OpsShared.dirKey(dir),
-          _ => Pq.trainCodebooksNx(nx))
-        Pq.pqErrorNx(nx, cb)
+    (rotView(s, dir), Codebooks(s, dir)) match {
+      case (Some(nx), Some(cb)) => Pq.pqErrorNx(nx, cb)
+      case _ => Pq.pqError(s, dir) // pc1 = e0: rotation is identity
     }
 
   /** Oracle mirror: the full [[Pca]] power-iteration chain yields v3
@@ -165,7 +158,7 @@ object Opq extends QueryModule {
   private[graft] def householderChain(
       s: SparkSession, dir: String, m: Int): Seq[(Array[Double], Double)] = {
     val sd = Pca.Dim / Pq.SubSpaces
-    val comps = Pca.fitTopM(s, dir, m)
+    val comps = Pca.TopM(s, dir)
     val applied = scala.collection.mutable.ArrayBuffer.empty[(Array[Double], Double)]
     var i = 0
     while (i < m) {
@@ -193,10 +186,12 @@ object Opq extends QueryModule {
     Pq.nxView(s, dir).withColumn("nx", rot(col("nx")))
   }
 
-  private val cbMCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Array[Double]]]]()
-
-  private[graft] def clearCbMCache(): Unit = cbMCache.clear()
+  /** The rank-[[OpqM]] rotated-space codebooks, None when every
+    * component already sits on its target axis. */
+  private[graft] val CodebooksM = Fits("opq.codebooks_m") { (s, dir) =>
+    val chain = householderChain(s, dir, OpqM)
+    if (chain.isEmpty) None else Some(Pq.trainCodebooksNx(rotViewChain(s, dir, chain)))
+  }
 
   /** Per-label PQ reconstruction error in the rank-[[OpqM]] rotated
     * space — [[opqError]] one allocation step further: the
@@ -207,12 +202,9 @@ object Opq extends QueryModule {
     * strict chain on a two-direction planted corpus). */
   def opqMError(s: SparkSession, dir: String): DataFrame = {
     val chain = householderChain(s, dir, OpqM)
-    if (chain.isEmpty) Pq.pqError(s, dir) // every component already on target
-    else {
-      val nx = rotViewChain(s, dir, chain)
-      val cb = cbMCache.computeIfAbsent(OpsShared.dirKey(dir),
-        _ => Pq.trainCodebooksNx(nx))
-      Pq.pqErrorNx(nx, cb)
+    CodebooksM(s, dir) match {
+      case Some(cb) => Pq.pqErrorNx(rotViewChain(s, dir, chain), cb)
+      case None => Pq.pqError(s, dir) // every component already on target
     }
   }
 

@@ -65,7 +65,7 @@ object OpsShared {
   /** Build two INDEPENDENT relation chains from concurrent driver
     * threads so their eager work (localCheckpoint materializations,
     * memoized fits) overlaps instead of serializing — the
-    * [[Maintenance.ensureOpsIndexes]] device generalized (guide §2.6
+    * [[Maintenance.OpsIndexes]] device generalized (guide §2.6
     * overlap-independent-jobs: actions are only sequential because
     * the driver calls them sequentially). Use ONLY when the two
     * thunks share no mutable state and neither reads the other's

@@ -117,26 +117,6 @@ object Pca extends QueryModule {
       }
   }
 
-  /** Memoized fit per fixture dir (the [[KMeansVec]] share-the-work
-    * convention): `pca_projection` consumes the same component
-    * `embed_pca_power` reports, so within one session the Gram +
-    * power iteration runs once per directory, not once per query.
-    * The key carries a cheap file fingerprint of the embeddings
-    * table, so overwriting a dir in the same JVM (re-ingest, test
-    * fixtures reusing a path) invalidates the memo instead of
-    * silently serving the old corpus's fit. Non-local filesystems
-    * fall back to path-only keying (immutable-ingest assumption). */
-  private val fitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Array[Double], Double)]()
-
-  /** Test hook: force a cold fit (determinism specs and Bench re-run
-    * the full distributed path rather than reading the memo) — the
-    * shared Gram clears WITH the pc1 fit so "cold" keeps including
-    * the corpus pass. */
-  private[graft] def clearFitCache(): Unit = { fitCache.clear(); gramCache.clear() }
-
-  /** Gram build + [[Iters]] power-iteration steps on the driver's
-    * dim×dim scalars; returns (unit component, eigenvalue estimate). */
   /** Bridged Gram cells → the symmetric dim×dim double matrix. */
   private def gramMatrix(cells: Array[Long]): Array[Array[Double]] = {
     val G = Array.ofDim[Double](Dim, Dim)
@@ -178,27 +158,18 @@ object Pca extends QueryModule {
     (v, r6d(lambda))
   }
 
-  /** The corpus-pass result shared by BOTH component fits — one Gram,
+  /** The corpus-pass result shared by every component fit — one Gram,
     * many components, the production spectral-analytics shape (at
     * 100 TB the Gram pass is the only corpus-sized cost; every
     * additional component is dim² driver arithmetic). */
-  private val gramCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
+  private[graft] val Gram = Fits("pca.gram")(gramScaled)
 
-  private def cachedGram(s: SparkSession, dir: String): Array[Long] =
-    gramCache.computeIfAbsent(OpsShared.dirKey(dir), _ => gramScaled(s, dir))
-
-  private def fit(s: SparkSession, dir: String): (Array[Double], Double) =
-    fitCache.computeIfAbsent(OpsShared.dirKey(dir), _ =>
-      powerIterate(gramMatrix(cachedGram(s, dir))))
-
-  private val fit2Cache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Array[Double], Double)]()
-
-  /** Clears the deflated fit ONLY — the Gram (and pc1) stay warm by
-    * design: pca_top2's own cold cost is the deflation + power steps,
-    * the Bench contract. */
-  private[graft] def clearFit2Cache(): Unit = fit2Cache.clear()
+  /** The dominant component (unit pc1, eigenvalue estimate), r6-rounded:
+    * bit-identical to the oracle's v3 CTE, as `embed_pca_power`'s hash
+    * gate proves. `pca_projection` and [[Opq]] consume the same fit,
+    * so within one session the power iteration runs once per
+    * directory, not once per query. */
+  private[graft] val Pc1 = Fits("pca.pc1")((s, dir) => powerIterate(gramMatrix(Gram(s, dir))))
 
   /** Second principal component via Hotelling deflation: subtract the
     * fitted dominant component's rank-1 term λ₁·v₁v₁ᵀ from the Gram
@@ -206,73 +177,60 @@ object Pca extends QueryModule {
     * Gram passes) and power-iterate the deflated matrix from the same
     * init. The r6-rounded v₁/λ₁ make the deflation — and therefore
     * pc2 — bit-replayable in the oracle. */
-  private def fit2(s: SparkSession, dir: String): (Array[Double], Double) =
-    fit2Cache.computeIfAbsent(OpsShared.dirKey(dir), _ => {
-      val (v1, l1) = fit(s, dir)
-      val G = gramMatrix(cachedGram(s, dir))
-      var i = 0
-      while (i < Dim) {
-        var j = 0
-        while (j < Dim) {
-          G(i)(j) = G(i)(j) - l1 * v1(i) * v1(j)
-          j += 1
-        }
-        i += 1
+  private[graft] val Pc2 = Fits("pca.pc2") { (s, dir) =>
+    val (v1, l1) = Pc1(s, dir)
+    val G = gramMatrix(Gram(s, dir))
+    var i = 0
+    while (i < Dim) {
+      var j = 0
+      while (j < Dim) {
+        G(i)(j) = G(i)(j) - l1 * v1(i) * v1(j)
+        j += 1
       }
-      powerIterate(G)
-    })
+      i += 1
+    }
+    powerIterate(G)
+  }
 
-  /** The fitted unit pc1 (r6-rounded components — bit-identical to
-    * the oracle's v3 CTE, as `embed_pca_power`'s hash gate proves)
-    * for consumers that compose on the rotation ([[Opq]]). */
-  private[graft] def fittedPc1(s: SparkSession, dir: String): Array[Double] =
-    fit(s, dir)._1
-
-  private val fitMCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Array[Double], Double)]]()
-
-  private[graft] def clearFitMCache(): Unit = fitMCache.clear()
-
-  /** Top-m principal components by REPEATED Hotelling deflation of
-    * the shared Gram — [[fit2]]'s rank-2 deflation generalized: after
+  /** Top-[[PcaM]] principal components by REPEATED Hotelling deflation
+    * of the shared Gram — [[Pc2]]'s rank-2 deflation generalized: after
     * each component, subtract its r6-rounded rank-1 term λ·v·vᵀ and
     * power-iterate the residual from the same init. Everything past
     * the one memoized Gram pass is dim² driver arithmetic per
     * component, so the corpus cost of m components equals the cost of
     * one — the production spectral-analytics shape. Components 1 and
-    * 2 are bit-identical to [[fit]]/[[fit2]] by construction (same
+    * 2 are bit-identical to [[Pc1]]/[[Pc2]] by construction (same
     * expressions in the same order), and every deflation input is
     * r6-rounded, so the whole rank-m basis replays in the oracle's
-    * CTE chain ([[pcaChainSql]]). */
-  private[graft] def fitTopM(
-      s: SparkSession, dir: String, m: Int): Seq[(Array[Double], Double)] =
-    fitMCache.computeIfAbsent(s"${OpsShared.dirKey(dir)}#$m", _ => {
-      val G = gramMatrix(cachedGram(s, dir))
-      val out = Seq.newBuilder[(Array[Double], Double)]
-      var c = 0
-      while (c < m) {
-        val (v, l) = powerIterate(G)
-        out += ((v, l))
-        var i = 0
-        while (i < Dim) {
-          var j = 0
-          while (j < Dim) {
-            G(i)(j) = G(i)(j) - l * v(i) * v(j)
-            j += 1
-          }
-          i += 1
+    * CTE chain ([[pcaChainSql]]). The loop never looks ahead, so a
+    * rank-m' < m consumer ([[Opq]]) reads the basis's first m'. */
+  private[graft] val TopM = Fits("pca.top_m") { (s, dir) =>
+    val G = gramMatrix(Gram(s, dir))
+    val out = Seq.newBuilder[(Array[Double], Double)]
+    var c = 0
+    while (c < PcaM) {
+      val (v, l) = powerIterate(G)
+      out += ((v, l))
+      var i = 0
+      while (i < Dim) {
+        var j = 0
+        while (j < Dim) {
+          G(i)(j) = G(i)(j) - l * v(i) * v(j)
+          j += 1
         }
-        c += 1
+        i += 1
       }
-      out.result()
-    })
+      c += 1
+    }
+    out.result()
+  }
 
   /** Dominant principal component of the embedding Gram matrix via
     * [[Iters]] power-iteration steps: per dimension index `d`, the
     * component `pc1` and the eigenvalue estimate `lambda` (the final
     * pre-normalization vector norm, constant across rows). */
   def embedPcaPower(s: SparkSession, dir: String): DataFrame = {
-    val (v, lambda) = fit(s, dir)
+    val (v, lambda) = Pc1(s, dir)
     import s.implicits._
     v.zipWithIndex
       .map { case (c, d) => (d.toLong, c, lambda) }.toSeq
@@ -319,7 +277,7 @@ object Pca extends QueryModule {
     * closure, the corpus never re-shuffles); only the per-label
     * aggregate moves rows. */
   def pcaProjection(s: SparkSession, dir: String): DataFrame = {
-    val pc = fit(s, dir)._1
+    val pc = Pc1(s, dir)._1
     val projUdf = udf { (emb: Seq[Float]) =>
       // sequential ascending fold, the cosine-kernel convention
       var acc = 0.0
@@ -358,7 +316,7 @@ object Pca extends QueryModule {
     * whitening transform: per dimension `d`, the component `pc2` and
     * its eigenvalue estimate `lambda2`. */
   def pcaTop2(s: SparkSession, dir: String): DataFrame = {
-    val (v2, l2) = fit2(s, dir)
+    val (v2, l2) = Pc2(s, dir)
     import s.implicits._
     v2.zipWithIndex
       .map { case (c, d) => (d.toLong, c, l2) }.toSeq
@@ -401,7 +359,7 @@ object Pca extends QueryModule {
     * eigenvalue estimate) — the truncation basis a whitening /
     * compression transform consumes. */
   def pcaTopM(s: SparkSession, dir: String): DataFrame = {
-    val comps = fitTopM(s, dir, PcaM)
+    val comps = TopM(s, dir)
     import s.implicits._
     comps.zipWithIndex.flatMap { case ((v, l), c) =>
       v.zipWithIndex.map { case (x, d) => (c + 1L, d.toLong, x, l) }
@@ -413,7 +371,7 @@ object Pca extends QueryModule {
     * [[pcaCtes]]'s v3/n3). Returns (cteSql, per-component (vector CTE,
     * norm CTE) references for 1..m). Component c's gram g$c =
     * previous gram − round(λ,6)·v·vᵀ, then the same three unrolled
-    * power steps — the [[fitTopM]] loop verbatim. */
+    * power steps — the [[TopM]] loop verbatim. */
   private[graft] def pcaChainSql(m: Int): (String, Seq[(String, String)]) = {
     val parts = Seq.newBuilder[String]
     // MATERIALIZED bridges first: the shared comp-1 CTEs are plain
@@ -490,7 +448,7 @@ object Pca extends QueryModule {
     * oracle's lam-CTE convention) and the fold order (ascending-dim
     * dot, then one divide) mirrors the SQL list fold verbatim. */
   private[graft] def whitenAll(s: SparkSession, dir: String): DataFrame = {
-    val comps = fitTopM(s, dir, PcaM)
+    val comps = TopM(s, dir)
     val n = t(s, dir, "embeddings").count()
     val vs = comps.map(_._1).toArray
     val scales = comps.map { case (_, l) =>

@@ -118,18 +118,10 @@ object Pq extends QueryModule {
     normalize(raw)
   }
 
-  /** Session memo for the trained codebooks (the [[Pca.fit]]
-    * convention, same file-fingerprint invalidation): training is an
-    * index-BUILD-time cost — pq_error pays it cold (Bench clears the
-    * memo first), ann_pq_topk consumes the shared fit, the deployed
-    * split. */
-  private val cbCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Array[Double]]]]()
-
-  private[graft] def clearCbCache(): Unit = cbCache.clear()
-
-  private[graft] def trainedCodebooks(s: SparkSession, dir: String): Array[Array[Array[Double]]] =
-    cbCache.computeIfAbsent(OpsShared.dirKey(dir), _ => trainCodebooksNx(nxView(s, dir)))
+  /** The trained codebooks: training is an index-BUILD-time cost —
+    * pq_error pays it cold (Bench clears the fit first), ann_pq_topk
+    * consumes the shared fit, the deployed split. */
+  private[graft] val Codebooks = Fits("pq.codebooks")((s, dir) => trainCodebooksNx(nxView(s, dir)))
 
   /** ONE distributed Lloyd update of the prefix-initialized
     * codebooks — real PQ training, the [[KMeansVec.fit]] update at
@@ -241,7 +233,7 @@ object Pq extends QueryModule {
     * decides whether 8-byte codes are safe for a corpus before the
     * compressed index is built (the [[Quantize.sqError]] twin). */
   def pqError(s: SparkSession, dir: String): DataFrame =
-    pqErrorNx(nxView(s, dir), trainedCodebooks(s, dir))
+    pqErrorNx(nxView(s, dir), Codebooks(s, dir))
 
   /** ADC top-k: build the query's [[SubSpaces]]×[[CodeK]] distance
     * table on the driver, scan the corpus codes summing 8 lookups
@@ -254,7 +246,7 @@ object Pq extends QueryModule {
     if (qOpt.isEmpty)
       return e.select(col("vec_id"), col("label"), lit(0d).as("dist")).filter(lit(false))
     val qVec = qOpt.get
-    val cb = trainedCodebooks(s, dir)
+    val cb = Codebooks(s, dir)
     // query ADC table: qtab(sp)(code) = fused d2 of the query's
     // NORMALIZED subvector against that centroid
     val qd = normalize(qVec.map(_.toDouble))
@@ -436,7 +428,7 @@ object Pq extends QueryModule {
       s: SparkSession, dir: String, outDir: String,
       trainDir: Option[String] = None): Unit = {
     import s.implicits._
-    val cb = trainedCodebooks(s, trainDir.getOrElse(dir))
+    val cb = Codebooks(s, trainDir.getOrElse(dir))
     val enc = encodeUdf(cb)
     t(s, dir, "embeddings")
       // the query sentinel row is not corpus: persisting it would make
@@ -623,7 +615,7 @@ object Pq extends QueryModule {
     val qVec = qOpt.get
     val (centroids, assigned) = KMeansVec.fit(s, dir, KMeansVec.K, iters = 1)
     val probes = probeIds(centroids, qVec, nProbe)
-    val cb = trainedCodebooks(s, dir)
+    val cb = Codebooks(s, dir)
     val qd = normalize(qVec.map(_.toDouble))
     val sd = qd.length / SubSpaces
     val qtab = Array.tabulate(SubSpaces)(sp => Array.tabulate(cb(sp).length)(k0 =>
@@ -721,7 +713,7 @@ object Pq extends QueryModule {
     import s.implicits._
     val td = trainDir.getOrElse(dir)
     val centroids = KMeansVec.fit(s, td, KMeansVec.K, iters = 1)._1
-    val cb = trainedCodebooks(s, td)
+    val cb = Codebooks(s, td)
     val enc = encodeUdf(cb)
     Tables.t(s, dir, "embeddings")
       .filter(col("vec_id") =!= VectorQueries.QueryVecId)

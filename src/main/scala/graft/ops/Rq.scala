@@ -97,30 +97,24 @@ object Rq extends QueryModule {
     p
   }
 
-  private val cbCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Cb, Cb)]()
-
-  private[graft] def clearCbCache(): Unit = cbCache.clear()
-
   /** Both trained codebooks (level 1 on the normalized corpus, level
-    * 2 on its level-1 residuals), memoized per directory — training
-    * is the index-build cost; `rq_error` pays it cold. */
-  private[graft] def trainedRq(s: SparkSession, dir: String): (Cb, Cb) =
-    cbCache.computeIfAbsent(OpsShared.dirKey(dir), _ => {
-      val nx = Pq.nxView(s, dir)
-        .select(col("vec_id"), col("label"), col("nx").as("x"))
-      val cb1 = lloydOnce(nx, prefixInit(nx))
-      val cb1F = floats(cb1)
-      val resU = udf { (x: Seq[Double]) =>
-        val xa = x.toArray
-        val c = nearest(xa, cb1, cb1F)._1
-        val cent = cb1(c)
-        Array.tabulate(xa.length)(i => xa(i) - cent(i))
-      }
-      val res = nx.select(col("vec_id"), col("label"), resU(col("x")).as("x"))
-      val cb2 = lloydOnce(res, prefixInit(res))
-      (cb1, cb2)
-    })
+    * 2 on its level-1 residuals) — training is the index-build cost;
+    * `rq_error` pays it cold. */
+  private[graft] val Codebooks = Fits("rq.codebooks") { (s, dir) =>
+    val nx = Pq.nxView(s, dir)
+      .select(col("vec_id"), col("label"), col("nx").as("x"))
+    val cb1 = lloydOnce(nx, prefixInit(nx))
+    val cb1F = floats(cb1)
+    val resU = udf { (x: Seq[Double]) =>
+      val xa = x.toArray
+      val c = nearest(xa, cb1, cb1F)._1
+      val cent = cb1(c)
+      Array.tabulate(xa.length)(i => xa(i) - cent(i))
+    }
+    val res = nx.select(col("vec_id"), col("label"), resU(col("x")).as("x"))
+    val cb2 = lloydOnce(res, prefixInit(res))
+    (cb1, cb2)
+  }
 
   /** Per-label reconstruction-error profile of BOTH levels: avg_err1
     * (level-1 only, the plain-kmeans-codebook baseline) vs avg_err2
@@ -129,7 +123,7 @@ object Rq extends QueryModule {
     * is built (the [[Pq.pqError]] twin, with the improvement column
     * built in). */
   def rqError(s: SparkSession, dir: String): DataFrame = {
-    val (cb1, cb2) = trainedRq(s, dir)
+    val (cb1, cb2) = Codebooks(s, dir)
     val cb1F = floats(cb1)
     val cb2F = floats(cb2)
     val errU = udf { (x: Seq[Double]) =>
@@ -239,7 +233,7 @@ object Rq extends QueryModule {
     if (qOpt.isEmpty)
       return e.select(col("vec_id"), col("label"), lit(0d).as("dist")).filter(lit(false))
     val qVec = qOpt.get
-    val (cb1, cb2) = trainedRq(s, dir)
+    val (cb1, cb2) = Codebooks(s, dir)
     val cb1F = floats(cb1)
     val cb2F = floats(cb2)
     val nq = Pq.normalize(qVec.map(_.toDouble))

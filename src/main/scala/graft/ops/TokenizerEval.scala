@@ -122,7 +122,7 @@ object TokenizerEval extends QueryModule {
     *
     * All three vocabularies are PARAMETER-BOUNDED driver values
     * (each trainer already fits on the driver and ships ≤ VocabOut
-    * rows — the fittedVocab/trainedMerges rule), so the overlap is
+    * rows — the [[Fits]] rule), so the overlap is
     * exact set arithmetic on the driver, not a corpus pass: the
     * corpus cost is the three fits the parent queries already pay. */
   def tokenizerVocabOverlap(s: SparkSession, dir: String): DataFrame = {

@@ -63,35 +63,29 @@ object UnigramLm extends QueryModule {
       .filter(col("w") =!= "" && length(col("w")) <= MaxWordLen)
       .groupBy(col("w")).agg(count(lit(1)).as("f"))
 
-  /** The fitted vocabulary: piece → (count, cost), memoized per
-    * directory. Bounded by VocabTop + alphabet size. */
-  private val vocabCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Long, Double)]]()
-
-  private[graft] def clearVocabCache(): Unit = vocabCache.clear()
-
-  private[graft] def fittedVocab(s: SparkSession, dir: String): Seq[(String, Long, Double)] =
-    vocabCache.computeIfAbsent(OpsShared.dirKey(dir), _ => {
-      val pieces = wordsDf(s, dir)
-        .select(col("f"), explode(expr(
-          s"""flatten(transform(sequence(1, least($MaxPieceLen, length(w))),
-             |  l -> transform(sequence(0, length(w) - l),
-             |    i -> substring(w, i + 1, l))))""".stripMargin)).as("piece"))
-        .groupBy(col("piece")).agg(sum(col("f")).as("cnt"))
-      val top = pieces.orderBy(col("cnt").desc, col("piece")).limit(VocabTop)
-        .collect().map(r => (r.getString(0), r.getLong(1)))
-      val chars = pieces.filter(length(col("piece")) === 1)
-        .collect().map(r => (r.getString(0), r.getLong(1)))
-      val vocab = (top ++ chars).distinct
-      val tot = vocab.map(_._2).sum
-      vocab.map { case (p, c) =>
-        (p, c, r6d(-math.log(c.toDouble / tot.toDouble)))
-      }.toSeq
-    })
+  /** The fitted vocabulary: piece → (count, cost). Bounded by
+    * VocabTop + alphabet size. */
+  private[graft] val Vocab = Fits("unigram.vocab") { (s, dir) =>
+    val pieces = wordsDf(s, dir)
+      .select(col("f"), explode(expr(
+        s"""flatten(transform(sequence(1, least($MaxPieceLen, length(w))),
+           |  l -> transform(sequence(0, length(w) - l),
+           |    i -> substring(w, i + 1, l))))""".stripMargin)).as("piece"))
+      .groupBy(col("piece")).agg(sum(col("f")).as("cnt"))
+    val top = pieces.orderBy(col("cnt").desc, col("piece")).limit(VocabTop)
+      .collect().map(r => (r.getString(0), r.getLong(1)))
+    val chars = pieces.filter(length(col("piece")) === 1)
+      .collect().map(r => (r.getString(0), r.getLong(1)))
+    val vocab = (top ++ chars).distinct
+    val tot = vocab.map(_._2).sum
+    vocab.map { case (p, c) =>
+      (p, c, r6d(-math.log(c.toDouble / tot.toDouble)))
+    }.toSeq
+  }
 
   /** Top-[[VocabOut]] fitted pieces — the fit's audit surface. */
   def unigramVocab(s: SparkSession, dir: String): DataFrame = {
-    val v = fittedVocab(s, dir)
+    val v = Vocab(s, dir)
     import s.implicits._
     v.sortBy { case (p, c, _) => (-c, p) }.take(VocabOut)
       .toDF("piece", "cnt", "cost")
@@ -181,7 +175,7 @@ object UnigramLm extends QueryModule {
   /** Per-distinct-word Viterbi stats (w, n_pieces, score) — the
     * relation [[unigramEncode]] joins back to the token stream. */
   private[graft] def wordStats(s: SparkSession, dir: String): DataFrame = {
-    val vocab = fittedVocab(s, dir).map { case (p, _, c) => p -> c }.toMap
+    val vocab = Vocab(s, dir).map { case (p, _, c) => p -> c }.toMap
     val vit = viterbiUdf(vocab)
     wordsDf(s, dir, resplit = true)
       .withColumn("st", vit(col("w")))
@@ -337,7 +331,7 @@ object UnigramLm extends QueryModule {
     * vocab-bounded aggregation, driver arithmetic on ≤|V| rows.
     * Output: the re-estimated top-[[VocabOut]] vocabulary. */
   def unigramEm(s: SparkSession, dir: String): DataFrame = {
-    val vocab = fittedVocab(s, dir)
+    val vocab = Vocab(s, dir)
     val costs = vocab.map { case (p, _, c) => p -> c }.toMap
     val vp = viterbiPiecesUdf(costs)
     val counts2 = wordsDf(s, dir, resplit = true)

@@ -62,30 +62,24 @@ object WordPiece extends QueryModule {
         .as("piece"))
       .groupBy(col("piece")).agg(sum(col("f")).as("cnt"))
 
-  /** Fitted vocabulary (piece, cnt), memoized per directory:
-    * top-[[VocabTop]] positional pieces ∪ single chars in both
-    * forms. Bounded by VocabTop + 2·alphabet. */
-  private val vocabCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Long)]]()
-
-  private[graft] def clearVocabCache(): Unit = vocabCache.clear()
-
-  private[graft] def fittedVocab(s: SparkSession, dir: String): Seq[(String, Long)] =
-    vocabCache.computeIfAbsent(OpsShared.dirKey(dir), _ => {
-      val pieces = piecesDf(s, dir)
-      val top = pieces.orderBy(col("cnt").desc, col("piece")).limit(VocabTop)
-        .collect().map(r => (r.getString(0), r.getLong(1)))
-      val chars = pieces.filter(
-          length(col("piece")) === 1 ||
-            (col("piece").startsWith("##") && length(col("piece")) === 3))
-        .collect().map(r => (r.getString(0), r.getLong(1)))
-      (top ++ chars).distinct.toSeq
-    })
+  /** Fitted vocabulary (piece, cnt): top-[[VocabTop]] positional
+    * pieces ∪ single chars in both forms. Bounded by
+    * VocabTop + 2·alphabet. */
+  private[graft] val Vocab = Fits("wordpiece.vocab") { (s, dir) =>
+    val pieces = piecesDf(s, dir)
+    val top = pieces.orderBy(col("cnt").desc, col("piece")).limit(VocabTop)
+      .collect().map(r => (r.getString(0), r.getLong(1)))
+    val chars = pieces.filter(
+        length(col("piece")) === 1 ||
+          (col("piece").startsWith("##") && length(col("piece")) === 3))
+      .collect().map(r => (r.getString(0), r.getLong(1)))
+    (top ++ chars).distinct.toSeq
+  }
 
   /** Top-[[VocabOut]] fitted pieces — the fit's audit surface,
     * mirroring [[UnigramLm.unigramVocab]]. */
   def wordpieceVocab(s: SparkSession, dir: String): DataFrame = {
-    val v = fittedVocab(s, dir)
+    val v = Vocab(s, dir)
     import s.implicits._
     v.sortBy { case (p, c) => (-c, p) }.take(VocabOut).toDF("piece", "cnt")
   }
@@ -117,7 +111,7 @@ object WordPiece extends QueryModule {
     * fertility — directly comparable with [[UnigramLm.unigramEncode]]
     * and [[Bpe]]'s encode on the same corpus. */
   def wordpieceEncode(s: SparkSession, dir: String): DataFrame = {
-    val vocab = fittedVocab(s, dir).map(_._1).toSet
+    val vocab = Vocab(s, dir).map(_._1).toSet
     val enc = greedyUdf(vocab)
     val wstats = wordsDf(s, dir)
       .withColumn("n_pieces", enc(col("w")))
@@ -214,7 +208,7 @@ object WordPiece extends QueryModule {
     * words (greedy dead-ends) drop from words AND bytes, so the
     * ratios compare what the tokenizer actually emits. */
   private[ops] def fertilityLangCounts(s: SparkSession, dir: String): DataFrame = {
-    val vocab = fittedVocab(s, dir).map(_._1).toSet
+    val vocab = Vocab(s, dir).map(_._1).toSet
     val enc = greedyUdf(vocab)
     val wstats = wordsDf(s, dir)
       .withColumn("n_pieces", enc(col("w")))

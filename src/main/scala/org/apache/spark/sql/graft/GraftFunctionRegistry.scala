@@ -31,11 +31,8 @@ object GraftFunctionRegistry {
     }
 }
 
-/** `spark.sql.extensions` entry point: native SQL functions plus the
-  * band-join bucketing optimizer rule. */
+/** `spark.sql.extensions` entry point for the native SQL functions. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(extensions: SparkSessionExtensions): Unit = {
+  override def apply(extensions: SparkSessionExtensions): Unit =
     GraftFunctionRegistry.install(extensions)
-    extensions.injectOptimizerRule(_ => BandJoinRewrite)
-  }
 }

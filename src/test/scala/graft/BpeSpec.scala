@@ -28,8 +28,8 @@ class BpeSpec extends AnyFunSuite {
   }
 
   test("training replays the hand-computed merge sequence with exact counts") {
-    Bpe.clearMergeCache()
-    val merges = Bpe.trainedMerges(spark, dir)
+    Bpe.Merges.clear()
+    val merges = Bpe.Merges(spark, dir)
     assert(merges == Seq(("a", "a", 4L), ("a", "b", 3L), ("aa", "ab", 2L), ("x", "y", 1L)),
       s"got $merges")
     val table = Bpe.bpeMerges(spark, dir).collect()
@@ -64,7 +64,7 @@ class BpeSpec extends AnyFunSuite {
     assert(merges.length == 67, s"corpus exhausted early at ${merges.length} merges")
     // greedy training is prefix-stable: the first Rounds merges ARE
     // the registered bpe_merges result
-    assert(merges.take(Bpe.Rounds) == Bpe.trainedMerges(spark, sf),
+    assert(merges.take(Bpe.Rounds) == Bpe.Merges(spark, sf),
       "long run's prefix diverged from the registered training")
     // 67 rounds stacked only (67 mod CheckpointEvery) merge
     // projections over the last checkpoint — the plan tree must be
@@ -83,7 +83,7 @@ class BpeSpec extends AnyFunSuite {
       .withColumn("source", lit("src0"))
       .withColumn("n_chars", length(col("text")).cast("long"))
       .write.mode("overwrite").parquet(s"$d/documents.parquet")
-    assert(Bpe.trainedMerges(spark, d).isEmpty)
+    assert(Bpe.Merges(spark, d).isEmpty)
     // encode still works: every 1-char word is its own piece
     val got = Bpe.bpeEncode(spark, d).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq

@@ -82,7 +82,7 @@ class IndexInventorySpec extends AnyFunSuite {
 
   test("the audit plan reads ONLY index tables + catalog metadata — the corpus parquet never appears in a warm-session scan") {
     val sf = "/root/testdata/sf0.001"
-    Maintenance.indexInventory(spark, sf).collect() // warms ensureOpsIndexes
+    Maintenance.indexInventory(spark, sf).collect() // warms Maintenance.OpsIndexes
     val plan = Maintenance.indexInventory(spark, sf)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("documents.parquet"),

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The persisted maximal atom-window index —
   * [[Dedup.writeMaximalIndex]] / [[Dedup.maximalScrubIndexed]] /
-  * [[Dedup.ensureMaximalIndex]]: [[Dedup.writeSubstrIndex]]'s
+  * [[Dedup.MaximalIndex]]: [[Dedup.writeSubstrIndex]]'s
   * bucketed pattern extended to the [[Dedup.MaximalAtomWords]] grid,
   * storing per-hash GLOBAL first occurrences (survivorship needs WHO
   * was first, not bare membership). Contract: (1) the arriving-batch
@@ -119,11 +119,11 @@ class MaximalIndexSpec extends AnyFunSuite {
   }
 
   test("the three registered maximal queries probe ONE shared persisted build") {
-    Dedup.clearMaximalIdxCache()
-    val table = Dedup.ensureMaximalIndex(spark, sf)
+    Dedup.MaximalIndex.clear()
+    val table = Dedup.MaximalIndex(spark, sf)
     assert(spark.catalog.tableExists(table), s"ensure must materialize $table")
     // a second ensure is a memo hit — same table, no rebuild
-    assert(Dedup.ensureMaximalIndex(spark, sf) == table)
+    assert(Dedup.MaximalIndex(spark, sf) == table)
     // every registered maximal query's plan scans the SHARED table
     // instead of re-electing first occurrences over the posting stream
     Seq(

@@ -147,9 +147,9 @@ class PcaSpec extends AnyFunSuite {
   }
 
   test("deterministic across cold runs (long-scaled Gram is partition-order-free)") {
-    Pca.clearFitCache()
+    Pca.Pc1.clear(); Pca.Gram.clear()
     val a = Pca.embedPcaPower(spark, dir).collect().map(r => (r.getLong(0), r.getDouble(1)))
-    Pca.clearFitCache()
+    Pca.Pc1.clear(); Pca.Gram.clear()
     val b = Pca.embedPcaPower(spark, dir).collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(a.sameElements(b))
   }
@@ -185,7 +185,7 @@ class PcaSpec extends AnyFunSuite {
   }
 
   test("pca_projection reuses the memoized fit (no second distributed Gram pass)") {
-    Pca.clearFitCache()
+    Pca.Pc1.clear(); Pca.Gram.clear()
     Pca.embedPcaPower(spark, dir).collect()
     val passes = Pca.gramPasses.get()
     val got = Pca.pcaProjection(spark, dir).collect()
@@ -195,8 +195,8 @@ class PcaSpec extends AnyFunSuite {
   }
 
   test("pca_top2 shares the Gram: one corpus pass serves both components") {
-    Pca.clearFitCache()
-    Pca.clearFit2Cache()
+    Pca.Pc1.clear(); Pca.Gram.clear()
+    Pca.Pc2.clear()
     Pca.embedPcaPower(spark, dir).collect()
     val passes = Pca.gramPasses.get()
     val got = Pca.pcaTop2(spark, dir).collect()

@@ -66,9 +66,9 @@ class RqSpec extends AnyFunSuite {
   }
 
   test("deterministic across cold runs") {
-    Rq.clearCbCache()
+    Rq.Codebooks.clear()
     val a = Rq.rqError(spark, dir).collect().map(_.toSeq)
-    Rq.clearCbCache()
+    Rq.Codebooks.clear()
     val b = Rq.rqError(spark, dir).collect().map(_.toSeq)
     assert(a.sameElements(b))
   }

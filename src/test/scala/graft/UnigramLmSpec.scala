@@ -17,7 +17,7 @@ class UnigramLmSpec extends AnyFunSuite {
       .doubleValue() + 0.0
 
   test("viterbi score equals the brute-forced minimum over ALL segmentations") {
-    val vocab = UnigramLm.fittedVocab(spark, sf)
+    val vocab = UnigramLm.Vocab(spark, sf)
       .map { case (p, _, c) => p -> c }.toMap
     // enumerate every segmentation into pieces of length <= MaxPieceLen
     def allScores(w: String): Seq[(Double, Int)] = {
@@ -45,7 +45,7 @@ class UnigramLmSpec extends AnyFunSuite {
   }
 
   test("vocabulary covers every corpus character; cost is anti-monotone in count") {
-    val v = UnigramLm.fittedVocab(spark, sf)
+    val v = UnigramLm.Vocab(spark, sf)
     val pieces = v.map(_._1).toSet
     val words = UnigramLm.wordStats(spark, sf).collect().map(_.getString(0))
     words.flatMap(_.toCharArray).distinct.foreach { ch =>
@@ -71,7 +71,7 @@ class UnigramLmSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(s"$d/documents.parquet")
     val em = UnigramLm.unigramEm(spark, d).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
-    val fullVocab = UnigramLm.fittedVocab(spark, d)
+    val fullVocab = UnigramLm.Vocab(spark, d)
     assert(fullVocab.size <= UnigramLm.VocabOut,
       "planted corpus must expose the whole vocabulary")
     // conservation: EM counts sum to the total path mass Σ f(w)·n_pieces(w)
