@@ -14,13 +14,15 @@ object WindowKeys {
     * "WindowExec: No Partition Defined" warning the key exists to
     * silence — and that warning must stay meaningful (a REAL unbounded
     * window should be the only thing that triggers it). Anchoring the
-    * expression on an input attribute (`length(cast(c)) * 0`, value 0
-    * for every key) keeps it in the plan while preserving
-    * single-partition semantics for any column type. A NULL input
-    * would make the key NULL (its own partition → duplicate rank 1s),
-    * so the product is coalesced back to 0 — coalesce of a
-    * non-foldable child is itself non-foldable, so the rule still
-    * can't strip it. */
+    * expression on an input attribute (`least(length(cast(c)), 0)`,
+    * value 0 for every key, since a length is never negative) keeps
+    * it in the plan while preserving single-partition semantics for
+    * any column type. `least` skips NULLs, so a NULL input is 0 too
+    * (no partition of its own, no duplicate rank 1s). Not `length(..)
+    * * 0`: ReorderAssociativeOperator folds an integral product with
+    * a zero factor to the literal 0 when the other factor is
+    * non-nullable, and the key was stripped for every non-nullable
+    * input (`explode(split(..))` words, say). */
   def boundedRankKey(c: Column): Column =
-    coalesce(length(c.cast("string")) * lit(0), lit(0))
+    least(length(c.cast("string")), lit(0))
 }

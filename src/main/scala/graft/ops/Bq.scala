@@ -1,6 +1,5 @@
 package graft.ops
 
-import graft.functions.VectorFunctions.r6
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -100,13 +99,7 @@ object Bq extends QueryModule {
       .limit(BqShortlist)
     // zero corpus vectors may occupy shortlist slots but rescore to
     // NaN and drop — identically in both engines
-    shortlist
-      .withColumn("dist",
-        r6(graft.functions.VectorFunctions.cosineDist(col("embedding"), typedLit(qVec))))
-      .filter(!isnan(col("dist")) && col("dist").isNotNull)
-      .select(col("vec_id"), col("label"), col("dist"))
-      .orderBy(col("dist"), col("vec_id"))
-      .limit(k)
+    OpsShared.rescoreTopK(shortlist, qVec, k)
   }
 
   /** Oracle mirror of [[bqTopK]]: same sign bits as exact power-of-2

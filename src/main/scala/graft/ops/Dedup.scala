@@ -1470,9 +1470,47 @@ object Dedup extends QueryModule {
       if (fs.exists(loc)) fs.delete(loc, /* recursive = */ true)
     }
 
-  private def stampIndexFormat(s: SparkSession, table: String): Unit =
+  /** The one writer of every bucketed dedup-index table (substring,
+    * maximal, band; build and compaction alike): clear a stale
+    * managed location, write `rows` bucketed and sorted on `key`, then
+    * stamp the format version. The write parallelism is aligned with
+    * the bucket count: repartition and bucketBy share Murmur3
+    * HashPartitioning, so every task holds exactly one bucket and the
+    * layout lands as ONE file per bucket at ANY cluster parallelism
+    * (an unaligned shuffle count writes up to tasks x buckets files —
+    * invisible at local[32], where 32 divides 64, but real
+    * fragmentation on a cluster). With `withCounts` (the band index)
+    * the `<table>_counts` sidecar is written from the rows just
+    * written BEFORE the stamp: a stamped table without its sidecar
+    * would probe through the pre-sidecar fallback. */
+  private def writeBucketed(
+      rows: DataFrame, key: String, table: String, withCounts: Boolean = false): Unit = {
+    val s = rows.sparkSession
+    prepareManagedOverwrite(s, table)
+    if (withCounts) prepareManagedOverwrite(s, table + "_counts")
+    rows.repartition(BandIndexBuckets, col(key))
+      .write.mode("overwrite")
+      .bucketBy(BandIndexBuckets, key).sortBy(key)
+      .saveAsTable(table)
+    // counting the persisted relation costs one index-table scan, where
+    // re-deriving the band rows would re-run the md5 shingle + minhash
+    // passes a second time — at 100 TB the signature pass IS the build
+    if (withCounts)
+      bandBucketCounts(s.table(table)).write.mode("overwrite").saveAsTable(table + "_counts")
     s.sql(s"ALTER TABLE $table SET TBLPROPERTIES " +
       s"('graft.index.format' = '$IndexFormatVersion')")
+  }
+
+  /** The bucketed tables' [[Maintenance.mergePolicy]]: one listing of
+    * the catalog location (resolved through the catalog API — string-
+    * parsing DESCRIBE EXTENDED output breaks silently across metastore
+    * formats); past `maxFilesPerBucket` average files per bucket,
+    * `compact`. */
+  private def maintainBucketed(
+      s: SparkSession, family: String, table: String, maxFilesPerBucket: Int)(
+      compact: => Unit): Boolean =
+    Maintenance.mergePolicy(s, family, Maintenance.tableMeta(s, table).location.toString)(
+      (files, _) => files > maxFilesPerBucket.toLong * BandIndexBuckets)(compact)
 
   private[graft] def requireIndexFormat(s: SparkSession, table: String): Unit = {
     val props = s.sessionState.catalog.getTableMetadata(
@@ -1492,23 +1530,8 @@ object Dedup extends QueryModule {
     * counts sidecar, no cap — a boilerplate window repeated 10⁶
     * times is one row). Bucketed on `h` so a probing batch shuffles
     * only itself (SubstrIndexSpec pins the single Exchange). */
-  def writeSubstrIndexOf(docs: DataFrame, table: String): Unit = {
-    val s = docs.sparkSession
-    prepareManagedOverwrite(s, table)
-    substrWindowRows(docs)
-      .select(col("h")).distinct()
-      // align the write parallelism with the bucket count: repartition
-      // and bucketBy share Murmur3 HashPartitioning, so every task
-      // holds exactly one bucket and the layout lands as ONE file per
-      // bucket at ANY cluster parallelism (an unaligned shuffle count
-      // writes up to tasks x buckets files — invisible at local[32],
-      // where 32 divides 64, but real fragmentation on a cluster)
-      .repartition(BandIndexBuckets, col("h"))
-      .write.mode("overwrite")
-      .bucketBy(BandIndexBuckets, "h").sortBy("h")
-      .saveAsTable(table)
-    stampIndexFormat(s, table)
-  }
+  def writeSubstrIndexOf(docs: DataFrame, table: String): Unit =
+    writeBucketed(substrWindowRows(docs).select(col("h")).distinct(), "h", table)
 
   /** Corpus-half (doc_id % 10 ≠ 0) substring index — the fixture's
     * arrival convention over [[writeSubstrIndexOf]]. */
@@ -1548,42 +1571,15 @@ object Dedup extends QueryModule {
     * table, never in place — the generation-swap rule. */
   def compactSubstrIndex(s: SparkSession, table: String, outTable: String): Unit = {
     requireIndexFormat(s, table)
-    prepareManagedOverwrite(s, outTable)
-    s.table(table).select(col("h")).distinct()
-      .repartition(BandIndexBuckets, col("h"))
-      .write.mode("overwrite")
-      .bucketBy(BandIndexBuckets, "h").sortBy("h")
-      .saveAsTable(outTable)
-    stampIndexFormat(s, outTable)
+    writeBucketed(s.table(table).select(col("h")).distinct(), "h", outTable)
   }
 
-  /** File-growth merge policy for the substring index — the
-    * [[maintainBandIndex]] twin: one metadata-cheap listing; past
-    * `maxFilesPerBucket` average files per bucket the index rewrites
-    * into `outTable`. Returns true when a compaction ran. */
+  /** The substring index's merge policy ([[maintainBucketed]]).
+    * Returns true when [[compactSubstrIndex]] ran into `outTable`. */
   def maintainSubstrIndex(
       s: SparkSession, table: String, outTable: String,
-      maxFilesPerBucket: Int = DefaultMaxFilesPerBucket): Boolean = {
-    val meta = s.sessionState.catalog.getTableMetadata(
-      s.sessionState.sqlParser.parseTableIdentifier(table))
-    val loc = new org.apache.hadoop.fs.Path(meta.location)
-    val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-    var nFiles = 0L
-    val it = fs.listFiles(loc, /* recursive = */ true)
-    while (it.hasNext) {
-      if (it.next().getPath.getName.endsWith(".parquet")) nFiles += 1
-    }
-    if (nFiles == 0) {
-      require(Maintenance.isCommittedEmptyDir(s, loc.toString),
-        s"substring index $table at $loc lists no parquet data files and no " +
-          "_SUCCESS marker — layout changed? refusing to silently skip compaction")
-      return false
-    }
-    if (nFiles > maxFilesPerBucket.toLong * BandIndexBuckets) {
-      compactSubstrIndex(s, table, outTable)
-      true
-    } else false
-  }
+      maxFilesPerBucket: Int = DefaultMaxFilesPerBucket): Boolean =
+    maintainBucketed(s, "substring", table, maxFilesPerBucket)(compactSubstrIndex(s, table, outTable))
 
   // ---- Persisted maximal atom-window index ----
 
@@ -1603,15 +1599,8 @@ object Dedup extends QueryModule {
     * the [[MaximalAtomWords]] grid (the 15-word index stores bare
     * membership; the maximal family also needs WHO was first, so
     * the canonical copy of a passage keeps it). */
-  def writeMaximalIndexOf(docs: DataFrame, table: String): Unit = {
-    prepareManagedOverwrite(docs.sparkSession, table)
-    maximalFirstRows(docs)
-      .repartition(BandIndexBuckets, col("h"))
-      .write.mode("overwrite")
-      .bucketBy(BandIndexBuckets, "h").sortBy("h")
-      .saveAsTable(table)
-    stampIndexFormat(docs.sparkSession, table)
-  }
+  def writeMaximalIndexOf(docs: DataFrame, table: String): Unit =
+    writeBucketed(maximalFirstRows(docs), "h", table)
 
   /** Corpus-half (doc_id % 10 ≠ 0) maximal index — the incremental
     * arrival convention shared with [[writeSubstrIndex]]. */
@@ -1645,15 +1634,8 @@ object Dedup extends QueryModule {
   /** Rewrite an appended-to maximal index into a fresh generation:
     * min-fold the per-segment firsts into clean bucketed files. A
     * NEW table, never in place — the generation-swap rule. */
-  def compactMaximalIndex(s: SparkSession, table: String, outTable: String): Unit = {
-    prepareManagedOverwrite(s, outTable)
-    maximalIndexFirsts(s, table)
-      .repartition(BandIndexBuckets, col("h"))
-      .write.mode("overwrite")
-      .bucketBy(BandIndexBuckets, "h").sortBy("h")
-      .saveAsTable(outTable)
-    stampIndexFormat(s, outTable)
-  }
+  def compactMaximalIndex(s: SparkSession, table: String, outTable: String): Unit =
+    writeBucketed(maximalIndexFirsts(s, table), "h", outTable)
 
   /** Build-once-probe-many for the registered maximal queries: the
     * FULL-corpus first-occurrence index materializes lazily (once
@@ -3014,18 +2996,6 @@ object Dedup extends QueryModule {
     rows.withColumn("bucket_n",
       count(lit(1)).over(Window.partitionBy(trueBandKeyCols: _*)))
 
-  /** Materialize the corpus's MinHash band rows as a BUCKETED table —
-    * the missing half of [[dedupIncremental]]'s at-scale story: with
-    * the corpus band table bucketed by the band key ON DISK, an
-    * arriving batch shuffles only ITSELF; the 100 TB corpus side
-    * reads its buckets in place (zero corpus shuffle, the Exchange
-    * provably absent — BandIndexSpec pins it). `bucket_n` is counted
-    * at write time so the hot-bucket cap is a stored-column filter at
-    * query time, not a window over the corpus. The ANN analog is
-    * [[graft.ops.GraphAnn.writeGraphIndex]]; continuous ingest
-    * appends via [[appendBandIndex]], and the `_counts` sidecar
-    * gives probes GLOBAL cap semantics across segments (the
-    * maintainGraphIndex generation pattern handles file growth). */
   /** Per-(TRUE band key) row counts of one segment — the sidecar
     * unit every writer persists to `<table>_counts` so a probe can
     * reconstruct GLOBAL bucket sizes across segments with one cheap
@@ -3039,24 +3009,20 @@ object Dedup extends QueryModule {
       .groupBy(col("band"), col("key"))
       .agg(count(lit(1)).as("n"))
 
-  def writeBandIndexOf(corpus: DataFrame, table: String): Unit = {
-    val s = corpus.sparkSession
-    prepareManagedOverwrite(s, table)
-    prepareManagedOverwrite(s, table + "_counts")
-    withBucketN(bandRows(corpus))
-      .repartition(BandIndexBuckets, col("bkey60"))
-      .write.mode("overwrite")
-      .bucketBy(BandIndexBuckets, "bkey60").sortBy("bkey60")
-      .saveAsTable(table)
-    // sidecar from the rows JUST WRITTEN (they carry sig + band):
-    // counting the persisted relation costs one index-table scan,
-    // where re-deriving bandRows(corpus) would re-run the md5
-    // shingle + minhash passes over the whole corpus a second time —
-    // at 100 TB the signature pass IS the build cost
-    bandBucketCounts(s.table(table))
-      .write.mode("overwrite").saveAsTable(table + "_counts")
-    stampIndexFormat(s, table)
-  }
+  /** Materialize the corpus's MinHash band rows as a BUCKETED table —
+    * the missing half of [[dedupIncremental]]'s at-scale story: with
+    * the corpus band table bucketed by the band key ON DISK, an
+    * arriving batch shuffles only ITSELF; the 100 TB corpus side
+    * reads its buckets in place (zero corpus shuffle, the Exchange
+    * provably absent — BandIndexSpec pins it). `bucket_n` is counted
+    * at write time so the hot-bucket cap is a stored-column filter at
+    * query time, not a window over the corpus. The ANN analog is
+    * [[graft.ops.GraphAnn.writeGraphIndex]]; continuous ingest
+    * appends via [[appendBandIndex]], and the `_counts` sidecar
+    * gives probes GLOBAL cap semantics across segments
+    * ([[maintainBandIndex]] handles file growth). */
+  def writeBandIndexOf(corpus: DataFrame, table: String): Unit =
+    writeBucketed(withBucketN(bandRows(corpus)), "bkey60", table, withCounts = true)
 
   /** Corpus-half (doc_id % 10 ≠ 0) band index — the fixture's
     * arrival convention over [[writeBandIndexOf]]. */
@@ -3160,26 +3126,15 @@ object Dedup extends QueryModule {
   /** Rewrite an appended-to band index into a fresh generation at
     * `outTable`: one pass over the persisted rows recomputing GLOBAL
     * `bucket_n` (appends count per segment — see [[appendBandIndex]])
-    * and re-bucketing into clean files. A NEW table, never in place —
-    * the [[graft.ops.GraphAnn.compactGraphIndex]] generation-swap
-    * rule: the old generation stays queryable until the caller flips
-    * its pointer. No text is re-hashed — the band rows already carry
-    * everything. */
+    * and re-bucketing into clean files. A NEW table, never in place
+    * (the [[Maintenance.mergePolicy]] generation swap). No text is
+    * re-hashed — the band rows already carry everything. */
   def compactBandIndex(s: SparkSession, table: String, outTable: String): Unit = {
     requireIndexFormat(s, table)
-    prepareManagedOverwrite(s, outTable)
-    prepareManagedOverwrite(s, outTable + "_counts")
-    withBucketN(s.table(table)
-        .select(col("doc_id"), col("sig"), col("band"), col("bkey60")))
-      .repartition(BandIndexBuckets, col("bkey60"))
-      .write.mode("overwrite")
-      .bucketBy(BandIndexBuckets, "bkey60").sortBy("bkey60")
-      .saveAsTable(outTable)
-    // fold the per-segment counts sidecar into one row per bucket
-    bandBucketCounts(s.table(outTable)
-        .select(col("doc_id"), col("sig"), col("band"), col("bkey60")))
-      .write.mode("overwrite").saveAsTable(outTable + "_counts")
-    stampIndexFormat(s, outTable)
+    // the sidecar re-counts the rewritten rows: one row per bucket
+    writeBucketed(withBucketN(s.table(table)
+        .select(col("doc_id"), col("sig"), col("band"), col("bkey60"))),
+      "bkey60", outTable, withCounts = true)
   }
 
   /** Broadcast gate for the oversized-bucket anti join in
@@ -3194,44 +3149,13 @@ object Dedup extends QueryModule {
     * per-bucket file count (each is opened and merge-read). */
   val DefaultMaxFilesPerBucket = 16
 
-  /** The band-index merge policy — [[appendBandIndex]] grows file
-    * segments without bound; THIS decides when to fold them (the
-    * [[graft.ops.GraphAnn.maintainGraphIndex]] analog): ONE
-    * metadata-cheap file listing of the table location, and past
-    * `maxFilesPerBucket` average files per bucket the index rewrites
-    * into `outTable` via [[compactBandIndex]]. Returns true when a
-    * compaction ran — the caller swaps its pointer and retires the
-    * old generation. */
+  /** The band index's merge policy ([[maintainBucketed]]) —
+    * [[appendBandIndex]] grows file segments without bound. Returns
+    * true when [[compactBandIndex]] ran into `outTable`. */
   def maintainBandIndex(
       s: SparkSession, table: String, outTable: String,
-      maxFilesPerBucket: Int = DefaultMaxFilesPerBucket): Boolean = {
-    // resolve the table location through the catalog API — string-
-    // parsing DESCRIBE EXTENDED output breaks silently across
-    // metastore formats, and a silent mis-parse here would disable
-    // compaction forever rather than fail loudly
-    val meta = s.sessionState.catalog.getTableMetadata(
-      s.sessionState.sqlParser.parseTableIdentifier(table))
-    val loc = new org.apache.hadoop.fs.Path(meta.location)
-    val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-    var nFiles = 0L
-    val it = fs.listFiles(loc, /* recursive = */ true)
-    while (it.hasNext) {
-      if (it.next().getPath.getName.endsWith(".parquet")) nFiles += 1
-    }
-    if (nFiles == 0) {
-      // a zero-row bucketed saveAsTable commits _SUCCESS at the table
-      // location with no data files — a VALID empty index → no-op;
-      // anything else (missing dir, relocated layout) fails loudly
-      require(Maintenance.isCommittedEmptyDir(s, loc.toString),
-        s"band index $table at $loc lists no parquet data files and no " +
-          "_SUCCESS marker — layout changed? refusing to silently skip compaction")
-      return false
-    }
-    if (nFiles > maxFilesPerBucket.toLong * BandIndexBuckets) {
-      compactBandIndex(s, table, outTable)
-      true
-    } else false
-  }
+      maxFilesPerBucket: Int = DefaultMaxFilesPerBucket): Boolean =
+    maintainBucketed(s, "band", table, maxFilesPerBucket)(compactBandIndex(s, table, outTable))
 
   /** Band counts the sweep evaluates (NumHashes = 64 fixed, so
     * rows-per-band = 64/b): more bands → looser match requirement →

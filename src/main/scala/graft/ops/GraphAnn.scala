@@ -108,12 +108,7 @@ object GraphAnn extends QueryModule {
         }
       }
       .toDF("vec_id", "label", "embedding")
-    candidates
-      .withColumn("dist", r6(cosineDist(col("embedding"), typedLit(qVec))))
-      .filter(!isnan(col("dist")) && col("dist").isNotNull)
-      .select(col("vec_id"), col("label"), col("dist"))
-      .orderBy(col("dist"), col("vec_id"))
-      .limit(k)
+    OpsShared.rescoreTopK(candidates, qVec, k)
   }
 
   /** Query batches at or below this many rows ride the driver-collect
@@ -467,23 +462,19 @@ object GraphAnn extends QueryModule {
           require(segShards <= SegTagSpan,
             s"batch needs $segShards segment shards, tag span is $SegTagSpan — " +
               "split the batch or raise TargetRowsPerShard")
-          val base = SegTagBase + tag.toInt * SegTagSpan
-          val key = "spark.sql.sources.partitionOverwriteMode"
-          val prev = s.conf.getOption(key)
-          s.conf.set(key, "dynamic")
-          try graphIndexRows(sel, segShards, shardBase = base)
-            .write.mode("overwrite").partitionBy("shard").parquet(indexPath)
-          finally prev.fold(s.conf.unset(key))(v => s.conf.set(key, v))
+          // dynamic overwrite for THIS write only (a session-wide
+          // setting would leak into concurrent writes of the session)
+          graphIndexRows(sel, segShards, shardBase = SegTagBase + tag.toInt * SegTagSpan)
+            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+            .partitionBy("shard").parquet(indexPath)
       }
     }
   }
 
   /** Merge an appended-to index into a fresh generation at `outPath`:
     * re-shard ALL vectors with [[shardsFor]] and rebuild — the Lucene
-    * segment-merge half of the maintenance story. Writes to a NEW
-    * path (generation swap by pointer) rather than in place, because
-    * overwriting an input mid-read is illegal and at 100 TB the old
-    * generation must stay queryable until the new one is complete. */
+    * segment-merge half of the maintenance story (a NEW path, the
+    * [[Maintenance.mergePolicy]] generation swap). */
   def compactGraphIndex(s: SparkSession, indexPath: String, outPath: String): Unit = {
     import s.implicits._
     val all = s.read.parquet(indexPath)
@@ -494,16 +485,6 @@ object GraphAnn extends QueryModule {
       .write.mode("overwrite").partitionBy("shard").parquet(outPath)
   }
 
-  /** Segment shards currently in the index — ONE file-status listing
-    * of the `shard=N/` partition dirs (metadata-cheap on any Hadoop
-    * filesystem; no data is read), so the merge-policy check costs
-    * nothing even at 100 TB. */
-  private[graft] def segmentCount(s: SparkSession, indexPath: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.listStatus(p).count(st => st.isDirectory && st.getPath.getName.startsWith("shard="))
-  }
-
   /** Default compaction threshold. Search cost is linear in segment
     * count (every shard's graph answers every query — the Lucene
     * many-small-segments tax), so the policy bounds it: steady small
@@ -511,26 +492,14 @@ object GraphAnn extends QueryModule {
     * re-shards everything back to [[shardsFor]]'s derived count. */
   val DefaultMaxSegments = 64
 
-  /** The merge-policy half of the maintenance story — [[appendGraphIndex]]
-    * grows segments without bound; THIS decides when to merge (the
-    * Lucene `MergePolicy` analog, one knob): count the current
-    * segment shards (cheap listing) and, past `maxSegments`, run
-    * [[compactGraphIndex]] into `outPath` as a fresh generation.
-    * Returns true when a compaction ran — the caller (the periodic
-    * maintenance job) then swaps its live pointer to `outPath` and
-    * retires the old generation once in-flight queries drain. The
-    * swap is BY POINTER, never in place: overwriting an input
-    * mid-read is illegal, and at 100 TB the old generation must stay
-    * queryable until the new one is complete. */
+  /** The graph index's [[Maintenance.mergePolicy]]: past `maxSegments`
+    * `shard=N/` segment dirs, [[compactGraphIndex]] into `outPath`.
+    * Returns true when a compaction ran. */
   def maintainGraphIndex(
       s: SparkSession, indexPath: String, outPath: String,
-      maxSegments: Int = DefaultMaxSegments): Boolean = {
-    val nSeg = segmentCount(s, indexPath)
-    if (nSeg > maxSegments) {
-      compactGraphIndex(s, indexPath, outPath)
-      true
-    } else false
-  }
+      maxSegments: Int = DefaultMaxSegments): Boolean =
+    Maintenance.mergePolicy(s, "graph", indexPath, Some("shard"))(
+      (_, segments) => segments > maxSegments)(compactGraphIndex(s, indexPath, outPath))
 
   /** Query a materialized graph index: NO construction — each task
     * reassembles its shards' adjacency from the persisted rows and
@@ -568,12 +537,7 @@ object GraphAnn extends QueryModule {
         }
       }
       .toDF("vec_id", "label", "embedding")
-    candidates
-      .withColumn("dist", r6(cosineDist(col("embedding"), typedLit(qVec))))
-      .filter(!isnan(col("dist")) && col("dist").isNotNull)
-      .select(col("vec_id"), col("label"), col("dist"))
-      .orderBy(col("dist"), col("vec_id"))
-      .limit(k)
+    OpsShared.rescoreTopK(candidates, qVec, k)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

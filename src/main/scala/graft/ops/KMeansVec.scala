@@ -217,11 +217,8 @@ object KMeansVec extends QueryModule {
           lit(0d).as("dist"))
         .filter(lit(false))
     val q = qOpt.get
-    val probes = centroids.zipWithIndex
-      .map { case (c, i) => (OpsShared.cosineDistTo(q, c), i) }
-      .sortBy(_._1).take(nProbe).map(_._2)
     assigned
-      .filter(col("cluster").isin(probes.toIndexedSeq: _*))
+      .filter(col("cluster").isin(OpsShared.probeCells(centroids, q, nProbe): _*))
       .filter(col("vec_id") =!= VectorQueries.QueryVecId)
       .filter(pred)
       .withColumn("dist", r6(cosineDist(col("embedding"), typedLit(q))))
@@ -289,14 +286,21 @@ object KMeansVec extends QueryModule {
         col("cluster").cast("int").as("cluster"))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .partitionBy("cluster").parquet(s"$outDir/vectors")
+    writeCentroids(s, centroids, outDir)
+    centroids
+  }
+
+  /** The centroid sidecar of an IVF / IVF-PQ index: one JSON file of
+    * (cluster, centroid) rows under `<indexDir>/centroids`. */
+  private[ops] def writeCentroids(
+      s: SparkSession, centroids: Array[Array[Double]], indexDir: String): Unit = {
     import s.implicits._
     centroids.zipWithIndex
       .map { case (c, i) => (i, c.toSeq) }.toSeq
       .toDF("cluster", "centroid")
       .coalesce(1)
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .json(s"$outDir/centroids")
-    centroids
+      .json(s"$indexDir/centroids")
   }
 
   /** Persisted centroids back from the sidecar, cluster-ordered. */
@@ -314,16 +318,10 @@ object KMeansVec extends QueryModule {
     * k·dim sidecar, never the existing vectors, and partition pruning
     * keeps working because appends land in the same cell layout.
     * Centroid drift under a shifting distribution is the periodic
-    * retrain+rewrite ([[writeIvfIndex]] to a fresh generation), same
-    * as [[GraphAnn.compactGraphIndex]].
+    * retrain+rewrite ([[writeIvfIndex]] to a fresh generation).
     *
-    * `dedupeExisting = false` (default): caller contract is that
-    * batch vec_ids are new — an at-least-once replay duplicates rows.
-    * `dedupeExisting = true`: anti-join against the existing rows of
-    * the batch's OWN cells first (a replayed row's prior copy lives
-    * in the same cell under the frozen centroids, so `cluster IN`
-    * partition pruning bounds the scan) — appends become idempotent
-    * at the row level. */
+    * `dedupeExisting`: the [[Maintenance.appendIndexRows]] replay
+    * guard, its existing-row scan pruned to the batch's own cells. */
   def appendIvfIndex(
       s: SparkSession, indexDir: String, batch: DataFrame,
       dedupeExisting: Boolean = false): Unit = {
@@ -334,17 +332,7 @@ object KMeansVec extends QueryModule {
         col("embedding").cast("array<float>").as("embedding"),
         col("label").cast("int").as("label"))
       .withColumn("cluster", assignUdf(centroids)(col("embedding")).cast("int"))
-    val out =
-      if (dedupeExisting) {
-        val cells = rows.select(col("cluster")).distinct()
-          .collect().map(_.getInt(0)).toSeq // bounded by K
-        rows.join(
-          s.read.parquet(s"$indexDir/vectors")
-            .filter(col("cluster").isin(cells: _*)).select(col("vec_id")),
-          Seq("vec_id"), "left_anti")
-      } else rows
-    out.write.mode(org.apache.spark.sql.SaveMode.Append)
-      .partitionBy("cluster").parquet(s"$indexDir/vectors")
+    Maintenance.appendIndexRows(s, s"$indexDir/vectors", rows, dedupeExisting, cells = true)
   }
 
   /** Files per cell before [[maintainIvfIndex]] compacts: every
@@ -359,41 +347,20 @@ object KMeansVec extends QueryModule {
     * BYTE-VERBATIM (the quantizer stays frozen — compaction is file
     * maintenance, never a retrain; drift is [[writeIvfIndex]] to a
     * new generation). A NEW directory, never in place — the
-    * [[GraphAnn.compactGraphIndex]] generation-swap rule. */
+    * generation-swap rule. */
   def compactIvfIndex(s: SparkSession, indexDir: String, outDir: String): Unit = {
-    s.read.parquet(s"$indexDir/vectors")
-      .repartition(col("cluster"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("cluster").parquet(s"$outDir/vectors")
+    Maintenance.compactCells(s, s"$indexDir/vectors", s"$outDir/vectors")
     Maintenance.copySidecar(s, s"$indexDir/centroids", s"$outDir/centroids")
   }
 
-  /** The IVF merge policy — [[appendIvfIndex]] grows per-cell file
-    * segments without bound; THIS decides when to fold them (the
-    * [[GraphAnn.maintainGraphIndex]] / [[Dedup.maintainBandIndex]]
-    * analog): one metadata-cheap per-cell listing, and past
-    * `maxFilesPerCell` average files per cell the index rewrites into
-    * `outDir` via [[compactIvfIndex]]. Returns true when a compaction
-    * ran — the caller swaps its pointer and retires the old
-    * generation. */
+  /** The IVF index's [[Maintenance.mergePolicy]]: past
+    * `maxFilesPerCell` average files per cell, [[compactIvfIndex]]
+    * into `outDir`. Returns true when a compaction ran. */
   def maintainIvfIndex(
       s: SparkSession, indexDir: String, outDir: String,
-      maxFilesPerCell: Int = DefaultMaxFilesPerCell): Boolean = {
-    val (files, cells) =
-      Maintenance.partitionedFileStats(s, s"$indexDir/vectors", "cluster")
-    if (cells == 0) {
-      // a zero-row partitioned write commits _SUCCESS but no cluster=
-      // dirs — a VALID empty index → no-op; otherwise fail loudly
-      require(Maintenance.isCommittedEmptyDir(s, s"$indexDir/vectors"),
-        s"IVF index $indexDir/vectors lists no cluster= cells and no " +
-          "_SUCCESS marker — layout changed? refusing to silently skip compaction")
-      return false
-    }
-    if (files > maxFilesPerCell.toLong * cells) {
-      compactIvfIndex(s, indexDir, outDir)
-      true
-    } else false
-  }
+      maxFilesPerCell: Int = DefaultMaxFilesPerCell): Boolean =
+    Maintenance.mergePolicy(s, "IVF", s"$indexDir/vectors", Some("cluster"))(
+      (files, cells) => files > maxFilesPerCell.toLong * cells)(compactIvfIndex(s, indexDir, outDir))
 
   /** Probe search over a materialized IVF index: rank the persisted
     * centroids against the query on the driver (k rows), then scan
@@ -407,12 +374,8 @@ object KMeansVec extends QueryModule {
       k: Int = 5,
       nProbe: Int = 3): DataFrame = {
     import graft.functions.VectorFunctions.{cosineDist, r6}
-    val centroids = readCentroids(s, indexDir)
-    val probes = centroids.zipWithIndex
-      .map { case (c, i) => (OpsShared.cosineDistTo(q, c), i) }
-      .sortBy(_._1).take(nProbe).map(_._2)
     s.read.parquet(s"$indexDir/vectors")
-      .filter(col("cluster").isin(probes.toIndexedSeq: _*))
+      .filter(col("cluster").isin(OpsShared.probeCells(readCentroids(s, indexDir), q, nProbe): _*))
       .withColumn("dist", r6(cosineDist(col("embedding"), typedLit(q))))
       .filter(!isnan(col("dist")) && col("dist").isNotNull)
       .select(col("vec_id"), col("label"), col("cluster").cast("long").as("cluster"),

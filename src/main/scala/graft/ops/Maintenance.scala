@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Table-maintenance operators a long-lived 100 TB dataset needs
@@ -26,70 +26,115 @@ object Maintenance extends QueryModule {
     fs.getContentSummary(path).getLength
   }
 
+  /** A path as the filesystem names it (scheme and authority filled
+    * in), so two spellings of one directory compare equal. */
+  private def qualified(spark: SparkSession, d: String): org.apache.hadoop.fs.Path = {
+    val p = new org.apache.hadoop.fs.Path(d)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p)
+  }
+
   /** SaveMode.Overwrite deletes the output dir before the lazy read
     * of the input ever runs — compacting in place would destroy the
     * data. Refuse identical (fully-qualified) in/out paths. */
   private def requireDistinctDirs(
-      spark: SparkSession, inDir: String, outDir: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    def qualified(d: String) = {
-      val p = new org.apache.hadoop.fs.Path(d)
-      p.getFileSystem(conf).makeQualified(p)
-    }
-    require(qualified(inDir) != qualified(outDir),
+      spark: SparkSession, inDir: String, outDir: String): Unit =
+    require(qualified(spark, inDir) != qualified(spark, outDir),
       s"compaction output dir must differ from input dir: $inDir")
-  }
 
-  /** Recursive parquet data-file count of a directory tree —
-    * metadata-only listing, the merge-policy primitive shared by the
-    * index maintenance policies ([[graft.ops.GraphAnn.maintainGraphIndex]]
-    * pattern). Fails loudly on a missing dir rather than returning 0
-    * (a 0 would silently disable compaction forever). */
-  def parquetFileCount(spark: SparkSession, dir: String): Long = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var n = 0L
-    val it = fs.listFiles(path, /* recursive = */ true)
-    while (it.hasNext) {
-      if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-    }
-    n
-  }
-
-  /** True when `dir` exists and carries a committed Spark write's
-    * `_SUCCESS` marker — the layout is real, so ZERO data files means
-    * a legitimately EMPTY dataset (zero-row write: bucketed and
-    * partitioned writers emit no data files for no rows, only the
-    * marker). The merge policies use this to distinguish "valid index
-    * with nothing in it" (maintenance is a no-op, return false) from
-    * "directory missing / layout changed" (require-fail loudly — a
-    * silent 0 would disable compaction forever). */
-  def isCommittedEmptyDir(spark: SparkSession, dir: String): Boolean = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(path) &&
-      fs.exists(new org.apache.hadoop.fs.Path(path, "_SUCCESS"))
-  }
-
-  /** (data files, partition dirs) of a Hive-partitioned dataset whose
-    * partition dirs start with `prefix=` — one listing per cell dir,
-    * no data read. The per-cell merge-policy primitive for the
-    * cell-partitioned indexes (IVF, IVF-PQ). */
-  def partitionedFileStats(
-      spark: SparkSession, dir: String, prefix: String): (Long, Long) = {
+  /** (parquet data files, partition dirs named `<unit>=…` that hold
+    * them) under `dir` — ONE recursive, metadata-only listing, no data
+    * read; with no `unit` the second count is 0. Fails loudly on a
+    * missing dir rather than returning 0 (a 0 would silently disable
+    * compaction forever). */
+  def fileStats(spark: SparkSession, dir: String, unit: Option[String] = None): (Long, Long) = {
     val path = new org.apache.hadoop.fs.Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     var files = 0L
-    var cells = 0L
-    fs.listStatus(path).foreach { st =>
-      if (st.isDirectory && st.getPath.getName.startsWith(s"$prefix=")) {
-        cells += 1
-        files += fs.listStatus(st.getPath)
-          .count(f => f.getPath.getName.endsWith(".parquet"))
+    val units = scala.collection.mutable.Set.empty[String]
+    val it = fs.listFiles(path, /* recursive = */ true)
+    while (it.hasNext) {
+      val f = it.next().getPath
+      if (f.getName.endsWith(".parquet")) {
+        files += 1
+        if (unit.exists(u => f.getParent.getName.startsWith(s"$u="))) units += f.getParent.toString
       }
     }
-    (files, cells)
+    (files, units.size.toLong)
   }
+
+  /** The one merge policy of every persisted index family: the append
+    * paths grow files without bound, THIS decides when to fold them
+    * (the Lucene `MergePolicy` analog). One [[fileStats]] listing of
+    * `dir`; each family brings its own measure `over(files, units)`:
+    * flat layouts (PQ, SQ) `files > maxFiles`, cell layouts (IVF,
+    * IVF-PQ) `files > maxFilesPerCell × cells`, bucketed tables
+    * (substring, band) `files > maxFilesPerBucket × buckets`, the
+    * graph `shard dirs > maxSegments`. Past it, `compact` writes a
+    * fresh generation and the policy returns true — the caller swaps
+    * its live pointer and retires the old generation once in-flight
+    * queries drain ([[vacuumGenerations]]). The swap is BY POINTER,
+    * never in place: overwriting an input mid-read is illegal, and at
+    * 100 TB the old generation must stay queryable until the new one
+    * is complete.
+    *
+    * An index with no units (no `unit=` dirs, or no files for a flat
+    * layout) is a no-op only when `dir` carries a committed write's
+    * `_SUCCESS` marker: a zero-row write emits the marker and no data
+    * files (partitioned and bucketed writers emit no files at all), so
+    * that is a legitimately EMPTY index. Without the marker the layout
+    * is missing or changed, and the policy fails loudly. */
+  private[ops] def mergePolicy(
+      spark: SparkSession, family: String, dir: String, unit: Option[String] = None)(
+      over: (Long, Long) => Boolean)(compact: => Unit): Boolean = {
+    val (files, units) = fileStats(spark, dir, unit)
+    if ((if (unit.isDefined) units else files) == 0) {
+      val path = new org.apache.hadoop.fs.Path(dir)
+      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      require(fs.exists(new org.apache.hadoop.fs.Path(path, "_SUCCESS")),
+        s"$family index $dir lists no ${unit.fold("parquet data files")(u => s"$u= dirs")} " +
+          "and no _SUCCESS marker — layout changed? refusing to silently skip compaction")
+      false
+    } else if (over(files, units)) { compact; true }
+    else false
+  }
+
+  /** The append write of the IVF, PQ, IVF-PQ and SQ indexes: `rows` land
+    * as new files under `dir` (inside their `cluster=N/` dirs when
+    * `cells`), existing files are never read or rewritten.
+    *
+    * `dedupeExisting = false`: caller contract is that batch vec_ids
+    * are new — an at-least-once replay duplicates rows.
+    * `dedupeExisting = true`: anti-join the batch against the existing
+    * index's vec_id column first, making the append idempotent at the
+    * row level (a replayed or partially-applied batch converges
+    * instead of duplicating). A flat layout pays one slim vec_id scan;
+    * a cell layout prunes it to the batch's own cells (a replayed
+    * row's prior copy lives in the same cell under frozen centroids,
+    * and `cluster IN` resolves at listing time). */
+  private[ops] def appendIndexRows(
+      spark: SparkSession, dir: String, rows: DataFrame,
+      dedupeExisting: Boolean, cells: Boolean = false): Unit = {
+    val out =
+      if (!dedupeExisting) rows
+      else {
+        val existing = spark.read.parquet(dir)
+        val scoped =
+          if (!cells) existing
+          else existing.filter(col("cluster").isin(
+            rows.select(col("cluster")).distinct().collect().map(_.getInt(0)).toSeq: _*)) // ≤ K cells
+        rows.join(scoped.select(col("vec_id")), Seq("vec_id"), "left_anti")
+      }
+    val w = out.write.mode(SaveMode.Append)
+    (if (cells) w.partitionBy("cluster") else w).parquet(dir)
+  }
+
+  /** Fold a cell-partitioned layout (IVF vectors, IVF-PQ codes) into
+    * `outDir` with one file per `cluster=N/` cell. */
+  private[ops] def compactCells(spark: SparkSession, inDir: String, outDir: String): Unit =
+    spark.read.parquet(inDir)
+      .repartition(col("cluster"))
+      .write.mode(SaveMode.Overwrite)
+      .partitionBy("cluster").parquet(outDir)
 
   /** Byte-verbatim recursive copy of a sidecar directory (frozen
     * quantizer state rides generations UNCHANGED — a parse/serialize
@@ -113,157 +158,115 @@ object Maintenance extends QueryModule {
   // generations: a continuous-ingest deployment leaks one full index
   // copy per compaction without a retention primitive.
 
-  /** Delete superseded index-generation DIRECTORIES, keeping the
-    * newest `keep` (≥ 1). `generations` is the caller's pointer
-    * history ordered oldest → newest; its LAST entry must be the
-    * live pointer `live` (both checks fail loudly — deleting the
-    * generation queries are reading is the one unrecoverable
-    * mistake, so it is structurally unreachable here: live is always
-    * inside the kept suffix). Missing directories fail loudly too
-    * (a wrong history silently "succeeding" would hide a pointer
-    * bug). Returns the deleted directories. Works for every
-    * directory-backed index family (graph, IVF, PQ, IVF-PQ, SQ/SQ4 —
-    * all generations are plain dir trees); the band index lives in
-    * the catalog, see [[vacuumGenerationTables]]. */
+  /** How one storage form names and removes a generation: `id` is
+    * what two history entries share when they are the same generation,
+    * `exists` and `delete` are what the vacuum checks and runs. */
+  private final case class Generations(
+      id: String => Any, exists: String => Boolean, delete: String => Unit)
+
+  /** Directory generations (graph, IVF, PQ, IVF-PQ, SQ/SQ4 — all plain
+    * dir trees): identity is the QUALIFIED path, so two spellings of
+    * one directory ("file:/data/g0" vs "/data/g0") are one generation
+    * and never a second delete of an already-gone path. */
+  private def dirGenerations(spark: SparkSession) = Generations(
+    d => qualified(spark, d),
+    d => { val p = qualified(spark, d); p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p) },
+    d => {
+      val p = qualified(spark, d)
+      require(p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, /* recursive = */ true),
+        s"failed to delete generation $d")
+    })
+
+  /** Catalog-table generations (the band index family): identity
+    * follows the SESSION's identifier semantics — with the default
+    * case-insensitive analysis `Idx_G2` and `idx_g2` are one table
+    * (a case-variant duplicate neither survives as a second victim
+    * nor dodges the kept-suffix shield); under
+    * spark.sql.caseSensitive=true they are two distinct tables and
+    * folding would collapse a real victim into its case-twin. A drop
+    * takes the `_counts` sidecar table with it when present. */
+  private def tableGenerations(spark: SparkSession) = Generations(
+    t => if (spark.sessionState.conf.caseSensitiveAnalysis) t else t.toLowerCase,
+    spark.catalog.tableExists,
+    t => {
+      spark.sql(s"DROP TABLE $t")
+      if (spark.catalog.tableExists(t + "_counts")) spark.sql(s"DROP TABLE ${t}_counts")
+    })
+
+  /** The victim selection, shared VERBATIM by the vacuum (which then
+    * validates and deletes) and both inventories' `would_vacuum`
+    * column (which only reports) — one derivation, so the plan a
+    * review reads is definitionally what the vacuum would do. That
+    * includes the vacuum's ENTRY guard: a history whose last entry is
+    * not the live pointer makes the vacuum abort before deleting
+    * anything, so its victim set is EMPTY. The whole kept suffix is
+    * excluded, not just the live pointer (a duplicate history entry
+    * of a kept generation must not delete it), and victims dedup by
+    * identity. */
+  private def victims(
+      g: Generations, generations: Seq[String], live: String, keep: Int): Vector[String] =
+    if (generations.isEmpty || g.id(generations.last) != g.id(live)) Vector.empty
+    else {
+      val kept = generations.takeRight(keep).map(g.id).toSet
+      generations.dropRight(keep).filterNot(d => kept(g.id(d))).distinctBy(g.id).toVector
+    }
+
+  /** Delete superseded generations, keeping the newest `keep` (≥ 1).
+    * `generations` is the caller's pointer history ordered oldest →
+    * newest; its LAST entry must be the live pointer `live` (both
+    * checks fail loudly — deleting the generation queries are reading
+    * is the one unrecoverable mistake, so it is structurally
+    * unreachable here: live is always inside the kept suffix).
+    * EVERY victim is validated to exist before ANY is deleted: a
+    * missing victim found mid-loop would leave earlier victims
+    * already deleted, and every re-run with the same history would
+    * then fail permanently on them (a wrong history silently
+    * "succeeding" would hide a pointer bug). Returns the deleted
+    * entries. */
+  private def vacuum(
+      g: Generations, generations: Seq[String], live: String, keep: Int): Seq[String] = {
+    require(keep >= 1, s"keep must be >= 1, got $keep")
+    require(generations.nonEmpty, "generation history is empty")
+    require(g.id(generations.last) == g.id(live),
+      s"live pointer $live must be the NEWEST generation " +
+        s"(history ends at ${generations.last}) — refusing to vacuum")
+    val vs = victims(g, generations, live, keep)
+    require(!vs.exists(v => g.id(v) == g.id(live)), s"refusing to delete the live generation $live")
+    vs.foreach(v => require(g.exists(v),
+      s"generation $v not found — stale or wrong history, refusing to vacuum"))
+    vs.foreach(g.delete)
+    vs
+  }
+
+  /** [[vacuum]] for index-generation DIRECTORIES ([[dirGenerations]]). */
   def vacuumGenerations(
       spark: SparkSession,
       generations: Seq[String],
       live: String,
-      keep: Int = 1): Seq[String] = {
-    require(keep >= 1, s"keep must be >= 1, got $keep")
-    val conf = spark.sparkContext.hadoopConfiguration
-    def qual(d: String) = {
-      val p = new org.apache.hadoop.fs.Path(d)
-      p.getFileSystem(conf).makeQualified(p)
-    }
-    require(generations.nonEmpty, "generation history is empty")
-    require(qual(generations.last) == qual(live),
-      s"live pointer $live must be the NEWEST generation " +
-        s"(history ends at ${generations.last}) — refusing to vacuum")
-    val victims = dirGenerationVictims(spark, generations, live, keep)
-    require(!victims.map(qual).contains(qual(live)),
-      s"refusing to delete the live generation $live")
-    // validate EVERY victim exists before deleting ANY: a missing
-    // victim discovered mid-loop would leave earlier victims already
-    // deleted, and every re-run with the same history would then fail
-    // permanently on them
-    victims.foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      require(p.getFileSystem(conf).exists(p),
-        s"generation $d not found — stale or wrong history, refusing to vacuum")
-    }
-    victims.foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      val fs = p.getFileSystem(conf)
-      require(fs.delete(p, /* recursive = */ true), s"failed to delete generation $d")
-    }
-    victims
-  }
+      keep: Int = 1): Seq[String] =
+    vacuum(dirGenerations(spark), generations, live, keep)
 
-  /** The DIRECTORY-vacuum victim selection, shared VERBATIM by
-    * [[vacuumGenerations]] (which then validates and deletes) and
-    * [[dirGenerationInventory]]'s `would_vacuum` column (which only
-    * reports) — the table-form convention ([[generationVictims]])
-    * under the directory rule: identity is the QUALIFIED path, the
-    * whole kept suffix shields duplicate history entries, and a
-    * history whose last entry is not the live pointer yields an
-    * EMPTY victim set (the vacuum aborts at its entry guard, so it
-    * drops nothing). */
-  private def dirGenerationVictims(
-      spark: SparkSession,
-      generations: Seq[String],
-      live: String,
-      keep: Int): Vector[String] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    def qual(d: String) = {
-      val p = new org.apache.hadoop.fs.Path(d)
-      p.getFileSystem(conf).makeQualified(p)
-    }
-    if (generations.isEmpty || qual(generations.last) != qual(live))
-      return Vector.empty
-    // exclude the ENTIRE kept suffix (qualified), not just the live
-    // pointer: a history with a duplicate entry of a kept generation
-    // earlier in the list must not delete the directory the kept
-    // suffix still references
-    val keptQ = generations.takeRight(keep).map(qual).toSet
-    // dedup by QUALIFIED path, not raw string: two spellings of one
-    // directory ("file:/data/g0" vs "/data/g0") would both pass the
-    // existence pre-check and then wedge on the second delete —
-    // exactly the partial-delete failure the two-pass guard prevents
-    generations.dropRight(keep)
-      .filter(d => !keptQ.contains(qual(d)))
-      .foldLeft((Vector.empty[String], Set.empty[org.apache.hadoop.fs.Path])) {
-        case ((out, seen), d) =>
-          val q = qual(d)
-          if (seen.contains(q)) (out, seen) else (out :+ d, seen + q)
-      }._1
-  }
-
-  /** The table-vacuum victim selection, shared VERBATIM by
-    * [[vacuumGenerationTables]] (which then validates and drops) and
-    * [[indexGenerationInventory]]'s `would_vacuum` column (which
-    * only reports) — one derivation, so the plan a review reads is
-    * definitionally what the vacuum would do. That includes the
-    * vacuum's ENTRY guard: a history whose last entry is not the
-    * live pointer makes the vacuum abort before dropping anything,
-    * so the victim set of such a history is EMPTY (the report must
-    * never mark the live generation — or anything else — as a
-    * victim of a vacuum that would refuse to run). Folding follows
-    * the session's identifier case semantics (the vacuum rule). */
-  private def generationVictims(
-      spark: SparkSession,
-      generations: Seq[String],
-      live: String,
-      keep: Int): Vector[String] = {
-    if (generations.isEmpty || generations.last != live) return Vector.empty
-    val fold: String => String =
-      if (spark.sessionState.conf.caseSensitiveAnalysis) identity else _.toLowerCase
-    val kept = generations.takeRight(keep).map(fold).toSet
-    generations.dropRight(keep)
-      .filterNot(t => kept.contains(fold(t)))
-      .foldLeft((Vector.empty[String], Set.empty[String])) {
-        case ((out, seen), t) =>
-          val k = fold(t)
-          if (seen.contains(k)) (out, seen) else (out :+ t, seen + k)
-      }._1
-  }
-
-  /** [[vacuumGenerations]] for CATALOG-TABLE generations (the band
-    * index family): drops each superseded table AND its `_counts`
-    * sidecar table when present. Same live-pointer and existence
-    * guards. Returns the dropped table names. */
+  /** [[vacuum]] for CATALOG-TABLE generations ([[tableGenerations]]):
+    * drops each superseded table AND its `_counts` sidecar table. */
   def vacuumGenerationTables(
       spark: SparkSession,
       generations: Seq[String],
       live: String,
-      keep: Int = 1): Seq[String] = {
-    require(keep >= 1, s"keep must be >= 1, got $keep")
+      keep: Int = 1): Seq[String] =
+    vacuum(tableGenerations(spark), generations, live, keep)
+
+  /** The retention plan both generation inventories report, one row
+    * per history entry: (gen_idx, entry, is_live, would_vacuum), with
+    * `would_vacuum` = exactly [[victims]] under the caller's `keep`. */
+  private def retentionPlan(
+      g: Generations, generations: Seq[String], live: String, keep: Int)
+      : Seq[(Long, String, Boolean, Boolean)] = {
     require(generations.nonEmpty, "generation history is empty")
-    require(generations.last == live,
-      s"live pointer $live must be the NEWEST generation " +
-        s"(history ends at ${generations.last}) — refusing to vacuum")
-    // same two guards as the directory form: exclude the whole kept
-    // suffix (duplicate history entries), validate all victims exist
-    // BEFORE dropping any (no partial-drop wedge on re-run)
-    // Case folding follows the SESSION's identifier semantics: with
-    // the default case-insensitive analysis, `Idx_G2` and `idx_g2`
-    // are one table, so compare folded (a case-variant duplicate
-    // neither survives as a second victim nor dodges the kept-suffix
-    // shield); under spark.sql.caseSensitive=true they are two
-    // genuinely distinct tables and folding would silently collapse
-    // a real victim into its case-twin — compare verbatim instead
-    val victims = generationVictims(spark, generations, live, keep)
-    require(!victims.contains(live), s"refusing to drop the live generation $live")
-    victims.foreach { tbl =>
-      require(spark.catalog.tableExists(tbl),
-        s"generation table $tbl not found — stale or wrong history, refusing to vacuum")
+    require(keep >= 1, s"keep must be >= 1, got $keep")
+    val vs = victims(g, generations, live, keep).map(g.id).toSet
+    generations.zipWithIndex.map { case (e, i) =>
+      (i.toLong, e, g.id(e) == g.id(live), vs.contains(g.id(e)))
     }
-    victims.foreach { tbl =>
-      spark.sql(s"DROP TABLE $tbl")
-      if (spark.catalog.tableExists(tbl + "_counts"))
-        spark.sql(s"DROP TABLE ${tbl}_counts")
-    }
-    victims
   }
 
   /** Compact a parquet dataset into ~targetBytes files: reads the
@@ -500,28 +503,18 @@ object Maintenance extends QueryModule {
       val mx = "graft_inv_mx_" + sfx
       val bd = "graft_inv_band_" + sfx
       // the three builds are INDEPENDENT jobs on disjoint tables —
-      // submit them from driver threads so each build's scan/shuffle
-      // tail back-fills the others' idle executors (guide §2.6
-      // overlap-independent-jobs; actions are only sequential when
-      // the driver calls them sequentially). Failures propagate: any
-      // build error rethrows here and the memo entry is not written.
-      val builds = Seq[Runnable](
-        () => Dedup.writeSubstrIndex(s, dir, sub),
-        () => Dedup.writeMaximalIndex(s, dir, mx),
-        () => Dedup.writeBandIndex(s, dir, bd))
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(builds.size)
-      try {
-        import scala.jdk.CollectionConverters._
-        val futures = builds.map(pool.submit(_))
-        futures.foreach { f =>
-          try f.get()
-          catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-        }
-      } finally pool.shutdown()
+      // built concurrently so each build's scan/shuffle tail back-fills
+      // the others' idle executors; the first failure cancels the
+      // other builds and propagates, and the memo entry is not written
+      OpsShared.concurrently(
+        Dedup.writeSubstrIndex(s, dir, sub),
+        OpsShared.concurrently(
+          Dedup.writeMaximalIndex(s, dir, mx),
+          Dedup.writeBandIndex(s, dir, bd)))
       (sub, mx, bd)
     }
 
-  private def tableMeta(s: SparkSession, table: String) =
+  private[ops] def tableMeta(s: SparkSession, table: String) =
     s.sessionState.catalog.getTableMetadata(
       s.sessionState.sqlParser.parseTableIdentifier(table))
 
@@ -585,7 +578,7 @@ object Maintenance extends QueryModule {
     * holds. A retired generation reports `table_exists = false` with
     * NULL metrics rather than erroring — the history is the CALLER's
     * pointer log, and auditing it after a vacuum is the point.
-    * `would_vacuum` is the shared [[generationVictims]] derivation,
+    * `would_vacuum` is the shared [[victims]] derivation,
     * so it is definitionally what [[vacuumGenerationTables]] under
     * the same `keep` would drop — including the abort case: a
     * history whose last entry is not the live pointer plans ZERO
@@ -596,45 +589,33 @@ object Maintenance extends QueryModule {
   def indexGenerationInventory(
       spark: SparkSession, generations: Seq[String], live: String,
       keep: Int = 1): org.apache.spark.sql.DataFrame = {
-    require(generations.nonEmpty, "generation history is empty")
-    require(keep >= 1, s"keep must be >= 1, got $keep")
-    val fold: String => String =
-      if (spark.sessionState.conf.caseSensitiveAnalysis) identity else _.toLowerCase
-    // the REPORTED retention plan: exactly the vacuum's own victim
-    // derivation under the caller's keep policy (shared helper), so
-    // `would_vacuum` rows are what vacuumGenerationTables(…, keep)
-    // would drop — the audit a retention decision reads BEFORE
-    // anything is deleted
-    val victims = generationVictims(spark, generations, live, keep)
-      .map(fold).toSet
     import spark.implicits._
-    generations.zipWithIndex.map { case (tbl, i) =>
-      val wouldVacuum = victims.contains(fold(tbl))
-      if (!spark.catalog.tableExists(tbl))
-        (i.toLong, tbl, fold(tbl) == fold(live), wouldVacuum, false,
-          Option.empty[Int], Option.empty[Int],
-          Option.empty[Long], Option.empty[Long], Option.empty[Boolean])
-      else {
-        val meta = tableMeta(spark, tbl)
-        val loc = meta.location.toString
-        (i.toLong, tbl, fold(tbl) == fold(live), wouldVacuum, true,
-          Some(meta.properties.get("graft.index.format")
-            .map(_.toInt).getOrElse(-1)),
-          Some(meta.bucketSpec.map(_.numBuckets).getOrElse(-1)),
-          Some(parquetFileCount(spark, loc)),
-          Some(dirBytes(spark, loc)),
-          Some(spark.catalog.tableExists(tbl + "_counts")))
-      }
+    retentionPlan(tableGenerations(spark), generations, live, keep).map {
+      case (i, tbl, isLive, wouldVacuum) =>
+        if (!spark.catalog.tableExists(tbl))
+          (i, tbl, isLive, wouldVacuum, false,
+            Option.empty[Int], Option.empty[Int],
+            Option.empty[Long], Option.empty[Long], Option.empty[Boolean])
+        else {
+          val meta = tableMeta(spark, tbl)
+          val loc = meta.location.toString
+          (i, tbl, isLive, wouldVacuum, true,
+            Some(meta.properties.get("graft.index.format")
+              .map(_.toInt).getOrElse(-1)),
+            Some(meta.bucketSpec.map(_.numBuckets).getOrElse(-1)),
+            Some(fileStats(spark, loc)._1),
+            Some(dirBytes(spark, loc)),
+            Some(spark.catalog.tableExists(tbl + "_counts")))
+        }
     }.toDF("gen_idx", "table", "is_live", "would_vacuum", "table_exists",
       "format", "n_buckets", "n_files", "bytes", "has_sidecar")
   }
 
-  /** The directory-backed twin ([[vacuumGenerations]]'s families:
+  /** The directory-backed form ([[vacuumGenerations]]' families:
     * graph, IVF, PQ, IVF-PQ, SQ/SQ4): per generation directory —
     * liveness by QUALIFIED path (the vacuum rule), the retention
     * plan (`would_vacuum` = exactly [[vacuumGenerations]]' victim
-    * selection under the caller's `keep`, via the shared
-    * [[dirGenerationVictims]] derivation — empty when the vacuum's
+    * selection under the caller's `keep` — empty when the vacuum's
     * entry guard would abort), existence, the committed `_SUCCESS`
     * marker, file count and bytes. A `would_vacuum` row whose
     * directory is MISSING means the executed vacuum would refuse on
@@ -643,28 +624,19 @@ object Maintenance extends QueryModule {
   def dirGenerationInventory(
       spark: SparkSession, generations: Seq[String], live: String,
       keep: Int = 1): org.apache.spark.sql.DataFrame = {
-    require(generations.nonEmpty, "generation history is empty")
-    require(keep >= 1, s"keep must be >= 1, got $keep")
-    val conf = spark.sparkContext.hadoopConfiguration
-    def qual(d: String) = {
-      val p = new org.apache.hadoop.fs.Path(d)
-      p.getFileSystem(conf).makeQualified(p)
-    }
-    val liveQ = qual(live)
-    val victims = dirGenerationVictims(spark, generations, live, keep)
-      .map(qual).toSet
     import spark.implicits._
-    generations.zipWithIndex.map { case (dir, i) =>
-      val p = qual(dir)
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p))
-        (i.toLong, dir, p == liveQ, victims.contains(p), false,
-          Option.empty[Boolean], Option.empty[Long], Option.empty[Long])
-      else
-        (i.toLong, dir, p == liveQ, victims.contains(p), true,
-          Some(fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS"))),
-          Some(parquetFileCount(spark, dir)),
-          Some(dirBytes(spark, dir)))
+    retentionPlan(dirGenerations(spark), generations, live, keep).map {
+      case (i, dir, isLive, wouldVacuum) =>
+        val p = qualified(spark, dir)
+        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        if (!fs.exists(p))
+          (i, dir, isLive, wouldVacuum, false,
+            Option.empty[Boolean], Option.empty[Long], Option.empty[Long])
+        else
+          (i, dir, isLive, wouldVacuum, true,
+            Some(fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS"))),
+            Some(fileStats(spark, dir)._1),
+            Some(dirBytes(spark, dir)))
     }.toDF("gen_idx", "path", "is_live", "would_vacuum", "dir_exists",
       "committed", "n_files", "bytes")
   }

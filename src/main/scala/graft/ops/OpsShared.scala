@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.functions.VectorFunctions.{cosineDist, r6}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Small helpers shared across the vector-operator family — single
@@ -116,6 +117,36 @@ object OpsShared {
       (ja.get().asInstanceOf[A], jb.get().asInstanceOf[B])
     } finally pool.shutdown()
   }
+
+  /** The exact float top-k every ANN search ends with (the rescore of
+    * a two-phase search's shortlist): the r6 cosine distance of each
+    * candidate's `embedding` against the query, NaN/NULL (zero-norm)
+    * rows dropped, top `k` by (dist, vec_id) as (vec_id, label,
+    * dist). */
+  def rescoreTopK(candidates: DataFrame, q: Array[Float], k: Int): DataFrame =
+    candidates
+      .withColumn("dist", r6(cosineDist(col("embedding"), typedLit(q))))
+      .filter(!isnan(col("dist")) && col("dist").isNotNull)
+      .select(col("vec_id"), col("label"), col("dist"))
+      .orderBy(col("dist"), col("vec_id"))
+      .limit(k)
+
+  /** [[rescoreTopK]] for a persisted index's phase-1 `shortlist`
+    * (vec_id first): the ids are collected to the driver and the float
+    * table at `floatsDir` is read for those rows alone. */
+  def rescoreShortlist(
+      s: SparkSession, floatsDir: String, shortlist: DataFrame,
+      q: Array[Float], k: Int): DataFrame = {
+    val ids = shortlist.collect().map(_.getLong(0))
+    rescoreTopK(Tables.t(s, floatsDir, "embeddings").filter(col("vec_id").isInCollection(ids)), q, k)
+  }
+
+  /** The `nProbe` cells an IVF probe reads: centroid ids ranked by
+    * [[cosineDistTo]] against the query, ties by centroid id (the
+    * stable sort; the oracles' probes CTEs order the same way). */
+  def probeCells(centroids: Array[Array[Double]], q: Array[Float], nProbe: Int): Seq[Int] =
+    centroids.zipWithIndex.map { case (c, i) => (cosineDistTo(q, c), i) }
+      .sortBy(_._1).take(nProbe).map(_._2).toSeq
 
   /** Driver-side double cosine distance of a centroid against the
     * query — the probe-ranking metric (sequential fold; ties broken

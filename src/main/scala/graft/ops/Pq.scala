@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.functions.OracleMath
-import graft.functions.VectorFunctions.{cosineDist, r6}
+import graft.functions.VectorFunctions.r6
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -235,6 +235,15 @@ object Pq extends QueryModule {
   def pqError(s: SparkSession, dir: String): DataFrame =
     pqErrorNx(nxView(s, dir), Codebooks(s, dir))
 
+  /** The query's ADC table: qtab(sp)(code) = fused d2 of the query's
+    * NORMALIZED subvector against that centroid. */
+  private def adcTable(cb: Array[Array[Array[Double]]], q: Array[Float]): Array[Array[Double]] = {
+    val qd = normalize(q.map(_.toDouble))
+    val sd = qd.length / SubSpaces
+    Array.tabulate(SubSpaces)(sp => Array.tabulate(cb(sp).length)(k0 =>
+      subD2(qd, sp * sd, cb(sp)(k0).map(_.toFloat), cb(sp)(k0))))
+  }
+
   /** ADC top-k: build the query's [[SubSpaces]]×[[CodeK]] distance
     * table on the driver, scan the corpus codes summing 8 lookups
     * per vector (ascending subspace — the oracle's ordered list_sum),
@@ -247,12 +256,7 @@ object Pq extends QueryModule {
       return e.select(col("vec_id"), col("label"), lit(0d).as("dist")).filter(lit(false))
     val qVec = qOpt.get
     val cb = Codebooks(s, dir)
-    // query ADC table: qtab(sp)(code) = fused d2 of the query's
-    // NORMALIZED subvector against that centroid
-    val qd = normalize(qVec.map(_.toDouble))
-    val sd = qd.length / SubSpaces
-    val qtab = Array.tabulate(SubSpaces)(sp => Array.tabulate(cb(sp).length)(k0 =>
-      subD2(qd, sp * sd, cb(sp)(k0).map(_.toFloat), cb(sp)(k0))))
+    val qtab = adcTable(cb, qVec)
     val enc = encodeUdf(cb)
     val approxUdf = udf { (codes: Seq[Int]) =>
       var a = 0.0
@@ -267,12 +271,7 @@ object Pq extends QueryModule {
       .select(col("vec_id"), col("label"), col("embedding"), col("approx"))
       .orderBy(col("approx"), col("vec_id"))
       .limit(Shortlist)
-    shortlist
-      .withColumn("dist", r6(cosineDist(col("embedding"), typedLit(qVec))))
-      .filter(!isnan(col("dist")) && col("dist").isNotNull)
-      .select(col("vec_id"), col("label"), col("dist"))
-      .orderBy(col("dist"), col("vec_id"))
-      .limit(k)
+    OpsShared.rescoreTopK(shortlist, qVec, k)
   }
 
   // --------------------------------------------------------- oracles
@@ -427,7 +426,6 @@ object Pq extends QueryModule {
   def writePqIndex(
       s: SparkSession, dir: String, outDir: String,
       trainDir: Option[String] = None): Unit = {
-    import s.implicits._
     val cb = Codebooks(s, trainDir.getOrElse(dir))
     val enc = encodeUdf(cb)
     t(s, dir, "embeddings")
@@ -441,12 +439,7 @@ object Pq extends QueryModule {
         expr("transform(c, x -> CAST(x AS TINYINT))").as("codes"))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$outDir/codes")
-    cb.zipWithIndex.flatMap { case (book, sp) =>
-      book.zipWithIndex.map { case (c, code) => (sp, code, c.toSeq) }
-    }.toSeq.toDF("s", "code", "emb")
-      .coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$outDir/codebooks")
+    writeCodebooks(s, cb, outDir)
   }
 
   /** Append a batch of new vectors into an EXISTING materialized PQ
@@ -454,36 +447,22 @@ object Pq extends QueryModule {
     * retraining — the FAISS `add` contract) and append the TINYINT
     * code rows. Map-only: reads the tiny sidecar, never the existing
     * codes. Codebook drift under a shifting distribution is handled
-    * by periodic retrain+rewrite ([[writePqIndex]]), the same
-    * generation swap as [[GraphAnn.compactGraphIndex]].
+    * by periodic retrain+rewrite ([[writePqIndex]]) to a fresh
+    * generation.
     *
-    * `dedupeExisting = false` (default): caller contract is that
-    * batch vec_ids are new — an at-least-once replay duplicates rows.
-    * `dedupeExisting = true`: anti-join the batch against the
-    * existing index's vec_id column first, making the append
-    * idempotent at the row level (a replayed or partially-applied
-    * batch converges instead of duplicating). Cost: one slim
-    * vec_id-column scan of the codes table — the price of replay
-    * safety on a flat layout; the IVF variants prune that scan to the
-    * batch's own cells. */
+    * `dedupeExisting`: the [[Maintenance.appendIndexRows]] replay
+    * guard (one slim vec_id scan of the flat codes table). */
   def appendPqIndex(
       s: SparkSession, indexDir: String, batch: DataFrame,
       dedupeExisting: Boolean = false): Unit = {
-    val cb = readCodebooks(s, indexDir)
-    val enc = encodeUdf(cb)
+    val enc = encodeUdf(readCodebooks(s, indexDir))
     val rows = batch
       .filter(col("vec_id") =!= VectorQueries.QueryVecId)
       .filter(graft.functions.VectorFunctions.l2norm(col("embedding")) > 0)
       .withColumn("c", enc(col("embedding").cast("array<float>")).getField("_1"))
       .select(col("vec_id"), col("label").cast("int").as("label"),
         expr("transform(c, x -> CAST(x AS TINYINT))").as("codes"))
-    val out =
-      if (dedupeExisting)
-        rows.join(s.read.parquet(s"$indexDir/codes").select(col("vec_id")),
-          Seq("vec_id"), "left_anti")
-      else rows
-    out.write.mode(org.apache.spark.sql.SaveMode.Append)
-      .parquet(s"$indexDir/codes")
+    Maintenance.appendIndexRows(s, s"$indexDir/codes", rows, dedupeExisting)
   }
 
   /** Flat-table file count before [[maintainPqIndex]] compacts —
@@ -495,33 +474,31 @@ object Pq extends QueryModule {
     * fresh generation at `outDir`: the codes table rewrites through
     * [[Maintenance.compactParquet]] (size-derived file count); the
     * codebook sidecar is copied BYTE-VERBATIM (frozen quantizer —
-    * compaction is file maintenance, never a retrain). Generation
-    * swap by pointer, never in place. */
+    * compaction is file maintenance, never a retrain). */
   def compactPqIndex(s: SparkSession, indexDir: String, outDir: String): Unit = {
     Maintenance.compactParquet(s, s"$indexDir/codes", s"$outDir/codes")
     Maintenance.copySidecar(s, s"$indexDir/codebooks", s"$outDir/codebooks")
   }
 
-  /** The PQ merge policy ([[graft.ops.GraphAnn.maintainGraphIndex]]
-    * analog): one metadata-cheap file count of the flat codes table;
-    * past `maxFiles` the index rewrites into `outDir` via
-    * [[compactPqIndex]]. Returns true when a compaction ran. */
+  /** The PQ index's [[Maintenance.mergePolicy]]: past `maxFiles` files
+    * in the flat codes table, [[compactPqIndex]] into `outDir`.
+    * Returns true when a compaction ran. */
   def maintainPqIndex(
       s: SparkSession, indexDir: String, outDir: String,
-      maxFiles: Int = DefaultMaxIndexFiles): Boolean = {
-    val files = Maintenance.parquetFileCount(s, s"$indexDir/codes")
-    if (files == 0) {
-      // a zero-row committed write is a VALID empty index → no-op;
-      // anything else (missing dir, relocated layout) fails loudly
-      require(Maintenance.isCommittedEmptyDir(s, s"$indexDir/codes"),
-        s"PQ index $indexDir/codes lists no parquet data files and no " +
-          "_SUCCESS marker — layout changed? refusing to silently skip compaction")
-      return false
-    }
-    if (files > maxFiles) {
-      compactPqIndex(s, indexDir, outDir)
-      true
-    } else false
+      maxFiles: Int = DefaultMaxIndexFiles): Boolean =
+    Maintenance.mergePolicy(s, "PQ", s"$indexDir/codes")(
+      (files, _) => files > maxFiles)(compactPqIndex(s, indexDir, outDir))
+
+  /** The codebook sidecar of a PQ / IVF-PQ index: (s, code, emb) rows
+    * in one parquet file under `<indexDir>/codebooks`. */
+  private def writeCodebooks(s: SparkSession, cb: Array[Array[Array[Double]]], indexDir: String): Unit = {
+    import s.implicits._
+    cb.zipWithIndex.flatMap { case (book, sp) =>
+      book.zipWithIndex.map { case (c, code) => (sp, code, c.toSeq) }
+    }.toSeq.toDF("s", "code", "emb")
+      .coalesce(1)
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .parquet(s"$indexDir/codebooks")
   }
 
   /** Codebooks back from the sidecar (SubSpaces·CodeK tiny rows). */
@@ -573,30 +550,11 @@ object Pq extends QueryModule {
       q: Array[Float],
       k: Int = 5,
       excludeId: Option[Long] = None): DataFrame = {
-    val cb = readCodebooks(s, indexDir)
-    val qd = normalize(q.map(_.toDouble))
-    val sd = qd.length / SubSpaces
-    val qtab = Array.tabulate(SubSpaces)(sp => Array.tabulate(cb(sp).length)(k0 =>
-      subD2(qd, sp * sd, cb(sp)(k0).map(_.toFloat), cb(sp)(k0))))
-    val shortIds = pqPhase1(s, indexDir, qtab, excludeId)
-      .collect().map(_.getLong(0))
-    t(s, floatsDir, "embeddings")
-      .filter(col("vec_id").isInCollection(shortIds))
-      .withColumn("dist", r6(cosineDist(col("embedding"), typedLit(q))))
-      .filter(!isnan(col("dist")) && col("dist").isNotNull)
-      .select(col("vec_id"), col("label"), col("dist"))
-      .orderBy(col("dist"), col("vec_id"))
-      .limit(k)
+    val qtab = adcTable(readCodebooks(s, indexDir), q)
+    OpsShared.rescoreShortlist(s, floatsDir, pqPhase1(s, indexDir, qtab, excludeId), q, k)
   }
 
   // -------------------------------------------------- IVF-PQ compose
-
-  /** Probe cells ranked by the driver's double cosine against the
-    * query (ties by cluster id — the stable-sort [[KMeansVec]]
-    * convention, mirrored in the probes CTE). */
-  private def probeIds(centroids: Array[Array[Double]], q: Array[Float], nProbe: Int): Seq[Int] =
-    centroids.zipWithIndex.map { case (c, i) => (OpsShared.cosineDistTo(q, c), i) }
-      .sortBy(_._1).take(nProbe).map(_._2).toSeq
 
   /** IVF-PQ — the canonical billion-scale ANN layout (coarse
     * quantizer prunes WHICH cells are read, product codes decide HOW
@@ -614,12 +572,9 @@ object Pq extends QueryModule {
       return e.select(col("vec_id"), col("label"), lit(0d).as("dist")).filter(lit(false))
     val qVec = qOpt.get
     val (centroids, assigned) = KMeansVec.fit(s, dir, KMeansVec.K, iters = 1)
-    val probes = probeIds(centroids, qVec, nProbe)
+    val probes = OpsShared.probeCells(centroids, qVec, nProbe)
     val cb = Codebooks(s, dir)
-    val qd = normalize(qVec.map(_.toDouble))
-    val sd = qd.length / SubSpaces
-    val qtab = Array.tabulate(SubSpaces)(sp => Array.tabulate(cb(sp).length)(k0 =>
-      subD2(qd, sp * sd, cb(sp)(k0).map(_.toFloat), cb(sp)(k0))))
+    val qtab = adcTable(cb, qVec)
     val enc = encodeUdf(cb)
     val approxUdf = udf { (codes: Seq[Int]) =>
       var a = 0.0
@@ -636,12 +591,7 @@ object Pq extends QueryModule {
       .select(col("vec_id"), col("label"), col("embedding"), col("approx"))
       .orderBy(col("approx"), col("vec_id"))
       .limit(Shortlist)
-    shortlist
-      .withColumn("dist", r6(cosineDist(col("embedding"), typedLit(qVec))))
-      .filter(!isnan(col("dist")) && col("dist").isNotNull)
-      .select(col("vec_id"), col("label"), col("dist"))
-      .orderBy(col("dist"), col("vec_id"))
-      .limit(k)
+    OpsShared.rescoreTopK(shortlist, qVec, k)
   }
 
   /** Oracle mirror of [[annIvfPqTopk]]: the KMeansVec init+assign
@@ -710,7 +660,6 @@ object Pq extends QueryModule {
   def writeIvfPqIndex(
       s: SparkSession, dir: String, outDir: String,
       trainDir: Option[String] = None): Unit = {
-    import s.implicits._
     val td = trainDir.getOrElse(dir)
     val centroids = KMeansVec.fit(s, td, KMeansVec.K, iters = 1)._1
     val cb = Codebooks(s, td)
@@ -724,18 +673,8 @@ object Pq extends QueryModule {
         expr("transform(c, x -> CAST(x AS TINYINT))").as("codes"), col("cluster"))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .partitionBy("cluster").parquet(s"$outDir/codes")
-    centroids.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cluster", "centroid")
-      .coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .json(s"$outDir/centroids")
-    cb.zipWithIndex.flatMap { case (book, sp) =>
-      book.zipWithIndex.map { case (c, code) => (sp, code, c.toSeq) }
-    }.toSeq.toDF("s", "code", "emb")
-      .coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$outDir/codebooks")
+    KMeansVec.writeCentroids(s, centroids, outDir)
+    writeCodebooks(s, cb, outDir)
   }
 
   /** Append a batch into an EXISTING materialized IVF-PQ index: both
@@ -759,17 +698,7 @@ object Pq extends QueryModule {
       .withColumn("c", enc(col("embedding").cast("array<float>")).getField("_1"))
       .select(col("vec_id"), col("label").cast("int").as("label"),
         expr("transform(c, x -> CAST(x AS TINYINT))").as("codes"), col("cluster"))
-    val out =
-      if (dedupeExisting) {
-        val cells = rows.select(col("cluster")).distinct()
-          .collect().map(_.getInt(0)).toSeq // bounded by K
-        rows.join(
-          s.read.parquet(s"$indexDir/codes")
-            .filter(col("cluster").isin(cells: _*)).select(col("vec_id")),
-          Seq("vec_id"), "left_anti")
-      } else rows
-    out.write.mode(org.apache.spark.sql.SaveMode.Append)
-      .partitionBy("cluster").parquet(s"$indexDir/codes")
+    Maintenance.appendIndexRows(s, s"$indexDir/codes", rows, dedupeExisting, cells = true)
   }
 
   /** Fold an appended-to IVF-PQ index into a fresh generation: code
@@ -777,35 +706,19 @@ object Pq extends QueryModule {
     * .compactIvfIndex]] shape), BOTH frozen sidecars copy
     * byte-verbatim. */
   def compactIvfPqIndex(s: SparkSession, indexDir: String, outDir: String): Unit = {
-    s.read.parquet(s"$indexDir/codes")
-      .repartition(col("cluster"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("cluster").parquet(s"$outDir/codes")
+    Maintenance.compactCells(s, s"$indexDir/codes", s"$outDir/codes")
     Maintenance.copySidecar(s, s"$indexDir/centroids", s"$outDir/centroids")
     Maintenance.copySidecar(s, s"$indexDir/codebooks", s"$outDir/codebooks")
   }
 
-  /** The IVF-PQ merge policy: per-cell file average past
-    * `maxFilesPerCell` triggers [[compactIvfPqIndex]] (the
-    * [[KMeansVec.maintainIvfIndex]] twin on the codes layout). */
+  /** The IVF-PQ index's [[Maintenance.mergePolicy]]: past
+    * `maxFilesPerCell` average files per cell, [[compactIvfPqIndex]]
+    * into `outDir`. Returns true when a compaction ran. */
   def maintainIvfPqIndex(
       s: SparkSession, indexDir: String, outDir: String,
-      maxFilesPerCell: Int = KMeansVec.DefaultMaxFilesPerCell): Boolean = {
-    val (files, cells) =
-      Maintenance.partitionedFileStats(s, s"$indexDir/codes", "cluster")
-    if (cells == 0) {
-      // a zero-row partitioned write commits _SUCCESS but no cluster=
-      // dirs — a VALID empty index → no-op; otherwise fail loudly
-      require(Maintenance.isCommittedEmptyDir(s, s"$indexDir/codes"),
-        s"IVF-PQ index $indexDir/codes lists no cluster= cells and no " +
-          "_SUCCESS marker — layout changed? refusing to silently skip compaction")
-      return false
-    }
-    if (files > maxFilesPerCell.toLong * cells) {
-      compactIvfPqIndex(s, indexDir, outDir)
-      true
-    } else false
-  }
+      maxFilesPerCell: Int = KMeansVec.DefaultMaxFilesPerCell): Boolean =
+    Maintenance.mergePolicy(s, "IVF-PQ", s"$indexDir/codes", Some("cluster"))(
+      (files, cells) => files > maxFilesPerCell.toLong * cells)(compactIvfPqIndex(s, indexDir, outDir))
 
   /** Search a materialized IVF-PQ index: driver ranks the persisted
     * centroids (k rows), the ADC phase scans ONLY the probed cells'
@@ -821,21 +734,10 @@ object Pq extends QueryModule {
       nProbe: Int = 3,
       excludeId: Option[Long] = None): DataFrame = {
     val centroids = KMeansVec.readCentroids(s, indexDir)
-    val probes = probeIds(centroids, q, nProbe)
-    val cb = readCodebooks(s, indexDir)
-    val qd = normalize(q.map(_.toDouble))
-    val sd = qd.length / SubSpaces
-    val qtab = Array.tabulate(SubSpaces)(sp => Array.tabulate(cb(sp).length)(k0 =>
-      subD2(qd, sp * sd, cb(sp)(k0).map(_.toFloat), cb(sp)(k0))))
-    val shortIds = pqPhase1(s, indexDir, qtab, excludeId, probes = Some(probes))
-      .collect().map(_.getLong(0))
-    Tables.t(s, floatsDir, "embeddings")
-      .filter(col("vec_id").isInCollection(shortIds))
-      .withColumn("dist", r6(cosineDist(col("embedding"), typedLit(q))))
-      .filter(!isnan(col("dist")) && col("dist").isNotNull)
-      .select(col("vec_id"), col("label"), col("dist"))
-      .orderBy(col("dist"), col("vec_id"))
-      .limit(k)
+    val probes = OpsShared.probeCells(centroids, q, nProbe)
+    val qtab = adcTable(readCodebooks(s, indexDir), q)
+    OpsShared.rescoreShortlist(s, floatsDir,
+      pqPhase1(s, indexDir, qtab, excludeId, probes = Some(probes)), q, k)
   }
 
   /** Subquantizer counts the rate–distortion sweep evaluates

@@ -155,13 +155,7 @@ object Quantize extends QueryModule {
       .select(col("vec_id"), col("label"), col("embedding"), col("dist_q"))
       .orderBy(col("dist_q"), col("vec_id"))
       .limit(SqShortlist)
-    shortlist
-      .withColumn("dist",
-        r6(graft.functions.VectorFunctions.cosineDist(col("embedding"), typedLit(qVec))))
-      .filter(!isnan(col("dist")) && col("dist").isNotNull)
-      .select(col("vec_id"), col("label"), col("dist"))
-      .orderBy(col("dist"), col("vec_id"))
-      .limit(k)
+    OpsShared.rescoreTopK(shortlist, qVec, k)
   }
 
   /** Oracle mirror of [[sqTopK]]: same codes, same integer sums,
@@ -220,10 +214,8 @@ object Quantize extends QueryModule {
     * same map-only transform as the build: nothing is read, nothing
     * can drift, and a retrain-rewrite cycle is never needed (the one
     * maintenance property the trained structures can't offer).
-    * `dedupeExisting` = the [[graft.ops.Pq.appendPqIndex]] idempotency
-    * option: anti-join the batch against the existing vec_id column
-    * (one slim-column scan of the flat codes table) so an
-    * at-least-once replay converges instead of duplicating. */
+    * `dedupeExisting`: the [[Maintenance.appendIndexRows]] replay
+    * guard (one slim vec_id scan of the flat codes table). */
   def appendSqIndex(
       s: SparkSession, indexDir: String, batch: DataFrame,
       dedupeExisting: Boolean = false): Unit = {
@@ -235,13 +227,7 @@ object Quantize extends QueryModule {
       .select(col("vec_id"), col("label"),
         expr("transform(qcodes, c -> CAST(c AS TINYINT))").as("codes8"),
         col("scale"))
-    val out =
-      if (dedupeExisting)
-        rows.join(s.read.parquet(s"$indexDir/codes").select(col("vec_id")),
-          Seq("vec_id"), "left_anti")
-      else rows
-    out.write.mode(org.apache.spark.sql.SaveMode.Append)
-      .parquet(s"$indexDir/codes")
+    Maintenance.appendIndexRows(s, s"$indexDir/codes", rows, dedupeExisting)
   }
 
   /** Fold an appended-to int8 index's accumulated files into a fresh
@@ -253,26 +239,14 @@ object Quantize extends QueryModule {
     ()
   }
 
-  /** The SQ merge policy ([[graft.ops.Pq.maintainPqIndex]] twin on
-    * the flat int8 codes table). Returns true when a compaction
-    * ran. */
+  /** The SQ index's [[Maintenance.mergePolicy]]: past `maxFiles` files
+    * in the flat int8 codes table, [[compactSqIndex]] into `outDir`.
+    * Returns true when a compaction ran. */
   def maintainSqIndex(
       s: SparkSession, indexDir: String, outDir: String,
-      maxFiles: Int = Pq.DefaultMaxIndexFiles): Boolean = {
-    val files = Maintenance.parquetFileCount(s, s"$indexDir/codes")
-    if (files == 0) {
-      // a zero-row committed write is a VALID empty index → no-op;
-      // anything else (missing dir, relocated layout) fails loudly
-      require(Maintenance.isCommittedEmptyDir(s, s"$indexDir/codes"),
-        s"SQ index $indexDir/codes lists no parquet data files and no " +
-          "_SUCCESS marker — layout changed? refusing to silently skip compaction")
-      return false
-    }
-    if (files > maxFiles) {
-      compactSqIndex(s, indexDir, outDir)
-      true
-    } else false
-  }
+      maxFiles: Int = Pq.DefaultMaxIndexFiles): Boolean =
+    Maintenance.mergePolicy(s, "SQ", s"$indexDir/codes")(
+      (files, _) => files > maxFiles)(compactSqIndex(s, indexDir, outDir))
 
   /** Probe search over a materialized int8 index: phase 1 scans ONLY
     * the codes table (column pruning keeps the float embeddings out
@@ -307,16 +281,7 @@ object Quantize extends QueryModule {
       k: Int = 5,
       excludeId: Option[Long] = None): DataFrame = {
     val (qq, nb) = quantOne(q)
-    val shortIds = sqPhase1(s, indexDir, codesDistUdf(qq, nb), excludeId)
-      .collect().map(_.getLong(0))
-    t(s, floatsDir, "embeddings")
-      .filter(col("vec_id").isInCollection(shortIds))
-      .withColumn("dist",
-        r6(graft.functions.VectorFunctions.cosineDist(col("embedding"), typedLit(q))))
-      .filter(!isnan(col("dist")) && col("dist").isNotNull)
-      .select(col("vec_id"), col("label"), col("dist"))
-      .orderBy(col("dist"), col("vec_id"))
-      .limit(k)
+    OpsShared.rescoreShortlist(s, floatsDir, sqPhase1(s, indexDir, codesDistUdf(qq, nb), excludeId), q, k)
   }
 
   /** The indexed search's phase-1 shortlist plan, exposed so
@@ -445,13 +410,7 @@ object Quantize extends QueryModule {
       .select(col("vec_id"), col("label"), col("embedding"), col("dist_q"))
       .orderBy(col("dist_q"), col("vec_id"))
       .limit(Sq4Shortlist)
-    shortlist
-      .withColumn("dist",
-        r6(graft.functions.VectorFunctions.cosineDist(col("embedding"), typedLit(qVec))))
-      .filter(!isnan(col("dist")) && col("dist").isNotNull)
-      .select(col("vec_id"), col("label"), col("dist"))
-      .orderBy(col("dist"), col("vec_id"))
-      .limit(k)
+    OpsShared.rescoreTopK(shortlist, qVec, k)
   }
 
   /** Oracle mirror of [[sq4TopK]]: the [[sqTopKSql]] chain with the
@@ -547,21 +506,13 @@ object Quantize extends QueryModule {
     val base = excludeId.foldLeft(s.read.parquet(s"$indexDir/codes")) {
       (df, id) => df.filter(col("vec_id") =!= id)
     }
-    val shortIds = base
+    val shortlist = base
       .withColumn("dist_q", distUdf(col("packed"), col("dim")))
       .filter(col("dist_q").isNotNull)
       .select(col("vec_id"), col("dist_q"))
       .orderBy(col("dist_q"), col("vec_id"))
       .limit(Sq4Shortlist)
-      .collect().map(_.getLong(0))
-    t(s, floatsDir, "embeddings")
-      .filter(col("vec_id").isInCollection(shortIds))
-      .withColumn("dist",
-        r6(graft.functions.VectorFunctions.cosineDist(col("embedding"), typedLit(q))))
-      .filter(!isnan(col("dist")) && col("dist").isNotNull)
-      .select(col("vec_id"), col("label"), col("dist"))
-      .orderBy(col("dist"), col("vec_id"))
-      .limit(k)
+    OpsShared.rescoreShortlist(s, floatsDir, shortlist, q, k)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

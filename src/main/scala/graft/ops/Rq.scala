@@ -252,17 +252,13 @@ object Rq extends QueryModule {
       val c2 = nearest(rx, cb2, cb2F)._1
       lut(c1)(c2)
     }
-    import graft.functions.VectorFunctions.{cosineDist, l2norm}
-    e.filter(col("vec_id") =!= VectorQueries.QueryVecId)
-      .filter(l2norm(col("embedding")) > 0)
-      .withColumn("approx", approxU(col("embedding")))
-      .orderBy(col("approx"), col("vec_id"))
-      .limit(Shortlist)
-      .withColumn("dist", r6(cosineDist(col("embedding"), typedLit(qVec))))
-      .filter(!isnan(col("dist")) && col("dist").isNotNull)
-      .select(col("vec_id"), col("label"), col("dist"))
-      .orderBy(col("dist"), col("vec_id"))
-      .limit(k)
+    OpsShared.rescoreTopK(
+      e.filter(col("vec_id") =!= VectorQueries.QueryVecId)
+        .filter(graft.functions.VectorFunctions.l2norm(col("embedding")) > 0)
+        .withColumn("approx", approxU(col("embedding")))
+        .orderBy(col("approx"), col("vec_id"))
+        .limit(Shortlist),
+      qVec, k)
   }
 
   val annRqTopkSql: String =

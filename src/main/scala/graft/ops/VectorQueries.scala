@@ -518,12 +518,7 @@ object VectorQueries extends QueryModule {
     // other query vector has (and what the native cosine expression
     // expects); the oracle mirrors the same IEEE narrowing
     val qp = Array.tabulate(q0.length)(i => (q0(i) + 0.75 * means(i)).toFloat)
-    e.filter(col("vec_id") =!= QueryVecId)
-      .withColumn("dist", r6(cosineDist(col("embedding"), typedLit(qp))))
-      .filter(!isnan(col("dist")) && col("dist").isNotNull)
-      .select(col("vec_id"), col("label"), col("dist"))
-      .orderBy(col("dist"), col("vec_id"))
-      .limit(5)
+    OpsShared.rescoreTopK(e.filter(col("vec_id") =!= QueryVecId), qp, 5)
   }
 
   val rocchioTopkSql: String =

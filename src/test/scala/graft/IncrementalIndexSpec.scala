@@ -123,7 +123,7 @@ class IncrementalIndexSpec extends AnyFunSuite {
     assert(!KMeansVec.maintainIvfIndex(spark, ivf, ivf2, maxFilesPerCell = 100000))
     assert(!new java.io.File(ivf2).exists(), "no-op must not write a generation")
     assert(KMeansVec.maintainIvfIndex(spark, ivf, ivf2, maxFilesPerCell = 1))
-    val (f2, c2) = Maintenance.partitionedFileStats(spark, s"$ivf2/vectors", "cluster")
+    val (f2, c2) = Maintenance.fileStats(spark, s"$ivf2/vectors", Some("cluster"))
     assert(f2 == c2, s"compaction must fold to one file per cell: $f2 files / $c2 cells")
     assert(KMeansVec.ivfSearchIndexed(spark, ivf2, q).collect().toSeq == ivfBefore,
       "IVF generation swap must be answer-stable")
@@ -136,8 +136,8 @@ class IncrementalIndexSpec extends AnyFunSuite {
     val pq2 = tmp.resolve("pq2").toString
     assert(!Pq.maintainPqIndex(spark, pq, pq2, maxFiles = 100000))
     assert(Pq.maintainPqIndex(spark, pq, pq2, maxFiles = 1))
-    assert(Maintenance.parquetFileCount(spark, s"$pq2/codes") <
-      Maintenance.parquetFileCount(spark, s"$pq/codes"),
+    assert(Maintenance.fileStats(spark, s"$pq2/codes")._1 <
+      Maintenance.fileStats(spark, s"$pq/codes")._1,
       "compaction must reduce the codes file count")
     assert(Pq.pqSearchIndexed(spark, pq2, dir, q).collect().toSeq == pqBefore,
       "PQ generation swap must be answer-stable")
@@ -206,7 +206,11 @@ class IncrementalIndexSpec extends AnyFunSuite {
     val tmp = Files.createTempDirectory("graft-inc-idem-g")
     val inc = tmp.resolve("inc").toString
     GraphAnn.writeGraphIndex(spark, halfDir, inc)
+    val modeKey = "spark.sql.sources.partitionOverwriteMode"
+    val modeBefore = spark.conf.getOption(modeKey)
     GraphAnn.appendGraphIndex(spark, inc, laterBatch, segmentTag = Some(7L))
+    assert(spark.conf.getOption(modeKey) == modeBefore,
+      "the tagged append must not change the session's overwrite mode")
     val rows1 = spark.read.parquet(inc).count()
     val q = queryVec
     val res1 = GraphAnn.graphSearchIndexed(spark, inc, q).collect().toSeq

@@ -121,6 +121,15 @@ class MaintenanceSpec extends AnyFunSuite {
       .write.parquet(s"$edir/documents.parquet")
     graft.ops.Dedup.writeBandIndex(spark, edir, "band_idx_empty")
     assert(!graft.ops.Dedup.maintainBandIndex(spark, "band_idx_empty", "band_idx_empty2"))
+    // ... and an empty-corpus substring index the same way
+    graft.ops.Dedup.writeSubstrIndex(spark, edir, "substr_idx_empty")
+    assert(!graft.ops.Dedup.maintainSubstrIndex(spark, "substr_idx_empty", "substr_idx_empty2"))
+
+    // an EMPTY-CORPUS graph index: the committed write has no shard= dirs
+    Seq.empty[(Long, Int, Seq[Float])].toDF("vec_id", "label", "embedding")
+      .write.parquet(s"$edir/embeddings.parquet")
+    graft.ops.GraphAnn.writeGraphIndex(spark, edir, s"$root/graph")
+    assert(!graft.ops.GraphAnn.maintainGraphIndex(spark, s"$root/graph", s"$root/graph2"))
 
     // missing layout: still a loud failure, never a silent skip
     assertThrows[Exception] {
@@ -130,6 +139,11 @@ class MaintenanceSpec extends AnyFunSuite {
     new java.io.File(s"$root/bare/codes").mkdirs()
     assertThrows[IllegalArgumentException] {
       graft.ops.Quantize.maintainSqIndex(spark, s"$root/bare", s"$root/bare2")
+    }
+    // a bare graph dir (no shard= dirs, no _SUCCESS) fails the same way
+    new java.io.File(s"$root/bareg").mkdirs()
+    assertThrows[IllegalArgumentException] {
+      graft.ops.GraphAnn.maintainGraphIndex(spark, s"$root/bareg", s"$root/bareg2")
     }
   }
 

@@ -30,5 +30,20 @@ class WindowKeysSpec extends AnyFunSuite {
     // no partition expressions before the order spec
     assert(!plan.contains("windowspecdefinition(x"),
       s"partition key was folded away:\n$plan")
+    // TextOps.vocabHead's shape: a NON-nullable string from
+    // explode(split(..)), grouped, ranked over the post-limit head
+    val head = Seq("a b a", "c a b").toDF("text")
+      .select(explode(split(col("text"), " ")).as("word"))
+      .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
+      .orderBy(col("cnt").desc, col("word")).limit(2)
+    val headPlan = head.withColumn("rnk", row_number().over(
+        Window.partitionBy(WindowKeys.boundedRankKey(col("word")))
+          .orderBy(col("cnt").desc, col("word"))))
+      .queryExecution.optimizedPlan
+    val specs = headPlan.collect {
+      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w.partitionSpec
+    }
+    assert(specs.nonEmpty && specs.forall(_.nonEmpty),
+      s"partition key was folded away for a non-nullable input:\n$headPlan")
   }
 }

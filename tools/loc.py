@@ -14,22 +14,15 @@ import os
 import sys
 
 
-def code_lines(text):
-    """Return the number of lines with code outside comments."""
+def strip_comments(text):
+    """Return `text` with its comments removed and every newline kept."""
+    out = []
     n = len(text)
     i = 0
     depth = 0          # block-comment nesting
     string = None      # None, '"' or '"""'
-    has_code = False
-    count = 0
     while i < n:
         c = text[i]
-        if c == "\n":
-            if has_code:
-                count += 1
-            has_code = False
-            i += 1
-            continue
         if depth:
             if text.startswith("/*", i):
                 depth += 1
@@ -38,29 +31,31 @@ def code_lines(text):
                 depth -= 1
                 i += 2
             else:
+                if c == "\n":
+                    out.append(c)
                 i += 1
             continue
         if string == '"""':
-            if not c.isspace():
-                has_code = True
             if text.startswith('"""', i):
                 # a run of quotes closes on its last three
                 j = i
                 while j < n and text[j] == '"':
                     j += 1
+                out.append(text[i:j])
                 string = None
                 i = j
             else:
+                out.append(c)
                 i += 1
             continue
         if string == '"':
-            has_code = True
             if c == "\\":
+                out.append(text[i:i + 2])
                 i += 2
-            elif c == '"':
-                string = None
-                i += 1
             else:
+                if c == '"':
+                    string = None
+                out.append(c)
                 i += 1
             continue
         if text.startswith("//", i):
@@ -71,23 +66,29 @@ def code_lines(text):
             depth = 1
             i += 2
             continue
-        if not c.isspace():
-            has_code = True
         if text.startswith('"""', i):
             string = '"""'
+            out.append('"""')
             i += 3
         elif c == '"':
             string = '"'
+            out.append(c)
             i += 1
         elif c == "'" and i + 2 < n and (text[i + 2] == "'" or text[i + 1] == "\\"):
             # a character literal: 'x' or an escape such as '\''
             end = text.find("'", i + 3 if text[i + 1] == "\\" else i + 2)
-            i = (end + 1) if end > 0 else i + 1
+            j = (end + 1) if end > 0 else i + 1
+            out.append(text[i:j])
+            i = j
         else:
+            out.append(c)
             i += 1
-    if has_code:
-        count += 1
-    return count
+    return "".join(out)
+
+
+def code_lines(text):
+    """Return the number of lines with code outside comments."""
+    return sum(1 for line in strip_comments(text).split("\n") if line.strip())
 
 
 def count_tree(root):
