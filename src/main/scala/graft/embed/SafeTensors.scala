@@ -18,9 +18,7 @@ import java.nio.file.{Files, Paths}
   */
 object SafeTensors {
 
-  final case class Tensor(dtype: String, shape: Seq[Int], data: Array[Float]) {
-    def numel: Int = shape.product
-  }
+  final case class Tensor(dtype: String, shape: Seq[Int], data: Array[Float])
 
   /** name → tensor, for every F32/F16 tensor in the file. */
   def load(path: String): Map[String, Tensor] = {

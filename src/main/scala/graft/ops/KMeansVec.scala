@@ -27,79 +27,29 @@ object KMeansVec extends QueryModule {
   val K = 10
   val Iters = 3
 
-  /** Squared euclidean distance to each centroid, nearest wins
-    * (lowest cluster id on exact ties): ‖x−c‖² = x·x − 2x·c + c·c.
-    *
-    * A closure UDF, not a literal struct-array expression: the
-    * literal form regenerates different codegen source for every
-    * centroid update, so EVERY Lloyd iteration (and every query
-    * invocation) paid a janino recompile — measured as the dominant
-    * cost of the whole fit at sf0.1. The UDF keeps one stable plan
-    * and runs primitive loops; the arithmetic is bit-identical to
-    * the old expression and to the oracle: sequential double folds,
-    * centroids truncated to float for the cross term (the typedLit
-    * cast the expression form applied), cc in full doubles, and
-    * d2 = ((x·x − 2·x·c) + cc) in that association order. */
+  /** The nearest centroid's id ([[Codebook.nearest]]: lowest id on
+    * exact ties). A closure UDF, not a literal struct-array
+    * expression: the literal form regenerates different codegen
+    * source for every centroid update, so EVERY Lloyd iteration (and
+    * every query invocation) paid a janino recompile — measured as
+    * the dominant cost of the whole fit at sf0.1. The UDF keeps one
+    * stable plan and runs primitive loops. */
   private[ops] def assignUdf(centroids: Array[Array[Double]]) = {
-    val cf = centroids.map(_.map(_.toFloat))
-    val cc = centroids.map { c =>
-      var s = 0.0; var i = 0
-      while (i < c.length) { s += c(i) * c(i); i += 1 }
-      s
-    }
+    val book = Codebook.flat(centroids)
     udf { (emb: Seq[Float]) =>
-      val x = new Array[Double](emb.length)
-      var i = 0
-      while (i < x.length) { x(i) = emb(i); i += 1 }
-      var xx = 0.0
-      i = 0
-      while (i < x.length) { xx += x(i) * x(i); i += 1 }
-      var best = 0
-      var bestD = Double.PositiveInfinity
-      var k = 0
-      while (k < cf.length) {
-        val c = cf(k)
-        var xc = 0.0
-        var d = 0
-        while (d < x.length) { xc += x(d) * c(d).toDouble; d += 1 }
-        val d2 = xx - 2.0 * xc + cc(k)
-        if (d2 < bestD) { bestD = d2; best = k }
-        k += 1
-      }
-      best
+      val x = Codebook.doubles(emb)
+      book.nearest(x, 0, book.selfDot(x, 0))
     }
   }
 
-  /** [[assignUdf]]'s distance twin: the fused squared distance to
-    * the NEAREST centroid (the k-means quantization error), same
-    * bit-exact arithmetic — sequential folds, float-truncated cross
-    * term, ((xx − 2·xc) + cc) association. */
+  /** The fused squared distance to the NEAREST centroid — the k-means
+    * quantization error. */
   private[ops] def minDistUdf(centroids: Array[Array[Double]]) = {
-    val cf = centroids.map(_.map(_.toFloat))
-    val cc = centroids.map { c =>
-      var s = 0.0; var i = 0
-      while (i < c.length) { s += c(i) * c(i); i += 1 }
-      s
-    }
+    val book = Codebook.flat(centroids)
     udf { (emb: Seq[Float]) =>
-      val x = new Array[Double](emb.length)
-      var i = 0
-      while (i < x.length) { x(i) = emb(i); i += 1 }
-      var xx = 0.0
-      i = 0
-      while (i < x.length) { xx += x(i) * x(i); i += 1 }
-      var bestD = Double.PositiveInfinity
-      var k = 0
-      while (k < cf.length) {
-        val c = cf(k)
-        var xc = 0.0
-        var d = 0
-        while (d < x.length) { xc += x(d) * c(d).toDouble; d += 1 }
-        val d2 = xx - 2.0 * xc + cc(k)
-        if (d2 < bestD) bestD = d2
-        k += 1
-      }
-      bestD
+      val x = Codebook.doubles(emb)
+      val xx = book.selfDot(x, 0)
+      book.d2(x, 0, xx, book.nearest(x, 0, xx))
     }
   }
 
@@ -112,9 +62,7 @@ object KMeansVec extends QueryModule {
       : (Array[Array[Double]], DataFrame) = {
     val e = t(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"), col("label"))
-    var centroids: Array[Array[Double]] = e
-      .orderBy(col("vec_id")).limit(k).collect()
-      .map(_.getSeq[Float](1).map(_.toDouble).toArray)
+    var centroids = Codebook.prefix(e, k, col("embedding"))
     var used: Array[Array[Double]] = centroids
     var assigned: DataFrame = null
     (1 to iters).foreach { it =>
@@ -124,22 +72,9 @@ object KMeansVec extends QueryModule {
       // returned pair is the pre-update centroids + their assignment),
       // so skip it — iters=1 callers pay only the init collect and a
       // lazy assignment, no aggregation job at all
-      if (it < iters) {
-        // decimal-bridged per-dimension means: deterministic AND
-        // cross-engine (dims r6-rounded first, so the double→decimal
-        // conversion is exact in both engines — the §8.5 bridge rule)
-        val sums = assigned
-          .select(col("cluster"), posexplode(col("embedding")).as(Seq("d", "v")))
-          .groupBy(col("cluster"), col("d"))
-          .agg(OracleMath.dsum(r6(col("v").cast("double"))).as("s"), count(lit(1)).as("n"))
-          .collect()
-        val next = Array.tabulate(k)(i => centroids(i).clone())
-        sums.foreach { r =>
-          val c = r.getInt(0); val d = r.getInt(1)
-          next(c)(d) = r.getDouble(2) / r.getLong(3)
-        }
-        centroids = next
-      }
+      if (it < iters)
+        centroids = Codebook.lloyd(
+          assigned, array(col("cluster")), col("embedding"), Array(centroids))(0)
     }
     (used, assigned)
   }
@@ -446,39 +381,19 @@ object KMeansVec extends QueryModule {
   }
 
   /** Euclidean distances to the nearest and second-nearest centroid
-    * — the exact d2 arithmetic of [[assignUdf]] (same fused form,
-    * same float-truncated cross term, same association order), so
-    * the nearest cluster here IS the assigned cluster. d2 can go
-    * epsilon-negative when a vector coincides with its centroid;
-    * both engines clamp at 0 before the sqrt. */
+    * ([[Codebook.nearest]]'s top two), so the nearest cluster here IS
+    * the assigned cluster. d2 can go epsilon-negative when a vector
+    * coincides with its centroid; both engines clamp at 0 before the
+    * sqrt. */
   private[ops] def twoNearestUdf(centroids: Array[Array[Double]]) = {
-    val cf = centroids.map(_.map(_.toFloat))
-    val cc = centroids.map { c =>
-      var s = 0.0; var i = 0
-      while (i < c.length) { s += c(i) * c(i); i += 1 }
-      s
-    }
+    val book = Codebook.flat(centroids)
     udf { (emb: Seq[Float]) =>
-      val x = new Array[Double](emb.length)
-      var i = 0
-      while (i < x.length) { x(i) = emb(i); i += 1 }
-      var xx = 0.0
-      i = 0
-      while (i < x.length) { xx += x(i) * x(i); i += 1 }
-      var best = Double.PositiveInfinity
-      var second = Double.PositiveInfinity
-      var k = 0
-      while (k < cf.length) {
-        val c = cf(k)
-        var xc = 0.0
-        var d = 0
-        while (d < x.length) { xc += x(d) * c(d).toDouble; d += 1 }
-        val d2 = xx - 2.0 * xc + cc(k)
-        if (d2 < best) { second = best; best = d2 }
-        else if (d2 < second) { second = d2 }
-        k += 1
-      }
-      Array(math.sqrt(math.max(best, 0.0)), math.sqrt(math.max(second, 0.0)))
+      val x = Codebook.doubles(emb)
+      val ab = new Array[Double](2)
+      book.nearest(x, 0, book.selfDot(x, 0), ab)
+      ab(0) = math.sqrt(math.max(ab(0), 0.0))
+      ab(1) = math.sqrt(math.max(ab(1), 0.0))
+      ab
     }
   }
 
@@ -1128,30 +1043,18 @@ object KMeansVec extends QueryModule {
     * prototypicality score of SSL-prototype pruning (Sorscher et
     * al., NeurIPS 2022: with abundant data, dropping the EASIEST —
     * most prototypical — examples beats random pruning; the hard
-    * shell of each cluster carries the information). Same arithmetic
-    * conventions as [[assignUdf]] so the score is exactly replayable:
-    * centroid dims float-truncated for the cross term, Σc² in full
-    * doubles, sequential folds, zero-norm guard (ANSI divide) → 0. */
+    * shell of each cluster carries the information). Built from the
+    * [[Codebook]] folds so the score is exactly replayable: centroid
+    * dims float-truncated for the cross term, Σc² in full doubles,
+    * zero-norm guard (ANSI divide) → 0. */
   private[ops] def protoUdf(centroids: Array[Array[Double]]) = {
-    val cf = centroids.map(_.map(_.toFloat))
-    val cc = centroids.map { c =>
-      var s = 0.0; var i = 0
-      while (i < c.length) { s += c(i) * c(i); i += 1 }
-      s
-    }
+    val book = Codebook.flat(centroids)
     udf { (emb: Seq[Float], cluster: Int) =>
-      val x = new Array[Double](emb.length)
-      var i = 0
-      while (i < x.length) { x(i) = emb(i); i += 1 }
-      var xx = 0.0
-      i = 0
-      while (i < x.length) { xx += x(i) * x(i); i += 1 }
-      val c = cf(cluster)
-      var xc = 0.0
-      var d = 0
-      while (d < x.length) { xc += x(d) * c(d).toDouble; d += 1 }
-      if (xx == 0.0 || cc(cluster) == 0.0) 0.0
-      else xc / (math.sqrt(xx) * math.sqrt(cc(cluster)))
+      val x = Codebook.doubles(emb)
+      val xx = book.selfDot(x, 0)
+      val cc = book.sumSq(0, cluster)
+      if (xx == 0.0 || cc == 0.0) 0.0
+      else book.cross(x, 0, cluster) / (math.sqrt(xx) * math.sqrt(cc))
     }
   }
 
@@ -1236,29 +1139,32 @@ object KMeansVec extends QueryModule {
     * vec_id LIMIT. */
   val ParSelCap: Int = 4 * ParL
 
-  private def sqDistTo(cand: Array[(Long, Array[Float])]) = {
-    // per-pair r6 then min — partition-order-independent and
-    // DuckDB-recomputable (the §8.5 bridge); sequential ascending
-    // fold over dims matches list_sum's order exactly
+  /** r6 of the squared euclidean distance over the shared dims —
+    * per-pair r6 then min keeps every fold partition-order-independent
+    * and DuckDB-recomputable (the §8.5 bridge); the sequential
+    * ascending fold over dims matches list_sum's order exactly. */
+  private def r6SqDist(xs: Array[Float], cv: Array[Float]): Double = {
+    var s = 0.0; var i = 0
+    val n = math.min(xs.length, cv.length)
+    while (i < n) {
+      val d = xs(i).toDouble - cv(i).toDouble
+      s += d * d; i += 1
+    }
+    OracleMath.r6d(s)
+  }
+
+  private def sqDistTo(cand: Array[(Long, Array[Float])]) =
     (x: Seq[Float]) => {
       val xs = x.toArray
       var best = Double.MaxValue
       var c = 0
       while (c < cand.length) {
-        val cv = cand(c)._2
-        var s = 0.0; var i = 0
-        val n = math.min(xs.length, cv.length)
-        while (i < n) {
-          val d = xs(i).toDouble - cv(i).toDouble
-          s += d * d; i += 1
-        }
-        val r = OracleMath.r6d(s)
+        val r = r6SqDist(xs, cand(c)._2)
         if (r < best) best = r
         c += 1
       }
       best
     }
-  }
 
   /** k-means|| scalable initialization (Bahmani et al., VLDB 2012) —
     * the production answer to "how do you SEED the coarse quantizer
@@ -1312,14 +1218,7 @@ object KMeansVec extends QueryModule {
       var bestD = Double.MaxValue; var bestId = Long.MaxValue
       var c = 0
       while (c < candArr.length) {
-        val cv = candArr(c)._2
-        var sum = 0.0; var i = 0
-        val n = math.min(xs.length, cv.length)
-        while (i < n) {
-          val d = xs(i).toDouble - cv(i).toDouble
-          sum += d * d; i += 1
-        }
-        val r = OracleMath.r6d(sum)
+        val r = r6SqDist(xs, candArr(c)._2)
         if (r < bestD || (r == bestD && candArr(c)._1 < bestId)) {
           bestD = r; bestId = candArr(c)._1
         }

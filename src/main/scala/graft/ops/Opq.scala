@@ -40,36 +40,28 @@ import org.apache.spark.sql.functions._
   * the rotated nx feeds the shared PQ CTEs bit-for-bit. */
 object Opq extends QueryModule {
 
-  /** Householder direction for the dir's fitted pc1: (u, uᵀu), or
-    * None when pc1 is already e0 (reflection undefined/unneeded). */
-  private def householder(s: SparkSession, dir: String): Option[(Array[Double], Double)] = {
-    val u = Pca.Pc1(s, dir)._1.clone()
-    u(0) -= 1.0
+  /** The Householder factor (u, uᵀu), None when uᵀu = 0 (the
+    * component already sits on its target axis: the reflection is
+    * undefined and unneeded). */
+  private def factor(u: Array[Double]): Option[(Array[Double], Double)] = {
     var utu = 0.0
     var i = 0
     while (i < u.length) { utu += u(i) * u(i); i += 1 }
     if (utu == 0.0) None else Some((u, utu))
   }
 
+  /** Householder direction for the dir's fitted pc1, u = pc1 − e0. */
+  private def householder(s: SparkSession, dir: String): Option[(Array[Double], Double)] = {
+    val u = Pca.Pc1(s, dir)._1.clone()
+    u(0) -= 1.0
+    factor(u)
+  }
+
   /** Rotated normalized-corpus view: the [[Pq.nxView]] rows passed
     * through the reflection, None when pc1 = e0 (the rotation is the
-    * identity). Map-only; u rides the closure. */
+    * identity). */
   private def rotView(s: SparkSession, dir: String): Option[DataFrame] =
-    householder(s, dir).map { case (u, utu) =>
-      val rot = udf { (nx: Seq[Double]) =>
-        val x = nx.toArray
-        var dot = 0.0
-        var k = 0
-        val m = math.min(x.length, u.length)
-        while (k < m) { dot += x(k) * u(k); k += 1 }
-        val f = 2.0 * dot / utu
-        val out = new Array[Double](x.length)
-        k = 0
-        while (k < x.length) { out(k) = x(k) - (if (k < m) f * u(k) else 0.0); k += 1 }
-        out
-      }
-      Pq.nxView(s, dir).withColumn("nx", rot(col("nx")))
-    }
+    householder(s, dir).map(h => rotViewChain(s, dir, Seq(h)))
 
   /** The rotated-space codebooks (the [[Pq.Codebooks]] convention —
     * training is index-build cost, paid cold in Bench). */
@@ -165,17 +157,15 @@ object Opq extends QueryModule {
       val u = comps(i)._1.clone()
       applied.foreach { case (pu, putu) => reflectInPlace(u, pu, putu) }
       u(i * sd) -= 1.0
-      var utu = 0.0
-      var k = 0
-      while (k < u.length) { utu += u(k) * u(k); k += 1 }
-      if (utu != 0.0) applied += ((u, utu))
+      applied ++= factor(u)
       i += 1
     }
     applied.toSeq
   }
 
   /** Corpus view under the composed rotation: map-only, the m·dim
-    * factor doubles ride the closure. */
+    * factor doubles ride the closure. The copy `toArray` makes is the
+    * row reflected in place. */
   private def rotViewChain(
       s: SparkSession, dir: String, chain: Seq[(Array[Double], Double)]): DataFrame = {
     val rot = udf { (nx: Seq[Double]) =>

@@ -5,6 +5,8 @@ import graft.functions.VectorFunctions.r6
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.reflect.runtime.universe.TypeTag
+
 /** Product quantization (PQ) with ADC search — the vector-compression
   * tier between scalar int8 ([[Quantize]]) and coarse IVF
   * ([[KMeansVec]]), and the workhorse of billion-scale ANN systems:
@@ -24,10 +26,10 @@ import org.apache.spark.sql.functions._
   * phase reads — the [[Quantize.writeSqIndex]] materialization story
   * applies verbatim.
   *
-  * Determinism/oracle: codebooks initialize from the [[CodeK]] lowest
-  * vec_ids' subvectors (the [[KMeansVec]] init convention, one
-  * assignment pass); the assignment distance is the same fused
-  * x·x − 2·x·float(c) + Σc² form with lowest-code tie-breaks; ADC
+  * Determinism/oracle: init, assignment distance and the Lloyd
+  * update are the [[Codebook]] ones every k-means quantizer shares
+  * (the [[CodeK]] lowest vec_ids' subvectors; the fused
+  * x·x − 2·x·float(c) + Σc² with lowest-code tie-breaks); ADC
   * sums run in ascending subspace order; per-label means go through
   * the §8.5 r6+DECIMAL bridge. DuckDB replays codebooks, codes,
   * tables, and distances bit-for-bit.
@@ -75,141 +77,49 @@ object Pq extends QueryModule {
       .filter(graft.functions.VectorFunctions.l2norm(col("embedding")) > 0)
       .select(col("vec_id"), col("label"), normUdf(col("embedding")).as("nx"))
 
-  /** Codebooks as [subspace][code][subdim] doubles: the [[CodeK]]
-    * lowest NONZERO vec_ids' normalized subvectors, the KMeansVec
-    * init convention — deterministic, replayed verbatim by the
-    * oracle's cb CTE. */
-  private[graft] def codebooksNx(
-      nxDf: DataFrame, m: Int = SubSpaces): Array[Array[Array[Double]]] = {
-    val prefix = nxDf.orderBy(col("vec_id")).limit(CodeK)
-      .select(col("nx")).collect()
-      .map(_.getSeq[Double](0).toArray)
-    require(prefix.nonEmpty, "empty embeddings table")
-    val dim = prefix(0).length
-    val sd = dim / m
-    Array.tabulate(m)(sp =>
-      prefix.map(v => java.util.Arrays.copyOfRange(v, sp * sd, (sp + 1) * sd)))
-  }
+  /** A raw embedding as the normalized doubles the codebooks quantize. */
+  private[graft] val fromFloats = (emb: Seq[Float]) => normalize(Codebook.doubles(emb))
 
-  /** Fused per-subspace squared distance ‖x−c‖²-style assignment
-    * metric: x·x − 2·x·float(c) + Σc², sequential folds, the exact
-    * KMeansVec arithmetic. */
-  private def subD2(x: Array[Double], xoff: Int, cf: Array[Float], c: Array[Double]): Double = {
-    var xx = 0.0
-    var xc = 0.0
-    var cc = 0.0
-    var i = 0
-    while (i < c.length) {
-      val xv = x(xoff + i)
-      xx += xv * xv
-      xc += xv * cf(i).toDouble
-      cc += c(i) * c(i)
-      i += 1
-    }
-    xx - 2.0 * xc + cc
-  }
+  /** [[fromFloats]] as a column (the nx view). */
+  private val normUdf = udf(fromFloats)
 
-  /** Normalized vector as a double array column (for the training
-    * update's per-dimension sums). */
-  private val normUdf = udf { (emb: Seq[Float]) =>
-    val raw = new Array[Double](emb.length)
-    var i = 0
-    while (i < raw.length) { raw(i) = emb(i); i += 1 }
-    normalize(raw)
-  }
+  /** An nx-view row as is: already normalized doubles. */
+  private val fromNx = (nx: Seq[Double]) => nx.toArray
 
   /** The trained codebooks: training is an index-BUILD-time cost —
     * pq_error pays it cold (Bench clears the fit first), ann_pq_topk
     * consumes the shared fit, the deployed split. */
   private[graft] val Codebooks = Fits("pq.codebooks")((s, dir) => trainCodebooksNx(nxView(s, dir)))
 
-  /** ONE distributed Lloyd update of the prefix-initialized
-    * codebooks — real PQ training, the [[KMeansVec.fit]] update at
-    * subspace granularity: assign every (nonzero) corpus subvector to
-    * its init code, then per (subspace, code, dim) take the
-    * r6+DECIMAL-bridged mean (deterministic, order-free, mirrored by
-    * the oracle's u/cb CTEs). Codes with no members keep their init
-    * centroid. Only SubSpaces·CodeK·subDim = 1,024 doubles reach the
-    * driver. Takes the nx view so the rotated family trains through
-    * the IDENTICAL update. */
+  /** Real PQ training, the [[KMeansVec.fit]] update at subspace
+    * granularity: [[Codebook.prefix]] init from the [[CodeK]] lowest
+    * NONZERO vec_ids' normalized vectors, split into `m` subvectors;
+    * then ONE [[Codebook.lloyd]] update over every (nonzero) corpus
+    * subvector's init code. Only m·CodeK·subDim doubles reach the
+    * driver. Takes the nx view so the rotated family ([[Opq]]) trains
+    * through the IDENTICAL update, and an [[Rq]] level is the m = 1
+    * case. */
   private[graft] def trainCodebooksNx(
       nxDf: DataFrame, m: Int = SubSpaces): Array[Array[Array[Double]]] = {
-    val init = codebooksNx(nxDf, m)
-    val enc = encodeNxUdf(init)
-    val sd = init(0)(0).length
-    val sums = nxDf
-      .withColumn("codes", enc(col("nx")).getField("_1"))
-      .select(posexplode(col("codes")).as(Seq("s", "code")), col("nx"))
-      .select(col("s"), col("code"),
-        expr(s"slice(nx, s * $sd + 1, $sd)").as("sub"))
-      .select(col("s"), col("code"), posexplode(col("sub")).as(Seq("d", "v")))
-      .groupBy(col("s"), col("code"), col("d"))
-      .agg(OracleMath.dsum(r6(col("v"))).as("sum"), count(lit(1)).as("n"))
-      .collect()
-    val out = init.map(_.map(_.clone()))
-    sums.foreach { r =>
-      val sp = r.getInt(0); val code = r.getInt(1); val d = r.getInt(2)
-      out(sp)(code)(d) = r.getDouble(3) / r.getLong(4)
-    }
-    out
+    val prefix = Codebook.prefix(nxDf, CodeK, col("nx"))
+    require(prefix.nonEmpty, "empty embeddings table")
+    val sd = prefix(0).length / m
+    val init = Array.tabulate(m)(sp =>
+      prefix.map(v => java.util.Arrays.copyOfRange(v, sp * sd, (sp + 1) * sd)))
+    val enc = encodeUdf(init, fromNx)
+    Codebook.lloyd(nxDf, enc(col("nx")).getField("_1"), col("nx"), init)
   }
 
-  /** codes + assignment error per vector: (codes[SubSpaces], err =
-    * Σ_s d2 of the chosen code, ascending s). */
-  private def encodeUdf(cb: Array[Array[Array[Double]]]) = {
-    val cf = cb.map(_.map(_.map(_.toFloat)))
-    udf { (emb: Seq[Float]) =>
-      val raw = new Array[Double](emb.length)
-      var i = 0
-      while (i < raw.length) { raw(i) = emb(i); i += 1 }
-      val x = normalize(raw)
-      val sd = x.length / SubSpaces
-      val codes = new Array[Int](SubSpaces)
-      var err = 0.0
-      var sp = 0
-      while (sp < SubSpaces) {
-        var best = 0
-        var bestD = Double.PositiveInfinity
-        var k = 0
-        // actual codebook size, not CodeK: a corpus with fewer than
-        // CodeK nonzero rows yields a shorter prefix — scan what exists
-        while (k < cb(sp).length) {
-          val d2 = subD2(x, sp * sd, cf(sp)(k), cb(sp)(k))
-          if (d2 < bestD) { bestD = d2; best = k } // strict < = lowest-code ties
-          k += 1
-        }
-        codes(sp) = best
-        err += bestD
-        sp += 1
-      }
-      (codes, err)
-    }
-  }
-
-  /** [[encodeUdf]] for an ALREADY-normalized double vector (the nx
-    * view) — the same fused-d2 argmin loop minus the normalize. */
-  private[graft] def encodeNxUdf(cb: Array[Array[Array[Double]]]) = {
-    val cf = cb.map(_.map(_.map(_.toFloat)))
-    val m = cb.length // subspace count follows the codebook shape
-    udf { (nx: Seq[Double]) =>
-      val x = nx.toArray
-      val sd = x.length / m
-      val codes = new Array[Int](m)
-      var err = 0.0
-      var sp = 0
-      while (sp < m) {
-        var best = 0
-        var bestD = Double.PositiveInfinity
-        var k = 0
-        while (k < cb(sp).length) {
-          val d2 = subD2(x, sp * sd, cf(sp)(k), cb(sp)(k))
-          if (d2 < bestD) { bestD = d2; best = k } // strict < = lowest-code ties
-          k += 1
-        }
-        codes(sp) = best
-        err += bestD
-        sp += 1
-      }
+  /** The one PQ encoder: struct (_1 = the code per subspace, _2 = err,
+    * the summed d2 of the chosen codes) of the vector `toX` makes of
+    * the input column ([[fromFloats]] for a raw embedding, [[fromNx]]
+    * for the nx view). The subspace count follows the codebook shape. */
+  private def encodeUdf[T: TypeTag](
+      cb: Array[Array[Array[Double]]], toX: Seq[T] => Array[Double]) = {
+    val book = new Codebook(cb)
+    udf { (v: Seq[T]) =>
+      val codes = new Array[Int](book.m)
+      val err = book.encode(toX(v), codes)
       (codes, err)
     }
   }
@@ -218,7 +128,7 @@ object Pq extends QueryModule {
     * the given codebooks — shared by [[pqError]] and [[Opq]]. */
   private[graft] def pqErrorNx(
       nxDf: DataFrame, cb: Array[Array[Array[Double]]]): DataFrame = {
-    val enc = encodeNxUdf(cb)
+    val enc = encodeUdf(cb, fromNx)
     nxDf
       .withColumn("enc", enc(col("nx")))
       .withColumn("err", r6(col("enc._2") / lit(SubSpaces * subDim(64))))
@@ -239,9 +149,11 @@ object Pq extends QueryModule {
     * NORMALIZED subvector against that centroid. */
   private def adcTable(cb: Array[Array[Array[Double]]], q: Array[Float]): Array[Array[Double]] = {
     val qd = normalize(q.map(_.toDouble))
-    val sd = qd.length / SubSpaces
-    Array.tabulate(SubSpaces)(sp => Array.tabulate(cb(sp).length)(k0 =>
-      subD2(qd, sp * sd, cb(sp)(k0).map(_.toFloat), cb(sp)(k0))))
+    val book = new Codebook(cb)
+    Array.tabulate(book.m) { sp =>
+      val xx = book.selfDot(qd, sp)
+      Array.tabulate(cb(sp).length)(k0 => book.d2(qd, sp, xx, k0))
+    }
   }
 
   /** ADC top-k: build the query's [[SubSpaces]]×[[CodeK]] distance
@@ -257,7 +169,7 @@ object Pq extends QueryModule {
     val qVec = qOpt.get
     val cb = Codebooks(s, dir)
     val qtab = adcTable(cb, qVec)
-    val enc = encodeUdf(cb)
+    val enc = encodeUdf(cb, fromFloats)
     val approxUdf = udf { (codes: Seq[Int]) =>
       var a = 0.0
       var sp = 0
@@ -427,7 +339,7 @@ object Pq extends QueryModule {
       s: SparkSession, dir: String, outDir: String,
       trainDir: Option[String] = None): Unit = {
     val cb = Codebooks(s, trainDir.getOrElse(dir))
-    val enc = encodeUdf(cb)
+    val enc = encodeUdf(cb, fromFloats)
     t(s, dir, "embeddings")
       // the query sentinel row is not corpus: persisting it would make
       // an indexed search over its own corpus return the query itself
@@ -455,7 +367,7 @@ object Pq extends QueryModule {
   def appendPqIndex(
       s: SparkSession, indexDir: String, batch: DataFrame,
       dedupeExisting: Boolean = false): Unit = {
-    val enc = encodeUdf(readCodebooks(s, indexDir))
+    val enc = encodeUdf(readCodebooks(s, indexDir), fromFloats)
     val rows = batch
       .filter(col("vec_id") =!= VectorQueries.QueryVecId)
       .filter(graft.functions.VectorFunctions.l2norm(col("embedding")) > 0)
@@ -575,7 +487,7 @@ object Pq extends QueryModule {
     val probes = OpsShared.probeCells(centroids, qVec, nProbe)
     val cb = Codebooks(s, dir)
     val qtab = adcTable(cb, qVec)
-    val enc = encodeUdf(cb)
+    val enc = encodeUdf(cb, fromFloats)
     val approxUdf = udf { (codes: Seq[Int]) =>
       var a = 0.0
       var sp = 0
@@ -663,7 +575,7 @@ object Pq extends QueryModule {
     val td = trainDir.getOrElse(dir)
     val centroids = KMeansVec.fit(s, td, KMeansVec.K, iters = 1)._1
     val cb = Codebooks(s, td)
-    val enc = encodeUdf(cb)
+    val enc = encodeUdf(cb, fromFloats)
     Tables.t(s, dir, "embeddings")
       .filter(col("vec_id") =!= VectorQueries.QueryVecId)
       .filter(graft.functions.VectorFunctions.l2norm(col("embedding")) > 0)
@@ -689,7 +601,7 @@ object Pq extends QueryModule {
       dedupeExisting: Boolean = false): Unit = {
     val centroids = KMeansVec.readCentroids(s, indexDir)
     val cb = readCodebooks(s, indexDir)
-    val enc = encodeUdf(cb)
+    val enc = encodeUdf(cb, fromFloats)
     val rows = batch
       .filter(col("vec_id") =!= VectorQueries.QueryVecId)
       .filter(graft.functions.VectorFunctions.l2norm(col("embedding")) > 0)
@@ -761,7 +673,7 @@ object Pq extends QueryModule {
     val nx = nxView(s, dir)
     val rows = PqMGrid.map { m =>
       val cb = trainCodebooksNx(nx, m)
-      val enc = encodeNxUdf(cb)
+      val enc = encodeUdf(cb, fromNx)
       nx.withColumn("err", r6(enc(col("nx")).getField("_2") / lit(64)))
         .agg(count(lit(1)).as("n"),
           r6(OracleMath.davg(col("err"))).as("avg_err"))

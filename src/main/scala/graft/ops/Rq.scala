@@ -15,12 +15,11 @@ import org.apache.spark.sql.functions._
   * same anisotropy OPQ rotates away, absorbed here by the second
   * level).
   *
-  * Training mirrors [[Pq]] exactly, once per level: deterministic
-  * prefix init (the [[CodeK]] lowest nonzero vec_ids — level 2 inits
-  * from those same rows' residuals), ONE distributed r6+decimal-
-  * bridged Lloyd update (only CodeK·dim = 1,024 doubles reach the
-  * driver per level), float-truncated centroid distances (the
-  * KMeansVec assignment arithmetic). Every step — init, assignment,
+  * Each level is [[Pq]] training with one subspace: the [[CodeK]]
+  * lowest nonzero vec_ids as init (level 2 inits from those same
+  * rows' residuals), ONE [[Codebook.lloyd]] update (only CodeK·dim =
+  * 1,024 doubles reach the driver per level), the [[Codebook]]
+  * nearest-code distance. Every step — init, assignment,
   * update, residual subtraction, error — replays in DuckDB CTEs, so
   * `rq_error` is fully oracle-gated like `pq_error`/`sq_error`.
   *
@@ -37,82 +36,22 @@ object Rq extends QueryModule {
   /** Fixture embedding dim — the oracle unrolls range(1, Dim+1). */
   val Dim = 64
 
-  private type Cb = Array[Array[Double]]
-
-  /** Fused ‖x−c‖² with the float-truncated centroid dot (the
-    * [[Pq]]/[[KMeansVec]] assignment arithmetic, mirrored by the
-    * oracle's CAST(emb[i] AS FLOAT) distance CTEs). */
-  private def d2(x: Array[Double], cF: Array[Float], c: Array[Double]): Double = {
-    var xx = 0.0; var xc = 0.0; var cc = 0.0
-    var i = 0
-    while (i < c.length) {
-      val xv = x(i)
-      xx += xv * xv
-      xc += xv * cF(i).toDouble
-      cc += c(i) * c(i)
-      i += 1
-    }
-    xx - 2.0 * xc + cc
-  }
-
-  /** Nearest centroid, ascending-code scan with strict < so ties
-    * resolve to the LOWEST code (the oracle's ORDER BY d2, code). */
-  private def nearest(x: Array[Double], cb: Cb, cbF: Array[Array[Float]]): (Int, Double) = {
-    var best = 0; var bd = Double.MaxValue
-    var k = 0
-    while (k < cb.length) {
-      val d = d2(x, cbF(k), cb(k))
-      if (d < bd) { bd = d; best = k }
-      k += 1
-    }
-    (best, bd)
-  }
-
-  private def floats(cb: Cb): Array[Array[Float]] = cb.map(_.map(_.toFloat))
-
-  /** One distributed Lloyd update of a full-dim codebook: assign
-    * every row to its nearest init centroid, per-(code, dim) take the
-    * r6+DECIMAL-bridged mean. Codes with no members keep their init
-    * centroid. CodeK·dim doubles to the driver. */
-  private def lloydOnce(xdf: DataFrame, init: Cb): Cb = {
-    val initF = floats(init)
-    val encU = udf { (x: Seq[Double]) => nearest(x.toArray, init, initF)._1 }
-    val sums = xdf
-      .withColumn("code", encU(col("x")))
-      .select(col("code"), posexplode(col("x")).as(Seq("d", "v")))
-      .groupBy(col("code"), col("d"))
-      .agg(OracleMath.dsum(r6(col("v"))).as("sum"), count(lit(1)).as("n"))
-      .collect()
-    val out = init.map(_.clone())
-    sums.foreach { r =>
-      out(r.getInt(0))(r.getInt(1)) = r.getDouble(2) / r.getLong(3)
-    }
-    out
-  }
-
-  private def prefixInit(xdf: DataFrame): Cb = {
-    val p = xdf.orderBy(col("vec_id")).limit(CodeK)
-      .select(col("x")).collect().map(_.getSeq[Double](0).toArray)
-    require(p.nonEmpty, "empty embeddings table")
-    p
-  }
+  /** x − c, the residual level 2 quantizes. */
+  private def residual(x: Array[Double], c: Array[Double]): Array[Double] =
+    Array.tabulate(x.length)(i => x(i) - c(i))
 
   /** Both trained codebooks (level 1 on the normalized corpus, level
-    * 2 on its level-1 residuals) — training is the index-build cost;
-    * `rq_error` pays it cold. */
+    * 2 on its level-1 residuals), each one-subspace [[Pq]] training —
+    * training is the index-build cost; `rq_error` pays it cold. */
   private[graft] val Codebooks = Fits("rq.codebooks") { (s, dir) =>
     val nx = Pq.nxView(s, dir)
-      .select(col("vec_id"), col("label"), col("nx").as("x"))
-    val cb1 = lloydOnce(nx, prefixInit(nx))
-    val cb1F = floats(cb1)
+    val cb1 = Pq.trainCodebooksNx(nx, 1)(0)
+    val book1 = Codebook.flat(cb1)
     val resU = udf { (x: Seq[Double]) =>
       val xa = x.toArray
-      val c = nearest(xa, cb1, cb1F)._1
-      val cent = cb1(c)
-      Array.tabulate(xa.length)(i => xa(i) - cent(i))
+      residual(xa, cb1(book1.nearest(xa, 0, book1.selfDot(xa, 0))))
     }
-    val res = nx.select(col("vec_id"), col("label"), resU(col("x")).as("x"))
-    val cb2 = lloydOnce(res, prefixInit(res))
+    val cb2 = Pq.trainCodebooksNx(nx.withColumn("nx", resU(col("nx"))), 1)(0)
     (cb1, cb2)
   }
 
@@ -124,14 +63,12 @@ object Rq extends QueryModule {
     * built in). */
   def rqError(s: SparkSession, dir: String): DataFrame = {
     val (cb1, cb2) = Codebooks(s, dir)
-    val cb1F = floats(cb1)
-    val cb2F = floats(cb2)
+    val (book1, book2) = (Codebook.flat(cb1), Codebook.flat(cb2))
     val errU = udf { (x: Seq[Double]) =>
       val xa = x.toArray
-      val (c1, e1) = nearest(xa, cb1, cb1F)
-      val cent = cb1(c1)
-      val rx = Array.tabulate(xa.length)(i => xa(i) - cent(i))
-      val e2 = nearest(rx, cb2, cb2F)._2
+      val code = new Array[Int](1)
+      val e1 = book1.encode(xa, code)
+      val e2 = book2.encode(residual(xa, cb1(code(0))), code)
       Array(e1, e2)
     }
     Pq.nxView(s, dir)
@@ -234,23 +171,17 @@ object Rq extends QueryModule {
       return e.select(col("vec_id"), col("label"), lit(0d).as("dist")).filter(lit(false))
     val qVec = qOpt.get
     val (cb1, cb2) = Codebooks(s, dir)
-    val cb1F = floats(cb1)
-    val cb2F = floats(cb2)
+    val (book1, book2) = (Codebook.flat(cb1), Codebook.flat(cb2))
     val nq = Pq.normalize(qVec.map(_.toDouble))
-    val lut = Array.tabulate(CodeK, CodeK) { (a, b) =>
-      val rec = Array.tabulate(Dim)(i => cb1(a)(i) + cb2(b)(i))
-      d2(nq, rec.map(_.toFloat), rec)
-    }
+    // the reconstructions c1 + c2 as one flat codebook, code a·|cb2| + b
+    val recs = Codebook.flat(for (a <- cb1; b <- cb2) yield Array.tabulate(Dim)(i => a(i) + b(i)))
+    val nqq = recs.selfDot(nq, 0)
+    val lut = Array.tabulate(cb1.length, cb2.length)((a, b) => recs.d2(nq, 0, nqq, a * cb2.length + b))
     val approxU = udf { (emb: Seq[Float]) =>
-      val raw = new Array[Double](emb.length)
-      var i = 0
-      while (i < raw.length) { raw(i) = emb(i); i += 1 }
-      val xa = Pq.normalize(raw)
-      val c1 = nearest(xa, cb1, cb1F)._1
-      val cent = cb1(c1)
-      val rx = Array.tabulate(xa.length)(j => xa(j) - cent(j))
-      val c2 = nearest(rx, cb2, cb2F)._1
-      lut(c1)(c2)
+      val xa = Pq.fromFloats(emb)
+      val c1 = book1.nearest(xa, 0, book1.selfDot(xa, 0))
+      val rx = residual(xa, cb1(c1))
+      lut(c1)(book2.nearest(rx, 0, book2.selfDot(rx, 0)))
     }
     OpsShared.rescoreTopK(
       e.filter(col("vec_id") =!= VectorQueries.QueryVecId)

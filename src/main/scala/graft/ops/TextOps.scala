@@ -1501,11 +1501,9 @@ object TextOps extends QueryModule {
       .select(expr("(fd * 8) div (mx + 1)").as("b"))
       .groupBy(col("b")).agg(count(lit(1)).as("types"))
     // the window input is the LITERAL 8-row grid, so one partition is
-    // the design, not an accident; `b div 8` is constant over 0..7 but
-    // not statically foldable (boundedRankKey's `* 0` form folds on
-    // this non-nullable column and would drop the partitioner)
+    // the design, not an accident
     val wCum = Window
-      .partitionBy(expr("b div 8"))
+      .partitionBy(graft.functions.WindowKeys.boundedRankKey(col("b")))
       .orderBy(col("b"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val pts = s.range(0, 8).select(col("id").as("b"))

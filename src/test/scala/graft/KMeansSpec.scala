@@ -24,6 +24,21 @@ class KMeansSpec extends AnyFunSuite {
     assert(prof.length >= 3, s"collapsed to ${prof.length} clusters")
   }
 
+  test("kmeans_clusters on fewer vectors than K: every vector covered, cluster ids from the shorter init") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    // 5 < K = 10: the prefix init has 5 centroids, and every Lloyd
+    // update must size itself from it
+    val dir = java.nio.file.Files.createTempDirectory("graft-kmeans-small").toString
+    (1L to 5L).map(id => (id, Array.tabulate(4)(d => (id * (d + 1) % 7).toFloat).toSeq, 0))
+      .toDF("vec_id", "embedding", "label")
+      .withColumn("embedding", col("embedding").cast("array<float>"))
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val prof = KMeansVec.clusterProfile(spark, dir).collect()
+    assert(prof.map(_.getAs[Long]("n")).sum == 5, prof.toSeq)
+    assert(prof.forall(r => r.getAs[Long]("cluster") < 5), prof.toSeq)
+  }
+
   test("materialized ivf index: probe search prunes partitions, matches inline ivf") {
     val idx = java.nio.file.Files.createTempDirectory("graft-ivf-idx").toString
     KMeansVec.writeIvfIndex(spark, sf, idx, iters = 1)

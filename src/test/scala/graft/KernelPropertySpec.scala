@@ -204,4 +204,52 @@ class KernelPropertySpec extends AnyFunSuite {
       n1 == n2 && clean1 == clean2 && (clean1.isEmpty || ok)
     })
   }
+
+  test("Codebook: nearest code, its d2 and the runner-up equal a brute-force fused d2; ties go to the lowest code") {
+    // a coarse value grid makes equal distances common; every subspace
+    // also copies one code onto its LAST code, so exact ties exist
+    val grid = Gen.oneOf(-1.0, -0.5, 0.0, 0.1, 0.25, 1.0 / 3, 0.5, 1.0)
+    val caseGen = for {
+      m <- Gen.choose(1, 4)
+      sd <- Gen.choose(1, 6)
+      k <- Gen.choose(1, 8)
+      books <- Gen.listOfN(m, Gen.listOfN(k, Gen.listOfN(sd, grid)))
+      dups <- Gen.listOfN(m, Gen.choose(0, k - 1))
+      x <- Gen.listOfN(m * sd, grid)
+    } yield {
+      val cb = books.map(_.map(_.toArray).toArray).toArray
+      cb.indices.foreach(sp => cb(sp)(k - 1) = cb(sp)(dups(sp)).clone())
+      (cb, x.toArray)
+    }
+    check("nearest", Prop.forAll(caseGen) { case (cb, x) =>
+      val book = new graft.ops.Codebook(cb)
+      val sd = cb(0)(0).length
+      // brute force: the fused form per (subspace, code), written out
+      def fused(sp: Int, c: Array[Double]): Double = {
+        var xx = 0.0; var xc = 0.0; var cc = 0.0
+        for (i <- 0 until sd) {
+          val v = x(sp * sd + i)
+          xx += v * v; xc += v * c(i).toFloat.toDouble; cc += c(i) * c(i)
+        }
+        xx - 2.0 * xc + cc
+      }
+      val want = cb.indices.map { sp =>
+        val ds = cb(sp).map(c => fused(sp, c))
+        val best = ds.indices.minBy(k => (ds(k), k))
+        val second = if (ds.length > 1) ds.sorted.apply(1) else Double.PositiveInfinity
+        (best, ds(best), second)
+      }
+      val codes = new Array[Int](cb.length)
+      val err = book.encode(x, codes)
+      val perSubspace = cb.indices.forall { sp =>
+        val top2 = new Array[Double](2)
+        val xx = book.selfDot(x, sp)
+        val got = book.nearest(x, sp, xx, top2)
+        val (best, d, second) = want(sp)
+        got == best && book.d2(x, sp, xx, got) == d && top2(0) == d && top2(1) == second
+      }
+      perSubspace && codes.toSeq == want.map(_._1) &&
+        err == want.map(_._2).foldLeft(0.0)(_ + _)
+    })
+  }
 }

@@ -844,9 +844,11 @@ class PlanSpec extends AnyFunSuite {
     // corpus-wide ordinal
     val execs = "Window \\[".r.findAllIn(plan).size
     assert(execs == 1, s"one bounded window exec: $plan")
-    // the key is pre-projected (`_wN = b div 8`) before the exec
-    assert("div 8\\) AS _w\\d".r.findAllIn(plan).nonEmpty,
-      s"window must key on the grid-constant (b div 8): $plan")
+    // the key is pre-projected (`_wN = WindowKeys.boundedRankKey(b)`)
+    // before the exec
+    assert("least\\(length\\(cast\\(b#\\d+L as string\\)\\), 0\\) AS _w\\d".r
+      .findAllIn(plan).nonEmpty,
+      s"window must key on the grid-constant boundedRankKey(b): $plan")
   }
 
   test("decontam_spans: islands window DOC-keyed; benchmark probe is a semi-join, no cartesian") {

@@ -45,5 +45,17 @@ class WindowKeysSpec extends AnyFunSuite {
     }
     assert(specs.nonEmpty && specs.forall(_.nonEmpty),
       s"partition key was folded away for a non-nullable input:\n$headPlan")
+    // TextOps.heapsFit's shape: a NON-nullable integer column over the
+    // literal range grid, summed cumulatively
+    val gridPlan = spark.range(0, 8).select(col("id").as("b"))
+      .select(col("b"), sum(col("b")).over(
+        Window.partitionBy(WindowKeys.boundedRankKey(col("b"))).orderBy(col("b"))
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)).as("cum"))
+      .queryExecution.optimizedPlan
+    val gridSpecs = gridPlan.collect {
+      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w.partitionSpec
+    }
+    assert(gridSpecs.nonEmpty && gridSpecs.forall(_.nonEmpty),
+      s"partition key was folded away for the literal grid:\n$gridPlan")
   }
 }
