@@ -1,6 +1,6 @@
 package graft
 
-import graft.embed.{EmbedOps, Embedder, HashEmbedder, OllamaEmbedder, RemoteEmbedder, TransformerEmbedder}
+import graft.embed.{EmbedOps, Embedder, HashEmbedder, HttpBackend, OllamaEmbedder, RemoteEmbedder, TransformerEmbedder}
 import graft.index.{IndexManifest, VectorIndex}
 import graft.ingest.{Chunker, Sources}
 import graft.query.Knn
@@ -154,11 +154,66 @@ object Graft {
   /** Backend endpoints for manifest-driven dispatch (reference env
     * defaults: EMBEDDING_SERVER / OLLAMA_HOST), plus the optional
     * local model directory that makes the `local` manifest tag run
-    * fully in-process (the reference's SentenceTransformer path). */
+    * fully in-process (the reference's SentenceTransformer path).
+    * The one place a backend tag becomes an embedder ([[embedder]])
+    * and is gated ([[gate]]) — for the index side ([[IndexCli]]) and
+    * the ask side ([[openAuto]]) alike. */
   case class Backends(
       remoteUrl: String = "http://localhost:8080",
       ollamaUrl: String = "http://localhost:11434",
-      localModelDir: Option[String] = None)
+      localModelDir: Option[String] = None) {
+
+    /** The production stack for a backend tag, with no I/O — the
+      * reference's `EmbeddingHandler` choice (`index.py:56-69`,
+      * `ask.py:109-116`): the offline-deterministic hash featurizer
+      * keeps its own tag, ollama gets the zero-fallback stack, local
+      * the in-process model, anything else the retrying remote client. */
+    def embedder(kind: String, model: String, dim: Int): Embedder = kind match {
+      case "hash" => new HashEmbedder(dim)
+      case "ollama" => OllamaEmbedder.resilient(ollamaUrl, model, dim)
+      // real in-process model: the reference's primary path
+      // (index.py:72-111 loads a SentenceTransformer in-process)
+      case "local" if localModelDir.isDefined => new TransformerEmbedder(localModelDir.get)
+      case "local" =>
+        // no local weights configured: the reference's own ImportError
+        // path falls back to the remote server (ask.py:160-163) — same
+        // here, with the wrapper keeping the `local` tag so validation
+        // stays consistent
+        val fallback = RemoteEmbedder.withRetry(remoteUrl, model, dim)
+        new Embedder {
+          override def dim: Int = fallback.dim
+          override def model: String = fallback.model
+          override def kind: String = "local"
+          override def embed(texts: Seq[String]): Seq[Array[Float]] = fallback.embed(texts)
+        }
+      case _ => RemoteEmbedder.withRetry(remoteUrl, model, dim)
+    }
+
+    /** Availability + probe gate on the RAW (unwrapped) client that
+      * [[embedder]] wraps — gating the resilient stack would be
+      * useless, its fallback swallows exactly the failures the gate
+      * must surface (a down server would index, or answer from, all
+      * zero vectors). The probe embed also catches a live server whose
+      * model emits another dimensionality, which availability alone
+      * cannot see, and loads a local export (missing safetensors or
+      * vocab, corrupt header). */
+    def gate(kind: String, model: String, dim: Int): Either[String, Unit] = kind match {
+      case "hash" => Right(())
+      case "local" if localModelDir.isDefined =>
+        probe(new TransformerEmbedder(localModelDir.get), s"local model ${localModelDir.get}")
+      case "ollama" =>
+        probe(new OllamaEmbedder(ollamaUrl, model, dim), s"Ollama model $model at $ollamaUrl")
+      case _ =>
+        probe(new RemoteEmbedder(remoteUrl, model, dim), s"embedding server at $remoteUrl")
+    }
+
+    private def probe(raw: Embedder, what: String): Either[String, Unit] = raw match {
+      case http: HttpBackend if !http.checkAvailability() => Left(s"$what: not available")
+      case _ =>
+        try { raw.embedOne("probe"); Right(()) }
+        catch { case ex: Exception => Left(s"$what: probe embed failed: ${ex.getMessage}") }
+    }
+  }
 
   object Backends {
     /** Backend URLs from the reference's env names (index.py/ask.py
@@ -177,106 +232,44 @@ object Graft {
 
   /** Manifest-driven embedder dispatch — the reference resolves the
     * query-side backend from the index's recorded `embedding_type`
-    * (`ask.py:109-116`: ollama → per-text Ollama client, local →
-    * in-process model, else → batched remote server). Here: the
-    * offline-deterministic hash featurizer keeps its own tag, ollama
-    * gets the zero-fallback stack, anything else the retrying remote
-    * client — the same resolution order. */
+    * (`ask.py:109-116`); [[Backends.embedder]] is that resolution. */
   def embedderFor(
       manifest: IndexManifest,
       dim: Int = 64,
       backends: Backends = Backends()): Embedder =
-    manifest.embedding_type match {
-      case "hash" => new HashEmbedder(dim)
-      case "ollama" =>
-        OllamaEmbedder.resilient(backends.ollamaUrl, manifest.embedding_model, dim)
-      case "local" =>
-        backends.localModelDir match {
-          // real in-process model: the reference's primary path
-          // (index.py:72-111 loads a SentenceTransformer in-process)
-          case Some(dir) => new TransformerEmbedder(dir)
-          // no local weights configured: the reference's own
-          // ImportError path falls back to the remote server
-          // (ask.py:160-163) — same here, with the wrapper keeping the
-          // manifest's `local` tag so validation stays consistent
-          case None =>
-            val fallback =
-              RemoteEmbedder.withRetry(backends.remoteUrl, manifest.embedding_model, dim)
-            new Embedder {
-              override def dim: Int = fallback.dim
-              override def model: String = fallback.model
-              override def kind: String = "local"
-              override def embed(texts: Seq[String]): Seq[Array[Float]] = fallback.embed(texts)
-            }
-        }
-      case _ =>
-        RemoteEmbedder.withRetry(backends.remoteUrl, manifest.embedding_model, dim)
-    }
+    backends.embedder(manifest.embedding_type, manifest.embedding_model, dim)
 
   /** Open an index letting the manifest choose the embedder — the
     * exact reference flow (load metadata, then dispatch on
-    * embedding_type). */
+    * embedding_type). Fails fast at open time, reference-style
+    * (ask.py checks backend availability before answering), through
+    * [[Backends.gate]]. */
   def openAuto(
       spark: SparkSession,
       indexPath: String,
       dim: Int = 64,
       backends: Backends = Backends()): AskSession = {
     val manifest = readManifestOrFail(spark, indexPath)
-    // fail fast at open time, reference-style (ask.py checks backend
-    // availability before answering): a down or dim-mismatched server
-    // behind the zero-fallback stack would otherwise silently turn
-    // every query embedding into a zero vector (empty kNN context)
-    gateBackend(spark, indexPath, manifest, dim, backends)
+    backends.gate(manifest.embedding_type, manifest.embedding_model, dim)
+      .left.foreach(err => throw new IllegalStateException(err))
     // dispatch and open share ONE manifest read — no second fetch, no
     // window for the manifest to change between dispatch and validate
-    openWith(spark, indexPath, manifest, embedderFor(manifest, dim, backends))
-  }
-
-  /** Open-time availability + probe gate on the RAW (unwrapped) HTTP
-    * client — probing the resilient wrapper would be useless, its
-    * fallback swallows exactly the failures the gate must surface.
-    * The probe embed additionally catches a live server whose model
-    * emits a different dimensionality (availability alone cannot). */
-  private def gateBackend(spark: SparkSession, indexPath: String,
-      manifest: IndexManifest, dim: Int, backends: Backends): Unit = {
-    def probe(e: Embedder, what: String): Unit =
-      try e.embedOne("probe")
-      catch {
-        case ex: Exception => throw new IllegalStateException(
-          s"$what probe embed failed (is the model's dimensionality $dim?): ${ex.getMessage}", ex)
-      }
-    manifest.embedding_type match {
-      case "hash" => ()
-      case "local" if backends.localModelDir.isDefined =>
-        // in-process model gate: loading + one probe embed surfaces a
-        // missing/corrupt export; the dim check compares against the
-        // INDEXED vectors themselves (not the caller's dim param, which
-        // AskCli can't know for an arbitrary model) — a wrong model dir
-        // for this index fails fast instead of searching a mixed space
-        val e = new TransformerEmbedder(backends.localModelDir.get)
-        probe(e, s"local model ${backends.localModelDir.get}")
-        VectorIndex.readVectors(spark, indexPath)
-          .select(org.apache.spark.sql.functions.size(
-            org.apache.spark.sql.functions.col("embedding")))
+    val embedder = embedderFor(manifest, dim, backends)
+    embedder match {
+      // an in-process model's width is checked against the INDEXED
+      // vectors (AskCli can't know the dim of an arbitrary model): a
+      // wrong model dir for this index fails fast instead of searching
+      // a mixed space
+      case local: TransformerEmbedder =>
+        VectorIndex.readVectors(spark, indexPath).select(size(col("embedding")))
           .head(1).headOption.map(_.getInt(0)).foreach { indexDim =>
-          if (e.dim != indexDim)
-            throw new IllegalStateException(
-              s"local model ${backends.localModelDir.get} emits dim ${e.dim}, " +
-                s"index vectors are dim $indexDim")
-        }
-      case "ollama" =>
-        val raw = new OllamaEmbedder(backends.ollamaUrl, manifest.embedding_model, dim)
-        if (!raw.checkAvailability())
-          throw new IllegalStateException(
-            s"Ollama not available at ${backends.ollamaUrl} (or model ${manifest.embedding_model} missing)")
-        probe(raw, "Ollama")
-      case _ =>
-        val raw = new RemoteEmbedder(backends.remoteUrl, manifest.embedding_model, dim)
-        if (!raw.checkAvailability())
-          throw new IllegalStateException(
-            s"embedding server not available at ${backends.remoteUrl}")
-        probe(raw, "embedding server")
+            if (local.dim != indexDim)
+              throw new IllegalStateException(
+                s"local model ${local.modelDir} emits dim ${local.dim}, index vectors are dim $indexDim")
+          }
+      case _ => ()
     }
+    openWith(spark, indexPath, manifest, embedder)
   }
 
   private def readManifestOrFail(spark: SparkSession, indexPath: String): IndexManifest =
@@ -319,7 +312,7 @@ object Graft {
       question: String,
       k: Int = 5,
       embedder: Embedder = HashEmbedder.default): AskResult = {
-    val manifest = VectorIndex.readManifest(spark, indexPath)
+    val manifest = readManifestOrFail(spark, indexPath)
     validate(manifest, embedder)
     new AskSession(manifest, VectorIndex.readVectors(spark, indexPath), embedder).ask(question, k)
   }

@@ -1,13 +1,13 @@
 package graft
 
-import graft.embed.{Embedder, HashEmbedder, OllamaEmbedder, RemoteEmbedder}
+import graft.embed.Embedder
 import org.apache.spark.sql.SparkSession
 
 /** Batch indexing CLI — the engine's `python index.py <repo>`
   * (reference `index.py:481-584`): validate the corpus path, pick an
   * embedding backend from flags, run the index build, report chunk
   * counts. The per-file work is [[Graft.index]]'s lazy map-only plan;
-  * this main is argument parsing + the availability gate + a summary.
+  * this main is argument parsing + the backend gate + a summary.
   *
   * Flags mirror the reference's mutually-exclusive backend group:
   *   --hash-embeddings    deterministic offline featurizer (default)
@@ -33,12 +33,7 @@ object IndexCli {
       chunkSize: Int = graft.ingest.Chunker.DefaultChunkSize,
       indexPath: String = "graft_index",
       dim: Int = 64,
-      backends: Graft.Backends = envBackends())
-
-  /** Reference env defaults (index.py reads OLLAMA_HOST /
-    * EMBEDDING_SERVER from .env) — shared with the ask side so both
-    * resolve the same hosts. */
-  def envBackends(): Graft.Backends = Graft.Backends.fromEnv()
+      backends: Graft.Backends = Graft.Backends.fromEnv())
 
   private[graft] def parse(argv: Array[String]): Either[String, Args] = {
     var a = Args()
@@ -63,7 +58,7 @@ object IndexCli {
         case "--ollama-embeddings" => a = a.copy(backend = "ollama"); Right(())
         case "--remote-embeddings" => a = a.copy(backend = "remote"); Right(())
         case "--local-model" =>
-          // value optional: envBackends() already resolved
+          // value optional: Backends.fromEnv() already resolved
           // GRAFT_LOCAL_MODEL, so a bare flag selects that directory
           if (i + 1 < argv.length && !argv(i + 1).startsWith("--")) {
             i += 1
@@ -95,42 +90,18 @@ object IndexCli {
     else Right(a)
   }
 
-  /** Backend from flags. HTTP backends are gated by availability AND
-    * a probe embed — the probe is what catches a server whose model
-    * emits a different dimensionality (otherwise the zero-fallback
-    * stack would silently index all-zero vectors, reference-style
-    * availability alone cannot see it). */
-  private[graft] def embedderOf(a: Args): Either[String, Embedder] = a.backend match {
-    case "hash" => Right(new HashEmbedder(a.dim))
-    case "local" =>
-      a.backends.localModelDir match {
-        case None => Left("--local-model requires a model directory (or set GRAFT_LOCAL_MODEL)")
-        case Some(dir) =>
-          // construction is lazy; the probe is what loads and validates
-          // the export (missing safetensors/vocab, corrupt header)
-          val e = new graft.embed.TransformerEmbedder(dir)
-          probe(e).map(_ => e)
-      }
-    case "ollama" =>
-      val model = a.model.getOrElse("nomic-embed-text")
-      val raw = new OllamaEmbedder(a.backends.ollamaUrl, model, a.dim)
-      if (!raw.checkAvailability())
-        Left(s"Ollama not available at ${a.backends.ollamaUrl} (or model $model missing)")
-      else probe(raw).map(_ =>
-        graft.embed.OllamaEmbedder.resilient(a.backends.ollamaUrl, model, a.dim))
-    case "remote" =>
-      val model = a.model.getOrElse("all-MiniLM-L6-v2")
-      val raw = new RemoteEmbedder(a.backends.remoteUrl, model, a.dim)
-      if (!raw.checkAvailability())
-        Left(s"embedding server not available at ${a.backends.remoteUrl}")
-      else probe(raw).map(_ =>
-        RemoteEmbedder.withRetry(a.backends.remoteUrl, model, a.dim))
-    case other => Left(s"unknown backend: $other (expected hash|local|ollama|remote)")
+  /** Backend from flags, built and gated by [[Graft.Backends]] (the
+    * ask side's resolver). What is the CLI's own: the backend names,
+    * the reference's default model per HTTP backend, and that `local`
+    * needs a model directory. */
+  private[graft] def embedderOf(a: Args): Either[String, Embedder] = {
+    val model = a.model.getOrElse(if (a.backend == "ollama") "nomic-embed-text" else "all-MiniLM-L6-v2")
+    if (!Set("hash", "local", "ollama", "remote").contains(a.backend))
+      Left(s"unknown backend: ${a.backend} (expected hash|local|ollama|remote)")
+    else if (a.backend == "local" && a.backends.localModelDir.isEmpty)
+      Left("--local-model requires a model directory (or set GRAFT_LOCAL_MODEL)")
+    else a.backends.gate(a.backend, model, a.dim).map(_ => a.backends.embedder(a.backend, model, a.dim))
   }
-
-  private def probe(e: Embedder): Either[String, Unit] =
-    try { e.embedOne("probe"); Right(()) }
-    catch { case ex: Exception => Left(s"probe embed failed: ${ex.getMessage}") }
 
   /** Scriptable body (tests inject the session and read the result). */
   def run(spark: SparkSession, a: Args, out: java.io.PrintStream): Int = {

@@ -1,16 +1,17 @@
 package graft.embed
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.UserDefinedFunction
-import org.apache.spark.sql.types.{ArrayType, FloatType}
 
 /** DataFrame-level embedding operators. The embedder rides the UDF
   * closure; per-executor it is deserialized once and reused across
   * rows (same lifecycle as the reference's module-level model cache,
-  * `embedding_server.py:40,103-120`). Batching is per Spark
-  * partition — the distributed analog of the reference's 200-text
-  * batches (`index.py:401-405`).
+  * `embedding_server.py:40,103-120`). Each row is one `embedOne`
+  * call: the reference's 200-text batches (`index.py:401-405`) wait
+  * for a benchmark workload whose backend has a per-call cost, since
+  * for the hash embedder a per-partition batch only adds a `Row`
+  * round trip.
   */
 object EmbedOps {
 
@@ -29,27 +30,4 @@ object EmbedOps {
 
   def embedLiteral(text: String, embedder: Embedder = HashEmbedder.default): Column =
     typedLit(embedder.embedOne(text))
-
-  /** Batched embedding via `mapPartitions`: texts reach the backend
-    * in groups of `batchSize` — the reference's 200-text API batches
-    * (`index.py:326,401-405`) — which is what a real model/HTTP
-    * backend needs to amortize per-call cost. `grouped` is lazy, so
-    * a partition is never fully materialized. Same results as
-    * [[withEmbedding]] (asserted in EmbedderSpec); the UDF form
-    * stays the default for codegen-friendly plans. */
-  def withEmbeddingBatched(
-      df: DataFrame,
-      textCol: String = "text",
-      outCol: String = "embedding",
-      embedder: Embedder = HashEmbedder.default,
-      batchSize: Int = 200): DataFrame = {
-    val schema = df.schema.add(outCol, ArrayType(FloatType, containsNull = false))
-    val textIdx = df.schema.fieldIndex(textCol)
-    df.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        val vecs = embedder.embed(batch.map(_.getString(textIdx)))
-        batch.iterator.zip(vecs.iterator).map { case (r, v) => Row.fromSeq(r.toSeq :+ v) }
-      }
-    }(Encoders.row(schema))
-  }
 }

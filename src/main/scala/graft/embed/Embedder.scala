@@ -10,9 +10,9 @@ package graft.embed
   * plug in behind this trait.
   *
   * Implementations MUST be serializable and cheap to construct: one
-  * instance is instantiated lazily per executor JVM inside
-  * `mapPartitions` / UDF closures (the Spark analog of the
-  * reference's per-process model cache, `embedding_server.py:103-120`).
+  * instance is deserialized lazily per executor JVM inside the embed
+  * UDF's closure (the Spark analog of the reference's per-process
+  * model cache, `embedding_server.py:103-120`).
   */
 trait Embedder extends Serializable {
   def dim: Int
@@ -24,9 +24,9 @@ trait Embedder extends Serializable {
     * embedder. */
   def kind: String = "custom"
 
-  /** Batch embed. Batch shape mirrors the reference's 200-text API
-    * batches (`index.py:326,401-405`); in Spark the partition is the
-    * natural batch and implementations may sub-batch internally. */
+  /** Batch embed — the reference's `embed(texts)` contract. The
+    * DataFrame operator ([[EmbedOps]]) calls [[embedOne]] once per
+    * row. */
   def embed(texts: Seq[String]): Seq[Array[Float]]
 
   def embedOne(text: String): Array[Float] = embed(Seq(text)).head
@@ -97,28 +97,11 @@ object HashEmbedder {
     if (text == null) Array.empty
     else text.toLowerCase.split("\\s+").filter(_.nonEmpty)
 
-  private val keyHashCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  private val keyHashes = new graft.functions.CrossHash.Memo60
 
   /** Memoized `CrossHash.md5Hash60("{seed}|{token}")`. */
-  def cachedKeyHash(seed: Long, token: String): Long = {
-    val key = seed.toString + "|" + token
-    val c = keyHashCache.get(key)
-    if (c != null) c.longValue()
-    else {
-      val h = graft.functions.CrossHash.md5Hash60(key)
-      if (keyHashCache.size < (1 << 20)) keyHashCache.put(key, h)
-      h
-    }
-  }
-
-  /** splitmix64 finalizer — stable, well-mixed 64-bit hash. */
-  def mix(x0: Long): Long = {
-    var x = x0 + 0x9E3779B97F4A7C15L
-    x = (x ^ (x >>> 30)) * 0xBF58476D1CE4E5B9L
-    x = (x ^ (x >>> 27)) * 0x94D049BB133111EBL
-    x ^ (x >>> 31)
-  }
+  def cachedKeyHash(seed: Long, token: String): Long =
+    keyHashes(seed.toString + "|" + token)
 
   /** Stable 64-bit string hash (FNV-1a over UTF-16 code units). */
   def stableHash64(s: String): Long = {

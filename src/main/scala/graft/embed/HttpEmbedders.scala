@@ -44,6 +44,13 @@ object Http {
   }
 }
 
+/** A raw HTTP client's availability check beside `embed` — the
+  * reference handlers' `check_availability` (`index.py:142-161,204-211`).
+  * [[graft.Graft.Backends.gate]] is where it is called. */
+trait HttpBackend extends Embedder {
+  def checkAvailability(): Boolean
+}
+
 /** Batched remote embedding server client — reference
   * `RemoteEmbeddingHandler` (`index.py:164-215`): POST
   * `{base}/embed` with `{"texts": [...], "model": m,
@@ -57,7 +64,7 @@ final class RemoteEmbedder(
     override val model: String,
     override val dim: Int,
     trustRemoteCode: Boolean = false,
-    timeoutMs: Long = 60000) extends Embedder {
+    timeoutMs: Long = 60000) extends HttpBackend {
   override def kind: String = "remote"
 
   @transient private lazy val client: HttpClient =
@@ -123,7 +130,7 @@ final class OllamaEmbedder(
     baseUrl: String,
     override val model: String,
     override val dim: Int,
-    timeoutMs: Long = 30000) extends Embedder {
+    timeoutMs: Long = 30000) extends HttpBackend {
   override def kind: String = "ollama"
 
   @transient private lazy val client: HttpClient =

@@ -29,8 +29,8 @@ import scala.jdk.CollectionConverters._
   * through [[TransformerEmbedder.loaded]] (ConcurrentHashMap keyed by
   * path) — the Spark analog of the reference's per-process model
   * cache. The scalar math is correctness-first: ~1 GFLOP per 128-token
-  * text for MiniLM-L6; at corpus scale the partition parallelism (and
-  * the batched [[EmbedOps]] plumbing) is what scales it, same as every
+  * text for MiniLM-L6; at corpus scale the partition parallelism of
+  * the per-row [[EmbedOps]] UDF is what scales it, same as every
   * other per-row featurizer here.
   */
 final class TransformerEmbedder(val modelDir: String) extends Embedder {

@@ -35,6 +35,27 @@ object CrossHash {
   def md5Hash60(s: String): Long =
     md5Hash60(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
+  /** Executor-wide bounded memo of [[md5Hash60]]: the distinct-key
+    * space (a vocabulary, a shingle set, char 3-grams) is orders of
+    * magnitude smaller than the occurrence stream that keys it, so
+    * after warmup a hash is a map lookup. Capped at 2²⁰ entries so a
+    * 100 TB shard can't grow it unboundedly — overflow degrades to
+    * direct hashing, never wrong results. One instance per key space,
+    * so one user's keys never crowd out another's. */
+  final class Memo60 {
+    private val cache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+
+    def apply(key: String): Long = {
+      val c = cache.get(key)
+      if (c != null) c.longValue()
+      else {
+        val h = md5Hash60(key)
+        if (cache.size < (1 << 20)) cache.put(key, h)
+        h
+      }
+    }
+  }
+
   /** Column form — pure builtins, codegen'd, no UDF. */
   def md5Hash60Col(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")

@@ -444,24 +444,10 @@ object Dedup extends QueryModule {
     fp
   }
 
-  /** Executor-wide bounded memo for [[md5Hash60]]. Shared by the
-    * token (SimHash), shingle (Jaccard/MinHash), and span hashers:
-    * duplicated text re-hashes nothing, and the distinct-key space
-    * (vocabulary / shingle set) is orders of magnitude smaller than
-    * the occurrence stream it keys. Capped at 2²⁰ entries per
-    * executor so a 100 TB shard can't grow it unboundedly —
-    * overflow degrades to direct hashing, never wrong results. */
-  private val hashCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  private[graft] def cachedHash60(tok: String): Long = {
-    val c = hashCache.get(tok)
-    if (c != null) c.longValue()
-    else {
-      val h = md5Hash60(tok)
-      if (hashCache.size < (1 << 20)) hashCache.put(tok, h)
-      h
-    }
-  }
+  /** The token (SimHash), shingle (Jaccard/MinHash) and span hashers'
+    * memo of [[md5Hash60]] — one key space, shared with TextOps'
+    * lang-id grams. */
+  private[graft] val cachedHash60 = new graft.functions.CrossHash.Memo60
 
   /** SimHash near-dups: 60-bit token-majority fingerprint, banded
     * into 4×15 bits; bucket-sharing pairs verified with

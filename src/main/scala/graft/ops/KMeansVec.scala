@@ -582,12 +582,7 @@ object KMeansVec extends QueryModule {
     import graft.functions.VectorFunctions.{cosineDist, r6}
     val e = t(s, dir, "embeddings")
     val (centroids, assigned) = fit(s, dir, K, iters = 1)
-    val probeUdf = udf { (qe: Seq[Float]) =>
-      val q = qe.toArray
-      centroids.zipWithIndex
-        .map { case (c, i) => (OpsShared.cosineDistTo(q, c), i) }
-        .sortBy(p => (p._1, p._2)).take(nProbe).map(_._2)
-    }
+    val probeUdf = udf((qe: Seq[Float]) => OpsShared.probeCells(centroids, qe.toArray, nProbe))
     val qprobes = e.filter(col("vec_id") < 3)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
       .withColumn("cluster", explode(probeUdf(col("qe"))))

@@ -46,17 +46,16 @@ class EmbedderSpec extends AnyFunSuite {
     assert(e.embed(texts).map(_.toSeq) == texts.map(t => e.embedOne(t).toSeq))
   }
 
-  test("batched mapPartitions embedding ≡ UDF embedding") {
+  test("withEmbedding UDF ≡ embedOne row by row") {
     val spark = SparkSpec.spark
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "text")
-    val viaUdf = graft.embed.EmbedOps.withEmbedding(docs, "text")
-      .select("doc_id", "embedding").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
-    val viaBatch = graft.embed.EmbedOps.withEmbeddingBatched(docs, "text", batchSize = 37)
-      .select("doc_id", "embedding").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
-    assert(viaUdf == viaBatch)
+    val rows = graft.embed.EmbedOps.withEmbedding(docs, "text")
+      .select("doc_id", "text", "embedding").collect()
+    assert(rows.nonEmpty)
+    rows.foreach { r =>
+      assert(r.getSeq[Float](2) == e.embedOne(r.getString(1)).toSeq, s"doc_id=${r.getLong(0)}")
+    }
   }
 
   test("approx_count_distinct within 10% of exact on fixtures") {

@@ -224,6 +224,12 @@ class GraftFacadeSpec extends AnyFunSuite {
     assert(e.getMessage.contains("No index found"))
   }
 
+  test("one-shot ask on a missing index fails with the same message as open") {
+    val e = intercept[IllegalStateException](
+      Graft.ask(spark, "/tmp/definitely-not-an-index", "q"))
+    assert(e.getMessage.contains("No index found"), e.getMessage)
+  }
+
   test("markdown sink: header on create, append blocks (ask.py:258-273 format)") {
     val f = Files.createTempDirectory("graft-md").resolve("qa.md").toString
     val t = ZonedDateTime.of(2026, 1, 2, 3, 4, 5, 0, ZoneOffset.UTC)

@@ -1,6 +1,7 @@
 package graft
 
 import java.net.InetSocketAddress
+import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
@@ -132,6 +133,25 @@ class HttpEmbeddersSpec extends AnyFunSuite with BeforeAndAfterAll {
     val remote = IndexCli.embedderOf(IndexCli.Args(corpus = "/c", backend = "remote",
       dim = 4, backends = Graft.Backends(remoteUrl = base)))
     assert(remote.exists(_.kind == "remote"), remote.toString)
+  }
+
+  test("one backend gate: a dim-mismatched Ollama server fails IndexCli and openAuto alike") {
+    val spark = SparkSpec.spark
+    val corpus = Files.createTempDirectory("graft-http-corpus")
+    Files.write(corpus.resolve("db.log"), "connection pool exhausted".getBytes("UTF-8"))
+    val idx = Files.createTempDirectory("graft-http-idx").toString
+    val backends = Graft.Backends(ollamaUrl = base)
+    Graft.index(spark, corpus.toString, idx,
+      Graft.IndexConfig(embedder = backends.embedder("ollama", "nomic-embed-text", 4)))
+    Graft.openAuto(spark, idx, dim = 4, backends = backends).close()
+    // the stub emits 4-dim vectors: at dim 8 both sides hit the same
+    // probe, and report it in the same words
+    val cli = IndexCli.embedderOf(IndexCli.Args(corpus = "/c", backend = "ollama",
+      dim = 8, backends = backends))
+    val ask = intercept[IllegalStateException](
+      Graft.openAuto(spark, idx, dim = 8, backends = backends))
+    assert(ask.getMessage.contains("probe embed failed"), ask.getMessage)
+    assert(cli == Left(ask.getMessage), cli.toString)
   }
 
   test("manifest dispatch: embedding_type picks the backend stack (ask.py:109-116)") {

@@ -49,16 +49,17 @@ class KernelPropertySpec extends AnyFunSuite {
   }
 
   test("md5Hash60: equals the first-15-hex-chars law and stays in [0, 2^60)") {
+    val memo = new CrossHash.Memo60
     check("hex-prefix-law", Prop.forAll(Gen.asciiPrintableStr) { s =>
       val h = CrossHash.md5Hash60(s)
       val md = java.security.MessageDigest.getInstance("MD5")
         .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       val hex = md.map(b => f"$b%02x").mkString.take(15)
-      // cachedHash60 memoizes md5Hash60 for the tokenizer and the
-      // shingle hashes — the cache must be value-transparent, on the
-      // first (miss) and the second (hit) lookup alike
+      // CrossHash.Memo60 memoizes md5Hash60 for the embedder's tokens
+      // and the shingle hashes — the memo must be value-transparent,
+      // on the first (miss) and the second (hit) lookup alike
       h == java.lang.Long.parseLong(hex, 16) && h >= 0L && h < (1L << 60) &&
-        Dedup.cachedHash60(s) == h && Dedup.cachedHash60(s) == h
+        memo(s) == h && memo(s) == h
     })
   }
 
