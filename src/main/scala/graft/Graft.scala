@@ -3,7 +3,7 @@ package graft
 import graft.embed.{EmbedOps, Embedder, HashEmbedder, HttpBackend, OllamaEmbedder, RemoteEmbedder, TransformerEmbedder}
 import graft.index.{IndexManifest, VectorIndex}
 import graft.ingest.{Chunker, Sources}
-import graft.query.Knn
+import graft.query.{Knn, Postings}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -58,11 +58,10 @@ object Graft {
     vectors.withColumn("_uid",
       concat_ws("\u0000", col("source"), col("chunk_index")))
 
-  /** Collects the ranked `(_uid, dist)` pairs, fetches their payload
-    * with one filter over the index (no job when nothing ranked), and
-    * builds hits and context on the driver in rank order. */
-  private def answer(uids: DataFrame, ranked: DataFrame): AskResult = {
-    val rank = ranked.collect().map(r => r.getString(0) -> r.getDouble(1)).toSeq
+  /** Fetches the payload of the ranked `(_uid, dist)` pairs with one
+    * filter over the index (no job when nothing ranked), and builds
+    * hits and context on the driver in rank order. */
+  private def answer(uids: DataFrame, rank: Seq[(String, Double)]): AskResult = {
     val rows = if (rank.isEmpty) Map.empty[String, Row] else uids
       .filter(col("_uid").isin(rank.map(_._1): _*))
       .select("_uid", "id", "source", "chunk_index", "text").collect()
@@ -90,65 +89,63 @@ object Graft {
   /** Interactive-session handle — the REPL equivalent (the
     * reference keeps one ChromaDB collection + manifest open across
     * questions, `ask.py:298-326`). The vector index is cached once
-    * (`persist`); `close()` releases it. [[ask]] runs two Spark jobs:
-    * rank over `(_uid, embedding)` collecting the top k `(_uid, dist)`,
-    * then fetch those k rows; the context is assembled on the driver
-    * and `hits` is a materialized local relation
-    * ([[graft.query.Knn.topKWithFetch]] is the lazy, scale-out form). */
+    * (`persist`); the keyword postings are built by the first
+    * [[askHybrid]] and cached beside it; `close()` releases both.
+    * [[ask]] runs two Spark jobs: rank over `(_uid, embedding)`
+    * collecting the top k `(_uid, dist)`, then fetch those k rows; the
+    * context is assembled on the driver and `hits` is a materialized
+    * local relation ([[graft.query.Knn.topKWithFetch]] is the lazy,
+    * scale-out form). */
   final class AskSession private[Graft] (
       val manifest: IndexManifest,
       vectors: DataFrame,
       embedder: Embedder) extends AutoCloseable {
 
+    private var postings: Option[Postings] = None
+
     def ask(question: String, k: Int = 5): AskResult = {
       val uids = withUid(vectors)
-      answer(uids, Knn.topK(uids.select(col("_uid"), col("embedding")),
-        EmbedOps.embedLiteral(question, embedder), k, idCol = "_uid").select(col("_uid"), col("dist")))
+      answer(uids, rankVector(uids, question, k))
     }
 
-    /** Hybrid ask: keyword BM25 + vector cosine, fused by
-      * reciprocal rank (ops.Retrieval's combiner on the LIVE index).
-      * A hit scores 1/(60+r) per system it appears in (top-`depth`
-      * lists; absence contributes 0 — standard RRF). Catches what
-      * pure vector search misses: exact identifiers, error codes,
-      * rare tokens the embedder smears. The fused top-k ranks as
-      * `dist = -fused` and shares [[ask]]'s fetch and assembly. */
+    /** The top `k` `(_uid, dist)` by cosine distance: one job. */
+    private def rankVector(uids: DataFrame, question: String, k: Int): Seq[(String, Double)] =
+      Knn.topK(uids.select(col("_uid"), col("embedding")),
+        EmbedOps.embedLiteral(question, embedder), k, idCol = "_uid")
+        .select(col("_uid"), col("dist")).collect()
+        .map(r => r.getString(0) -> r.getDouble(1)).toSeq
+
+    /** Hybrid ask: keyword BM25 + vector cosine, fused by reciprocal
+      * rank. A hit scores 1/(60+r) per system it appears in (top-`depth`
+      * lists; absence contributes 0 — standard RRF). Catches what pure
+      * vector search misses: exact identifiers, error codes, rare tokens
+      * the embedder smears. Question and chunks share one tokenizer
+      * ([[HashEmbedder.tokenize]]: case-folded, split on whitespace).
+      * Three jobs on a warm session: the vector top `depth`, the
+      * question terms' postings ([[Postings.rank]]), and [[ask]]'s
+      * fetch; BM25 and the fusion run on the driver. The first call
+      * also builds the postings ([[Postings.build]]). The fused top-k
+      * ranks as `dist = -fused`. */
     def askHybrid(question: String, k: Int = 5, depth: Int = graft.ops.Retrieval.FuseDepth): AskResult = {
       val uids = withUid(vectors)
-      answer(uids, rankHybrid(uids, question, k, depth, embedder))
+      val vector = rankVector(uids, question, depth).map(_._1)
+      val terms = HashEmbedder.tokenize(question).distinct.toSeq
+      // a question with no terms has no keyword side and builds no postings
+      val keyword = if (terms.isEmpty) Nil else keywordIndex(uids).rank(terms, depth)
+      answer(uids, Postings.fuse(keyword, vector, k))
     }
 
-    override def close(): Unit = vectors.unpersist()
-  }
+    private def keywordIndex(uids: DataFrame): Postings = synchronized {
+      if (postings.isEmpty) postings = Some(Postings.build(uids.select(col("_uid"), col("text"))))
+      postings.get
+    }
 
-  private def rankHybrid(uids: DataFrame, question: String, k: Int,
-      depth: Int, embedder: Embedder): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val terms = HashEmbedder.tokenize(question).distinct.toSeq
-    val kwTop = graft.ops.Retrieval
-      .bm25Score(uids.select(col("_uid"), col("text")), "_uid", "text", terms)
-      .filter(col("score") > 0) // a zero-score doc holds no keyword rank
-      .orderBy(col("score").desc, col("_uid")).limit(depth)
-      .withColumn("r_kw",
-        // bounded ≤depth-row slice — see WindowKeys.boundedRankKey
-        row_number().over(Window.partitionBy(
-          graft.functions.WindowKeys.boundedRankKey(col("_uid")))
-          .orderBy(col("score").desc, col("_uid"))))
-      .select(col("_uid"), col("r_kw"))
-    val vecTop = Knn
-      .topK(uids.select(col("_uid"), col("embedding")),
-        EmbedOps.embedLiteral(question, embedder), depth, idCol = "_uid")
-      .withColumn("r_vec",
-        row_number().over(Window.partitionBy(
-          graft.functions.WindowKeys.boundedRankKey(col("_uid")))
-          .orderBy(col("dist"), col("_uid"))))
-      .select(col("_uid"), col("r_vec"))
-    kwTop.join(vecTop, Seq("_uid"), "full_outer")
-      .withColumn("fused",
-        coalesce(lit(1.0) / (lit(60.0) + col("r_kw")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(60.0) + col("r_vec")), lit(0.0)))
-      .orderBy(col("fused").desc, col("_uid")).limit(k)
-      .select(col("_uid"), (-col("fused")).as("dist"))
+    /** Releases the postings, then the vectors they were built from. */
+    override def close(): Unit = synchronized {
+      postings.foreach(_.unpersist())
+      postings = None
+      vectors.unpersist()
+    }
   }
 
   /** Backend endpoints for manifest-driven dispatch (reference env

@@ -93,25 +93,17 @@ final class HashEmbedder(val dim: Int = 64, seed: Long = 42L) extends Embedder {
 object HashEmbedder {
   val default: HashEmbedder = new HashEmbedder(64)
 
+  /** Lower-cased in the root locale, so the tokens (and the vectors
+    * hashed from them) do not depend on the JVM's default locale (a
+    * `tr` default lower-cases `INFO` to `ınfo`), then split on
+    * whitespace. */
   def tokenize(text: String): Array[String] =
     if (text == null) Array.empty
-    else text.toLowerCase.split("\\s+").filter(_.nonEmpty)
+    else text.toLowerCase(java.util.Locale.ROOT).split("\\s+").filter(_.nonEmpty)
 
   private val keyHashes = new graft.functions.CrossHash.Memo60
 
   /** Memoized `CrossHash.md5Hash60("{seed}|{token}")`. */
   def cachedKeyHash(seed: Long, token: String): Long =
     keyHashes(seed.toString + "|" + token)
-
-  /** Stable 64-bit string hash (FNV-1a over UTF-16 code units). */
-  def stableHash64(s: String): Long = {
-    var h = 0xCBF29CE484222325L
-    var i = 0
-    while (i < s.length) {
-      h ^= s.charAt(i).toLong
-      h *= 0x100000001B3L
-      i += 1
-    }
-    h
-  }
 }

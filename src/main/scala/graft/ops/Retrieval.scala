@@ -41,8 +41,8 @@ object Retrieval extends QueryModule {
     * fixed term order, mirrored verbatim in SQL so the doubles match
     * bitwise). One token-stream groupBy; per-term tf/df live in
     * fixed conditional-aggregate columns (a search query is a
-    * handful of terms), so there is never a per-term join. Reused by
-    * the fixture queries and Graft.askHybrid. */
+    * handful of terms), so there is never a per-term join. Tokens are
+    * `split(' ')`, as the DuckDB oracles of its fixture queries split. */
   def bm25Score(docs: DataFrame, idCol: String, textCol: String,
       terms: Seq[String]): DataFrame = {
     val id = col(idCol)

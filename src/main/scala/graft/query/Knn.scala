@@ -85,15 +85,19 @@ object Knn {
   /** A collected hit, its fields named like the hit columns. */
   final case class Hit(id: String, source: String, chunk_index: Int, text: String, dist: Double)
 
+  /** Spark's sort order for doubles on the driver: `-0.0` equals `0.0`. */
+  val SparkDouble: Ordering[Double] = (a, b) => if (a == b) 0 else java.lang.Double.compare(a, b)
+
+  /** Spark's sort order for strings on the driver: UTF-8 bytes, not
+    * the UTF-16 units `String.compareTo` compares. */
+  val Utf8: Ordering[String] =
+    (a, b) => java.util.Arrays.compareUnsigned(a.getBytes(UTF_8), b.getBytes(UTF_8))
+
   /** Driver-side [[assembleContext]]: the same bytes, no Spark job.
-    * The `(dist, id, piece)` sort uses Spark's ordering (`-0.0` equals
-    * `0.0`, strings compare as UTF-8 bytes), so ties break as in `array_sort`. */
-  def assembleContext(hits: Seq[Hit]): String = {
-    val dist: Ordering[Double] = (a, b) => if (a == b) 0 else java.lang.Double.compare(a, b)
-    val utf8: Ordering[String] =
-      (a, b) => java.util.Arrays.compareUnsigned(a.getBytes(UTF_8), b.getBytes(UTF_8))
+    * The `(dist, id, piece)` sort uses Spark's ordering, so ties break
+    * as in `array_sort`. */
+  def assembleContext(hits: Seq[Hit]): String =
     hits.map(h => (h.dist, h.id,
         PieceFormat.formatLocal(java.util.Locale.US, h.source, h.chunk_index, h.text)))
-      .sorted(Ordering.Tuple3(dist, utf8, utf8)).map(_._3).mkString
-  }
+      .sorted(Ordering.Tuple3(SparkDouble, Utf8, Utf8)).map(_._3).mkString
 }

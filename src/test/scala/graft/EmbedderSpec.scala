@@ -41,6 +41,18 @@ class EmbedderSpec extends AnyFunSuite {
     assert(e.embedOne("Hello World").toSeq == e.embedOne("hello   world").toSeq)
   }
 
+  test("tokens and vectors do not depend on the JVM's default locale") {
+    val text = "INFO Login FAILED at IRQ 7"
+    val vec = e.embedOne(text).toSeq
+    val saved = java.util.Locale.getDefault
+    try {
+      // a Turkish default lower-cases I to a dotless ı
+      java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr-TR"))
+      assert(HashEmbedder.tokenize(text).toSeq == Seq("info", "login", "failed", "at", "irq", "7"))
+      assert(e.embedOne(text).toSeq == vec)
+    } finally java.util.Locale.setDefault(saved)
+  }
+
   test("batch embed matches single embed") {
     val texts = Seq("a b c", "d e f", "g h i")
     assert(e.embed(texts).map(_.toSeq) == texts.map(t => e.embedOne(t).toSeq))

@@ -127,6 +127,68 @@ class GraftFacadeSpec extends AnyFunSuite {
     assert(r.context == sparkContext(r.hits))
   }
 
+  test("hybrid plan: a warm askHybrid runs at most 3 Spark jobs") {
+    val corpus = writeCorpus()
+    val idx = Files.createTempDirectory("graft-hybrid-jobs").toString
+    Graft.index(spark, corpus.toString, idx, Graft.IndexConfig(chunkSize = 50))
+    val session = Graft.open(spark, idx)
+    val (hits, hybridJobs) = try {
+      session.askHybrid("warm the postings", k = 3)
+      val (r, hybridJobs) =
+        JobCounter(spark.sparkContext)(session.askHybrid("connection pool exhausted", k = 3))
+      (r.hits.collect(), hybridJobs)
+    } finally session.close()
+    assert(hybridJobs >= 1 && hybridJobs <= 3, s"askHybrid ran $hybridJobs jobs")
+    assert(hits.length == 3)
+  }
+
+  test("close() unpersists the vectors and the postings, and may be called twice") {
+    val corpus = writeCorpus()
+    val idx = Files.createTempDirectory("graft-close").toString
+    Graft.index(spark, corpus.toString, idx, Graft.IndexConfig(chunkSize = 50))
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persisted
+    val session = Graft.open(spark, idx)
+    session.askHybrid("connection pool exhausted", k = 2)
+    val held = persisted -- before
+    assert(held.size == 2, s"expected the vectors and the postings cached, got ${held.size} RDDs")
+    session.close()
+    assert((persisted & held).isEmpty)
+    session.close()
+    assert((persisted & held).isEmpty)
+  }
+
+  /** Each hybrid hit's keyword share: its fused score less the vector
+    * side's 1/(60+r), r its rank in `ask`'s top `depth` (0 if absent). */
+  private def keywordShare(session: Graft.AskSession, q: String, depth: Int): Map[(String, Int), Double] = {
+    val vec = session.ask(q, depth).hits.collect().map(h => (h.getString(1), h.getInt(2))).zipWithIndex.toMap
+    session.askHybrid(q, k = depth, depth = depth).hits.collect().map { h =>
+      val key = (h.getString(1), h.getInt(2))
+      key -> (-h.getDouble(4) - vec.get(key).fold(0.0)(r => 1.0 / (60.0 + r + 1)))
+    }.toMap
+  }
+
+  test("hybrid ask: chunks are tokenized like the question (case folded, split on any whitespace)") {
+    val corpus = writeCorpus()
+    def put(rel: String, s: String): Unit = {
+      Files.createDirectories(corpus.resolve(rel).getParent)
+      Files.write(corpus.resolve(rel), s.getBytes(StandardCharsets.UTF_8))
+    }
+    put("app/auth.log", "2026-01-01 ERROR login failed node-07\n2026-01-01 WARN retry")
+    put("db/alert.log", "Mon Jan 01 03:00:00 2026\nORA-01555 caused by SQL statement below")
+    val idx = Files.createTempDirectory("graft-tokens").toString
+    Graft.index(spark, corpus.toString, idx)
+    val session = Graft.open(spark, idx)
+    try {
+      // `ERROR` and the line-ending `node-07` match the question's terms
+      val error = keywordShare(session, "error node-07", depth = 10)
+      assert(error.get(("app/auth.log", 0)).exists(_ > 0), s"no keyword rank: $error")
+      // the README's example: only the upper-case error code matches
+      val ora = keywordShare(session, "ORA-01555 snapshot too old", depth = 10)
+      assert(ora.get(("db/alert.log", 0)).exists(_ > 0), s"no keyword rank: $ora")
+    } finally session.close()
+  }
+
   test("driver-assembled context is byte-identical to Knn.assembleContext (Q1 ids, dist ties)") {
     // identical text in two files: equal vectors, so equal dist. Hits
     // rank by (dist, source NUL chunk_index): a/zeta.log first. The

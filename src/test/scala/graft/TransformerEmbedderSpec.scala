@@ -31,10 +31,22 @@ class TransformerEmbedderSpec extends AnyFunSuite {
       "jump", "##s", "##ing", "over", "lazy", "dog", ".", ",", "spark",
       "engine", "query", "data")
 
+  /** Stable 64-bit string hash (FNV-1a over UTF-16 code units). */
+  private def stableHash64(s: String): Long = {
+    var h = 0xCBF29CE484222325L
+    var i = 0
+    while (i < s.length) {
+      h ^= s.charAt(i).toLong
+      h *= 0x100000001B3L
+      i += 1
+    }
+    h
+  }
+
   /** Deterministic small weights: w(k) ∈ (-0.1, 0.1), different per
     * tensor via a name-seeded LCG — no Math.random, reproducible. */
   private def fill(name: String, n: Int): Array[Float] = {
-    var x = graft.embed.HashEmbedder.stableHash64(name)
+    var x = stableHash64(name)
     Array.fill(n) {
       x = x * 6364136223846793005L + 1442695040888963407L
       ((x >>> 11).toDouble / (1L << 53).toDouble - 0.5).toFloat * 0.2f

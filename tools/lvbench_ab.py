@@ -16,6 +16,11 @@ quartiles), the change in the median, and in how many pairs the change was
 better (ties count for neither side). A gain on a metric holds when the
 change wins at least 9 pairs in 10 and the medians differ by more than the
 parent's IQR. Failed operations are summed per side.
+
+With `--trace`, one more run per side follows, with `--trace 1` on the
+first seed, and the per-layer metrics BENCHMARK.json declares are printed
+side by side (parent, change, relative change), so a gain can be shown in
+the layer that makes it.
 """
 import argparse
 import json
@@ -35,11 +40,11 @@ def parse_seeds(text):
     return seeds
 
 
-def run_side(checkout, workload, seed, seconds):
-    """The result line of one untraced run, or None if the run failed."""
+def run_side(checkout, workload, seed, seconds, trace=False):
+    """The result line of one run, or None if the run failed."""
     done = subprocess.run(
         [sys.executable, "lvbench/run.py", "--workload", workload, "--seed", str(seed),
-         "--seconds", str(seconds), "--trace", "0"],
+         "--seconds", str(seconds), "--trace", "1" if trace else "0"],
         cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True)
     lines = done.stdout.strip().splitlines()
     if done.returncode != 0 or not lines:
@@ -72,6 +77,19 @@ def report(metrics, pairs):
               f"{iqr:>11.4g} {delta:>7.1f}% {wins:>3}/{len(both):<3}  {'yes' if holds else 'no'}")
 
 
+def report_layers(metrics, parent, change):
+    def show(x):
+        return f"{'-':>12}" if x is None else f"{x:>12.4g}"
+    print(f"{'layer metric':<32} {'parent':>12} {'change':>12} {'delta':>8}")
+    for m in metrics:
+        name = m["name"]
+        p, c = (None if r is None else r["metrics"].get(name, {}).get("value") for r in (parent, change))
+        if p is None and c is None:
+            continue
+        delta = f"{(c - p) / p * 100:7.1f}%" if p and c is not None else f"{'':>8}"
+        print(f"{name:<32} {show(p)} {show(c)} {delta}")
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--workload", required=True)
@@ -79,6 +97,8 @@ def main():
     ap.add_argument("--seconds", type=int, default=15)
     ap.add_argument("--parent", default="HEAD~1", help="commit to compare against")
     ap.add_argument("--parent-dir", help="an existing checkout of the parent, instead of a worktree")
+    ap.add_argument("--trace", action="store_true",
+                    help="also run one traced run per side and print its per-layer metrics")
     a = ap.parse_args()
     change = pathlib.Path.cwd()
     spec = json.loads((change / "BENCHMARK.json").read_text())
@@ -110,6 +130,9 @@ def main():
                     failed[side][1] += res["attempted"]
             if got["parent"] and got["change"]:
                 pairs.append((got["parent"], got["change"]))
+        if a.trace:
+            traced = {side: run_side(checkout, a.workload, seeds[0], a.seconds, trace=True)
+                      for side, checkout in (("parent", parent), ("change", change))}
     finally:
         if worktree is not None:
             subprocess.run(["git", "worktree", "remove", "--force", str(worktree)], cwd=change)
@@ -118,6 +141,10 @@ def main():
           f"failed operations: parent {failed['parent'][0]}/{failed['parent'][1]}, "
           f"change {failed['change'][0]}/{failed['change'][1]}")
     report(spec["end_to_end"], pairs)
+    if a.trace:
+        print(f"\n{a.workload}: one traced run per side, seed {seeds[0]}"
+              + "".join(f"; {side} run failed" for side, r in traced.items() if r is None))
+        report_layers(spec["per_layer"], traced["parent"], traced["change"])
 
 
 if __name__ == "__main__":
