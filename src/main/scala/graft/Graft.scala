@@ -4,7 +4,7 @@ import graft.embed.{EmbedOps, Embedder, HashEmbedder, HttpBackend, OllamaEmbedde
 import graft.index.{IndexManifest, VectorIndex}
 import graft.ingest.{Chunker, Sources}
 import graft.query.{Knn, Postings}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** User-facing facade — the engine's equivalents of the reference's
@@ -53,25 +53,31 @@ object Graft {
 
   /** The chunk id ("{basename}:{i}", quirk Q1) COLLIDES across
     * directories; (source, chunk_index) is the true unique key, so
-    * retrieval ranks and fetches on a synthesized unique uid. */
+    * retrieval ranks on a synthesized unique uid. */
   private def withUid(vectors: DataFrame): DataFrame =
     vectors.withColumn("_uid",
       concat_ws("\u0000", col("source"), col("chunk_index")))
 
+  /** Derived once: `createDataFrame(hits)` would re-derive it by Scala
+    * reflection on every question. */
+  private val HitEncoder = Encoders.product[Knn.Hit]
+
+  /** Hits and context from hits already on the driver in rank order. */
+  private def result(spark: SparkSession, hits: Seq[Knn.Hit]): AskResult =
+    AskResult(spark.createDataset(hits)(HitEncoder).toDF(),
+      if (hits.isEmpty) "No relevant data found in the database." else Knn.assembleContext(hits))
+
   /** Fetches the payload of the ranked `(_uid, dist)` pairs with one
-    * filter over the index (no job when nothing ranked), and builds
-    * hits and context on the driver in rank order. */
+    * filter over the index (no job when nothing ranked). */
   private def answer(uids: DataFrame, rank: Seq[(String, Double)]): AskResult = {
     val rows = if (rank.isEmpty) Map.empty[String, Row] else uids
       .filter(col("_uid").isin(rank.map(_._1): _*))
       .select("_uid", "id", "source", "chunk_index", "text").collect()
       .map(r => r.getString(0) -> r).toMap
-    val hits = rank.map { case (uid, dist) =>
+    result(uids.sparkSession, rank.map { case (uid, dist) =>
       val r = rows(uid)
       Knn.Hit(r.getString(1), r.getString(2), r.getInt(3), r.getString(4), dist)
-    }
-    AskResult(uids.sparkSession.createDataFrame(hits),
-      if (hits.isEmpty) "No relevant data found in the database." else Knn.assembleContext(hits))
+    })
   }
 
   /** The manifest must match the query-side embedder — a question
@@ -91,11 +97,9 @@ object Graft {
     * questions, `ask.py:298-326`). The vector index is cached once
     * (`persist`); the keyword postings are built by the first
     * [[askHybrid]] and cached beside it; `close()` releases both.
-    * [[ask]] runs two Spark jobs: rank over `(_uid, embedding)`
-    * collecting the top k `(_uid, dist)`, then fetch those k rows; the
+    * [[ask]] runs one Spark job, the top k with their payload; the
     * context is assembled on the driver and `hits` is a materialized
-    * local relation ([[graft.query.Knn.topKWithFetch]] is the lazy,
-    * scale-out form). */
+    * local relation. */
   final class AskSession private[Graft] (
       val manifest: IndexManifest,
       vectors: DataFrame,
@@ -103,10 +107,23 @@ object Graft {
 
     private var postings: Option[Postings] = None
 
-    def ask(question: String, k: Int = 5): AskResult = {
-      val uids = withUid(vectors)
-      answer(uids, rankVector(uids, question, k))
-    }
+    /** One Spark job: the cosine top `k` over `(_uid, embedding)` and
+      * the payload `id, source, chunk_index, text`, collected as the
+      * hits. `TakeOrderedAndProject` keeps `k` rows per partition, so
+      * the payload costs about `k` rows per partition on the driver.
+      * There is no separate fetch of the `k` rows: `_uid` is computed,
+      * so a filter on it cannot prune the scan, and the cached index
+      * decodes every row's payload for it anyway. Over uncached
+      * parquet, [[graft.query.Knn.topKWithFetch]] is the pruned form:
+      * it scores on `(id, embedding)` alone and joins the payload of
+      * the `k` winners back. */
+    def ask(question: String, k: Int = 5): AskResult =
+      result(vectors.sparkSession,
+        Knn.topK(withUid(vectors).select("_uid", "embedding", "id", "source", "chunk_index", "text"),
+          EmbedOps.embedLiteral(question, embedder), k, idCol = "_uid")
+          .select("id", "source", "chunk_index", "text", "dist").collect()
+          .map(r => Knn.Hit(r.getString(0), r.getString(1), r.getInt(2), r.getString(3), r.getDouble(4)))
+          .toSeq)
 
     /** The top `k` `(_uid, dist)` by cosine distance: one job. */
     private def rankVector(uids: DataFrame, question: String, k: Int): Seq[(String, Double)] =
@@ -122,10 +139,10 @@ object Graft {
       * the embedder smears. Question and chunks share one tokenizer
       * ([[HashEmbedder.tokenize]]: case-folded, split on whitespace).
       * Three jobs on a warm session: the vector top `depth`, the
-      * question terms' postings ([[Postings.rank]]), and [[ask]]'s
-      * fetch; BM25 and the fusion run on the driver. The first call
-      * also builds the postings ([[Postings.build]]). The fused top-k
-      * ranks as `dist = -fused`. */
+      * question terms' postings ([[Postings.rank]]), and the fetch of
+      * the fused top k's payload; BM25 and the fusion run on the
+      * driver. The first call also builds the postings
+      * ([[Postings.build]]). The fused top-k ranks as `dist = -fused`. */
     def askHybrid(question: String, k: Int = 5, depth: Int = graft.ops.Retrieval.FuseDepth): AskResult = {
       val uids = withUid(vectors)
       val vector = rankVector(uids, question, depth).map(_._1)
@@ -299,8 +316,10 @@ object Graft {
   /** Retrieval query: embed the question (driver-side scalar, like
     * the reference's single-string `get_embedding`, ask.py:109-116),
     * exact cosine top-k, context assembly, empty-result guard
-    * (ask.py:219-220) — [[AskSession.ask]]'s two-job plan over the
-    * parquet index; `hits` is a materialized local relation. LLM
+    * (ask.py:219-220) — [[AskSession.ask]]'s one-job plan over the
+    * uncached parquet index, whose scan reads every row's payload
+    * ([[graft.query.Knn.topKWithFetch]] reads the payload of the k
+    * winners only); `hits` is a materialized local relation. LLM
     * generation is out of engine scope by design (SURVEY Q5) — callers
     * take `context` to their model. */
   def ask(

@@ -1,6 +1,6 @@
 package graft
 
-import graft.embed.{Embedder, HashEmbedder, RetryEmbedder, ZeroFallbackEmbedder}
+import graft.embed.{EmbedOps, Embedder, HashEmbedder, RetryEmbedder, ZeroFallbackEmbedder}
 import graft.index.VectorIndex
 import graft.query.{Knn, MarkdownSink}
 import org.apache.spark.graft.JobCounter
@@ -140,6 +140,84 @@ class GraftFacadeSpec extends AnyFunSuite {
     } finally session.close()
     assert(hybridJobs >= 1 && hybridJobs <= 3, s"askHybrid ran $hybridJobs jobs")
     assert(hits.length == 3)
+  }
+
+  test("ask plan: a warm session ask runs 1 Spark job") {
+    val corpus = writeCorpus()
+    val idx = Files.createTempDirectory("graft-one-job").toString
+    Graft.index(spark, corpus.toString, idx, Graft.IndexConfig(chunkSize = 50))
+    val session = Graft.open(spark, idx)
+    val (hits, askJobs) = try {
+      session.ask("warm the cache", k = 3)
+      val (r, askJobs) = JobCounter(spark.sparkContext)(session.ask("connection pool exhausted", k = 3))
+      (r.hits.collect(), askJobs)
+    } finally session.close()
+    assert(askJobs == 1, s"ask ran $askJobs jobs")
+    assert(hits.length == 3)
+  }
+
+  test("one-job ask equals the two-step topKWithFetch reference bit for bit, at 1 and 4 partitions") {
+    // basename collision (server.log.1:0 twice) and a forced dist tie
+    // (identical text in two files) that only `_uid` breaks
+    val corpus = writeCorpus()
+    def put(rel: String, s: String): Unit = {
+      Files.createDirectories(corpus.resolve(rel).getParent)
+      Files.write(corpus.resolve(rel), s.getBytes(StandardCharsets.UTF_8))
+    }
+    put("a/zeta.log", "twin line seen twice\n")
+    put("b/alpha.log", "twin line seen twice\n")
+    put("app/server.log.1", "dup basename a\n")
+    put("db/server.log.1", "dup basename b\n")
+    val questions = Seq("twin line seen twice", "dup basename", "connection pool exhausted",
+      "database timeout", "   ")
+    import org.apache.spark.sql.functions.{col, concat_ws}
+    // the session's scan reads one partition per index file: each
+    // partition's heap holds payload rows, merged on the driver
+    def answers(parts: Int): Map[(String, Int), (Seq[org.apache.spark.sql.Row], String)] = {
+      val idx = Files.createTempDirectory(s"graft-fetch-$parts").toString
+      Graft.index(spark, corpus.toString, idx, Graft.IndexConfig(chunkSize = 50, numPartitions = Some(parts)))
+      val vectors = VectorIndex.readVectors(spark, idx)
+        .withColumn("_uid", concat_ws("\u0000", col("source"), col("chunk_index")))
+      assert(vectors.rdd.getNumPartitions == vectors.inputFiles.length)
+      assert(parts == 1 || vectors.rdd.getNumPartitions > 1)
+      val session = Graft.open(spark, idx)
+      try (for (q <- questions; k <- Seq(1, 2, 4, 50)) yield {
+        val ref = Knn.topKWithFetch(vectors, EmbedOps.embedLiteral(q, HashEmbedder.default), k,
+          idCol = "_uid", fetchCols = Seq("id", "source", "chunk_index", "text"))
+          .select(HitColumns.map(col): _*)
+        val refRows = ref.collect().toSeq
+        val refContext =
+          if (refRows.isEmpty) "No relevant data found in the database." else sparkContext(ref)
+        val got = session.ask(q, k)
+        val gotRows = got.hits.collect().toSeq
+        assert(gotRows == refRows, s"hits, question '$q', k=$k, $parts partitions")
+        // Row equality compares doubles by value: pin the dist bits too
+        assert(gotRows.map(r => java.lang.Double.doubleToRawLongBits(r.getDouble(4))) ==
+          refRows.map(r => java.lang.Double.doubleToRawLongBits(r.getDouble(4))))
+        assert(got.context == refContext, s"context, question '$q', k=$k, $parts partitions")
+        (q, k) -> (gotRows, got.context)
+      }).toMap
+      finally session.close()
+    }
+    val one = answers(1)
+    val four = try {
+      spark.conf.set("spark.sql.files.minPartitionNum", "4")
+      answers(4)
+    } finally spark.conf.set("spark.sql.files.minPartitionNum", "1")
+    assert(one == four)
+    // the tie breaks on `_uid`: a/zeta.log before b/alpha.log
+    val (twins, _) = one(("twin line seen twice", 2))
+    assert(twins.take(2).map(_.getString(1)) == Seq("a/zeta.log", "b/alpha.log"))
+    assert(twins(0).getDouble(4) == twins(1).getDouble(4), "expected a dist tie")
+    // both colliding ids answer, each with its own text
+    val dups = one(("dup basename", 4))._1.filter(_.getString(0) == "server.log.1:0")
+    assert(dups.map(r => r.getString(1) -> r.getString(3)).toSet ==
+      Set("app/server.log.1" -> "dup basename a\n", "db/server.log.1" -> "dup basename b\n"))
+    // a question with no tokens finds nothing
+    for (((q, _), (rows, context)) <- one if q.trim.isEmpty) {
+      assert(rows.isEmpty)
+      assert(context == "No relevant data found in the database.")
+    }
   }
 
   test("close() unpersists the vectors and the postings, and may be called twice") {
