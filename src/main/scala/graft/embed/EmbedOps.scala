@@ -3,6 +3,7 @@ package graft.embed
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.UserDefinedFunction
+import org.apache.spark.sql.graft.FloatVectorFunctions
 
 /** DataFrame-level embedding operators. The embedder rides the UDF
   * closure; per-executor it is deserialized once and reused across
@@ -29,5 +30,5 @@ object EmbedOps {
     df.withColumn(outCol, embedUdf(embedder)(col(textCol)))
 
   def embedLiteral(text: String, embedder: Embedder = HashEmbedder.default): Column =
-    typedLit(embedder.embedOne(text))
+    FloatVectorFunctions.floatArrayLit(embedder.embedOne(text))
 }

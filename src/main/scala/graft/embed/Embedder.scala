@@ -1,5 +1,9 @@
 package graft.embed
 
+import java.nio.charset.StandardCharsets.UTF_8
+
+import graft.functions.CrossHash
+
 /** Pluggable embedding backend — the engine-side counterpart of the
   * reference's `EmbeddingHandler` ABC (log-vector `index.py:56-69`:
   * `embed(texts) -> List[List[float]]` + availability gate). The
@@ -40,30 +44,47 @@ trait Embedder extends Serializable {
   * network-bound encoders so the whole pipeline is testable with no
   * egress, while keeping identical dataflow shape (text in, unit
   * vector out). Hashing is the cross-engine 60-bit md5 primitive
-  * (graft.functions.CrossHash) keyed `"{seed}|{token}"`, which makes
-  * the WHOLE index dataflow DuckDB-recomputable: bucket sums are
-  * exact ±1 integers, the norm is an exact integer in double, and
-  * the final float truncation is IEEE round-to-nearest in both
-  * engines — so `index_pipeline`'s embedding checksums hash-match
-  * the oracle. Token hashes are memoized per executor (corpus
-  * vocabulary ≪ token stream).
+  * (graft.functions.CrossHash) keyed `"{seed}|{token}"` and
+  * `"{seed}|{token} {next}"`, which makes the WHOLE index dataflow
+  * DuckDB-recomputable: bucket sums are exact ±1 integers, the norm
+  * is an exact integer in double, and the final float truncation is
+  * IEEE round-to-nearest in both engines — so `index_pipeline`'s
+  * embedding checksums hash-match the oracle.
+  *
+  * Keys are hashed straight from the UTF-8 bytes of the lower-cased
+  * text, fed piece by piece to the thread's reused digest: no String
+  * per token or key, and no memo. On log text most unigrams and
+  * bigrams (timestamps, hex ids, user ids) occur once, so a memo of
+  * their hashes mostly misses and fills the heap with keys that are
+  * never looked up again.
   */
 final class HashEmbedder(val dim: Int = 64, seed: Long = 42L) extends Embedder {
   require(dim > 0)
   override def model: String = s"hash-ngram-$dim"
   override def kind: String = "hash"
 
+  /** `"{seed}|"`, the first bytes of every key. */
+  private val keyPrefix = s"$seed|".getBytes(UTF_8)
+
   override def embed(texts: Seq[String]): Seq[Array[Float]] = texts.map(embedOne)
 
   override def embedOne(text: String): Array[Float] = {
     val v = new Array[Double](dim)
-    val toks = HashEmbedder.tokenize(text)
-    var i = 0
-    while (i < toks.length) {
-      add(v, HashEmbedder.cachedKeyHash(seed, toks(i)))
-      if (i + 1 < toks.length)
-        add(v, HashEmbedder.cachedKeyHash(seed, toks(i) + " " + toks(i + 1)))
-      i += 1
+    // Java's `\s` characters are ASCII and no byte of a multi-byte
+    // UTF-8 sequence is, so the tokens of the text's bytes are the
+    // bytes of its tokens (a lone surrogate encodes as `?` either way)
+    val bytes = if (text == null) Array.emptyByteArray else HashEmbedder.lower(text).getBytes(UTF_8)
+    val b = HashEmbedder.tokenBounds(bytes.length)(i => HashEmbedder.isSpace(bytes(i)))
+    var t = 0
+    while (t < b.length) {
+      add(v, CrossHash.hash60(key(bytes, b(t), b(t + 1))))
+      if (t + 2 < b.length) {
+        val md = key(bytes, b(t), b(t + 1))
+        md.update(' '.toByte)
+        md.update(bytes, b(t + 2), b(t + 3) - b(t + 2))
+        add(v, CrossHash.hash60(md))
+      }
+      t += 2
     }
     var norm = 0.0
     var j = 0
@@ -78,6 +99,14 @@ final class HashEmbedder(val dim: Int = 64, seed: Long = 42L) extends Embedder {
     // degenerate case the reference also produces on embed failure
     // (index.py:138); downstream kNN excludes it (quirk Q4 fix).
     out
+  }
+
+  /** The digest fed `"{seed}|"` and `bytes[from, until)`. */
+  private def key(bytes: Array[Byte], from: Int, until: Int): java.security.MessageDigest = {
+    val md = CrossHash.md5Digest()
+    md.update(keyPrefix)
+    md.update(bytes, from, until - from)
+    md
   }
 
   /** h is the 60-bit md5 hash: bucket from the low bits mod dim,
@@ -96,14 +125,34 @@ object HashEmbedder {
   /** Lower-cased in the root locale, so the tokens (and the vectors
     * hashed from them) do not depend on the JVM's default locale (a
     * `tr` default lower-cases `INFO` to `ınfo`), then split on
-    * whitespace. */
+    * whitespace: Java's `\s` (space, `\t`, `\n`, `\x0B`, `\f`,
+    * `\r`); Unicode spaces such as U+00A0 stay inside tokens. */
   def tokenize(text: String): Array[String] =
     if (text == null) Array.empty
-    else text.toLowerCase(java.util.Locale.ROOT).split("\\s+").filter(_.nonEmpty)
+    else {
+      val s = lower(text)
+      val b = tokenBounds(s.length)(i => isSpace(s.charAt(i)))
+      Array.tabulate(b.length / 2)(t => s.substring(b(2 * t), b(2 * t + 1)))
+    }
 
-  private val keyHashes = new graft.functions.CrossHash.Memo60
+  private def lower(text: String): String = text.toLowerCase(java.util.Locale.ROOT)
 
-  /** Memoized `CrossHash.md5Hash60("{seed}|{token}")`. */
-  def cachedKeyHash(seed: Long, token: String): Long =
-    keyHashes(seed.toString + "|" + token)
+  private def isSpace(c: Int): Boolean = c == ' ' || (c >= '\t' && c <= '\r')
+
+  /** The tokens of positions `[0, n)`, the maximal runs where `space`
+    * is false, as `[start0, end0, start1, end1, …]`. */
+  private def tokenBounds(n: Int)(space: Int => Boolean): Array[Int] = {
+    val b = new scala.collection.mutable.ArrayBuilder.ofInt
+    var i = 0
+    while (i < n) {
+      if (space(i)) i += 1
+      else {
+        val start = i
+        while (i < n && !space(i)) i += 1
+        b += start
+        b += i
+      }
+    }
+    b.result()
+  }
 }

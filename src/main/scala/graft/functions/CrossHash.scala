@@ -21,10 +21,19 @@ object CrossHash {
       java.security.MessageDigest.getInstance("MD5")
   }
 
-  def md5Hash60(bytes: Array[Byte]): Long = {
+  /** This thread's MD5 digest, reset. Feed a key's bytes with
+    * `update` calls (a key made of several pieces needs no buffer or
+    * String) and finish it with [[hash60]]. */
+  def md5Digest(): java.security.MessageDigest = {
     val md = digest.get()
     md.reset()
-    val d = md.digest(bytes)
+    md
+  }
+
+  /** The one md5 → 60-bit kernel: completes (and so resets) `md` and
+    * returns the first 15 hex digits of the digest as a BIGINT. */
+  def hash60(md: java.security.MessageDigest): Long = {
+    val d = md.digest()
     // 15 hex chars = bytes 0-6 fully + high nibble of byte 7
     var v = 0L
     var i = 0
@@ -32,25 +41,37 @@ object CrossHash {
     (v << 4) | ((d(7) & 0xF0L) >> 4)
   }
 
+  def md5Hash60(bytes: Array[Byte]): Long = {
+    val md = md5Digest()
+    md.update(bytes)
+    hash60(md)
+  }
+
   def md5Hash60(s: String): Long =
     md5Hash60(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
-  /** Executor-wide bounded memo of [[md5Hash60]]: the distinct-key
-    * space (a vocabulary, a shingle set, char 3-grams) is orders of
-    * magnitude smaller than the occurrence stream that keys it, so
-    * after warmup a hash is a map lookup. Capped at 2²⁰ entries so a
-    * 100 TB shard can't grow it unboundedly — overflow degrades to
-    * direct hashing, never wrong results. One instance per key space,
-    * so one user's keys never crowd out another's. */
+  /** Executor-wide bounded memo of [[md5Hash60]] for key spaces much
+    * smaller than the occurrence stream that keys them, so that after
+    * warmup a hash is a map lookup: `Dedup.cachedHash60` serves the
+    * SimHash word tokens, the Jaccard/MinHash word shingles and spans,
+    * and `TextOps`' lang-id char 3-grams. (The hash embedder's
+    * unigrams and bigrams are mostly distinct on log text, so it
+    * hashes them directly.) Capped at 2²⁰ entries so a 100 TB shard
+    * can't grow it unboundedly (threads racing at the cap may each
+    * add one more) — overflow degrades to direct hashing, never wrong
+    * results. The memo counts its own inserts: `ConcurrentHashMap.size`
+    * sums the map's counter cells on every call. One instance per key
+    * space, so one user's keys never crowd out another's. */
   final class Memo60 {
     private val cache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+    private val entries = new java.util.concurrent.atomic.AtomicInteger
 
     def apply(key: String): Long = {
       val c = cache.get(key)
       if (c != null) c.longValue()
       else {
         val h = md5Hash60(key)
-        if (cache.size < (1 << 20)) cache.put(key, h)
+        if (entries.get < (1 << 20) && cache.putIfAbsent(key, h) == null) entries.incrementAndGet()
         h
       }
     }

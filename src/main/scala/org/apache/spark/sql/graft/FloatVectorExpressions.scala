@@ -10,6 +10,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInput
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.internal.Literal
 import org.apache.spark.sql.types._
 
 /** Native dot product over two `ARRAY<FLOAT>` columns, with
@@ -151,4 +152,10 @@ object FloatVectorFunctions {
   def floatCosineDistance(a: Column, b: Column): Column =
     ExpressionUtils.column(FloatCosineDistance(
       ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
+
+  /** An `ARRAY<FLOAT>` literal (elements not null) — the Column
+    * `typedLit(v)` builds, with its type given instead of derived by
+    * Scala reflection on every call. */
+  def floatArrayLit(v: Array[Float]): Column =
+    Column(Literal(v, Some(ArrayType(FloatType, containsNull = false))))
 }

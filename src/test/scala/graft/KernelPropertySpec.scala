@@ -55,8 +55,9 @@ class KernelPropertySpec extends AnyFunSuite {
       val md = java.security.MessageDigest.getInstance("MD5")
         .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       val hex = md.map(b => f"$b%02x").mkString.take(15)
-      // CrossHash.Memo60 memoizes md5Hash60 for the embedder's tokens
-      // and the shingle hashes — the memo must be value-transparent,
+      // CrossHash.Memo60 memoizes md5Hash60 for Dedup's tokens,
+      // shingles and spans and the lang-id grams — the memo must be
+      // value-transparent,
       // on the first (miss) and the second (hit) lookup alike
       h == java.lang.Long.parseLong(hex, 16) && h >= 0L && h < (1L << 60) &&
         memo(s) == h && memo(s) == h

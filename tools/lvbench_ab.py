@@ -17,6 +17,14 @@ better (ties count for neither side). A gain on a metric holds when the
 change wins at least 9 pairs in 10 and the medians differ by more than the
 parent's IQR. Failed operations are summed per side.
 
+Beside that verdict, each metric is read against its BENCHMARK.json bound
+(a relative change): the relative IQR (IQR / median) of each side, then
+`worse` when the change's median is worse than the parent's by more than the
+bound, and `unresolved` when the parent's relative IQR exceeds the bound, so
+the runs spread too widely to tell a move of that size, unless every run of
+the change reads better than every run of the parent (either may show alone,
+both together, or `within` when neither holds).
+
 With `--trace`, one more run per side follows, with `--trace 1` on the
 first seed, and the per-layer metrics BENCHMARK.json declares are printed
 side by side (parent, change, relative change), so a gain can be shown in
@@ -60,9 +68,31 @@ def quartiles(xs):
     return q1, q2, q3
 
 
+def bound_verdict(both, parent_q, change_q, bound, lower):
+    """`worse` and/or `unresolved` against a relative bound, else `within`.
+
+    Unresolved: the parent's relative IQR exceeds the bound, unless every
+    run of the change reads better than every run of the parent."""
+    p, c = parent_q[1], change_q[1]
+    worse_by = ((c - p) if lower else (p - c)) / abs(p) if p else 0.0
+    ps, cs = [x for x, _ in both], [y for _, y in both]
+    all_better = max(cs) < min(ps) if lower else min(cs) > max(ps)
+    flags = []
+    if worse_by > bound:
+        flags.append("worse")
+    if p and (parent_q[2] - parent_q[0]) / abs(p) > bound and not all_better:
+        flags.append("unresolved")
+    return ", ".join(flags) or "within"
+
+
+def rel_iqr(q):
+    return (q[2] - q[0]) / abs(q[1]) * 100 if q[1] else float("nan")
+
+
 def report(metrics, pairs):
     print(f"{'metric':<14} {'parent median [q1, q3]':>30} {'change median [q1, q3]':>30} "
-          f"{'parent IQR':>11} {'delta':>8} {'wins':>7}  gain")
+          f"{'parent IQR':>11} {'delta':>8} {'wins':>7}  gain  "
+          f"{'rIQR p':>7} {'rIQR c':>7} {'bound':>6}  vs bound")
     for m in metrics:
         name, lower = m["name"], m["better"] == "lower"
         both = [(p["metrics"][name]["value"], c["metrics"][name]["value"]) for p, c in pairs]
@@ -74,7 +104,9 @@ def report(metrics, pairs):
         holds = wins >= 0.9 * len(both) and abs(cq[1] - pq[1]) > iqr
         delta = (cq[1] - pq[1]) / pq[1] * 100 if pq[1] else float("nan")
         print(f"{name:<14} {pq[1]:>12.4g} [{pq[0]:.4g}, {pq[2]:.4g}] {cq[1]:>12.4g} [{cq[0]:.4g}, {cq[2]:.4g}] "
-              f"{iqr:>11.4g} {delta:>7.1f}% {wins:>3}/{len(both):<3}  {'yes' if holds else 'no'}")
+              f"{iqr:>11.4g} {delta:>7.1f}% {wins:>3}/{len(both):<3}  {'yes' if holds else 'no':<4}  "
+              f"{rel_iqr(pq):>6.1f}% {rel_iqr(cq):>6.1f}% {m['bound'] * 100:>5.0f}%  "
+              f"{bound_verdict(both, pq, cq, m['bound'], lower)}")
 
 
 def report_layers(metrics, parent, change):
