@@ -1,7 +1,5 @@
 package graft.embed
 
-import java.nio.charset.StandardCharsets.UTF_8
-
 import graft.functions.CrossHash
 
 /** Pluggable embedding backend — the engine-side counterpart of the
@@ -51,40 +49,31 @@ trait Embedder extends Serializable {
   * IEEE round-to-nearest in both engines — so `index_pipeline`'s
   * embedding checksums hash-match the oracle.
   *
-  * Keys are hashed straight from the UTF-8 bytes of the lower-cased
-  * text, fed piece by piece to the thread's reused digest: no String
-  * per token or key, and no memo. On log text most unigrams and
-  * bigrams (timestamps, hex ids, user ids) occur once, so a memo of
-  * their hashes mostly misses and fills the heap with keys that are
-  * never looked up again.
+  * Each key is hashed directly, with no memo. A static memo of the
+  * key hashes does hit (on repeated index passes over one log tree,
+  * every lookup after the first pass), and a warm hit is cheaper than
+  * the md5; but it keeps one entry per distinct unigram and bigram,
+  * about 240k and 32 MB of heap for a 3 MB log tree, for the life of
+  * the JVM, and dropping it did not slow the index path measurably.
   */
 final class HashEmbedder(val dim: Int = 64, seed: Long = 42L) extends Embedder {
   require(dim > 0)
   override def model: String = s"hash-ngram-$dim"
   override def kind: String = "hash"
 
-  /** `"{seed}|"`, the first bytes of every key. */
-  private val keyPrefix = s"$seed|".getBytes(UTF_8)
+  /** `"{seed}|"`, the start of every key. */
+  private val keyPrefix = s"$seed|"
 
   override def embed(texts: Seq[String]): Seq[Array[Float]] = texts.map(embedOne)
 
   override def embedOne(text: String): Array[Float] = {
     val v = new Array[Double](dim)
-    // Java's `\s` characters are ASCII and no byte of a multi-byte
-    // UTF-8 sequence is, so the tokens of the text's bytes are the
-    // bytes of its tokens (a lone surrogate encodes as `?` either way)
-    val bytes = if (text == null) Array.emptyByteArray else HashEmbedder.lower(text).getBytes(UTF_8)
-    val b = HashEmbedder.tokenBounds(bytes.length)(i => HashEmbedder.isSpace(bytes(i)))
-    var t = 0
-    while (t < b.length) {
-      add(v, CrossHash.hash60(key(bytes, b(t), b(t + 1))))
-      if (t + 2 < b.length) {
-        val md = key(bytes, b(t), b(t + 1))
-        md.update(' '.toByte)
-        md.update(bytes, b(t + 2), b(t + 3) - b(t + 2))
-        add(v, CrossHash.hash60(md))
-      }
-      t += 2
+    val toks = HashEmbedder.tokenize(text)
+    var i = 0
+    while (i < toks.length) {
+      add(v, CrossHash.md5Hash60(keyPrefix + toks(i)))
+      if (i + 1 < toks.length) add(v, CrossHash.md5Hash60(keyPrefix + toks(i) + " " + toks(i + 1)))
+      i += 1
     }
     var norm = 0.0
     var j = 0
@@ -99,14 +88,6 @@ final class HashEmbedder(val dim: Int = 64, seed: Long = 42L) extends Embedder {
     // degenerate case the reference also produces on embed failure
     // (index.py:138); downstream kNN excludes it (quirk Q4 fix).
     out
-  }
-
-  /** The digest fed `"{seed}|"` and `bytes[from, until)`. */
-  private def key(bytes: Array[Byte], from: Int, until: Int): java.security.MessageDigest = {
-    val md = CrossHash.md5Digest()
-    md.update(keyPrefix)
-    md.update(bytes, from, until - from)
-    md
   }
 
   /** h is the 60-bit md5 hash: bucket from the low bits mod dim,
@@ -130,29 +111,19 @@ object HashEmbedder {
   def tokenize(text: String): Array[String] =
     if (text == null) Array.empty
     else {
-      val s = lower(text)
-      val b = tokenBounds(s.length)(i => isSpace(s.charAt(i)))
-      Array.tabulate(b.length / 2)(t => s.substring(b(2 * t), b(2 * t + 1)))
-    }
-
-  private def lower(text: String): String = text.toLowerCase(java.util.Locale.ROOT)
-
-  private def isSpace(c: Int): Boolean = c == ' ' || (c >= '\t' && c <= '\r')
-
-  /** The tokens of positions `[0, n)`, the maximal runs where `space`
-    * is false, as `[start0, end0, start1, end1, …]`. */
-  private def tokenBounds(n: Int)(space: Int => Boolean): Array[Int] = {
-    val b = new scala.collection.mutable.ArrayBuilder.ofInt
-    var i = 0
-    while (i < n) {
-      if (space(i)) i += 1
-      else {
-        val start = i
-        while (i < n && !space(i)) i += 1
-        b += start
-        b += i
+      val s = text.toLowerCase(java.util.Locale.ROOT)
+      val out = Array.newBuilder[String]
+      var i = 0
+      while (i < s.length) {
+        if (isSpace(s.charAt(i))) i += 1
+        else {
+          val start = i
+          while (i < s.length && !isSpace(s.charAt(i))) i += 1
+          out += s.substring(start, i)
+        }
       }
+      out.result()
     }
-    b.result()
-  }
+
+  private def isSpace(c: Char): Boolean = c == ' ' || (c >= '\t' && c <= '\r')
 }

@@ -21,30 +21,15 @@ object CrossHash {
       java.security.MessageDigest.getInstance("MD5")
   }
 
-  /** This thread's MD5 digest, reset. Feed a key's bytes with
-    * `update` calls (a key made of several pieces needs no buffer or
-    * String) and finish it with [[hash60]]. */
-  def md5Digest(): java.security.MessageDigest = {
+  def md5Hash60(bytes: Array[Byte]): Long = {
     val md = digest.get()
     md.reset()
-    md
-  }
-
-  /** The one md5 → 60-bit kernel: completes (and so resets) `md` and
-    * returns the first 15 hex digits of the digest as a BIGINT. */
-  def hash60(md: java.security.MessageDigest): Long = {
-    val d = md.digest()
+    val d = md.digest(bytes)
     // 15 hex chars = bytes 0-6 fully + high nibble of byte 7
     var v = 0L
     var i = 0
     while (i < 7) { v = (v << 8) | (d(i) & 0xFFL); i += 1 }
     (v << 4) | ((d(7) & 0xF0L) >> 4)
-  }
-
-  def md5Hash60(bytes: Array[Byte]): Long = {
-    val md = md5Digest()
-    md.update(bytes)
-    hash60(md)
   }
 
   def md5Hash60(s: String): Long =
@@ -54,14 +39,15 @@ object CrossHash {
     * smaller than the occurrence stream that keys them, so that after
     * warmup a hash is a map lookup: `Dedup.cachedHash60` serves the
     * SimHash word tokens, the Jaccard/MinHash word shingles and spans,
-    * and `TextOps`' lang-id char 3-grams. (The hash embedder's
-    * unigrams and bigrams are mostly distinct on log text, so it
-    * hashes them directly.) Capped at 2²⁰ entries so a 100 TB shard
-    * can't grow it unboundedly (threads racing at the cap may each
-    * add one more) — overflow degrades to direct hashing, never wrong
-    * results. The memo counts its own inserts: `ConcurrentHashMap.size`
-    * sums the map's counter cells on every call. One instance per key
-    * space, so one user's keys never crowd out another's. */
+    * and `TextOps`' lang-id char 3-grams. (`HashEmbedder` hashes its
+    * keys directly: on log text its distinct unigrams and bigrams are
+    * about 30% of its key stream.) Capped at 2²⁰ entries so a
+    * 100 TB shard can't grow it unboundedly (threads racing at the cap
+    * may each add one more) — overflow degrades to direct hashing,
+    * never wrong results. The memo counts its own inserts:
+    * `ConcurrentHashMap.size` sums the map's counter cells on every
+    * call. One instance per key space, so one user's keys never crowd
+    * out another's. */
   final class Memo60 {
     private val cache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
     private val entries = new java.util.concurrent.atomic.AtomicInteger

@@ -9,9 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
 class EmbedderSpec extends AnyFunSuite {
   private val e = HashEmbedder.default
 
-  /** The String-key tokenizer and embedder that the byte-level kernel
-    * replaced, verbatim: `split("\\s+")` tokens, each key built as a
-    * String and hashed by `md5Hash60`. */
+  /** The tokenizer and embedder before the boundary scan, verbatim:
+    * `split("\\s+")` tokens, each key built as a String and hashed by
+    * `md5Hash60` (the memo the keys went through returned the same
+    * values). */
   private object Reference {
     def tokenize(text: String): Array[String] =
       if (text == null) Array.empty
@@ -66,7 +67,7 @@ class EmbedderSpec extends AnyFunSuite {
   private val lo = 0xDE00.toChar.toString
   private val astral = new String(Character.toChars(0x1F600)) + new String(Character.toChars(0x1D538))
 
-  test("tokenize and embedOne equal the String-key reference bit for bit on edge inputs") {
+  test("tokenize and embedOne equal the split-regex reference bit for bit on edge inputs") {
     val fixed: Seq[String] = Seq(null, "", "   \n\t ", "Hello World") ++
       javaSpaces.flatMap(c => Seq(s"ab${c}cd", s"${c}ab", s"ab$c", c, c * 3)) ++
       Seq(javaSpaces.mkString, s"${javaSpaces.mkString}lead  mid${javaSpaces.reverse.mkString}trail${javaSpaces.mkString}") ++
@@ -77,7 +78,7 @@ class EmbedderSpec extends AnyFunSuite {
     for (t <- fixed) { val bad = matchesReference(t); assert(bad.isEmpty, bad.getOrElse("")) }
   }
 
-  test("tokenize and embedOne equal the String-key reference bit for bit on generated text") {
+  test("tokenize and embedOne equal the split-regex reference bit for bit on generated text") {
     val piece = Gen.oneOf(
       Gen.oneOf(javaSpaces), Gen.oneOf(otherSpaces), Gen.oneOf(hi, lo, astral, "İ", "ı", "Σ", "ß"),
       Gen.identifier.map(_.take(8)), Gen.oneOf("ERROR", "a", "b", "0x1f", "12:00:01"))
